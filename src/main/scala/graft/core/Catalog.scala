@@ -28,6 +28,8 @@ final case class TableNotFound(namespace: String, table: String)
   */
 final class Catalog(val spark: SparkSession, root: String) {
   import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.spark.sql.GraftSchemaBridge
+  import org.apache.spark.sql.types.StructType
 
   /** Parse a `namespace.table` reference; raise [[BadTableRef]] on the
     * reference's seeded double-dot class. */
@@ -73,15 +75,53 @@ final class Catalog(val spark: SparkSession, root: String) {
   }
 
   /** Snapshot read: exactly the committed file set — staged/orphaned
-    * files are invisible, and the snapshot doubles as the file listing
-    * (no recursive directory walk at planning time). basePath keeps
-    * Hive-style partition columns parsing from the file paths, so
-    * partition pruning works exactly as on a directory read. */
+    * files are invisible. basePath keeps Hive-style partition columns
+    * parsing from the file paths, so partition pruning works exactly as on
+    * a directory read. A snapshot with a recorded [[Manifest.Layout]]
+    * plans from it alone; one without (written by an earlier release, or
+    * the adoption window's sidecar list) has Spark list the files and
+    * merge their footers. */
   private def readSnapshot(tableRoot: Path, snap: Manifest.Snapshot): DataFrame =
-    spark.read
-      .option("mergeSchema", "true")
-      .option("basePath", tableRoot.toString)
-      .parquet(snap.files.map(f => new Path(tableRoot, f).toString): _*)
+    snap.layout match {
+      case Some(layout) => plannedRead(tableRoot, snap.files, layout)
+      case None =>
+        spark.read
+          .option("mergeSchema", "true")
+          .option("basePath", tableRoot.toString)
+          .parquet(snap.files.map(f => new Path(tableRoot, f).toString): _*)
+    }
+
+  /** The inferring read above, planned from the snapshot instead of from
+    * storage: file statuses built from the recorded sizes pre-fill the
+    * file index's listing cache, and the recorded schema replaces the
+    * footer merge — a load starts no Spark job and makes no filesystem
+    * call per file (the index's basePath check is the one call left).
+    * The relation is the one `spark.read` would build (same index type,
+    * same partition parsing, nullable data schema), so plans, pruning and
+    * size estimates are unchanged. */
+  private def plannedRead(tableRoot: Path, files: Seq[String],
+      layout: Manifest.Layout): DataFrame = {
+    import org.apache.hadoop.fs.FileStatus
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val root = fsOf(tableRoot).makeQualified(tableRoot)
+    val statuses = files.zip(layout.sizes).map { case (f, n) =>
+      val p = new Path(root, f)
+      p -> Array(new FileStatus(n, false, 0, 0L, 0L, p))
+    }
+    val byPath = statuses.toMap
+    val listing = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> root.toString)
+    val index = new InMemoryFileIndex(spark, statuses.map(_._1), options, None, listing)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      GraftSchemaBridge.asNullable(Catalog.schemaOf(layout)), None,
+      new ParquetFileFormat(), options)(spark))
+  }
 
   def load(namespace: String, table: String): DataFrame = {
     val p = new Path(path(namespace, table))
@@ -111,9 +151,11 @@ final class Catalog(val spark: SparkSession, root: String) {
       // by a later append (allowFieldAddition) is visible instead of the
       // reader picking one file's schema at random. Type conflicts across
       // files are a merge error by design — [[appendRelaxed]] migrates the
-      // stored files before they can arise. Scale note: merging reads every
-      // file footer; a 100 TB deployment caps that by compacting or by
-      // declaring the schema explicitly, not by dropping the correctness.
+      // stored files before they can arise. Scale note: on this
+      // directory-layout path merging reads every file footer (and lists
+      // the tree); manifest tables record the merged schema and file sizes
+      // at commit and plan without either, so a 100 TB deployment adopts
+      // the table into manifest commits rather than dropping the merge.
       spark.read.option("mergeSchema", "true").parquet(path(namespace, table))
   }
 
@@ -231,19 +273,19 @@ final class Catalog(val spark: SparkSession, root: String) {
     * return their table-relative paths. Files are visible to manifest
     * readers only once a snapshot referencing them publishes. */
   private def stageFiles(df: DataFrame, tableRoot: Path,
-      partitionBy: Seq[String]): Seq[String] = {
+      partitionBy: Seq[String]): Seq[(String, Long)] = {
     val fs = fsOf(tableRoot)
     val stage = new Path(tableRoot, s".stage-${java.util.UUID.randomUUID()}")
     try {
       val w = df.write.mode("overwrite")
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(stage.toString)
-      listDataFiles(fs, stage).map { rel =>
+      listDataFiles(fs, stage).map { case staged @ (rel, _) =>
         val dest = new Path(tableRoot, rel)
         fs.mkdirs(dest.getParent)
         if (!fs.rename(new Path(stage, rel), dest))
           throw new java.io.IOException(s"failed to place staged file $rel")
-        rel
+        staged
       }
     } finally fs.delete(stage, true)
   }
@@ -292,9 +334,11 @@ final class Catalog(val spark: SparkSession, root: String) {
     // ([[vacuum]]), not table content.
     val dirAdopted =
       if (prior.nonEmpty || !fs.exists(tableRoot)) Nil
-      else Manifest.adoptionTransition(fs, tableRoot, listDataFiles(fs, tableRoot))
+      else Manifest.adoptionTransition(fs, tableRoot,
+        listDataFiles(fs, tableRoot).map(_._1))
     fs.mkdirs(Manifest.dir(tableRoot))
     val added = stageFiles(df, tableRoot, parts)
+    lazy val adoptedLayout = inferLayout(tableRoot, dirAdopted, parts)
     // an empty batch publishes only when it must advance the batch-id
     // bookkeeping — never a redundant identical snapshot. The publish is
     // optimistic-CAS on the snapshot this file list was derived from: a
@@ -305,7 +349,7 @@ final class Catalog(val spark: SparkSession, root: String) {
     // already on disk and are simply re-listed on a new base).
     var attempt = 0
     while (true) {
-      val all = prior.map(_.files).getOrElse(dirAdopted) ++ added
+      val all = prior.map(_.files).getOrElse(dirAdopted) ++ added.map(_._1)
       // an empty batch still publishes when it must advance the batch-id
       // bookkeeping OR when it is the table's FIRST commit adopting
       // directory content — leaving adoption to "the next non-empty
@@ -314,6 +358,15 @@ final class Catalog(val spark: SparkSession, root: String) {
       if (!(all.nonEmpty &&
           (added.nonEmpty || batchId.isDefined ||
             (prior.isEmpty && dirAdopted.nonEmpty)))) return true
+      // the layout the files this commit extends were recorded with; a
+      // prior snapshot without one (an earlier release's) or adopted
+      // directory files are inferred once, here, so later loads plan
+      // from the snapshot
+      val baseLayout = prior match {
+        case Some(p) => p.layout.orElse(inferLayout(tableRoot, p.files, p.partitions))
+        case None if dirAdopted.nonEmpty => adoptedLayout
+        case None => Some(Catalog.EmptyLayout)
+      }
       try {
         Manifest.publish(fs, tableRoot, parts,
           batchId.orElse(prior.flatMap(_.lastBatchId)), all,
@@ -321,7 +374,8 @@ final class Catalog(val spark: SparkSession, root: String) {
           // append commits extend the prior file set, so the manifest can
           // be a delta: O(batch files) metadata instead of rewriting the
           // full table listing every micro-batch (see Manifest scale notes)
-          preferDelta = true)
+          preferDelta = true,
+          layout = layoutAfter(baseLayout, df, parts, added))
         // the committed snapshot now carries the adopted files; the
         // sidecar is inert (readers re-check the snapshot before
         // trusting its absence)
@@ -380,12 +434,13 @@ final class Catalog(val spark: SparkSession, root: String) {
     // content through the marker-no-snapshot window; the publish below
     // then deliberately supersedes it (overwrite semantics)
     if (prior.isEmpty && fs.exists(tableRoot))
-      Manifest.adoptionTransition(fs, tableRoot, listDataFiles(fs, tableRoot))
+      Manifest.adoptionTransition(fs, tableRoot, listDataFiles(fs, tableRoot).map(_._1))
     fs.mkdirs(Manifest.dir(tableRoot))
     val added = stageFiles(df, tableRoot, parts)
     require(added.nonEmpty, s"refusing to overwrite $ref with an empty file set")
-    Manifest.publish(fs, tableRoot, parts, prior.flatMap(_.lastBatchId), added,
-      expectedVersion)
+    Manifest.publish(fs, tableRoot, parts, prior.flatMap(_.lastBatchId),
+      added.map(_._1), expectedVersion,
+      layout = layoutAfter(Some(Catalog.EmptyLayout), df, parts, added))
     Manifest.dropAdoption(fs, tableRoot)
   }
 
@@ -454,7 +509,7 @@ final class Catalog(val spark: SparkSession, root: String) {
     }
     var removed = 0L
     val now = System.currentTimeMillis()
-    listDataFiles(fs, tableRoot).filterNot(live.contains).foreach { rel =>
+    listDataFiles(fs, tableRoot).map(_._1).filterNot(live.contains).foreach { rel =>
       val p = new Path(tableRoot, rel)
       // a concurrent maintenance pass may reclaim the file between our
       // listing and the status call — that file is already gone, which is
@@ -516,17 +571,7 @@ final class Catalog(val spark: SparkSession, root: String) {
     val compacted =
       if (snap.partitions.nonEmpty) df.repartition(snap.partitions.map(col): _*)
       else {
-        // size the table with ONE listStatus per parent directory, not one
-        // getFileStatus RPC per file: compact's motivating input is 10^5+
-        // tiny micro-batch files, where per-file driver-side metadata
-        // calls would cost minutes before the rewrite job even starts
-        val bytes = snap.files.groupBy(f => new Path(tableRoot, f).getParent)
-          .iterator.map { case (parent, inDir) =>
-            val want = inDir.map(f => new Path(tableRoot, f).getName).toSet
-            fs.listStatus(parent).iterator
-              .filter(s => want.contains(s.getPath.getName))
-              .map(_.getLen).sum
-          }.sum
+        val bytes = snap.layout.fold(fileSizes(fs, tableRoot, snap.files))(_.sizes).sum
         df.repartition(math.max(1, (bytes.toDouble / targetFileBytes).ceil.toInt))
       }
     // CAS on the snapshot being rewritten: a micro-batch that lands while
@@ -535,20 +580,68 @@ final class Catalog(val spark: SparkSession, root: String) {
     Manifest.latest(fs, tableRoot).map(_.files.size).getOrElse(0)
   }
 
-  /** All committed-layout parquet files under the table root, relative
-    * paths, skipping staging/metadata directories. */
-  private def listDataFiles(fs: FileSystem, tableRoot: Path): Seq[String] = {
-    val out = Seq.newBuilder[String]
+  /** All committed-layout parquet files under the table root, as
+    * (relative path, byte size), skipping staging/metadata directories. */
+  private def listDataFiles(fs: FileSystem, tableRoot: Path): Seq[(String, Long)] = {
+    val out = Seq.newBuilder[(String, Long)]
     def walk(dir: Path, rel: String): Unit =
       fs.listStatus(dir).foreach { s =>
         val name = s.getPath.getName
         if (name.startsWith("_") || name.startsWith(".")) ()
         else if (s.isDirectory) walk(s.getPath, s"$rel$name/")
-        else if (name.endsWith(".parquet")) out += s"$rel$name"
+        else if (name.endsWith(".parquet")) out += (s"$rel$name" -> s.getLen)
       }
     if (fs.exists(tableRoot)) walk(tableRoot, "")
     out.result()
   }
+
+  /** Byte sizes of `files` (aligned), with ONE listStatus per parent
+    * directory, not one getFileStatus RPC per file: the inputs here are
+    * snapshots without a recorded layout, up to 10^5+ tiny micro-batch
+    * files, where per-file metadata calls would cost minutes. */
+  private def fileSizes(fs: FileSystem, tableRoot: Path, files: Seq[String]): Seq[Long] = {
+    val paths = files.map(new Path(tableRoot, _))
+    val byDir = paths.map(_.getParent).distinct.map { dir =>
+      dir -> fs.listStatus(dir).map(s => s.getPath.getName -> s.getLen).toMap
+    }.toMap
+    paths.map(p => byDir(p.getParent).getOrElse(p.getName,
+      throw new java.io.FileNotFoundException(s"snapshot file $p is missing")))
+  }
+
+  /** The layout of files committed without one, read the slow way — one
+    * listing per directory and the footer-merge inference — paid once per
+    * table by the commit that first records it. None when the footers do
+    * not merge (a type conflict): the snapshot then records no layout and
+    * reads keep surfacing the conflict, as they did before layouts. */
+  private def inferLayout(tableRoot: Path, files: Seq[String],
+      partitions: Seq[String]): Option[Manifest.Layout] =
+    try {
+      val inferred = readSnapshot(tableRoot, Manifest.Snapshot(0L, partitions, None, files))
+      Some(Manifest.Layout(fileSizes(fsOf(tableRoot), tableRoot, files),
+        dataColumns(inferred.schema, partitions).json))
+    } catch { case _: org.apache.spark.SparkException => None }
+
+  /** `schema` without the partition columns (resolved like Spark resolves
+    * `partitionBy`): the columns a writer stores in each file. */
+  private def dataColumns(schema: StructType, partitions: Seq[String]): StructType = {
+    val resolver = spark.sessionState.conf.resolver
+    StructType(schema.filterNot(f => partitions.exists(resolver(_, f.name))))
+  }
+
+  /** The layout a commit records: `base` (the files it keeps) plus the
+    * staged files, whose schema is `df`'s data columns as the writer
+    * stored them, merged the way `mergeSchema` merges footers (in commit
+    * order). None when `base` is unknown or the schemas do not merge. */
+  private def layoutAfter(base: Option[Manifest.Layout], df: DataFrame,
+      partitions: Seq[String], added: Seq[(String, Long)]): Option[Manifest.Layout] =
+    base.flatMap { b =>
+      if (added.isEmpty) Some(b)
+      else
+        try Some(Manifest.Layout(b.sizes ++ added.map(_._2),
+          GraftSchemaBridge.merge(Catalog.schemaOf(b), dataColumns(df.schema, partitions),
+            spark.sessionState.conf.caseSensitiveAnalysis).json))
+        catch { case _: org.apache.spark.SparkException => None }
+    }
 
   /** [[append]] with TYPE relaxation, completing the reference's
     * `allowFieldRelaxation` semantics (`scripts/transform_script:20-23`)
@@ -695,6 +788,12 @@ final class Catalog(val spark: SparkSession, root: String) {
 
 object Catalog {
   import org.apache.spark.sql.types._
+
+  /** The layout of a table with no files yet: what a first commit merges into. */
+  private val EmptyLayout = Manifest.Layout(Nil, new StructType().json)
+
+  private def schemaOf(layout: Manifest.Layout): StructType =
+    DataType.fromJson(layout.dataSchema).asInstanceOf[StructType]
 
   /** Numeric widening lattice for relaxation: within the integer and
     * floating families the wider type wins; across families the merged

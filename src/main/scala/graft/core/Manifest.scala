@@ -30,10 +30,15 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * `scripts/transform_script:17-24` WRITE_TRUNCATE); a torn append violates
   * that. This is the append-path equivalent: every commit is all-or-nothing.
   *
-  * Scale notes. The snapshot doubles as the file listing, so a 100 TB read
-  * plans from one small file instead of a recursive directory listing over
-  * ~10^5 objects (the object-store listing is usually the slowest part of
-  * query planning at that size). Each commit rewrites the full list —
+  * Scale notes. The snapshot doubles as the file listing: it records each
+  * data file's size and the table's merged data schema at commit time
+  * ([[Layout]]), so a read plans from the manifest alone — no recursive
+  * directory listing over ~10^5 objects (the object-store listing is
+  * usually the slowest part of query planning at that size), no status
+  * call per file, no footer-merge job. Snapshots written before these
+  * records existed carry no layout and plan through Spark's inference
+  * (listing plus footer merge) until a commit re-records them. Each full
+  * snapshot rewrites the full list —
   * O(files) metadata per commit, the same trade the table-format systems
   * make; compact data files (or the manifest itself) when file count, not
   * data size, dominates. Concurrent publishers of the same version are
@@ -68,13 +73,22 @@ private[graft] object Manifest {
   final class PublishRaceException(msg: String)
     extends java.io.IOException(msg)
 
+  /** What a reader needs besides the file list to plan a scan without
+    * touching storage: each data file's byte size (aligned with the
+    * snapshot's `files`) and the Spark JSON of the table's merged DATA
+    * schema (partition columns excluded — they parse from the paths). */
+  final case class Layout(sizes: Seq[Long], dataSchema: String)
+
   /** One committed table version. `files` is always the FULLY RESOLVED
     * file set (delta chains are resolved at read time); `base`/`depth`
     * record how the snapshot is stored — `depth` hops of delta manifests
-    * above the nearest full snapshot. */
+    * above the nearest full snapshot. `layout` is None for snapshots
+    * written without one (earlier releases), and for a delta whose chain
+    * holds such a snapshot. */
   final case class Snapshot(version: Long, partitions: Seq[String],
       lastBatchId: Option[Long], files: Seq[String],
-      base: Option[Long] = None, depth: Int = 0)
+      base: Option[Long] = None, depth: Int = 0,
+      layout: Option[Layout] = None)
 
   /** Marker directory; underscore-prefixed so Spark's own directory
     * listings ignore it. Its presence is what makes a table
@@ -85,8 +99,15 @@ private[graft] object Manifest {
     * still READ (its checksum verifies over the added lines only) so
     * tables committed by earlier releases stay readable; never written. */
   private val DeltaHeaderV2 = "graft-manifest-v2"
-  /** Delta header written now: the checksum covers `base=` + added lines. */
+  /** Delta header without a layout: the checksum covers `base=` + added
+    * lines. */
   private val DeltaHeader = "graft-manifest-v3"
+  /** Full and delta headers of snapshots that carry a [[Layout]]: a
+    * `schema=` line follows the preamble, each file line is
+    * `<size>\t<path>`, and the checksum covers `base=` (delta), `schema=`
+    * and the file lines. */
+  private val LayoutHeader = "graft-manifest-v4"
+  private val LayoutDeltaHeader = "graft-manifest-v5"
 
   /** A delta chain is folded into a full snapshot once it reaches this
     * depth, bounding read-side resolution to at most this many small
@@ -264,9 +285,11 @@ private[graft] object Manifest {
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
       finally in.close()
-    val isDeltaV3 = lines.headOption.contains(DeltaHeader)
-    val isDelta = isDeltaV3 || lines.headOption.contains(DeltaHeaderV2)
-    require(isDelta || lines.headOption.contains(Header),
+    val header = lines.headOption.getOrElse("")
+    val isDelta = header == DeltaHeader || header == DeltaHeaderV2 ||
+      header == LayoutDeltaHeader
+    val hasLayout = header == LayoutHeader || header == LayoutDeltaHeader
+    require(isDelta || hasLayout || header == Header,
       s"unrecognized manifest header in $table v$version")
     val partitions = lines(1).stripPrefix("partitions=") match {
       case "" => Nil
@@ -276,26 +299,39 @@ private[graft] object Manifest {
       case "-" => None
       case s => Some(s.toLong)
     }
-    val bodyAt = if (isDelta) 5 else 4
-    val files = lines.drop(bodyAt)
+    // preamble between lastBatchId= and checksum=: base= on a delta, then
+    // schema= on a snapshot with a layout
+    val baseLine = if (isDelta) Some(lines(3)) else None
+    val schemaLine = if (hasLayout) Some(lines(3 + baseLine.size)) else None
+    val checksumAt = 3 + baseLine.size + schemaLine.size
+    val entries = lines.drop(checksumAt + 1)
     // the rename publish is atomic, but storage can still rot: a snapshot
     // whose file list no longer matches its checksum must fail the read,
-    // not silently drop table content. A v3 delta's checksum covers its
-    // `base=` line AND its added lines — a flipped digit in the base
-    // pointer would otherwise resolve through the wrong (checksum-valid)
-    // chain and silently yield an incorrect file set; the base chain's
-    // CONTENT is protected by its own checksums. The v2 header spans TWO
-    // historical checksum scopes (added lines only at first; one interim
-    // release covered base= without bumping the header), so v2 accepts
-    // either form — both populations of existing tables stay readable.
-    val expected = lines(bodyAt - 1).stripPrefix("checksum=")
-    val canonical = if (isDeltaV3) lines(3) +: files else files
+    // not silently drop table content. The checksum covers the preamble
+    // too — a flipped digit in a delta's base pointer would otherwise
+    // resolve through the wrong (checksum-valid) chain and silently yield
+    // an incorrect file set; the base chain's CONTENT is protected by its
+    // own checksums. The v2 header spans TWO historical checksum scopes
+    // (added lines only at first; one interim release covered base=
+    // without bumping the header), so v2 accepts either form — both
+    // populations of existing tables stay readable.
+    val expected = lines(checksumAt).stripPrefix("checksum=")
+    val canonical = baseLine.toSeq ++ schemaLine ++ entries
     val valid = crc(canonical) == expected ||
-      (isDelta && !isDeltaV3 && crc(lines(3) +: files) == expected)
+      (header == DeltaHeaderV2 && crc(entries) == expected)
     if (!valid)
       throw new java.io.IOException(
         s"corrupt manifest $table v$version: checksum mismatch " +
           s"(expected $expected, computed ${crc(canonical)})")
+    val (files, own) = schemaLine match {
+      case None => (entries, None)
+      case Some(schema) =>
+        val split = entries.map { e =>
+          val tab = e.indexOf('\t')
+          (e.substring(tab + 1), e.substring(0, tab).toLong)
+        }
+        (split.map(_._1), Some(Layout(split.map(_._2), schema.stripPrefix("schema="))))
+    }
     if (isDelta) {
       val baseVersion = lines(3).stripPrefix("base=").toLong
       val baseSnap =
@@ -311,9 +347,13 @@ private[graft] object Manifest {
           case _: java.io.FileNotFoundException if !retried =>
             return read(fs, table, version, retried = true)
         }
+      // sizes resolve only through a chain that recorded them throughout;
+      // the schema is this commit's merged one
+      val layout = for (b <- baseSnap.layout; o <- own)
+        yield Layout(b.sizes ++ o.sizes, o.dataSchema)
       Snapshot(version, partitions, lastBatch, baseSnap.files ++ files,
-        Some(baseVersion), baseSnap.depth + 1)
-    } else Snapshot(version, partitions, lastBatch, files)
+        Some(baseVersion), baseSnap.depth + 1, layout)
+    } else Snapshot(version, partitions, lastBatch, files, layout = own)
   }
 
   /** A lock older than this with no published manifest belongs to a writer
@@ -367,10 +407,17 @@ private[graft] object Manifest {
     * plus a base pointer — O(batch files) metadata per commit; otherwise a
     * full snapshot is written (first commit, overwrites, or the periodic
     * checkpoint). The returned [[Snapshot]] always carries the fully
-    * resolved file set either way. */
+    * resolved file set either way.
+    *
+    * `layout` (sizes aligned with `files`) is recorded when given; a
+    * delta carrying one needs a prior that carries one too, else the
+    * snapshot is written full. */
   def publish(fs: FileSystem, table: Path, partitions: Seq[String],
       lastBatchId: Option[Long], files: Seq[String],
-      expectedVersion: Long = -1L, preferDelta: Boolean = false): Snapshot = {
+      expectedVersion: Long = -1L, preferDelta: Boolean = false,
+      layout: Option[Layout] = None): Snapshot = {
+    require(layout.forall(_.sizes.size == files.size),
+      s"layout sizes do not align with the ${files.size} files of $table")
     val d = dir(table)
     fs.mkdirs(d)
     val prior = latest(fs, table)
@@ -384,6 +431,7 @@ private[graft] object Manifest {
     // files) falls back to a full snapshot
     val delta = prior.filter { p =>
       preferDelta && p.depth + 1 < CheckpointEvery &&
+        (layout.isEmpty || p.layout.nonEmpty) &&
         files.size >= p.files.size && files.take(p.files.size) == p.files
     }
     val dest = new Path(d, fileName(version))
@@ -417,8 +465,9 @@ private[graft] object Manifest {
       val tmp = new Path(d, s".tmp-${java.util.UUID.randomUUID()}")
       val out = fs.create(tmp, true)
       try {
-        out.write(body(partitions, lastBatchId,
-          delta.map(p => (p.version, files.drop(p.files.size))).toLeft(files))
+        val stored = delta.fold(0)(_.files.size)
+        out.write(body(partitions, lastBatchId, delta.map(_.version),
+          files.drop(stored), layout.map(l => l.copy(sizes = l.sizes.drop(stored))))
           .getBytes("UTF-8"))
       } finally out.close()
       if (!fs.rename(tmp, dest)) {
@@ -427,24 +476,28 @@ private[graft] object Manifest {
       }
     } finally fs.delete(lock, false)
     Snapshot(version, partitions, lastBatchId, files,
-      delta.map(_.version), delta.map(_.depth + 1).getOrElse(0))
+      delta.map(_.version), delta.map(_.depth + 1).getOrElse(0), layout)
   }
 
-  /** Manifest file content: `Left((base, added))` is a delta body,
-    * `Right(files)` a full one. */
+  /** Manifest file content: a delta body when `base` is set (`files` are
+    * then the added ones), a full one otherwise; `layout.sizes` align
+    * with `files`. */
   private def body(partitions: Seq[String], lastBatchId: Option[Long],
-      form: Either[(Long, Seq[String]), Seq[String]]): String = {
-    val head = Seq(
-      form.fold(_ => DeltaHeader, _ => Header),
-      s"partitions=${partitions.mkString(",")}",
-      s"lastBatchId=${lastBatchId.map(_.toString).getOrElse("-")}")
-    val rest = form match {
-      case Left((base, added)) =>
-        val baseLine = s"base=$base"
-        baseLine +: s"checksum=${crc(baseLine +: added)}" +: added
-      case Right(files) => s"checksum=${crc(files)}" +: files
+      base: Option[Long], files: Seq[String], layout: Option[Layout]): String = {
+    val header = (base.isDefined, layout.isDefined) match {
+      case (false, false) => Header
+      case (true, false) => DeltaHeader
+      case (false, true) => LayoutHeader
+      case (true, true) => LayoutDeltaHeader
     }
-    (head ++ rest).mkString("\n")
+    val preamble = base.map(b => s"base=$b").toSeq ++
+      layout.map(l => s"schema=${l.dataSchema}")
+    val entries = layout.fold(files)(l =>
+      l.sizes.zip(files).map { case (n, f) => s"$n\t$f" })
+    (Seq(header, s"partitions=${partitions.mkString(",")}",
+      s"lastBatchId=${lastBatchId.map(_.toString).getOrElse("-")}") ++
+      preamble ++ (s"checksum=${crc(preamble ++ entries)}" +: entries))
+      .mkString("\n")
   }
 
   /** Rewrite snapshot `version` in place as a FULL manifest (same resolved
@@ -458,8 +511,8 @@ private[graft] object Manifest {
     if (snap.base.isEmpty) return snap
     val d = dir(table)
     val dest = new Path(d, fileName(version))
-    val content = body(snap.partitions, snap.lastBatchId, Right(snap.files))
-      .getBytes("UTF-8")
+    val content = body(snap.partitions, snap.lastBatchId, None, snap.files,
+      snap.layout).getBytes("UTF-8")
     val tmp = new Path(d, s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(content)

@@ -20,19 +20,24 @@ import graft.ext.Dedup
   * corpus-global state belongs, in an append-only table the probe join
   * reads. Each micro-batch:
   *
-  *  1. computes the arrivals' band/bucket rows and shingle hashes
-  *     (scan-side native expressions, one text walk);
-  *  2. probes the band table for (band, bucket) collisions — the candidate
+  *  1. collapses same-id copies and keeps the collapsed arrivals, so the
+  *     source is read and the collapse's window shuffle runs once;
+  *  2. computes the arrivals' band/bucket rows (kept) and shingle hashes
+  *     (scan-side native expressions over the kept rows);
+  *  3. probes the band table for (band, bucket) collisions — the candidate
   *     join touches ONLY matching buckets, the state side carries
   *     (id, band, bucket) rows, never text, and the micro-batch side
-  *     BROADCASTS so the accumulated state is scanned, never shuffled;
-  *  3. verifies candidates by exact Jaccard, re-deriving the OLD doc's
+  *     BROADCASTS so the accumulated state is scanned, never shuffled.
+  *     The candidates are kept, so the state is scanned and probed once
+  *     per batch although two joins consume them;
+  *  4. verifies candidates by exact Jaccard, re-deriving the OLD doc's
   *     shingles from the corpus table keyed by id (candidates are few;
   *     state stays narrow instead of staging every shingle array);
-  *  4. drops arrivals matching an accepted doc, or a LOWER-id arrival of
-  *     the same batch (the q44 intra-batch rule);
-  *  5. appends survivors to the corpus table and their bands to the state
-  *     table.
+  *  5. drops arrivals matching an accepted doc, or a LOWER-id arrival of
+  *     the same batch (the q44 intra-batch rule) — one action collects
+  *     the dropped ids;
+  *  6. appends survivors to the corpus table and their bands to the state
+  *     table, both filtered by those ids.
   *
   * Semantics: greedy-prefix (online) dedup — every arrival is judged
   * against ACCEPTED documents only, the standard always-on form. On
@@ -92,19 +97,37 @@ final class IncrementalDedup(
 
   /** Deduplicate one micro-batch against the accumulated corpus and itself;
     * append survivors. Returns the survivor count. Public so batch
-    * backfills and tests drive the exact streaming per-tick logic. */
+    * backfills and tests drive the exact streaming per-tick logic.
+    *
+    * The collapsed arrivals, their band rows and the state candidates
+    * each have several consumers and are materialized once (released in
+    * one `finally`, on success and on failure); one action then judges
+    * the batch, and the two appends filter by the dropped ids it
+    * collected. */
   def processBatch(batchRaw: DataFrame, batchId: Long): Long = {
-    // same-id copies within ONE batch never meet the strictly-ordered
-    // intra-batch pairing — collapse them first (StreamingAppend scaladoc)
-    val batch = StreamingAppend.collapseSameId(batchRaw, idCol)
-    // bands and shingles each feed two consumers (state probe + intra-batch
-    // self-join; a/b verify sides) — materialize the narrow rows once
-    val newBands = Dedup.minhashTable(batch, textCol, idCol, shingleN, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newSh = batch.select(col(idCol),
-        Dedup.shingleHashes(col(textCol), shingleN).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def once(df: DataFrame): DataFrame = {
+      cached += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
     try {
+      // same-id copies within ONE batch never meet the strictly-ordered
+      // intra-batch pairing — collapse them first (StreamingAppend
+      // scaladoc); bands, shingles and survivors all read these rows, so
+      // the source scan and the window shuffle run once
+      val batch = once(StreamingAppend.collapseSameId(batchRaw, idCol))
+      // band rows feed the state probe, the intra-batch self-join and the
+      // bands append — narrow rows, kept once
+      val newBands = once(Dedup.minhashTable(batch, textCol, idCol, shingleN, k, bands))
+      // the arrivals' shingle hashes join the three verify sides (state
+      // candidates; intra-batch a and b) as a broadcast built from the
+      // kept arrivals: re-hashing one batch per side costs less than
+      // caching the wide arrays and re-reading them (more input bytes and
+      // more jobs, measured)
+      val newSh = batch.select(col(idCol),
+        Dedup.shingleHashes(col(textCol), shingleN).as("sh"))
+      def withShingles(pairs: DataFrame, key: String, as: String): DataFrame =
+        pairs.join(broadcast(newSh.select(col(idCol).as(key), col("sh").as(as))), Seq(key))
       val jaccard =
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b")))
@@ -134,7 +157,9 @@ final class IncrementalDedup(
           // the filter, shared with the LSH/simhash twins:
           val state = StreamingAppend.acceptedState(
             loadedBands, batchId, exactlyOnce)
-          val candidates = IncrementalDedup.stateCandidates(state, newBands, idCol)
+          // candidates feed the old-shingle broadcast AND the verify join:
+          // kept once, so the state is scanned and probed once per batch
+          val candidates = once(IncrementalDedup.stateCandidates(state, newBands, idCol))
           // old shingles re-derive from the corpus keyed by candidate id —
           // candidates are collision-bounded, so they broadcast and the
           // corpus table is likewise scan-only
@@ -143,8 +168,7 @@ final class IncrementalDedup(
               Seq(idCol))
             .select(col(idCol).as("old_id"),
               Dedup.shingleHashes(col(textCol), shingleN).as("sh_b"))
-          candidates
-            .join(newSh.select(col(idCol), col("sh").as("sh_a")), Seq(idCol))
+          withShingles(candidates, idCol, "sh_a")
             .join(oldSh, Seq("old_id"))
             .filter(jaccard >= threshold)
             .select(col(idCol))
@@ -154,40 +178,43 @@ final class IncrementalDedup(
       // (the q44 rule applied within the batch)
       val a = newBands.select(col("band"), col("bucket"), col(idCol).as("doc_a"))
       val b = newBands.select(col("band"), col("bucket"), col(idCol).as("doc_b"))
-      val droppedIntra = a.join(b, Seq("band", "bucket"))
+      val pairs = a.join(b, Seq("band", "bucket"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
-        .join(newSh.select(col(idCol).as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-        .join(newSh.select(col(idCol).as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
+      val droppedIntra = withShingles(withShingles(pairs, "doc_a", "sh_a"), "doc_b", "sh_b")
         .filter(jaccard >= threshold)
         .select(col("doc_b").as(idCol))
 
+      // one action judges the batch: every arrival id, flagged when it
+      // drops. Dropped ids are a subset of this batch's ids, so they come
+      // back to the driver and both appends filter by them — neither
+      // append re-runs the probe
       val dropped = droppedVsState.union(droppedIntra).distinct()
-      // dropped ids are a subset of this batch's ids — broadcast the anti side
-      val survivors = batch.join(broadcast(dropped), Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = survivors.count()
-        if (n > 0) {
-          appendOnce(survivors, docsTable, Seq(idCol), batchId)
-          if (crashBetweenAppendsOnce) {
-            crashBetweenAppendsOnce = false
-            throw new RuntimeException(
-              "injected crash between docs append and bands append")
-          }
-          // survivors' band rows are a pure function of their text and
-          // newBands is still cached here — the semi-join reuses it
-          // instead of re-running shingling + k minhashes per survivor
-          appendOnce(
-            newBands.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
-            bandsTable, Seq(idCol, "band"), batchId)
+        .withColumn("__dropped", lit(true))
+      val judged = batch.select(col(idCol))
+        .join(broadcast(dropped), Seq(idCol), "left_outer").collect()
+      val droppedIds = judged.collect { case r if !r.isNullAt(1) => r.get(0) }
+      val n = (judged.length - droppedIds.length).toLong
+      val kept = !col(idCol).isin(droppedIds.toSeq: _*)
+      if (n > 0) {
+        // a null id never matches a dropped one: its row survives, as
+        // under an anti-join
+        appendOnce(batch.filter(col(idCol).isNull || kept), docsTable,
+          Seq(idCol), batchId)
+        if (crashBetweenAppendsOnce) {
+          crashBetweenAppendsOnce = false
+          throw new RuntimeException(
+            "injected crash between docs append and bands append")
         }
-        n
-      } finally survivors.unpersist(blocking = false)
-    } finally {
-      newBands.unpersist(blocking = false)
-      newSh.unpersist(blocking = false)
-    }
+        // survivors' band rows are a pure function of their text and
+        // newBands is still cached here — filtering it reuses them instead
+        // of re-running shingling + k minhashes per survivor (null ids
+        // carry no band rows, as under the semi-join on survivor ids)
+        appendOnce(newBands.filter(col(idCol).isNotNull && kept),
+          bandsTable, Seq(idCol, "band"), batchId)
+      }
+      n
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
   /** Attach to a document stream (same trigger conventions as

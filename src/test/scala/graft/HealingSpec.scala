@@ -293,15 +293,16 @@ class HealingSpec extends SparkSpec {
         batchId = Some(i.toLong))
     // first commit is a full snapshot; every later append stores only its
     // own files behind a base pointer — O(batch) metadata per micro-batch
-    assert(header(1L) == "graft-manifest-v1")
-    (2L to 4L).foreach(v => assert(header(v) == "graft-manifest-v3"))
+    // (v4/v5: the full and delta forms that record sizes and schema)
+    assert(header(1L) == "graft-manifest-v4")
+    (2L to 4L).foreach(v => assert(header(v) == "graft-manifest-v5"))
     assert(catalog.load("output.delta").count() == 4)
     // vacuum reclaims v1/v2; v3 resolved through them, so it is folded into
     // a full manifest in place — both retained versions stay readable
     catalog.vacuum("output.delta")
     assert(catalog.snapshotVersions("output.delta") == Seq(3L, 4L))
-    assert(header(3L) == "graft-manifest-v1")
-    assert(header(4L) == "graft-manifest-v3")
+    assert(header(3L) == "graft-manifest-v4")
+    assert(header(4L) == "graft-manifest-v5")
     assert(catalog.load("output.delta", 3L).count() == 3)
     assert(catalog.load("output.delta").count() == 4)
     // vacuum also sweeps stale writer locks (a live-looking one survives)

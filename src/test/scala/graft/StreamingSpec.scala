@@ -885,6 +885,87 @@ class StreamingSpec extends SparkSpec {
     assert(bandRows.select("band").distinct().count() == 8)
   }
 
+  /** Rows the file scans under each of `roots` produced across every query
+    * `body` ran. Each executed scan counts once: a scan inside a cached
+    * relation's plan ran once however many later queries read the cache,
+    * and a re-scan is a new physical node. A marker query run after `body`
+    * flushes the listener bus, which delivers in order. */
+  private def rowsScanned(roots: Seq[String])(body: => Unit): Seq[Long] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val marker = s"rows-scanned-marker-${System.nanoTime()}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) flushed.countDown()
+        else plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator.single(p) ++ (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children ++ other.subqueries
+    }).iterator.flatMap(nodes)
+    val scans = new java.util.IdentityHashMap[FileSourceScanExec, Unit]()
+    plans.forEach(p => nodes(p).foreach {
+      case f: FileSourceScanExec => scans.put(f, ())
+      case _ =>
+    })
+    roots.map { root =>
+      val prefix = new java.io.File(root).toURI.getPath.stripSuffix("/")
+      scans.keySet.toArray(Array.empty[FileSourceScanExec])
+        .filter(_.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(prefix)))
+        .map(_.metrics("numOutputRows").value).sum
+    }
+  }
+
+  test("IncrementalDedup: a batch scans its arrivals and the band state once and leaves nothing persisted") {
+    import graft.streaming.IncrementalDedup
+    val root = java.nio.file.Files.createTempDirectory("graft-incdedup-once").toString
+    val catalog = new graft.core.Catalog(spark, root)
+    val inc = new IncrementalDedup(catalog, "once.docs", "once.bands", threshold = 0.3)
+    val vocab = (0 until 400).map(i => s"w$i")
+    def text(i: Int) = {
+      val r = new scala.util.Random(i)
+      Seq.fill(12)(vocab(r.nextInt(vocab.size))).mkString(" ")
+    }
+    def docs(ids: Seq[Int]) = ids.map(i => (i.toLong, text(i))).toDF("doc_id", "text")
+    inc.processBatch(docs(1 to 40), 0L)
+    // arrivals read from parquet, so their scans show in the executed plans;
+    // doc 81 repeats doc 7 and drops against the accepted state
+    val arrivals = s"$root/arrivals"
+    docs(41 to 80).union(Seq((81L, text(7))).toDF("doc_id", "text")).write.parquet(arrivals)
+    val stateRows = catalog.load("once.bands").count()
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val Seq(arrivalRows, stateRowsRead) = rowsScanned(Seq(arrivals, s"$root/once/bands")) {
+      assert(inc.processBatch(spark.read.parquet(arrivals), 1L) == 40L)
+    }
+    assert(arrivalRows == 41, "the arrivals source was scanned more than once")
+    assert(stateRowsRead == stateRows, "the band state was scanned more than once")
+    assert(sc.getPersistentRDDs.isEmpty)
+    // and a batch that fails between its two appends releases them too
+    inc.crashBetweenAppendsOnce = true
+    intercept[RuntimeException] { inc.processBatch(docs(100 to 110), 2L) }
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(inc.processBatch(docs(100 to 110), 2L) == 11L)
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(catalog.load("once.docs").count() == 91)
+  }
+
   test("IncrementalDedup state probe broadcasts the micro-batch, never shuffles the state") {
     // the state table reads from storage (corpus-global, grows without
     // bound); the batch-derived band frame broadcasts — the probe must

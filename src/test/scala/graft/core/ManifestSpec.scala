@@ -268,4 +268,44 @@ class ManifestSpec extends AnyFunSuite {
     assert(s.version == 2L)
     assert(Manifest.versions(fs, table) == Seq(1L, 2L))
   }
+
+  test("layouts: sizes and schema round-trip through deltas and checkpoints") {
+    val (fs, table) = freshTable()
+    val schema = """{"type":"struct","fields":[]}"""
+    def layout(sizes: Long*) = Some(Manifest.Layout(sizes, schema))
+    Manifest.publish(fs, table, Nil, None, Seq("a.parquet"), layout = layout(10L))
+    Manifest.publish(fs, table, Nil, Some(1L), Seq("a.parquet", "b b.parquet"),
+      preferDelta = true, layout = layout(10L, 20L))
+    assert(rawLines(fs, table, 1L).head == "graft-manifest-v4")
+    assert(rawLines(fs, table, 2L).head == "graft-manifest-v5")
+    val v2 = Manifest.read(fs, table, 2L)
+    assert(v2.files == Seq("a.parquet", "b b.parquet") && v2.base.contains(1L))
+    assert(v2.layout == layout(10L, 20L))
+    // a folded delta keeps its resolved layout
+    Manifest.checkpoint(fs, table, 2L)
+    assert(rawLines(fs, table, 2L).head == "graft-manifest-v4")
+    assert(Manifest.read(fs, table, 2L).layout == layout(10L, 20L))
+    // a commit without a layout (a type conflict the writer could not
+    // merge) keeps the delta form; its resolved snapshot has no layout,
+    // and a layout commit on top of it is written full
+    Manifest.publish(fs, table, Nil, None, Seq("a.parquet", "b b.parquet", "c.parquet"),
+      preferDelta = true)
+    assert(rawLines(fs, table, 3L).head == "graft-manifest-v3")
+    assert(Manifest.read(fs, table, 3L).layout.isEmpty)
+    val v4 = Manifest.publish(fs, table, Nil, None,
+      Seq("a.parquet", "b b.parquet", "c.parquet", "d.parquet"),
+      preferDelta = true, layout = layout(10L, 20L, 30L, 40L))
+    assert(v4.base.isEmpty && rawLines(fs, table, 4L).head == "graft-manifest-v4")
+    assert(Manifest.read(fs, table, 4L).layout == layout(10L, 20L, 30L, 40L))
+    // the checksum covers the recorded sizes
+    val mf = new java.io.File(new Path(Manifest.dir(table),
+      f"v${4L}%020d.manifest").toUri.getPath)
+    val content = new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
+    java.nio.file.Files.write(mf.toPath,
+      content.replace("40\td.parquet", "41\td.parquet").getBytes("UTF-8"))
+    new java.io.File(mf.getParent).listFiles()
+      .filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    val e = intercept[java.io.IOException] { Manifest.read(fs, table, 4L) }
+    assert(e.getMessage.contains("checksum mismatch"))
+  }
 }

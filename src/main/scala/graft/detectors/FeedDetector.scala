@@ -41,7 +41,7 @@ final class FeedDetector(
       .select(col(feedCol)).distinct()
     val expectedDf = expectedFeeds.toDF(feedCol)
     val missing = Joins.missingKeys(expectedDf, today, feedCol)
-      .orderBy(feedCol).as[String].collect().toSeq
+      .as[String].collect().toSeq.sorted(DriverOrder.strings)
     val arrived = expectedFeeds.size - missing.size
     val missingPct =
       if (expectedFeeds.isEmpty) 0.0 else missing.size.toDouble * 100 / expectedFeeds.size

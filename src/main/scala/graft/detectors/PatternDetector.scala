@@ -16,12 +16,14 @@ import graft.ops.{Thresholds, TimeFilters}
   * dimension thresholds follow the reference: region breaks at >100%
   * deviation (pattern_detector.py:99), product_category at >80% (`:150`).
   *
-  * Both joins are between tiny per-key aggregates, and both are
-  * broadcastable shapes: today-LEFT-baseline builds the broadcast on the
-  * baseline side (BroadcastHashJoin supports LeftOuter/BuildRight), and the
-  * vanished-key probe is a left-anti with today's keys broadcast — unlike a
-  * full-outer join, where a broadcast hint is unsupported and silently
-  * degrades to a shuffle.
+  * One Spark action over one date-bounded scan, `[today - baselineDays,
+  * today]`: each row is exploded into one `(dimension index, key)` pair per
+  * dimension, counted per `(dim, key, day)`, and reduced per `(dim, key)` to
+  * today's count and the average over the earlier days. The dimension index
+  * is part of every grouping key, so a null region and a null category stay
+  * two groups. The O(keys) break rows are sorted on the driver: dimension
+  * order, then `|deviation|` descending, then key ascending with nulls
+  * first, as Spark orders strings.
   */
 final class PatternDetector(
     facts: DataFrame, clock: Clock,
@@ -34,76 +36,65 @@ final class PatternDetector(
   /** Break-count severity ladder (pattern_detector.py:234-243 shape). */
   private val ladder = Thresholds(critical = 4, high = 2, medium = 1)
 
+  /** Dimension index, then |deviation| descending, then key. */
+  private val breakOrder = Ordering.by[(Int, PatternBreak), Int](_._1)
+    .orElseBy(b => math.abs(b._2.deviationPct))(Ordering.Double.TotalOrdering.reverse)
+    .orElseBy(_._2.key)(DriverOrder.strings)
+
   def checkPatternBreaks(): PatternStatus = {
+    if (dimensions.isEmpty) return PatternStatus(Nil, hasBreaks = false, ladder.severity(0.0))
     val today = clock.today
-    val breaks = dimensions.flatMap { case (dim, breakThresholdPct) =>
-      val todayCounts = TimeFilters.filterOnDate(facts, tsCol, today)
-        .groupBy(col(dim).as("key"))
-        .agg(count(lit(1)).cast("double").as("today_value"))
-      val baseline = TimeFilters.filterDateBetween(facts, tsCol,
-          today.minusDays(baselineDays.toLong), today.minusDays(1))
-        .groupBy(col(dim).as("key"), to_date(col(tsCol)).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy("key")
-        .agg(avg(col("cnt")).as("baseline_avg"))
-        // keys whose average fell at/below minDailyCount keep their TRUE
-        // baseline_avg but are not measurement-eligible on baseline volume
-        // alone: dropping the row (the old shape) made them
-        // indistinguishable from brand-new keys, so a handful of low-volume
-        // dimension values read as "new" breaks (+100%, baseline 0.0) and
-        // could ladder up to critical. They can still EARN measurement on
-        // today's volume — see the deviation branch below.
-        .withColumn("eligible", col("baseline_avg") > minDailyCount)
-      // reference shape (pattern_detector.py:98): today LEFT JOIN baseline.
-      // Both joins are null-safe (<=>): a null dimension value forms a real
-      // group in both aggregates, and plain equality would (a) never pair it
-      // in the left join — today's null-key volume could never be flagged —
-      // and (b) report the baseline's null group as vanished on EVERY run
-      // even with null rows present today, a permanent false positive that
-      // inflates breaks.size into the severity ladder
-      val b = baseline.withColumnRenamed("key", "bkey")
-      // beyond the reference, symmetric with `vanished` below: a key with
-      // today-volume but NO baseline history at all is a brand-new dimension
-      // value — an appearance is a break (+100%), regardless of the pct
-      // threshold, PROVIDED today's volume clears the same minDailyCount
-      // floor the baseline side applies (a single stray row on a new key is
-      // below the detector's own materiality line and must not ladder
+    val isToday = col("d") === lit(java.sql.Date.valueOf(today))
+    val todayValue = col("today_value")
+    val baselineAvg = col("baseline_avg")
+    val threshold = element_at(typedLit(dimensions.map(_._2)), col("dim") + 1)
+    val perKey = TimeFilters.filterDateBetween(facts, tsCol,
+        today.minusDays(baselineDays.toLong), today)
+      .select(to_date(col(tsCol)).as("d"), inline(array(dimensions.zipWithIndex.map {
+        case ((dim, _), i) => struct(lit(i).as("dim"), col(dim).cast("string").as("key"))
+      }: _*)))
+      .groupBy("dim", "key", "d")
+      .agg(count(lit(1)).as("cnt"))
+      .groupBy("dim", "key")
+      // today_value is null for a key with no row today, baseline_avg for
+      // a key with no row on an earlier day
+      .agg(sum(when(isToday, col("cnt"))).cast("double").as("today_value"),
+        avg(when(!isToday, col("cnt"))).as("baseline_avg"))
+      // keys whose average fell at/below minDailyCount keep their TRUE
+      // baseline_avg but are not measurement-eligible on baseline volume
+      // alone (reading them as brand-new let a few low-volume values
+      // ladder up to critical); they can still EARN measurement on today's
+      // volume, see the deviation branch below
+      .withColumn("eligible", baselineAvg > minDailyCount)
+      // beyond the reference, symmetric with a vanished key: a key with
+      // today-volume but NO baseline history is a brand-new value, a +100%
+      // break regardless of the pct threshold PROVIDED today's volume
+      // clears the minDailyCount floor (one stray row must not ladder
       // toward critical). A key with real-but-sub-threshold history is NOT
-      // new: it reports its true baseline_avg, and is measured against it
-      // whenever TODAY's volume clears the same minDailyCount floor —
-      // otherwise a low-volume key that surges (baseline 1.5/day, today
-      // 5000) could never flag while a truly-new key with the same today
-      // volume flags at +100%, i.e. having a little history would suppress
-      // alerting more than having none. A sub-threshold key that stays
-      // quiet today (neither side clears the floor) remains unmeasured.
-      val present = todayCounts.join(broadcast(b), col("key") <=> col("bkey"), "left")
-        .withColumn("new_key",
-          col("baseline_avg").isNull && col("today_value") > minDailyCount)
-        .withColumn("baseline_avg", coalesce(col("baseline_avg"), lit(0.0)))
-        .withColumn("deviation_pct",
-          when(col("new_key"), lit(100.0))
-            .otherwise(when(
-              (col("eligible") || col("today_value") > minDailyCount)
-                && col("baseline_avg") > 0,
-              (col("today_value") - col("baseline_avg")) / col("baseline_avg") * 100)))
-        .filter(col("new_key") || abs(col("deviation_pct")) > breakThresholdPct)
-      // beyond the reference: a key present all baseline days but absent
-      // today is invisible to the today-side left join; a disappearance is
-      // always a break (deviation -100%), regardless of the pct threshold
-      // only measurement-eligible baselines can "vanish" — a key that was
-      // already excluded for sub-threshold volume is not a disappearance
-      val vanished = b.filter(col("eligible"))
-        .join(broadcast(todayCounts.select("key")), col("bkey") <=> col("key"), "left_anti")
-        .select(col("bkey").as("key"), lit(0.0).as("today_value"),
-          col("baseline_avg"), lit(-100.0).as("deviation_pct"))
-      present.select("key", "today_value", "baseline_avg", "deviation_pct")
-        .union(vanished)
-        .orderBy(abs(col("deviation_pct")).desc, col("key"))
-        .collect()
-        .map(r => PatternBreak(dim, r.getAs[String]("key"),
-          r.getAs[Double]("today_value"), r.getAs[Double]("baseline_avg"),
-          r.getAs[Double]("deviation_pct")))
-    }
+      // new: it is measured against its true baseline_avg whenever TODAY
+      // clears the floor, or a low-volume key that surges (1.5/day, then
+      // 5000) could never flag while a new key with that volume would. A
+      // key below the floor on both sides stays unmeasured.
+      .withColumn("new_key", baselineAvg.isNull && todayValue > minDailyCount)
+      .withColumn("baseline_avg", coalesce(baselineAvg, lit(0.0)))
+      .withColumn("deviation_pct",
+        // beyond the reference: a key with history but no row today is a
+        // disappearance, always a break (-100%) regardless of the pct
+        // threshold — but only a measurement-eligible baseline can
+        // vanish; a key already excluded for sub-threshold volume cannot
+        when(todayValue.isNull, lit(-100.0))
+          .when(col("new_key"), lit(100.0))
+          .when((col("eligible") || todayValue > minDailyCount) && baselineAvg > 0,
+            (todayValue - baselineAvg) / baselineAvg * 100))
+      .filter(when(todayValue.isNull, col("eligible"))
+        .otherwise(col("new_key") || abs(col("deviation_pct")) > threshold))
+      .select(col("dim"), col("key"), coalesce(todayValue, lit(0.0)),
+        baselineAvg, col("deviation_pct"))
+    val breaks = perKey.collect().toSeq
+      .map(r => (r.getInt(0), PatternBreak(dimensions(r.getInt(0))._1, r.getString(1),
+        r.getDouble(2), r.getDouble(3), r.getDouble(4))))
+      .sorted(breakOrder)
+      .map(_._2)
     PatternStatus(breaks, breaks.nonEmpty, ladder.severity(breaks.size.toDouble))
   }
 }

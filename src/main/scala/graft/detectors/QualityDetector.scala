@@ -9,8 +9,8 @@ import graft.ops.{Profiles, Thresholds, TimeFilters}
 /** Data-quality degradation detection (reference
   * `monitoring/detectors/quality_detector.py`): today's per-column null
   * rates vs a 30-day baseline (SURVEY §2.4 A12, §2.3 J4 two-scalar cross)
-  * plus duplicate-id rate (A10). One aggregate per side regardless of
-  * column count.
+  * plus duplicate-id rate (A10). One aggregate over both sides regardless
+  * of column count.
   *
   * API parity: `check_quality_degradation()` → [[checkQualityDegradation]].
   */
@@ -24,38 +24,28 @@ final class QualityDetector(
   private val ladder = Thresholds(critical = 3, high = 2, medium = 1)
 
   def checkQualityDegradation(): QualityStatus = {
-    val today = TimeFilters.filterOnDate(facts, tsCol, clock.today)
-    val baseline = TimeFilters.filterDateBetween(facts, tsCol,
-      clock.today.minusDays(baselineDays.toLong), clock.today.minusDays(1))
-
-    // TWO actions, not three: today's null profile and its duplicate
-    // stats combine into ONE aggregate (they were two separate jobs each
-    // re-scanning the same today slice — the serial-driver-loop shape
-    // FreshnessDetector's union already optimized away). The baseline
-    // profile stays its own job: folding it in via a side-tagged union
-    // would drag the countDistinct shuffle across 30 days of data for a
-    // statistic only today needs.
-    val n = count(lit(1))
-    val nullAggs = columns.map(c =>
-      when(n > 0, Profiles.countIf(col(c).isNull) * lit(100.0) / n)
-        .otherwise(lit(0.0)).as(s"${c}_null_pct"))
-    val dupAggs = Seq(
-      count(col(idCol)).as("id_rows"),
-      countDistinct(col(idCol)).as("distinct_ids"))
-    val todayRow = today
-      .agg((nullAggs ++ dupAggs).head, (nullAggs ++ dupAggs).tail: _*).head()
-    val todayPcts = columns.zipWithIndex.map { case (c, i) =>
-      c -> (if (todayRow.isNullAt(i)) 0.0 else todayRow.getDouble(i))
-    }.toMap
-
-    val baseRow = Profiles.nullPcts(baseline, columns).head()
-    val basePcts = columns.zipWithIndex.map { case (c, i) =>
-      c -> (if (baseRow.isNullAt(i + 1)) 0.0 else baseRow.getDouble(i + 1))
-    }.toMap
+    val ts = col(tsCol)
+    val isToday = TimeFilters.onDate(ts, clock.today)
+    val isBaseline = ts < lit(TimeFilters.utcTs(clock.today))
+    // ONE action over `[today - baselineDays, today]`: today's null profile,
+    // its duplicate stats and the baseline's null profile. The distinct
+    // count sees only today's ids; partial aggregation collapses the
+    // baseline rows to one null key per partition, so the exchange still
+    // carries only today's ids.
+    val aggs = Profiles.nullPctAggs(columns, isToday) ++
+      Profiles.nullPctAggs(columns, isBaseline) ++ Seq(
+      count(when(isToday, col(idCol))),
+      countDistinct(when(isToday, col(idCol))))
+    val row = TimeFilters.filterDateBetween(facts, tsCol,
+        clock.today.minusDays(baselineDays.toLong), clock.today)
+      .agg(aggs.head, aggs.tail: _*).head()
+    val todayPcts = columns.zipWithIndex.map { case (c, i) => c -> row.getDouble(i) }.toMap
+    val basePcts =
+      columns.zipWithIndex.map { case (c, i) => c -> row.getDouble(columns.size + i) }.toMap
     val degraded = columns.filter(c => todayPcts(c) - basePcts(c) > degradationPts)
 
-    val idRows = todayRow.getLong(columns.size)
-    val distinctIds = todayRow.getLong(columns.size + 1)
+    val idRows = row.getLong(2 * columns.size)
+    val distinctIds = row.getLong(2 * columns.size + 1)
     val dupPct =
       if (idRows == 0) 0.0 else (idRows - distinctIds).toDouble * 100 / idRows
     val issues = degraded.size + (if (dupPct > dupPctThreshold) 1 else 0)

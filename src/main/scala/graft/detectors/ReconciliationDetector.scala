@@ -39,11 +39,12 @@ final class ReconciliationDetector(clock: Clock) {
       .agg(count(lit(1)).as("source_count"))
     val dstHourly = d.groupBy(hour(col(dstTsCol)).cast("long").as("hour"))
       .agg(count(lit(1)).as("dest_count"))
+    // at most 24 rows: sorted on the driver, not by a global orderBy
     val hourly = Joins.reconcile(srcHourly, dstHourly, "hour")
-      .orderBy("hour")
       .collect()
       .map(r => HourlyDiff(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
+      .sortBy(_.hour)
 
     val srcCount = hourly.map(_.sourceCount).sum
     val dstCount = hourly.map(_.destCount).sum

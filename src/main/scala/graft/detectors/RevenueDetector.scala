@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.Clock
-import graft.ops.{BaselineStats, Exact, Thresholds, TimeFilters, ZScore}
+import graft.ops.{BaselineStats, Exact, Thresholds, TimeFilters}
 
 /** Revenue anomaly detection (reference
   * `monitoring/detectors/revenue_detector.py`).
@@ -16,8 +16,9 @@ import graft.ops.{BaselineStats, Exact, Thresholds, TimeFilters, ZScore}
   *
   * The reference collects ~30 daily sums and finishes with python
   * `statistics` (`revenue_detector.py:124-136`); here the 30-day baseline
-  * (avg/std/median/min/max/n) is ONE distributed aggregate
-  * ([[BaselineStats.stats]]) and only the single stats row is collected.
+  * (avg/std/median/min/max/n) and the day's own total are ONE distributed
+  * aggregate ([[BaselineStats.stats]]) and only the single stats row is
+  * collected.
   * Guards replicated: std==0 → z=0 (`:49`), min-sample n<7 → no verdict
   * (`:126`).
   */
@@ -29,15 +30,21 @@ final class RevenueDetector(
     baselineDays: Int = 30, minSamples: Int = 7, zThreshold: Double = 2.5) {
 
   def checkRevenueAnomaly(date: LocalDate): RevenueStatus = {
-    val currentTotal = TimeFilters.filterOnDate(revenue, tsCol, date)
-      .agg(coalesce(Exact.sum2(col(valueCol)), lit(0.0))).head().getDouble(0)
-
+    // one action over `[date - baselineDays, date]`: the baseline stats see
+    // only the earlier days (nulls are not samples), and the same aggregate
+    // carries the day's own total
     val daily = BaselineStats.dailyTotals(
       TimeFilters.filterDateBetween(revenue, tsCol,
-        date.minusDays(baselineDays.toLong), date.minusDays(1)),
+        date.minusDays(baselineDays.toLong), date),
       tsCol, valueCol)
-    val statsRow: Row = BaselineStats.stats(daily, "daily_total").head()
+    val onDate = col("d") === lit(java.sql.Date.valueOf(date))
+    val statsRow: Row = BaselineStats.stats(
+      daily.withColumn("baseline_total", when(!onDate, col("daily_total"))),
+      "baseline_total",
+      extra = Seq("current_total" ->
+        coalesce(max(when(onDate, col("daily_total"))), lit(0.0)))).head()
     val n = statsRow.getLong(5)
+    val currentTotal = statsRow.getDouble(6)
 
     if (n < minSamples) {
       RevenueStatus(date, currentTotal, None, 0.0, isAnomaly = false,

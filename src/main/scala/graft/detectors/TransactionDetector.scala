@@ -30,9 +30,8 @@ final class TransactionDetector(
     baselineDays: Int = 30, minSamples: Int = 7, zThreshold: Double = 2.5) {
 
   def checkTransactionVolume(hours: Int = 1): VolumeStatus = {
-    val currentCount = txns
-      .filter(TimeFilters.trailing(col(tsCol), clock.now, hours = hours))
-      .count()
+    val ts = col(tsCol)
+    val current = TimeFilters.trailing(ts, clock.now, hours = hours)
     val currentHour = clock.now.atZone(java.time.ZoneOffset.UTC).getHour
 
     // per-day counts at the same hour over the trailing baseline window,
@@ -40,21 +39,27 @@ final class TransactionDetector(
     // `transaction_date < TIMESTAMP_SUB(now, INTERVAL {hours} HOUR)`) so a
     // currently-anomalous hour cannot dampen its own z-score
     val baselineEnd = clock.now.minusSeconds(hours.toLong * 3600)
+    val inBaseline = TimeFilters.trailing(ts, clock.now, days = baselineDays) &&
+      ts < lit(java.sql.Timestamp.from(baselineEnd)) && hour(ts) === currentHour
+    // one action: a single scan covering both windows, counted per day
     val perDay = txns
-      .filter(TimeFilters.trailing(col(tsCol), clock.now, days = baselineDays))
-      .filter(col(tsCol) < lit(java.sql.Timestamp.from(baselineEnd)))
-      .filter(hour(col(tsCol)) === currentHour)
-      .groupBy(to_date(col(tsCol)).as("d"))
+      .filter(TimeFilters.trailing(ts, clock.now, hours = math.max(hours, baselineDays * 24)))
+      .groupBy(to_date(ts).as("d"))
       // count cast to double up front: BaselineStats.stats then types
       // min/max/median as double, and the old inline sum(cnt*cnt) — which
       // ANSI-overflowed long past ~3e9 events in one (day, hour) cell —
       // is replaced by the decimal-routed moments
-      .agg(count(lit(1)).cast("double").as("cnt"))
+      .agg(count(when(inBaseline, 1)).cast("double").as("cnt"),
+        count(when(current, 1)).as("current"))
     // ONE definition of the moments/median shape (BaselineStats.stats —
     // the same six aggregates this method used to spell inline; a real
-    // percentile(0.5) in the median slot, not the avg)
-    val m = BaselineStats.stats(perDay, "cnt").head()
+    // percentile(0.5) in the median slot, not the avg). A day with no
+    // baseline row is not a sample.
+    val m = BaselineStats.stats(
+      perDay.withColumn("cnt", when(col("cnt") > 0, col("cnt"))), "cnt",
+      extra = Seq("current_count" -> coalesce(sum(col("current")), lit(0L)))).head()
     val n = m.getLong(5)
+    val currentCount = m.getLong(6)
 
     if (n < minSamples) {
       VolumeStatus(currentHour, currentCount, None, 0.0, isAnomaly = false, 0.0, "NONE")

@@ -24,20 +24,27 @@ object BaselineStats {
         Exact.sum2(col(valueCol)).as("daily_total"),
         count(lit(1)).as("txn_count"))
 
-  /** One-row baseline stats over `valueCol` (deterministic, see [[Exact]]). */
-  def stats(df: DataFrame, valueCol: String): DataFrame = {
+  /** One-row baseline stats over `valueCol` (deterministic, see [[Exact]]).
+    * Nulls are not samples, so a caller can scope the baseline with
+    * `when(inBaseline, v)` and add its own (name, aggregate) `extra`
+    * columns, carried after the six stats columns, to the same aggregate. */
+  def stats(df: DataFrame, valueCol: String,
+      extra: Seq[(String, Column)] = Nil): DataFrame = {
     val v = col(valueCol)
-    df.agg(
-        Exact.sum2(v).as("s"),
-        Exact.sumSq2(v).as("q"),
-        count(v).as("sample_size"),
-        min(v).as("min_value"),
-        max(v).as("max_value"),
-        percentile(v, lit(0.5)).as("median_value"))
-      .select(
+    val aggs = Seq(
+      Exact.sum2(v).as("s"),
+      Exact.sumSq2(v).as("q"),
+      count(v).as("sample_size"),
+      min(v).as("min_value"),
+      max(v).as("max_value"),
+      percentile(v, lit(0.5)).as("median_value")) ++
+      extra.map { case (name, agg) => agg.as(name) }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(Seq(
         (col("s") / col("sample_size")).as("baseline_value"),
         Exact.stddevFrom(col("s"), col("q"), col("sample_size")).as("std_dev"),
-        col("median_value"), col("min_value"), col("max_value"), col("sample_size"))
+        col("median_value"), col("min_value"), col("max_value"), col("sample_size")) ++
+        extra.map { case (name, _) => col(name) }: _*)
   }
 
   /** Windowed variant (SURVEY §2.5 W1): trailing `days`-row baseline per row,

@@ -23,16 +23,15 @@ object Profiles {
     df.agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Null percentage per listed column (A12): `<col>_null_pct`.
-    * Zero rows profile as 0.0% null (not an ANSI divide-by-zero) — an empty
-    * window is a legitimate input for detectors running before any history
-    * exists. Values on non-empty input are unchanged (oracle-identical). */
-  def nullPcts(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val n = count(lit(1))
-    val aggs = n.as("total_rows") +:
-      cols.map(c => when(n > 0, countIf(col(c).isNull) * lit(100.0) / n)
-        .otherwise(lit(0.0)).as(s"${c}_null_pct"))
-    df.agg(aggs.head, aggs.tail: _*)
+  /** Null percentage per listed column (A12), `<col>_null_pct`, over the
+    * rows `scope` selects, so several windows of one scan profile in one
+    * aggregate. Zero rows profile as 0.0% null (not an ANSI divide-by-zero)
+    * — an empty window is a legitimate input for detectors running before
+    * any history exists. */
+  def nullPctAggs(cols: Seq[String], scope: Column): Seq[Column] = {
+    val n = countIf(scope)
+    cols.map(c => when(n > 0, countIf(scope && col(c).isNull) * lit(100.0) / n)
+      .otherwise(lit(0.0)).as(s"${c}_null_pct"))
   }
 
   /** Duplicate stats on a key (A10): total, distinct, dup count, dup pct.

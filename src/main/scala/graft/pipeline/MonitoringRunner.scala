@@ -11,9 +11,11 @@ import graft.detectors._
   * daily report synthesis — the engine-side equivalent of
   * `dag/financial_monitoring_complete.py:181-195` + `:117-168`.
   *
-  * Each detector check is itself a Spark job (already parallel inside);
-  * the Future fan-out mirrors Airflow's task parallelism and overlaps the
-  * detectors' driver-side latencies.
+  * Each detector check that scans data is one Spark action over one
+  * date-bounded scan (already parallel inside; revenue adds a second only
+  * for an anomaly's category breakdown), as each reference check is one
+  * SQL statement. The Future fan-out mirrors Airflow's task parallelism
+  * and overlaps the checks' fixed per-action driver and scheduling cost.
   */
 final case class MonitoringResult(
     feeds: Option[FeedStatus], revenue: Option[RevenueStatus],

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
 import scala.util.matching.Regex
 
 /** Rule-based failure classification + code/config repair — the engine-side
@@ -111,7 +112,9 @@ object Retry {
     while (i < attempts) {
       try return f
       catch {
-        case e: Throwable =>
+        // fatal throwables (OOM, interrupts, linkage errors) escape on the
+        // first attempt: retrying them hides a dying JVM or a cancellation
+        case NonFatal(e) =>
           last = e
           i += 1
           if (i < attempts && delayMs > 0) Thread.sleep(delayMs)
@@ -145,7 +148,7 @@ final class SelfHealingRunner(maxAttempts: Int = 3) {
       try {
         return (job(current), attempts.toSeq)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           i += 1
           val ctx = AutoHealer.extractErrorContext(
             Option(e.getMessage).getOrElse(e.toString))

@@ -68,6 +68,23 @@ class CoreSpec extends AnyFunSuite {
       new SelfHealingRunner().run("fine") { _ => sys.error("unclassifiable") })
   }
 
+  test("Retry and SelfHealingRunner let fatal throwables escape on the first attempt") {
+    // each message classifies as a healable table reference, so a runner
+    // that caught Throwable would patch the artifact and run the job again
+    val msg = "Malformed table reference: 'ns..table'"
+    for (fatal <- Seq(new InterruptedException(msg), new OutOfMemoryError(msg))) {
+      var calls = 0
+      val thrown = intercept[Throwable](Retry(3) { calls += 1; throw fatal })
+      assert((thrown eq fatal) && calls == 1)
+
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      val healed = intercept[Throwable](
+        new SelfHealingRunner().run("ns..table") { ref => seen += ref; throw fatal })
+      // one call on the original artifact: no attempt was recorded, no patch made
+      assert((healed eq fatal) && seen == Seq("ns..table"))
+    }
+  }
+
   test("Velocity breach projection with zero-rate guard") {
     val (h, breach) = Velocity.projectBreach(0, 100000, 25000.0, 4.0)
     assert(h == 4.0 && !breach)

@@ -3,7 +3,15 @@ package graft
 import java.sql.Timestamp
 import java.time.{Instant, LocalDate}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.alerts.{AlertManager, InMemorySink}
 import graft.core.FixedClock
@@ -493,5 +501,171 @@ class DetectorsSpec extends SparkSpec {
     assert(result.feeds.isEmpty)             // timed out => failed, not hung
     assert(result.revenue.isDefined && result.quality.isDefined)
     assert(result.report.contains("CHECK FAILED"))
+  }
+
+  /** What `body` ran: root SQL executions (one per action), their executed
+    * plans, and Spark jobs started. A marker query in its own job group
+    * flushes both listeners: the listener bus delivers events in order. */
+  private case class Actions(executions: Int, plans: Seq[SparkPlan], jobs: Int)
+  private def actionsDuring(body: => Unit): Actions = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = s"detector-actions-marker-${System.nanoTime()}"
+    val flushed = new java.util.concurrent.CountDownLatch(2)
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) flushed.countDown()
+        else plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          flushed.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(qel)
+    sc.addSparkListener(jl)
+    try {
+      body
+      sc.setJobGroup(marker, "flush")
+      try spark.range(1).select(lit(marker)).collect() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker never arrived")
+    } finally {
+      spark.listenerManager.unregister(qel)
+      sc.removeSparkListener(jl)
+    }
+    import scala.jdk.CollectionConverters._
+    Actions(plans.size, plans.asScala.toSeq, jobs.get)
+  }
+
+  /** Every node of an executed plan, through adaptive stages. */
+  private def planNodes(p: SparkPlan): Iterator[SparkPlan] = Iterator.single(p) ++ (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case other => other.children ++ other.subqueries
+  }).iterator.flatMap(planNodes)
+
+  /** The decision-table fixture of the minDailyCount test above. */
+  private lazy val decisionTable: DataFrame = {
+    val mk = (r: String, n: Int, day: LocalDate) => Seq.fill(n)((r, "Food", ts(day)))
+    ((1 to 31).flatMap { d =>
+      val day = today.minusDays(d.toLong)
+      mk("HI_BIG", 5, day) ++ mk("HI_TINY", 5, day) ++ mk("HI_ZERO", 5, day) ++
+        mk("LO_BIG", 1, day) ++ mk("LO_TINY", 1, day) ++ mk("LO_ZERO", 1, day)
+    } ++
+      mk("HI_BIG", 50, today) ++ mk("HI_TINY", 1, today) ++
+      mk("LO_BIG", 50, today) ++ mk("LO_TINY", 1, today) ++
+      mk("NEW_BIG", 50, today) ++ mk("NEW_TINY", 1, today))
+      .toDF("region", "product_category", "transaction_date")
+  }
+
+  test("each detector check runs one Spark action; revenue adds one only for a breakdown") {
+    val postDeadline = FixedClock.at("2024-01-31T17:00:00Z")
+    val checks: Seq[(String, Int, () => Any)] = Seq(
+      ("feeds", 1, () => new FeedDetector(feedFixture, postDeadline)
+        .checkFeedStatus((1 to 15).map(f => f"FEED_$f%03d"))),
+      ("revenue, quiet day", 1, () => new RevenueDetector(revenueFixture, clock)
+        .checkRevenueAnomaly(today.minusDays(5))),
+      ("revenue, anomaly + breakdown", 2, () => new RevenueDetector(revenueFixture, clock)
+        .checkRevenueAnomaly(today)),
+      ("volume", 1, () => new TransactionDetector(revenueFixture, postDeadline)
+        .checkTransactionVolume(hours = 1)),
+      ("freshness", 1, () => new FreshnessDetector(Seq(
+        ("rev", revenueFixture, "transaction_date"), ("feeds", feedFixture, "arrival_time")),
+        clock).checkDataFreshness(240)),
+      ("patterns", 1, () => new PatternDetector(revenueFixture, clock).checkPatternBreaks()),
+      ("recon", 1, () => new ReconciliationDetector(clock)
+        .checkReconciliation(revenueFixture, revenueFixture, today.minusDays(5))),
+      ("sla", 1, () => new SlaDetector(feedFixture, postDeadline).predictSlaBreach()),
+      ("quality", 1, () => new QualityDetector(revenueFixture, clock).checkQualityDegradation()))
+    checks.foreach { case (name, expected, check) =>
+      val a = actionsDuring(check())
+      assert(a.executions == expected, s"$name: ${a.executions} root SQL executions")
+    }
+    assert(new RevenueDetector(revenueFixture, clock).checkRevenueAnomaly(today).breakdown.nonEmpty)
+  }
+
+  test("PatternDetector: one plan with no join and no range-partitioning exchange") {
+    val a = actionsDuring(new PatternDetector(decisionTable, clock,
+      dimensions = Seq("region" -> 50.0, "product_category" -> 80.0),
+      minDailyCount = 2).checkPatternBreaks())
+    assert(a.executions == 1)
+    val nodes = a.plans.flatMap(planNodes)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), a.plans.mkString("\n"))
+    assert(!nodes.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }, a.plans.mkString("\n"))
+  }
+
+  test("MonitoringRunner: a full run on the Generators scenario starts at most 24 jobs") {
+    val asOf = LocalDate.parse("2024-01-31")
+    val feeds = graft.ops.Generators.feedArrivals(spark, asOf)
+    val revenue = graft.ops.Generators.dailyRevenue(spark, asOf)
+    val feedClock = FixedClock.at("2024-01-31T17:00:00Z")
+    val revClock = FixedClock.at("2024-01-31T18:00:00Z")
+    val am = new AlertManager(revClock, Seq(new InMemorySink("log")))
+    var result: graft.pipeline.MonitoringResult = null
+    val a = actionsDuring {
+      result = new MonitoringRunner(am).run(
+        feeds = () => new FeedDetector(feeds, feedClock)
+          .checkFeedStatus((1 to 15).map(f => f"FEED_$f%03d")),
+        revenue = () => new RevenueDetector(revenue, revClock).checkRevenueAnomaly(asOf),
+        volume = () => new TransactionDetector(feeds, feedClock, tsCol = "arrival_time")
+          .checkTransactionVolume(hours = 1),
+        freshness = () => new FreshnessDetector(Seq(("feeds", feeds, "arrival_time"),
+          ("revenue", revenue, "transaction_date")), revClock).checkDataFreshness(240),
+        patterns = () => new PatternDetector(revenue, revClock).checkPatternBreaks(),
+        recon = () => new ReconciliationDetector(revClock)
+          .checkReconciliation(revenue, revenue, asOf.minusDays(1)),
+        sla = () => new SlaDetector(feeds, feedClock).predictSlaBreach(),
+        quality = () => new QualityDetector(revenue, revClock).checkQualityDegradation())
+    }
+    assert(result.productIterator.take(8).forall(_ != None), result.report)
+    assert(result.revenue.exists(_.isAnomaly)) // the breakdown action ran too
+    // 9 actions (8 checks + revenue's breakdown), each a job plus AQE stage jobs
+    assert(a.executions == 9, a.executions.toString)
+    assert(a.jobs <= 24, s"${a.jobs} jobs")
+  }
+
+  test("fused checks equal their multi-action forms on the fixtures, bit for bit") {
+    import LegacyDetectors._
+    val asOf = LocalDate.parse("2024-01-31")
+    val genRevenue = graft.ops.Generators.dailyRevenue(spark, asOf)
+    val genFeeds = graft.ops.Generators.feedArrivals(spark, asOf)
+    val genClock = FixedClock.at("2024-01-31T18:00:00Z")
+    val facts = Seq(revenueFixture -> clock, genRevenue -> genClock,
+      revenueFixture -> FixedClock.at("2024-01-21T09:30:00Z"))
+    for ((df, c) <- facts) {
+      assertSameBits(patternBreaks(df, c), new PatternDetector(df, c).checkPatternBreaks())
+      for (mdc <- Seq(0L, 2L, 40L))
+        assertSameBits(patternBreaks(df, c, minDailyCount = mdc),
+          new PatternDetector(df, c, minDailyCount = mdc).checkPatternBreaks())
+      for (d <- Seq(c.today, c.today.minusDays(1), c.today.minusDays(29)))
+        assertSameBits(revenueAnomaly(df, c, d),
+          new RevenueDetector(df, c).checkRevenueAnomaly(d), s"revenue $d")
+      assertSameBits(qualityDegradation(df, c),
+        new QualityDetector(df, c).checkQualityDegradation())
+      for (h <- Seq(1, 3, 800))
+        assertSameBits(transactionVolume(df, c, hours = h),
+          new TransactionDetector(df, c).checkTransactionVolume(hours = h), s"volume $h")
+    }
+    for (dims <- Seq(Seq("region" -> 50.0), Seq("region" -> 50.0, "product_category" -> 0.0));
+         mdc <- Seq(0L, 1L, 2L, 5L))
+      assertSameBits(
+        patternBreaks(decisionTable, clock, dimensions = dims, minDailyCount = mdc),
+        new PatternDetector(decisionTable, clock, dimensions = dims, minDailyCount = mdc)
+          .checkPatternBreaks(), s"decision table $dims $mdc")
+    val expected = (0 to 16).map(f => f"FEED_$f%03d") :+ "Feed_x" :+ "FEED_\u00e9"
+    for (day <- Seq(asOf, asOf.minusDays(1)))
+      assert(new FeedDetector(genFeeds, FixedClock.at(s"${day}T17:00:00Z"))
+        .checkFeedStatus(expected).missingFeeds == missingFeeds(genFeeds, day, expected))
+    val morning = FixedClock.at("2024-01-31T09:30:00Z")
+    assertSameBits(transactionVolume(genFeeds, morning, tsCol = "arrival_time"),
+      new TransactionDetector(genFeeds, morning, tsCol = "arrival_time").checkTransactionVolume())
   }
 }

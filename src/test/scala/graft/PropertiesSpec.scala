@@ -85,6 +85,49 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("fused detector checks equal their multi-action forms on random fact frames") {
+    // skewed keys (A heavy, C and null light) give keys on both sides of
+    // every minDailyCount floor; day -1 is tomorrow, 31+ before the window
+    val row = for {
+      region <- Gen.frequency(12 -> "A", 5 -> "B", 2 -> "C", 1 -> (null: String))
+      cat <- Gen.frequency(6 -> "X", 3 -> "Y", 1 -> (null: String))
+      day <- Gen.chooseNum(-1, 34)
+      minute <- Gen.chooseNum(0, 24 * 60 - 1)
+      cents <- Gen.chooseNum(0L, 5000000L)
+      id <- Gen.chooseNum(0, 400)
+      customer <- Gen.frequency(4 -> "c", 1 -> (null: String))
+    } yield (region, cat, day, minute, cents / 100.0, s"T$id", customer)
+    // shape: 0 as drawn, 1 empty today, 2 empty baseline
+    val gen = Gen.zip(Gen.chooseNum(0, 160).flatMap(Gen.listOfN(_, row)),
+      Gen.chooseNum(0, 2), Gen.chooseNum(0L, 3L), Gen.oneOf(0.0, 30.0, 100.0),
+      Gen.chooseNum(0, 23))
+    val today = java.time.LocalDate.parse("2024-01-31")
+    forAllN(gen, 20) { case (rows, shape, mdc, pct, hour) =>
+      val kept = rows.filter { r => shape == 0 || (shape == 1) == (r._3 != 0) }
+      val df = kept.map { case (region, cat, day, minute, rev, id, customer) =>
+        (region, cat, java.sql.Timestamp.from(today.minusDays(day.toLong)
+          .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.plusSeconds(minute * 60L)),
+          rev, id, customer)
+      }.toDF("region", "product_category", "transaction_date", "revenue",
+        "transaction_id", "customer_id")
+      val clock = graft.core.FixedClock.at(f"2024-01-31T$hour%02d:30:00Z")
+      val dims = Seq("region" -> pct, "product_category" -> pct / 2)
+      import LegacyDetectors._
+      import graft.detectors._
+      assertSameBits(patternBreaks(df, clock, dims, minDailyCount = mdc),
+        new PatternDetector(df, clock, dims, minDailyCount = mdc).checkPatternBreaks(),
+        s"patterns $kept")
+      assertSameBits(revenueAnomaly(df, clock, today, minSamples = 3),
+        new RevenueDetector(df, clock, minSamples = 3).checkRevenueAnomaly(today),
+        s"revenue $kept")
+      assertSameBits(transactionVolume(df, clock, minSamples = 2),
+        new TransactionDetector(df, clock, minSamples = 2).checkTransactionVolume(),
+        s"volume $kept")
+      assertSameBits(qualityDegradation(df, clock),
+        new QualityDetector(df, clock).checkQualityDegradation(), s"quality $kept")
+    }
+  }
+
   test("lshParams: recall target met or table cap binding, planes bounded") {
     val gen = Gen.zip(
       Gen.chooseNum(1L, 10000000000L),      // corpus size

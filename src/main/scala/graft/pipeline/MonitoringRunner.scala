@@ -51,9 +51,14 @@ final class MonitoringRunner(alerts: AlertManager,
     // an unbounded Await would then hang the WHOLE run, suppressing the
     // healthy detectors' alerts and the daily report. Timing out degrades
     // the one check to the same CHECK FAILED row a thrown check produces.
-    def await[T](f: Future[Option[T]]): Option[T] =
+    // The timeout is logged like a thrown check, for the same reason.
+    def await[T](name: String, f: Future[Option[T]]): Option[T] =
       try Await.result(f, checkTimeout)
-      catch { case _: java.util.concurrent.TimeoutException => None }
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          log.warn(s"monitoring check '$name' timed out after $checkTimeout")
+          None
+      }
 
     // fan-out (8 parallel checks) + barrier
     val fs = (opt("feeds", feeds), opt("revenue", revenue),
@@ -61,8 +66,10 @@ final class MonitoringRunner(alerts: AlertManager,
       opt("patterns", patterns), opt("recon", recon),
       opt("sla", sla), opt("quality", quality))
     val (f, r, v, fr, p, rc, s, q) = (
-      await(fs._1), await(fs._2), await(fs._3), await(fs._4),
-      await(fs._5), await(fs._6), await(fs._7), await(fs._8))
+      await("feeds", fs._1), await("revenue", fs._2),
+      await("volume", fs._3), await("freshness", fs._4),
+      await("patterns", fs._5), await("recon", fs._6),
+      await("sla", fs._7), await("quality", fs._8))
 
     // guarded dispatch — same predicates as financial_monitoring_complete.py:117-168
     var sent = 0

@@ -281,7 +281,8 @@ object CurationStream {
     * the batch dispatcher reads, so stream and batch can never drift on
     * pool membership. Per-pool state/corpus tables live under
     * `tablePrefix` (`<p>_image`/`<p>_image_blocks`/`<p>_audio`/
-    * `<p>_audio_buckets`/`<p>_video`/`<p>_video_digests`/`<p>_others`).
+    * `<p>_audio_buckets`/`<p>_audio_segs` (segment rung)/`<p>_video`/
+    * `<p>_video_digests`/`<p>_video_blocks` (trim rung)/`<p>_others`).
     * Greedy-prefix == batch-dispatch equality on id-ordered chain-free
     * arrivals is the StreamingSpec pin, malformed classes included. */
   final class KindRouter(catalog: Catalog, tablePrefix: String,

@@ -1,163 +1,56 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Catalog
-import graft.ext.Similarity
+import graft.ext.{Multimodal, Similarity}
 
 /** Incremental embedding near-duplicate removal — [[IncrementalDedup]]'s
-  * contract applied to the hyperplane-LSH collision relation
-  * ([[Similarity.lshTable]]): with this loop a re-embedded or re-crawled
-  * vector arriving days later drops on arrival, instead of waiting for the
-  * next batch rebuild of the persisted bucket table (the gap the batch
-  * artifact left: new embeddings previously required a full re-mine).
+  * contract over the hyperplane-LSH collision relation
+  * ([[Similarity.lshTable]]): a re-embedded or re-crawled vector arriving
+  * days later drops on arrival instead of waiting for the next batch
+  * rebuild of the persisted bucket table. A [[DedupCore]] definition:
+  * kept vector units and (id, ckey, tbl, bucket) cells, the `ckey`
+  * equi-key + XOR-residual probe ([[IncrementalLshDedup.stateCandidates]]),
+  * and exact cosine against the OLD vectors joined back from the corpus.
   *
-  * State is the accumulated (id, ckey, tbl, bucket) bucket relation plus
-  * the accepted-vector corpus, both persisted through the [[Catalog]] —
-  * corpus-global, unbounded by any watermark, so it lives in tables, not
-  * Spark streaming state. Each micro-batch:
-  *
-  *  1. computes the arrivals' bucket rows (scan-side [[graft.functions
-  *     .HyperplaneLsh]], one pass per vector);
-  *  2. probes the bucket table for collisions — `ckey` equi-key with the
-  *     XOR-residual table/bucket equality (the [[Similarity
-  *     .lshCandidatesFromTable]] planner contract), and the micro-batch
-  *     side BROADCASTS so the accumulated state is scanned, never
-  *     shuffled (the [[IncrementalDedup.stateCandidates]] lesson,
-  *     plan-pinned in StreamingSpec);
-  *  3. verifies candidates by exact cosine, fetching the OLD vectors from
-  *     the corpus keyed by the (collision-bounded, broadcast) candidate
-  *     ids;
-  *  4. drops arrivals scoring above `threshold` against an accepted
-  *     vector, or against a LOWER-id arrival of the same batch;
-  *  5. appends survivors to the corpus and their bucket rows to the state
-  *     table, exactly-once via [[StreamingAppend.appendOnce]] (manifest
-  *     commits by default; the `exactlyOnce` batch-id-partition
-  *     convention for plain-directory layouts, with the same
-  *     partial-append replay protection as [[IncrementalDedup]]).
-  *
-  * Semantics: greedy-prefix (online) dedup against ACCEPTED vectors only;
-  * on chain-free data this equals the batch [[Similarity.nearDupPairsLsh]]
-  * sweep at the same explicit (nPlanes, nTables) — asserted in
-  * StreamingSpec. The config is EXPLICIT by design: auto-sizing re-derives
-  * knobs from the corpus size, but a streaming deployment's bucket table
-  * is write-once — its plane set is fixed the moment the first batch
-  * lands, exactly like the persisted batch artifact. */
+  * On chain-free data the stream equals the batch
+  * [[Similarity.nearDupPairsLsh]] sweep at the same explicit
+  * (nPlanes, nTables) — asserted in StreamingSpec. The config is EXPLICIT
+  * by design: auto-sizing re-derives knobs from the corpus size, but the
+  * bucket table's plane set is fixed the moment the first batch lands. */
 final class IncrementalLshDedup(
     catalog: Catalog, vecsTable: String, bucketsTable: String,
     nPlanes: Int, nTables: Int, threshold: Double,
     idCol: String = "vec_id", vecCol: String = "embedding",
-    exactlyOnce: Boolean = false) {
+    exactlyOnce: Boolean = false)
+    extends DedupCore(catalog, vecsTable, idCol, exactlyOnce, "graft_incremental_lsh") {
   require(nPlanes >= 1 && nTables >= 1,
     s"explicit LSH config required, got ($nPlanes, $nTables)")
-
-  /** Fault-injection hook (tests): throw once AFTER the survivors append
-    * but BEFORE the buckets append. */
-  private[graft] var crashBetweenAppendsOnce: Boolean = false
-
-  private val modeChecked = scala.collection.mutable.Set.empty[String]
-
-  private def appendOnce(rows: DataFrame, table: String, keys: Seq[String],
-      batchId: Long): Unit =
-    StreamingAppend.appendOnce(catalog, table, rows, batchId,
-      keys = keys, partitionBy = Nil, partitionMode = exactlyOnce,
-      modeChecked = modeChecked)
-
-  /** The exact-cosine accept predicate — `round(cosine, 6) > threshold`,
-    * the same scoring row [[Similarity.nearDupPairsLsh]] emits, so the
-    * online loop and the batch sweep agree pair by pair. */
-  private def aboveThreshold(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    round(Similarity.cosine(a, b), 6) > threshold
-
-  /** Deduplicate one micro-batch against the accumulated corpus and itself;
-    * append survivors. Returns the survivor count. */
-  def processBatch(batchRaw: DataFrame, batchId: Long): Long = {
-    // same-id copies within ONE batch never meet the strictly-ordered
-    // intra-batch pairing — collapse them first (StreamingAppend scaladoc)
-    val batch = StreamingAppend.collapseSameId(batchRaw, idCol)
-    val newBuckets = Similarity.lshTable(batch, nPlanes, nTables, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newVecs = batch.select(col(idCol), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // loadIfReadable, not exists+load: a FIRST-batch crash during the
-      // buckets append (partition mode) leaves only _temporary droppings —
-      // readable-nothing takes the fresh-table branch instead of wedging
-      // every replay on UNABLE_TO_INFER_SCHEMA
-      val droppedVsState: DataFrame =
-        StreamingAppend.loadIfReadable(catalog, bucketsTable) match {
-          case None => batch.select(col(idCol)).limit(0)
-          case Some(loaded) =>
-          // partial-append replay protection: StreamingAppend.acceptedState
-          // excludes this batch's own partially-committed rows in
-          // exactlyOnce mode (the shared convention — see its scaladoc)
-          val state = StreamingAppend.acceptedState(loaded, batchId, exactlyOnce)
-          val candidates =
-            IncrementalLshDedup.stateCandidates(state, newBuckets, idCol)
-          val oldVecs = catalog.load(vecsTable)
-            .join(broadcast(candidates.select(col("old_id").as(idCol)).distinct()),
-              Seq(idCol))
-            .select(col(idCol).as("old_id"), col(vecCol).as("v_b"))
-          candidates
-            .join(newVecs.select(col(idCol), col("v").as("v_a")), Seq(idCol))
-            .join(oldVecs, Seq("old_id"))
-            .filter(aboveThreshold(col("v_a"), col("v_b")))
-            .select(col(idCol))
-        }
-
-      // intra-batch: an arrival near-duplicating a lower-id arrival drops.
-      // Inline relation, multi-key equi-join is fine here (nothing is
-      // bucketed); semantics equal the residual form (fuzz-pinned in
-      // PropertiesSpec).
-      val a = newBuckets.select(col("ckey"), col("tbl"), col("bucket"),
-        col(idCol).as("id_a"))
-      val b = newBuckets.select(col("ckey"), col("tbl"), col("bucket"),
-        col(idCol).as("id_b"))
-      val droppedIntra = a.join(b, Seq("ckey", "tbl", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-        .join(newVecs.select(col(idCol).as("id_a"), col("v").as("v_a")), Seq("id_a"))
-        .join(newVecs.select(col(idCol).as("id_b"), col("v").as("v_b")), Seq("id_b"))
-        .filter(aboveThreshold(col("v_a"), col("v_b")))
-        .select(col("id_b").as(idCol))
-
-      val dropped = droppedVsState.union(droppedIntra).distinct()
-      val survivors = batch.join(broadcast(dropped), Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = survivors.count()
-        if (n > 0) {
-          appendOnce(survivors, vecsTable, Seq(idCol), batchId)
-          if (crashBetweenAppendsOnce) {
-            crashBetweenAppendsOnce = false
-            throw new RuntimeException(
-              "injected crash between vectors append and buckets append")
-          }
-          appendOnce(
-            newBuckets.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
-            bucketsTable, Seq(idCol, "tbl"), batchId)
-        }
-        n
-      } finally survivors.unpersist(blocking = false)
-    } finally {
-      newBuckets.unpersist(blocking = false)
-      newVecs.unpersist(blocking = false)
-    }
-  }
-
-  /** Attach to an embedding stream (same trigger conventions as
-    * [[MonitoringLoop.start]]). */
-  def start(stream: DataFrame, queryName: String = "graft_incremental_lsh",
-      continuous: Boolean = false, interval: String = "1 minute",
-      checkpoint: Option[String] = None): StreamingQuery =
-    StreamingAppend.startForeachBatch(stream, queryName, continuous,
-      interval, checkpoint) { (batch, id) => processBatch(batch, id); () }
+  protected def payload = vecCol
+  protected def units(batch: DataFrame) = batch.select(col(idCol), col(vecCol))
+  protected def cells(batch: DataFrame, units: DataFrame) =
+    Similarity.lshTable(units, nPlanes, nTables, idCol, vecCol)
+  protected def cellKeys = IncrementalLshDedup.cellKeys
+  protected def probed = bucketsTable
+  protected def probe(state: DataFrame, cells: DataFrame) =
+    IncrementalLshDedup.stateCandidates(state, cells, idCol)
+  protected def accept(a: Column, b: Column) = IncrementalLshDedup.accept(a, b, threshold)
+  override protected def joinBack = Some((vecsTable, col(vecCol)))
+  protected def stateAppends(units: DataFrame, cells: DataFrame) =
+    Seq((bucketsTable, cells, Seq(idCol, "tbl")))
 }
 
 object IncrementalLshDedup {
+  private[streaming] val cellKeys = Seq("ckey", "tbl", "bucket")
+
+  /** `round(cosine, 6) > threshold`, the scoring row
+    * [[Similarity.nearDupPairsLsh]] emits, so stream and sweep agree pair
+    * by pair. */
+  private[streaming] def accept(a: Column, b: Column, threshold: Double): Column =
+    round(Similarity.cosine(a, b), 6) > threshold
+
   /** (arrival_id, old_id) collision candidates: the corpus-global bucket
     * table probed by a micro-batch's bucket rows — `ckey` equi-key, XOR
     * residuals, and the ARRIVALS side broadcast so the accumulated state
@@ -177,31 +70,21 @@ object IncrementalLshDedup {
   }
 }
 
-/** Incremental ANY-SEGMENT audio near-duplicate removal — the r19
-  * streaming twin of [[graft.ext.Multimodal.audioAnySegmentNearDups]]
-  * and the SIXTH streaming dedup family: a head-trimmed re-encode (the
-  * podcast/ad cut — invisible to the whole-clip envelope the
-  * [[IncrementalLshDedup]] audio rung scores) drops ON ARRIVAL when ANY
-  * of its fixed-length windows scores above `threshold` cosine against
-  * any accepted clip's window. [[IncrementalVideoFrameDedup]]'s packing
-  * (fid = media_id << 6 | segment_idx) with hyperplane-LSH buckets in
-  * place of Manku blocks, and exact-cosine verification in place of
-  * hamming.
-  *
-  * State: the accumulated per-segment bucket relation
-  * ([[graft.ext.Similarity.lshTable]] over fids), PLUS a per-segment
-  * feature table (fid → feature) the cosine verification reads back
-  * (bounded by the collision candidates, broadcast) — both
-  * Catalog-persisted, exactly-once via [[StreamingAppend.appendOnce]].
-  * Clips whose every window is undecodable (or shorter than one window)
-  * emit no segment rows: they match nothing and SURVIVE, the
-  * fingerprint convention. `spectral = true` swaps the per-window
-  * descriptor for the |DFT| magnitudes — the r19 OFF-GRID variant (a
-  * re-cut at t·window + δ, δ ≤ the r16 512-sample band, still drops on
-  * arrival where the envelope windows misalign). Greedy-prefix
-  * semantics as every twin;
-  * chain-free equality with the batch any-segment sweep is the
-  * StreamingSpec pin. The LSH config is EXPLICIT by design (the
+/** Incremental ANY-SEGMENT audio near-duplicate removal — the streaming
+  * twin of [[Multimodal.audioAnySegmentNearDups]]: a head-trimmed
+  * re-encode (the podcast/ad cut, invisible to the whole-clip envelope
+  * the [[IncrementalLshDedup]] audio rung scores) drops ON ARRIVAL when
+  * ANY of its fixed-length windows scores above `threshold` cosine
+  * against any accepted clip's window. A [[DedupCore]] definition over
+  * packed units `fid = media_id << 6 | segment_idx`: kept per-window
+  * features, kept hyperplane-LSH cells, and two state tables — the bucket
+  * relation the probe reads and the per-segment feature table
+  * (`segsTable`) the cosine verification joins back. Clips with no
+  * decodable window emit no segment rows: they match nothing and SURVIVE.
+  * `spectral = true` swaps the window descriptor for |DFT| magnitudes,
+  * the OFF-GRID variant (a re-cut at t·window + δ, δ ≤ the 512-sample
+  * band, still drops). Chain-free equality with the batch any-segment
+  * sweep is the AudioTrimSpec pin; the LSH config is EXPLICIT (the
   * write-once bucket-table contract of [[IncrementalLshDedup]]). */
 final class IncrementalAudioSegmentDedup(
     catalog: Catalog, clipsTable: String, bucketsTable: String,
@@ -210,119 +93,30 @@ final class IncrementalAudioSegmentDedup(
     segments: Int = 4, segmentSamples: Int = 2048, frames: Int = 16,
     payloadCol: String = "payload", idCol: String = "media_id",
     exactlyOnce: Boolean = false,
-    spectral: Boolean = false) {
+    spectral: Boolean = false)
+    extends DedupCore(catalog, clipsTable, idCol, exactlyOnce, "graft_incremental_audioseg") {
   require(nPlanes >= 1 && nTables >= 1,
     s"explicit LSH config required, got ($nPlanes, $nTables)")
-  require(segments >= 1 && segments <= graft.ext.Multimodal.MaxAudioSegments,
-    s"segments must be 1..${graft.ext.Multimodal.MaxAudioSegments}, " +
-      s"got $segments")
-
-  /** Fault-injection hook (tests): throw once AFTER the survivors append
-    * but BEFORE the state appends. */
-  private[graft] var crashBetweenAppendsOnce: Boolean = false
-
-  private val modeChecked = scala.collection.mutable.Set.empty[String]
-
-  private def appendOnce(rows: DataFrame, table: String, keys: Seq[String],
-      batchId: Long): Unit =
-    StreamingAppend.appendOnce(catalog, table, rows, batchId,
-      keys = keys, partitionBy = Nil, partitionMode = exactlyOnce,
-      modeChecked = modeChecked)
-
-  private def aboveThreshold(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    round(Similarity.cosine(a, b), 6) > threshold
-
-  /** Deduplicate one micro-batch against the accumulated corpus and
-    * itself; append survivors. Returns the survivor count. */
-  def processBatch(batchRaw: DataFrame, batchId: Long): Long = {
-    val batch = StreamingAppend.collapseSameId(batchRaw, idCol)
-    val newSegs = graft.ext.Multimodal.audioSegmentFeatures(
+  require(segments >= 1 && segments <= Multimodal.MaxAudioSegments,
+    s"segments must be 1..${Multimodal.MaxAudioSegments}, got $segments")
+  override protected def packed = true
+  protected def payload = "feature"
+  protected def units(batch: DataFrame) =
+    Multimodal.audioSegmentFeatures(
         batch.select(col(idCol).as("media_id"), col(payloadCol).as("payload")),
         segmentSamples, segments, frames,
         descriptor = if (spectral) "spectral" else "envelope")
       .filter(col("feature").isNotNull)
       .select((shiftleft(col("media_id"), 6) + col("segment_idx")).as("fid"),
         col("feature"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newBuckets = Similarity.lshTable(newSegs, nPlanes, nTables,
-        "fid", "feature")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val droppedVsState: DataFrame =
-        StreamingAppend.loadIfReadable(catalog, bucketsTable) match {
-          case None => batch.select(col(idCol)).limit(0)
-          case Some(loaded) =>
-            val state = StreamingAppend.acceptedState(loaded, batchId,
-              exactlyOnce)
-            val candidates = IncrementalLshDedup.stateCandidates(
-              state, newBuckets, "fid")
-            // fetch the OLD segment vectors keyed by the (bounded,
-            // broadcast) candidate fids — the IncrementalLshDedup corpus
-            // join-back, against the segment state table
-            val oldSegs = catalog.load(segsTable)
-              .join(broadcast(candidates.select(col("old_id").as("fid"))
-                .distinct()), Seq("fid"))
-              .select(col("fid").as("old_id"), col("feature").as("v_b"))
-            candidates
-              .join(newSegs.select(col("fid"), col("feature").as("v_a")),
-                Seq("fid"))
-              .join(oldSegs, Seq("old_id"))
-              .filter(aboveThreshold(col("v_a"), col("v_b")))
-              .select(shiftright(col("fid"), 6).as(idCol)).distinct()
-        }
-      // intra-batch: any segment pair across two arrivals, lower CLIP id
-      // wins (fid packing is monotone in media_id)
-      val a = newBuckets.select(col("ckey"), col("tbl"), col("bucket"),
-        col("fid").as("fid_a"))
-      val b = newBuckets.select(col("ckey"), col("tbl"), col("bucket"),
-        col("fid").as("fid_b"))
-      val droppedIntra = a.join(b, Seq("ckey", "tbl", "bucket"))
-        .filter(shiftright(col("fid_a"), 6) < shiftright(col("fid_b"), 6))
-        .select("fid_a", "fid_b").distinct()
-        .join(newSegs.select(col("fid").as("fid_a"), col("feature").as("v_a")),
-          Seq("fid_a"))
-        .join(newSegs.select(col("fid").as("fid_b"), col("feature").as("v_b")),
-          Seq("fid_b"))
-        .filter(aboveThreshold(col("v_a"), col("v_b")))
-        .select(shiftright(col("fid_b"), 6).as(idCol)).distinct()
-      val dropped = droppedVsState.union(droppedIntra).distinct()
-      val survivors = batch.join(broadcast(dropped), Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = survivors.count()
-        if (n > 0) {
-          appendOnce(survivors, clipsTable, Seq(idCol), batchId)
-          if (crashBetweenAppendsOnce) {
-            crashBetweenAppendsOnce = false
-            throw new RuntimeException(
-              "injected crash between clips append and state appends")
-          }
-          val survFids = newSegs
-            .withColumn("__clip", shiftright(col("fid"), 6))
-            .join(survivors.select(col(idCol).as("__clip")),
-              Seq("__clip"), "left_semi")
-            .drop("__clip")
-          appendOnce(survFids, segsTable, Seq("fid"), batchId)
-          appendOnce(
-            newBuckets.withColumn("__clip", shiftright(col("fid"), 6))
-              .join(survivors.select(col(idCol).as("__clip")),
-                Seq("__clip"), "left_semi")
-              .drop("__clip"),
-            bucketsTable, Seq("fid", "tbl"), batchId)
-        }
-        n
-      } finally survivors.unpersist(blocking = false)
-    } finally {
-      newSegs.unpersist(blocking = false)
-      newBuckets.unpersist(blocking = false)
-    }
-  }
-
-  /** Attach to a media stream (same trigger conventions as the twins). */
-  def start(stream: DataFrame, queryName: String = "graft_incremental_audioseg",
-      continuous: Boolean = false, interval: String = "1 minute",
-      checkpoint: Option[String] = None): StreamingQuery =
-    StreamingAppend.startForeachBatch(stream, queryName, continuous,
-      interval, checkpoint) { (batch, id) => processBatch(batch, id); () }
+  protected def cells(batch: DataFrame, units: DataFrame) =
+    Similarity.lshTable(units, nPlanes, nTables, "fid", "feature")
+  protected def cellKeys = IncrementalLshDedup.cellKeys
+  protected def probed = bucketsTable
+  protected def probe(state: DataFrame, cells: DataFrame) =
+    IncrementalLshDedup.stateCandidates(state, cells, "fid")
+  protected def accept(a: Column, b: Column) = IncrementalLshDedup.accept(a, b, threshold)
+  override protected def joinBack = Some((segsTable, col("feature")))
+  protected def stateAppends(units: DataFrame, cells: DataFrame) =
+    Seq((segsTable, units, Seq("fid")), (bucketsTable, cells, Seq("fid", "tbl")))
 }

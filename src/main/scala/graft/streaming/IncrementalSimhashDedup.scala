@@ -1,176 +1,62 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Catalog
-import graft.ext.Dedup
+import graft.ext.{Dedup, Multimodal}
 
-/** Incremental SimHash near-duplicate removal — the third streaming dedup
-  * twin ([[IncrementalDedup]] covers minhash bands, [[IncrementalLshDedup]]
-  * embedding buckets): a re-crawled document arriving days later drops on
-  * arrival by Manku-blocked hamming distance, instead of waiting for a
-  * batch re-mine of the persisted block relation.
+/** Incremental SimHash near-duplicate removal: a re-crawled document
+  * arriving days later drops on arrival by Manku-blocked hamming
+  * distance, instead of waiting for a batch re-mine of the persisted
+  * block relation. A [[DedupCore]] definition: kept 64-bit signature
+  * units, and block cells re-derived from them per consumer — cheap
+  * scan-stage shifts (never cache the (maxHamming+1)x exploded relation).
+  * The signature rides IN the block relation, so the probe carries both
+  * signatures and verification is a `bit_count(xor)` ≤ radius with no
+  * corpus join-back; zero false negatives by the pigeonhole guarantee.
   *
-  * The `signature` parameter generalizes the loop over ANY nullable 64-bit
-  * content signature whose hamming distance is a near-dup radius — the
-  * image instantiation ([[IncrementalImageDedup]]) passes dHash over PNG
-  * payloads, completing the streaming matrix's fourth family. Null
-  * signatures (undecodable payloads) survive unconditionally and emit no
-  * block rows.
+  * `signature` generalizes the loop over ANY nullable 64-bit content
+  * signature whose hamming distance is a near-dup radius —
+  * [[IncrementalImageDedup]] passes dHash over image payloads. Null
+  * signatures (undecodable payloads) emit no block rows: they match
+  * nothing and SURVIVE.
   *
-  * State is the accumulated (id, sh, bkey, blk, bits, max_hamming) block
-  * table ([[Dedup.simhashBlockTable]] shape) plus the accepted-document
-  * corpus, both Catalog-persisted. SimHash makes the streaming form
-  * SIMPLER than minhash: the 64-bit signature rides IN the block relation,
-  * so candidate verification is a `bit_count(xor)` on columns already in
-  * the join — no corpus join-back to re-derive shingles. Each micro-batch:
-  *
-  *  1. computes arrival signatures (one native [[graft.functions
-  *     .SimHash64]] pass) and their pigeonhole blocks;
-  *  2. probes the block table — `bkey` equi-key, XOR-residual blk/bits
-  *     equality, micro-batch side BROADCAST (state scanned, never
-  *     shuffled; plan-pinned in StreamingSpec);
-  *  3. verifies candidates by exact hamming ≤ radius — zero false
-  *     negatives by the pigeonhole guarantee, same as the batch form;
-  *  4. drops arrivals matching an accepted doc or a LOWER-id arrival of
-  *     the same batch;
-  *  5. appends survivors to the corpus and their block rows to the state
-  *     table, exactly-once via [[StreamingAppend.appendOnce]].
-  *
-  * The radius is FROZEN by the first batch: blocks encode `maxHamming+1`
-  * pigeonhole slots, so probing a table blocked at a different radius
-  * silently loses the recall guarantee — the table's self-stamped
+  * The radius is FROZEN by the first batch: the table's self-stamped
   * `max_hamming` is checked against this loop's on first probe and a
-  * mismatch fails loudly (the [[StreamingAppend]] mode-guard convention,
-  * applied to the blocking geometry). Greedy-prefix semantics as the other
-  * twins; equality with the batch [[Dedup.simhashPairs]] sweep on
-  * chain-free data is asserted in StreamingSpec. */
+  * mismatch fails loudly. Equality with the batch [[Dedup.simhashPairs]]
+  * sweep on chain-free data is asserted in StreamingSpec. */
 final class IncrementalSimhashDedup(
     catalog: Catalog, docsTable: String, blocksTable: String,
     maxHamming: Int = 3, textCol: String = "text", idCol: String = "doc_id",
     exactlyOnce: Boolean = false,
-    signature: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      Dedup.simhash) {
+    signature: Column => Column = Dedup.simhash)
+    extends DedupCore(catalog, docsTable, idCol, exactlyOnce, "graft_incremental_simhash") {
   require(maxHamming >= 0 && maxHamming <= 15,
     s"maxHamming must be in [0, 15], got $maxHamming")
-
-  /** Fault-injection hook (tests): throw once AFTER the survivors append
-    * but BEFORE the blocks append. */
-  private[graft] var crashBetweenAppendsOnce: Boolean = false
-
-  private val modeChecked = scala.collection.mutable.Set.empty[String]
-  // radius stamp verified once per loop instance (single-writer contract:
-  // the table's blocking geometry cannot change mid-run)
-  private var radiusChecked = false
-
-  private def appendOnce(rows: DataFrame, table: String, keys: Seq[String],
-      batchId: Long): Unit =
-    StreamingAppend.appendOnce(catalog, table, rows, batchId,
-      keys = keys, partitionBy = Nil, partitionMode = exactlyOnce,
-      modeChecked = modeChecked)
-
-  /** Deduplicate one micro-batch against the accumulated corpus and itself;
-    * append survivors. Returns the survivor count. */
-  def processBatch(batchRaw: DataFrame, batchId: Long): Long = {
-    // same-id copies within ONE batch never meet the strictly-ordered
-    // intra-batch pairing — collapse them first (StreamingAppend scaladoc)
-    val batch = StreamingAppend.collapseSameId(batchRaw, idCol)
-    val newSigs = batch
-      .select(col(idCol), signature(col(textCol)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // blocks re-derive from the narrow cached signatures per consumer —
-    // cheap scan-stage shifts (the r8 simhash-cache lesson: never cache
-    // the (maxHamming+1)x exploded relation). NULL signatures (the image
-    // instantiation's undecodable payloads — text simhash never nulls)
-    // emit no block rows: they can match nothing, so they always SURVIVE
-    // and never poison a collision key with hash-of-null buckets.
-    def newBlocks = Dedup.simhashBlockTable(
-      newSigs.filter(col("sh").isNotNull), idCol, "sh", maxHamming)
-    try {
-      // loadIfReadable, not exists+load: a FIRST-batch crash during the
-      // blocks append (partition mode) leaves the directory with only
-      // _temporary droppings — readable-nothing must take the fresh-table
-      // branch or every replay wedges on UNABLE_TO_INFER_SCHEMA
-      val droppedVsState: DataFrame =
-        StreamingAppend.loadIfReadable(catalog, blocksTable) match {
-          case None => batch.select(col(idCol)).limit(0)
-          case Some(loaded) =>
-          if (!radiusChecked) {
-            // limit(1).collect, not head(): an all-undecodable first
-            // batch (image instantiation) appends survivors but ZERO
-            // block rows, leaving a readable EMPTY table — which carries
-            // no geometry yet, so there is nothing to check until the
-            // first real signature lands
-            val stampRow = loaded.select("max_hamming").limit(1).collect()
-            if (stampRow.nonEmpty) {
-              val stamped = stampRow.head.getInt(0)
-              require(stamped == maxHamming,
-                s"block table '$blocksTable' is blocked at radius $stamped " +
-                  s"but this loop probes at $maxHamming: the pigeonhole " +
-                  "guarantee does not transfer across radii — rebuild the " +
-                  "table or match the radius")
-              radiusChecked = true
-            }
-          }
-          // partial-append replay protection: the shared acceptedState
-          // convention over the SAME `loaded` frame the radius check read
-          // (the check deliberately reads UNFILTERED rows — a partial
-          // crashed-attempt row still carries the geometry stamp)
-          val state = StreamingAppend.acceptedState(loaded, batchId, exactlyOnce)
-          IncrementalSimhashDedup.stateCandidates(state, newBlocks, idCol)
-            .filter(Dedup.hamming(col("sh_a"), col("sh_b")) <= maxHamming)
-            .select(col(idCol))
-        }
-
-      // intra-batch: lower-id arrival wins — ONE pairing contract with the
-      // batch form (the sweep the tests assert equality against), not a
-      // hand-rolled copy; the table self-stamps this loop's radius
-      val droppedIntra = Dedup.simhashPairsFromBlocks(newBlocks, idCol)
-        .select(col("doc_b").as(idCol))
-
-      val dropped = droppedVsState.union(droppedIntra).distinct()
-      val survivors = batch.join(broadcast(dropped), Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = survivors.count()
-        if (n > 0) {
-          appendOnce(survivors, docsTable, Seq(idCol), batchId)
-          if (crashBetweenAppendsOnce) {
-            crashBetweenAppendsOnce = false
-            throw new RuntimeException(
-              "injected crash between docs append and blocks append")
-          }
-          appendOnce(
-            newBlocks.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
-            blocksTable, Seq(idCol, "blk"), batchId)
-        }
-        n
-      } finally survivors.unpersist(blocking = false)
-    } finally newSigs.unpersist(blocking = false)
-  }
-
-  /** Attach to a document stream (same trigger conventions as
-    * [[MonitoringLoop.start]]). */
-  def start(stream: DataFrame, queryName: String = "graft_incremental_simhash",
-      continuous: Boolean = false, interval: String = "1 minute",
-      checkpoint: Option[String] = None): StreamingQuery =
-    StreamingAppend.startForeachBatch(stream, queryName, continuous,
-      interval, checkpoint) { (batch, id) => processBatch(batch, id); () }
+  protected def payload = "sh"
+  protected def units(batch: DataFrame) =
+    batch.select(col(idCol), signature(col(textCol)).as("sh")).filter(col("sh").isNotNull)
+  protected def cells(batch: DataFrame, units: DataFrame) =
+    Dedup.simhashBlockTable(units, idCol, "sh", maxHamming)
+  protected def cellKeys = IncrementalSimhashDedup.cellKeys
+  override protected def keepsCells = false
+  protected def probed = blocksTable
+  protected def probe(state: DataFrame, cells: DataFrame) =
+    IncrementalSimhashDedup.stateCandidates(state, cells, idCol)
+  protected def accept(a: Column, b: Column) = Dedup.hamming(a, b) <= maxHamming
+  protected def stateAppends(units: DataFrame, cells: DataFrame) =
+    Seq((blocksTable, cells, Seq(idCol, "blk")))
+  override protected def stampedRadius = Some(maxHamming)
 }
 
-/** Incremental IMAGE near-duplicate removal — the streaming matrix's
-  * fourth family: a thin dHash instantiation of
+/** Incremental IMAGE near-duplicate removal: a thin dHash instantiation of
   * [[IncrementalSimhashDedup]] (hamming over dHash bits is the same
-  * algebra as over token-vote simhash bits, the
-  * [[graft.ext.Multimodal.imageAssign]] observation applied to the
-  * stream). Arrivals are (idCol, payloadCol) rows; a re-uploaded
-  * thumbnail within the perceptual radius of an accepted image drops on
-  * arrival, undecodable payloads survive (no content to match) with no
-  * block rows, and accepted images append their fingerprint blocks
-  * exactly-once like every twin. Drop-on-arrival and batch-sweep
-  * equality are StreamingSpec-pinned. */
+  * algebra as over token-vote simhash bits). Arrivals are
+  * (idCol, payloadCol) rows; a re-uploaded thumbnail within the perceptual
+  * radius of an accepted image drops on arrival, and undecodable payloads
+  * survive with no block rows. Drop-on-arrival and batch-sweep equality
+  * are StreamingSpec-pinned. */
 object IncrementalImageDedup {
   def apply(catalog: Catalog, mediaTable: String, blocksTable: String,
       maxHamming: Int = 3, payloadCol: String = "payload",
@@ -181,6 +67,8 @@ object IncrementalImageDedup {
 }
 
 object IncrementalSimhashDedup {
+  private[streaming] val cellKeys = Seq("bkey", "blk", "bits")
+
   /** (arrival_id, old_id, sh_a, sh_b) collision candidates: the
     * corpus-global block table probed by a micro-batch's blocks — `bkey`
     * equi-key, XOR residuals, arrivals broadcast so the accumulated state
@@ -201,119 +89,47 @@ object IncrementalSimhashDedup {
 }
 
 /** Incremental MULTI-FRAME video near-duplicate removal — the streaming
-  * twin of the r18 `video_anyframe_dhash` batch family: a re-uploaded
-  * video whose leading frames were CUT drops on arrival by any-frame
-  * dHash matching, where the frame-0 loop ([[IncrementalImageDedup]]
-  * over AVI payloads) measurably misses it (the r18 trim law: frame-0
-  * detection 0.003 at any trim, any-frame 1.000 through K−1 frames).
+  * twin of the `video_anyframe_dhash` batch family: a re-uploaded video
+  * whose leading frames were CUT drops on arrival by any-frame dHash
+  * matching, where the frame-0 loop ([[IncrementalImageDedup]] over AVI
+  * payloads) measurably misses it (frame-0 detection 0.003 at any trim,
+  * any-frame 1.000 through K−1 frames).
   *
-  * Arrivals are (idCol, payloadCol) MJPEG-AVI rows; each micro-batch
-  * fingerprints K frames per clip scan-side ([[graft.ext.Multimodal
-  * .videoFrameFingerprints]] — one pass, undecodable frames yield no
-  * rows so frameless videos SURVIVE), packs frame ids as
-  * `media_id << 6 | frame_idx`, and reuses [[IncrementalSimhashDedup]]'s
-  * block-state machinery verbatim over the packed ids: state is the
-  * accumulated fid-block relation (radius-stamped, probed with the
-  * arrivals broadcast so state is scanned never shuffled) plus the
-  * accepted corpus. An arrival drops when ANY of its frames sits within
-  * the radius of an accepted video's frame, or of a LOWER-id arrival's
-  * in the same batch. Greedy-prefix semantics at the VIDEO level;
-  * equality with the batch pair-closure sweep on chain-free data is the
-  * StreamingSpec pin (on a chain the batch form drops strictly more —
-  * the same documented split as every streaming twin, in the closure
-  * direction). */
+  * [[IncrementalSimhashDedup]]'s definition over packed units
+  * `fid = media_id << 6 | frame_idx`: each arrival's K frames are
+  * fingerprinted scan-side ([[Multimodal.videoFrameFingerprints]];
+  * undecodable frames yield no rows, so frameless videos SURVIVE), and an
+  * arrival drops when ANY of its frames sits within the radius of an
+  * accepted video's frame, or of a LOWER-id arrival's in the same batch.
+  * Equality with the batch pair-closure sweep on chain-free data is the
+  * StreamingSpec pin (on a chain the batch form drops strictly more). */
 final class IncrementalVideoFrameDedup(
     catalog: Catalog, docsTable: String, blocksTable: String,
     frames: Int = 3, maxHamming: Int = 3,
     payloadCol: String = "payload", idCol: String = "media_id",
-    exactlyOnce: Boolean = false) {
-  require(frames >= 1 && frames <= graft.ext.Multimodal.MaxVideoFrames,
-    s"frames must be 1..${graft.ext.Multimodal.MaxVideoFrames}, got $frames")
+    exactlyOnce: Boolean = false)
+    extends DedupCore(catalog, docsTable, idCol, exactlyOnce, "graft_incremental_videoframe") {
+  require(frames >= 1 && frames <= Multimodal.MaxVideoFrames,
+    s"frames must be 1..${Multimodal.MaxVideoFrames}, got $frames")
   require(maxHamming >= 0 && maxHamming <= 15,
     s"maxHamming must be in [0, 15], got $maxHamming")
-
-  /** Fault-injection hook (tests): throw once AFTER the survivors append
-    * but BEFORE the blocks append. */
-  private[graft] var crashBetweenAppendsOnce: Boolean = false
-
-  private val modeChecked = scala.collection.mutable.Set.empty[String]
-  private var radiusChecked = false
-
-  private def appendOnce(rows: DataFrame, table: String, keys: Seq[String],
-      batchId: Long): Unit =
-    StreamingAppend.appendOnce(catalog, table, rows, batchId,
-      keys = keys, partitionBy = Nil, partitionMode = exactlyOnce,
-      modeChecked = modeChecked)
-
-  /** Deduplicate one micro-batch against the accumulated corpus and
-    * itself; append survivors. Returns the survivor count. */
-  def processBatch(batchRaw: DataFrame, batchId: Long): Long = {
-    val batch = StreamingAppend.collapseSameId(batchRaw, idCol)
-    val newFids = graft.ext.Multimodal.videoFrameFingerprints(
-        batch.select(col(idCol).as("media_id"), col(payloadCol).as("payload")),
-        frames)
+  override protected def packed = true
+  protected def payload = "sh"
+  protected def units(batch: DataFrame) =
+    Multimodal.videoFrameFingerprints(
+        batch.select(col(idCol).as("media_id"), col(payloadCol).as("payload")), frames)
       .filter(col("dhash").isNotNull)
       .select((shiftleft(col("media_id"), 6) + col("frame_idx")).as("fid"),
         col("dhash").as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def newBlocks = graft.ext.Dedup.simhashBlockTable(
-      newFids, "fid", "sh", maxHamming)
-    try {
-      val droppedVsState: DataFrame =
-        StreamingAppend.loadIfReadable(catalog, blocksTable) match {
-          case None => batch.select(col(idCol)).limit(0)
-          case Some(loaded) =>
-            if (!radiusChecked) {
-              val stampRow = loaded.select("max_hamming").limit(1).collect()
-              if (stampRow.nonEmpty) {
-                val stamped = stampRow.head.getInt(0)
-                require(stamped == maxHamming,
-                  s"block table '$blocksTable' is blocked at radius $stamped " +
-                    s"but this loop probes at $maxHamming: the pigeonhole " +
-                    "guarantee does not transfer across radii")
-                radiusChecked = true
-              }
-            }
-            val state = StreamingAppend.acceptedState(loaded, batchId, exactlyOnce)
-            IncrementalSimhashDedup.stateCandidates(state, newBlocks, "fid")
-              .filter(graft.ext.Dedup.hamming(col("sh_a"), col("sh_b")) <= maxHamming)
-              .select(shiftright(col("fid"), 6).as(idCol)).distinct()
-        }
-      // intra-batch: any frame pair across two arrivals, lower VIDEO id
-      // wins (fid packing is monotone in media_id)
-      val droppedIntra = graft.ext.Dedup.simhashPairsFromBlocks(newBlocks, "fid")
-        .select(shiftright(col("doc_a"), 6).as("va"),
-          shiftright(col("doc_b"), 6).as("vb"))
-        .filter(col("va") < col("vb"))
-        .select(col("vb").as(idCol)).distinct()
-      val dropped = droppedVsState.union(droppedIntra).distinct()
-      val survivors = batch.join(broadcast(dropped), Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = survivors.count()
-        if (n > 0) {
-          appendOnce(survivors, docsTable, Seq(idCol), batchId)
-          if (crashBetweenAppendsOnce) {
-            crashBetweenAppendsOnce = false
-            throw new RuntimeException(
-              "injected crash between docs append and blocks append")
-          }
-          appendOnce(
-            newBlocks.withColumn("__vid", shiftright(col("fid"), 6))
-              .join(survivors.select(col(idCol).as("__vid")),
-                Seq("__vid"), "left_semi")
-              .drop("__vid"),
-            blocksTable, Seq("fid", "blk"), batchId)
-        }
-        n
-      } finally survivors.unpersist(blocking = false)
-    } finally newFids.unpersist(blocking = false)
-  }
-
-  /** Attach to a media stream (same trigger conventions as the twins). */
-  def start(stream: DataFrame, queryName: String = "graft_incremental_videoframe",
-      continuous: Boolean = false, interval: String = "1 minute",
-      checkpoint: Option[String] = None): StreamingQuery =
-    StreamingAppend.startForeachBatch(stream, queryName, continuous,
-      interval, checkpoint) { (batch, id) => processBatch(batch, id); () }
+  protected def cells(batch: DataFrame, units: DataFrame) =
+    Dedup.simhashBlockTable(units, "fid", "sh", maxHamming)
+  protected def cellKeys = IncrementalSimhashDedup.cellKeys
+  override protected def keepsCells = false
+  protected def probed = blocksTable
+  protected def probe(state: DataFrame, cells: DataFrame) =
+    IncrementalSimhashDedup.stateCandidates(state, cells, "fid")
+  protected def accept(a: Column, b: Column) = Dedup.hamming(a, b) <= maxHamming
+  protected def stateAppends(units: DataFrame, cells: DataFrame) =
+    Seq((blocksTable, cells, Seq("fid", "blk")))
+  override protected def stampedRadius = Some(maxHamming)
 }

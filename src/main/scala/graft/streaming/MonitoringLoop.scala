@@ -132,8 +132,8 @@ final class MonitoringLoop(
     * semantics (scripts/transform_script:17-24) in append-only form. Both
     * conventions, their mode guards (each direction fails loudly instead
     * of corrupting the other's layout), and the null-safe replay anti-join
-    * live in [[StreamingAppend.appendOnce]], shared with
-    * [[IncrementalDedup]]. */
+    * live in [[StreamingAppend.appendOnce]], shared with the incremental
+    * dedup families' [[DedupCore]]. */
   private val modeChecked = mutable.Set.empty[String]
 
   private def ingest(batch: DataFrame, batchId: Long): Unit =

@@ -10,7 +10,7 @@ import graft.core.Catalog
 
 /** The ONE implementation of the micro-batch ingest conventions the
   * streaming loops share — [[MonitoringLoop]]'s ingest and
-  * [[IncrementalDedup]]'s per-table appends both delegate here, so the two
+  * [[DedupCore]]'s per-table appends both delegate here, so the two
   * mode guards and the replay anti-join cannot diverge between copies
   * (they once did: only one copy had grown the guard against a
   * manifest-mode append silently adopting a `__batch_id`-partitioned
@@ -92,9 +92,9 @@ private[streaming] object StreamingAppend {
     }
 
   /** The accepted-state view of a dedup loop's state `table` while
-    * processing batch `batchId` — the replay-correctness convention all
-    * three incremental dedup twins share (ONE copy, like the mode guards
-    * above): in the batch-id-partition mode, a crashed attempt of THIS
+    * processing batch `batchId` — the replay-correctness convention of
+    * [[DedupCore]], which every incremental dedup family runs on (ONE
+    * copy, like the mode guards above): in the batch-id-partition mode, a crashed attempt of THIS
     * batch can have partially committed its own state rows, and counting
     * them as accepted state would self-collide the batch's rows (jaccard
     * 1.0 / cosine 1.0 / hamming 0 against themselves), drop them from

@@ -487,8 +487,25 @@ class DetectorsSpec extends SparkSpec {
     // escapes both Future.apply and the recover, so its future never
     // completes — the barrier must time out rather than hang the whole run
     import scala.concurrent.duration.DurationInt
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // the runner's warnings, captured for this run only (the session logs
+    // at ERROR, so the runner's logger is lowered to WARN meanwhile)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("hung-check-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[MonitoringRunner]).asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
     val am = new AlertManager(clock, Seq(new InMemorySink("log")))
-    val result = new MonitoringRunner(am, checkTimeout = 2.seconds).run(
+    val result = try new MonitoringRunner(am, checkTimeout = 2.seconds).run(
       feeds = () => { Thread.sleep(120000); null },
       revenue = () => RevenueStatus(today, 0.0, None, 0.0, isAnomaly = false,
         0.0, "NONE", Nil, None),
@@ -498,9 +515,17 @@ class DetectorsSpec extends SparkSpec {
       recon = () => ReconStatus(0L, 0L, 0L, 0.0, isReconciled = true, Nil, "NONE"),
       sla = () => SlaStatus(0L, 0.0, 0.0, willBreachSla = false, "NONE"),
       quality = () => QualityStatus(Map.empty, 0.0, Nil, hasDegradation = false, "NONE"))
+    finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
     assert(result.feeds.isEmpty)             // timed out => failed, not hung
     assert(result.revenue.isDefined && result.quality.isDefined)
     assert(result.report.contains("CHECK FAILED"))
+    // and the timeout leaves a trace naming the check and the limit
+    assert(warnings.toArray.toSeq == Seq("monitoring check 'feeds' timed out after 2 seconds"),
+      warnings)
   }
 
   /** What `body` ran: root SQL executions (one per action), their executed

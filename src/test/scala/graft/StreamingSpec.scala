@@ -886,31 +886,64 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Rows the file scans under each of `roots` produced across every query
-    * `body` ran. Each executed scan counts once: a scan inside a cached
-    * relation's plan ran once however many later queries read the cache,
-    * and a re-scan is a new physical node. A marker query run after `body`
-    * flushes the listener bus, which delivers in order. */
-  private def rowsScanned(roots: Seq[String])(body: => Unit): Seq[Long] = {
+    * `body` ran, and the Spark jobs `body` started. Each executed scan
+    * counts once: a scan inside a cached relation's plan ran once however
+    * many later queries read the cache, and a re-scan is a new physical
+    * node. The listener bus delivers asynchronously but in order, so a
+    * marker query in its own job group before and after `body` bounds
+    * what each listener records: events of queries run before `body` can
+    * arrive after the listeners are registered. */
+  private def rowsScanned(roots: Seq[String])(body: => Unit): (Seq[Long], Int) = {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val marker = s"rows-scanned-marker-${System.nanoTime()}"
-    val flushed = new java.util.concurrent.CountDownLatch(1)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val Seq(start, end) = Seq("start", "end").map(m => s"rows-scanned-$m-${System.nanoTime()}")
+    // one latch per (listener, marker); each listener records between the
+    // two markers it has seen
+    val seenByQuery = Map(start -> new CountDownLatch(1), end -> new CountDownLatch(1))
+    val seenByJobs = Map(start -> new CountDownLatch(1), end -> new CountDownLatch(1))
+    @volatile var queriesOpen = false
+    @volatile var jobsOpen = false
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (qe.analyzed.toString.contains(marker)) flushed.countDown()
-        else plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
+      private def record(qe: QueryExecution): Unit = {
+        val text = qe.analyzed.toString
+        seenByQuery.keys.find(text.contains) match {
+          case Some(m) => queriesOpen = m == start; seenByQuery(m).countDown()
+          case None => if (queriesOpen) plans.add(qe.executedPlan)
+        }
+      }
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).filter(seenByJobs.contains) match {
+          case Some(m) => jobsOpen = m == start; seenByJobs(m).countDown()
+          case None => if (jobsOpen) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    def mark(m: String): Unit = {
+      sc.setJobGroup(m, m)
+      try spark.range(1).select(org.apache.spark.sql.functions.lit(m)).collect()
+      finally sc.clearJobGroup()
+      assert(seenByQuery(m).await(60, TimeUnit.SECONDS) && seenByJobs(m).await(60, TimeUnit.SECONDS))
     }
     spark.listenerManager.register(listener)
+    sc.addSparkListener(jobListener)
     try {
+      mark(start)
       body
-      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.listenerManager.unregister(listener)
+      mark(end)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      sc.removeSparkListener(jobListener)
+    }
     def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator.single(p) ++ (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
@@ -923,47 +956,117 @@ class StreamingSpec extends SparkSpec {
       case f: FileSourceScanExec => scans.put(f, ())
       case _ =>
     })
-    roots.map { root =>
+    (roots.map { root =>
       val prefix = new java.io.File(root).toURI.getPath.stripSuffix("/")
       scans.keySet.toArray(Array.empty[FileSourceScanExec])
         .filter(_.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(prefix)))
         .map(_.metrics("numOutputRows").value).sum
-    }
+    }, jobs.get)
   }
 
-  test("IncrementalDedup: a batch scans its arrivals and the band state once and leaves nothing persisted") {
-    import graft.streaming.IncrementalDedup
-    val root = java.nio.file.Files.createTempDirectory("graft-incdedup-once").toString
-    val catalog = new graft.core.Catalog(spark, root)
-    val inc = new IncrementalDedup(catalog, "once.docs", "once.bands", threshold = 0.3)
-    val vocab = (0 until 400).map(i => s"w$i")
+  test("dedup twins: a batch scans its arrivals and its probed state once and leaves nothing persisted, all six families") {
+    import graft.streaming._
+    final case class Loop(process: (org.apache.spark.sql.DataFrame, Long) => Long,
+      armCrash: () => Unit)
     def text(i: Int) = {
       val r = new scala.util.Random(i)
-      Seq.fill(12)(vocab(r.nextInt(vocab.size))).mkString(" ")
+      Seq.fill(12)(s"w${r.nextInt(400)}").mkString(" ")
     }
-    def docs(ids: Seq[Int]) = ids.map(i => (i.toLong, text(i))).toDF("doc_id", "text")
-    inc.processBatch(docs(1 to 40), 0L)
-    // arrivals read from parquet, so their scans show in the executed plans;
-    // doc 81 repeats doc 7 and drops against the accepted state
-    val arrivals = s"$root/arrivals"
-    docs(41 to 80).union(Seq((81L, text(7))).toDF("doc_id", "text")).write.parquet(arrivals)
-    val stateRows = catalog.load("once.bands").count()
+    def vec(i: Int): Seq[Float] = {
+      val r = new scala.util.Random(i)
+      Seq.fill(16)(r.nextGaussian().toFloat)
+    }
+    // seeded noise: distinct keys sit far apart in dHash space (smooth
+    // patterns of distinct seeds can fall within the radius)
+    def noise(seed: Long, w: Int): Array[Byte] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(w * w)(r.nextInt(256).toByte)
+    }
+    def avi(i: Int): Array[Byte] = graft.functions.MjpegAvi.encode(16, 16, (0 until 2).map(f =>
+      graft.functions.JpegGray.encodeGray(16, 16, noise(i * 131L + f, 16), 92)))
+    def wav(i: Int): Array[Byte] = graft.functions.WavPcm.encodePcm16(16000, 1,
+      graft.ext.Multimodal.waveformSamples(i.toLong, 2 * 2048, 0))
+    def png(i: Int): Array[Byte] = graft.functions.PngGray.encodeGray(32, 32, noise(i.toLong, 32))
+    // (family, loop over tables once.docs / once.probe (/ once.segs),
+    // arrivals of (id, content key)); the probed table is once.probe
+    val families = Seq[(String, graft.core.Catalog => Loop,
+        Seq[(Long, Int)] => org.apache.spark.sql.DataFrame)](
+      ("minhash", c => {
+        val l = new IncrementalDedup(c, "once.docs", "once.probe", threshold = 0.3)
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")),
+      ("exact", c => {
+        val l = new IncrementalExactDedup(c, "once.docs", "once.probe")
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, text(k).getBytes) }.toDF("media_id", "payload")),
+      ("lsh", c => {
+        val l = new IncrementalLshDedup(c, "once.docs", "once.probe", nPlanes = 4,
+          nTables = 8, threshold = 0.999)
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, vec(k)) }.toDF("vec_id", "embedding")),
+      ("audioseg", c => {
+        val l = new IncrementalAudioSegmentDedup(c, "once.docs", "once.probe", "once.segs",
+          nPlanes = 8, nTables = 4, threshold = 0.999, segments = 2)
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, wav(k)) }.toDF("media_id", "payload")),
+      ("simhash", c => {
+        val l = new IncrementalSimhashDedup(c, "once.docs", "once.probe", maxHamming = 3)
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")),
+      ("image", c => {
+        val l = IncrementalImageDedup(c, "once.docs", "once.probe", maxHamming = 3)
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, png(k)) }.toDF("media_id", "payload")),
+      ("videoframe", c => {
+        val l = new IncrementalVideoFrameDedup(c, "once.docs", "once.probe",
+          frames = 2, maxHamming = 3)
+        Loop(l.processBatch, () => l.crashBetweenAppendsOnce = true)
+      }, rows => rows.map { case (id, k) => (id, avi(k)) }.toDF("media_id", "payload")))
+
     val sc = spark.sparkContext
-    spark.catalog.clearCache()
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    val Seq(arrivalRows, stateRowsRead) = rowsScanned(Seq(arrivals, s"$root/once/bands")) {
-      assert(inc.processBatch(spark.read.parquet(arrivals), 1L) == 40L)
+    def keys(ids: Range) = ids.map(i => (i.toLong, i))
+    val failures = families.flatMap { case (fam, mk, arrivalsOf) =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft-once-$fam").toString
+      val catalog = new graft.core.Catalog(spark, root)
+      val loop = mk(catalog)
+      // two batches before the measured one: the radius-stamped families
+      // read their stamp once per loop, on their first probe
+      loop.process(arrivalsOf(keys(1 to 10)), 0L)
+      loop.process(arrivalsOf(keys(11 to 20)), 1L)
+      // arrivals read from parquet, so their scans show in the executed
+      // plans; arrival 41 repeats content 7 and drops against the state
+      val arrivals = s"$root/arrivals"
+      arrivalsOf(keys(21 to 40) :+ (41L -> 7)).write.parquet(arrivals)
+      val stateRows = catalog.load("once.probe").count()
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      var survivors = -1L
+      val (Seq(arrivalRows, stateRowsRead), jobs) =
+        rowsScanned(Seq(arrivals, s"$root/once/probe")) {
+          survivors = loop.process(spark.read.parquet(arrivals), 2L)
+        }
+      info(s"$fam: $jobs Spark jobs for the measured batch")
+      val persistedAfterSuccess = sc.getPersistentRDDs.size
+      // and a batch that fails between its appends releases them too
+      loop.armCrash()
+      val crashed = scala.util.Try(loop.process(arrivalsOf(keys(100 to 105)), 3L))
+      val persistedAfterCrash = sc.getPersistentRDDs.size
+      val replayed = loop.process(arrivalsOf(keys(100 to 105)), 3L)
+      val persistedAfterReplay = sc.getPersistentRDDs.size
+      val corpus = catalog.load("once.docs").count()
+      spark.catalog.clearCache()
+      Seq(
+        (survivors == 20L, s"$survivors survivors of the measured batch, not 20"),
+        (arrivalRows == 21L, s"arrivals scanned $arrivalRows rows, not 21"),
+        (stateRowsRead == stateRows, s"probed state scanned $stateRowsRead rows, not $stateRows"),
+        (persistedAfterSuccess == 0, s"$persistedAfterSuccess RDDs persisted after a success"),
+        (crashed.isFailure, "the injected crash did not fire"),
+        (persistedAfterCrash == 0, s"$persistedAfterCrash RDDs persisted after the crash"),
+        (persistedAfterReplay == 0, s"$persistedAfterReplay RDDs persisted after the replay"),
+        (replayed == 6L && corpus == 46L, s"replay kept $replayed, corpus $corpus rows"))
+        .collect { case (false, why) => s"$fam: $why" }
     }
-    assert(arrivalRows == 41, "the arrivals source was scanned more than once")
-    assert(stateRowsRead == stateRows, "the band state was scanned more than once")
-    assert(sc.getPersistentRDDs.isEmpty)
-    // and a batch that fails between its two appends releases them too
-    inc.crashBetweenAppendsOnce = true
-    intercept[RuntimeException] { inc.processBatch(docs(100 to 110), 2L) }
-    assert(sc.getPersistentRDDs.isEmpty)
-    assert(inc.processBatch(docs(100 to 110), 2L) == 11L)
-    assert(sc.getPersistentRDDs.isEmpty)
-    assert(catalog.load("once.docs").count() == 91)
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("IncrementalDedup state probe broadcasts the micro-batch, never shuffles the state") {
@@ -1829,6 +1932,15 @@ class StreamingSpec extends SparkSpec {
         (id, graft.functions.MjpegAvi.encode(16, 16, (0 until 2).map(f =>
           graft.functions.JpegGray.encodeGray(16, 16,
             graft.ext.Multimodal.patternPixels(k * 131L + f, 16, 16), 92))))
+      }.toDF("media_id", "payload")),
+      ("audioseg", (c, d, s, eo) => {
+        val l = new graft.streaming.IncrementalAudioSegmentDedup(c, d, s, s"${s}_segs",
+          nPlanes = 8, nTables = 4, threshold = 0.999, segments = 2, exactlyOnce = eo)
+        Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
+          () => l.crashBetweenAppendsOnce = false)
+      }, rows => rows.map { case (id, k) =>
+        (id, graft.functions.WavPcm.encodePcm16(16000, 1,
+          graft.ext.Multimodal.waveformSamples(k.toLong, 2 * 2048, 0)))
       }.toDF("media_id", "payload")))
 
     for ((fam, mkLoop, mkBatch) <- families; eo <- Seq(false, true)) {
@@ -1868,7 +1980,7 @@ class StreamingSpec extends SparkSpec {
       }
       val idCol =
         if (fam == "lsh") "vec_id"
-        else if (fam == "exact" || fam == "videoframe") "media_id"
+        else if (fam == "exact" || fam == "videoframe" || fam == "audioseg") "media_id"
         else "doc_id"
       def ids(t: String) = cat.load(t).select(idCol).collect()
         .map(_.getLong(0)).toSet
@@ -1895,6 +2007,7 @@ class StreamingSpec extends SparkSpec {
     // fresh table (the loadIfReadable contract) or every replay wedges
     // until manual cleanup.
     import graft.streaming.{IncrementalDedup, IncrementalLshDedup, IncrementalSimhashDedup}
+    import org.apache.spark.sql.functions.{col, shiftright}
     val root = java.nio.file.Files.createTempDirectory("graft-wedge").toString
     val cat = new graft.core.Catalog(spark, root)
     def plantDroppings(ns: String, t: String): Unit = {
@@ -1921,6 +2034,41 @@ class StreamingSpec extends SparkSpec {
     val vec = Seq.tabulate(8)(i => if (i == 0) 1f else 0f)
     assert(lsh.processBatch(Seq((1L, vec)).toDF("vec_id", "embedding"), 0L) == 1L)
     assert(cat.load("w.vbuckets").select("vec_id").distinct().count() == 1L)
+
+    // the media families: payload rows keyed by media_id; packed-fid
+    // state rows are owned by fid >> 6
+    def owners(t: String, unit: String) =
+      cat.load(t).select(shiftright(col(unit), 6)).distinct().count()
+    def media(payload: Array[Byte]) = Seq((1L, payload)).toDF("media_id", "payload")
+
+    plantDroppings("w", "digests")
+    val exact = new graft.streaming.IncrementalExactDedup(cat, "w.edocs", "w.digests",
+      exactlyOnce = true)
+    assert(exact.processBatch(media(text.getBytes), 0L) == 1L)
+    assert(cat.load("w.digests").select("media_id").distinct().count() == 1L)
+
+    plantDroppings("w", "iblocks")
+    val image = graft.streaming.IncrementalImageDedup(cat, "w.idocs", "w.iblocks",
+      maxHamming = 3, exactlyOnce = true)
+    assert(image.processBatch(media(graft.functions.PngGray.encodeGray(32, 32,
+      graft.ext.Multimodal.patternPixels(1L, 32, 32))), 0L) == 1L)
+    assert(cat.load("w.iblocks").select("media_id").distinct().count() == 1L)
+
+    plantDroppings("w", "fblocks")
+    val video = new graft.streaming.IncrementalVideoFrameDedup(cat, "w.fdocs", "w.fblocks",
+      frames = 2, maxHamming = 3, exactlyOnce = true)
+    assert(video.processBatch(media(graft.functions.MjpegAvi.encode(16, 16, (0 until 2).map(f =>
+      graft.functions.JpegGray.encodeGray(16, 16,
+        graft.ext.Multimodal.patternPixels(131L + f, 16, 16), 92)))), 0L) == 1L)
+    assert(owners("w.fblocks", "fid") == 1L)
+
+    plantDroppings("w", "abuckets")
+    plantDroppings("w", "asegs")
+    val audio = new graft.streaming.IncrementalAudioSegmentDedup(cat, "w.aclips",
+      "w.abuckets", "w.asegs", nPlanes = 8, nTables = 4, segments = 2, exactlyOnce = true)
+    assert(audio.processBatch(media(graft.functions.WavPcm.encodePcm16(16000, 1,
+      graft.ext.Multimodal.waveformSamples(1L, 2 * 2048, 0))), 0L) == 1L)
+    assert(owners("w.abuckets", "fid") == 1L && owners("w.asegs", "fid") == 1L)
   }
 
   test("dedup twins: compact+vacuum racing the corpus and state appends " +

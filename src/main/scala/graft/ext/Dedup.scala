@@ -128,15 +128,22 @@ object Dedup {
     * instead of the n-gram text.
     *
     * Caching contract: the returned (lazy) plan reads two stages this call
-    * `persist`s — they cannot unpersist here because the caller has not
-    * consumed them yet, so they stay in the session cache afterwards
-    * (disk blocks are never auto-evicted). Long-lived sessions should
-    * release them once the result is materialized, e.g.
+    * `persist`s (the band table [[minhashCandidates]] builds and the
+    * shingle-hash table) — they cannot unpersist here because the caller
+    * has not consumed them yet, so they stay in the session cache
+    * afterwards (disk blocks are never auto-evicted). Long-lived sessions
+    * should release them once the result is materialized, e.g.
     * `spark.sharedState.cacheManager.clearCache()` — Verify and Bench do
-    * exactly this between queries. Same contract: [[minhashCandidates]],
-    * [[simhashPairs]], [[Similarity.lshCandidates]]. Fully-materialized
-    * helpers ([[graft.ext.Ivf.trainCentroids]],
-    * [[graft.streaming.IncrementalDedup]]) unpersist internally instead.
+    * exactly this between queries. Every form that BUILDS its cell table
+    * inline persists it the same way: [[minhashCandidates]],
+    * [[simhashPairs]] and [[simhashPairsFromSigs]] (the signature table),
+    * [[Similarity.lshCandidates]]. The forms that take an already-built
+    * table ([[bandCandidates]], [[simhashPairsFromBlocks]],
+    * [[Similarity.lshCandidatesFromTable]]) persist nothing: their input
+    * is expected storage-local, and a caller feeding them an inline-built
+    * table persists it first. Fully-materialized helpers
+    * ([[graft.ext.Ivf.trainCentroids]], [[graft.streaming.IncrementalDedup]])
+    * unpersist internally instead.
     */
   def nearDupPairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, k: Int = 32, bands: Int = 8, threshold: Double = 0.5): DataFrame = {
@@ -165,48 +172,31 @@ object Dedup {
     * `shared_bands` = the number of bands that agree — the LSH collision
     * count, a monotone estimator of signature agreement (a pair sharing
     * b' of b bands has estimated Jaccard ≥ the banding curve at b'/b).
-    * `cache` defaults to false like EVERY persisted-relation consumer
-    * ([[simhashPairsFromBlocks]], [[Similarity.lshCandidatesFromTable]]):
-    * the expected input is storage-local, and re-persisting it would only
-    * double the memory. Pass `cache = true` when feeding an inline-BUILT
-    * band table to both self-join sides (as [[minhashCandidates]] does) —
-    * without it the exploded relation and the signature scan recompute
-    * once per side. The no-exchange published-table path: for a
+    * The input feeds both self-join sides and is not persisted here (the
+    * [[nearDupPairs]] caching contract): persist an inline-BUILT band
+    * table first, as [[minhashCandidates]] does, or the exploded relation
+    * and the signature scan recompute once per side. The self-join is
+    * [[CandidatePairs.collisions]]. The no-exchange published-table path: for a
     * [[graft.core.Catalog.saveBucketed]]-published table bucketed on
     * `bucket`, the bucketed scan's co-location satisfies the (band, bucket)
     * join's clustering requirement, so candidate re-derivation runs with NO
     * exchange on the collision key at any corpus size (plan-pinned in
     * OpsSpec) — the same write-once/join-many trade the q53/q54 recon path
     * banks, applied to dedup's hottest recurring join. */
-  def bandCandidates(bandTable: DataFrame, idCol: String = "doc_id",
-      cache: Boolean = false): DataFrame = {
+  def bandCandidates(bandTable: DataFrame, idCol: String = "doc_id"): DataFrame = {
     TableShapes.requireColumns(bandTable, Seq("band", "bucket", idCol),
       "bandCandidates", "build it with Dedup.minhashTable(docs, textCol, idCol)")
-    val bk = if (!cache) bandTable
-      else bandTable.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = bk.select(col("band").as("band_a"), col("bucket"),
-      col(idCol).as("doc_a"))
-    val b = bk.select(col("band").as("band_b"), col("bucket").as("bucket_b"),
-      col(idCol).as("doc_b"))
-    // `bucket` is the ONLY equi-key on purpose: band equality is enforced
-    // as a residual predicate in a form Catalyst cannot extract into the
-    // join keys (EqualTo between one-side columns would be). Semantics vs
-    // a plain (band, bucket) equi-join are fuzz-pinned in PropertiesSpec
-    // on adversarial tables (cross-band bucket collisions, null buckets,
-    // duplicate rows), so a Spark upgrade that changes how the residual
-    // EVALUATES breaks loudly, independent of the plan pins. With the key
-    // set exactly {bucket}, a band table PUBLISHED bucketed on `bucket`
-    // joins with no exchange at all (requireAllClusterKeysForCoPartition
-    // demands the bucketing cover every equi-key — (band, bucket) keys
-    // would re-shuffle a bucket-bucketed table). For [[minhashTable]]
-    // output the residual never rejects a bucket match (the band index is
-    // hashed into the bucket), but it keeps exact semantics for any
-    // caller-built band table where cross-band bucket values can collide.
-    a.join(b, col("bucket") === col("bucket_b") &&
-        col("band_a").bitwiseXOR(col("band_b")) === lit(0) &&
-        col("doc_a") < col("doc_b"))
+    // `bucket` is the ONLY equi-key on purpose: band equality rides as a
+    // residual, so a band table PUBLISHED bucketed on `bucket` joins with
+    // no exchange at all (requireAllClusterKeysForCoPartition demands the
+    // bucketing cover every equi-key — (band, bucket) keys would
+    // re-shuffle a bucket-bucketed table). For [[minhashTable]] output the
+    // residual never rejects a bucket match (the band index is hashed into
+    // the bucket), but it keeps exact semantics for any caller-built band
+    // table where cross-band bucket values can collide.
+    CandidatePairs.collisions(bandTable, idCol, "bucket", Seq("band"))
       // one row per (doc, band) in the input => count(*) = bands agreeing
-      .groupBy("doc_a", "doc_b")
+      .groupBy(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .agg(count(lit(1)).as("shared_bands"))
   }
 
@@ -218,8 +208,10 @@ object Dedup {
   def minhashCandidates(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id",
       shingleN: Int = 3, k: Int = 32, bands: Int = 8): DataFrame =
-    bandCandidates(minhashTable(docs, textCol, idCol, shingleN, k, bands), idCol,
-        cache = true)
+    // the band table feeds both self-join sides: materialize it so the
+    // exploded relation and the signature scan run once
+    bandCandidates(minhashTable(docs, textCol, idCol, shingleN, k, bands)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), idCol)
       .select("doc_a", "doc_b")
 
   /** (k, bands) sized to a Jaccard threshold — the MinHash twin of
@@ -350,7 +342,7 @@ object Dedup {
     val sh = sigs.select(col(idCol), col(sigCol).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     simhashPairsFromBlocks(
-      simhashBlockTable(sh, idCol, "sh", maxHamming, blocks), idCol, cache = false)
+      simhashBlockTable(sh, idCol, "sh", maxHamming, blocks), idCol)
   }
 
   /** The exploded Manku block table — the persistable form of the simhash
@@ -488,19 +480,15 @@ object Dedup {
     * table published bucketed on `bkey` self-joins with no exchange on the
     * collision key (for a freshly-built table the key join is equivalent,
     * one 8-byte column through the shuffle instead of two). The verify
-    * radius comes from the table's own `max_hamming` stamp. `cache` as in
-    * [[bandCandidates]]: true materializes the input for the two join
-    * sides; false for storage-local persisted tables. */
-  def simhashPairsFromBlocks(blockTable: DataFrame, idCol: String = "doc_id",
-      cache: Boolean = false): DataFrame = {
+    * radius comes from the table's own `max_hamming` stamp. The input is
+    * not persisted here (the [[nearDupPairs]] caching contract). */
+  def simhashPairsFromBlocks(blockTable: DataFrame, idCol: String = "doc_id"): DataFrame = {
     TableShapes.requireColumns(blockTable,
       Seq("bkey", "blk", "bits", "sh", "max_hamming", idCol),
       "simhashPairsFromBlocks",
       "build it with Dedup.simhashBlockTable(sigs, …) (pairing straight " +
         "from signatures is simhashPairsFromSigs)")
-    val bk = if (!cache) blockTable
-      else blockTable.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    simhashRawCollisions(bk, idCol)
+    simhashRawCollisions(blockTable, idCol)
       // a close pair shares several blocks — collapse before the verify
       .select(col("doc_a"), col("doc_b"), col("sh_a"), col("sh_b"), col("max_hamming"))
       .distinct()
@@ -511,25 +499,14 @@ object Dedup {
 
   /** The pre-collapse block-collision pairs — the self-join output before
     * the shared-block distinct, one row per (pair, colliding block
-    * combination), signatures still attached. Shared by the published
-    * distinct-first pairing above and the aggregate-form stream below so
-    * their collision semantics can never drift. */
-  private def simhashRawCollisions(bk: DataFrame, idCol: String): DataFrame = {
-    val a = bk.select(col("bkey"), col("blk").as("blk_a"), col("bits").as("bits_a"),
-      col(idCol).as("doc_a"), col("sh").as("sh_a"), col("max_hamming"))
-    val b = bk.select(col("bkey").as("bkey_b"), col("blk").as("blk_b"),
-      col("bits").as("bits_b"), col(idCol).as("doc_b"), col("sh").as("sh_b"))
-    // XOR-form residuals: EqualTo over a both-sides expression, so never
-    // lifted into the join keys — and unlike subtraction, immune to ANSI
-    // long-overflow on full-width bit patterns (maxHamming = 0 puts the
-    // whole signature in `bits`). The bandCandidates/lshCandidatesFromTable
-    // residual semantics are fuzz-pinned against plain equi-joins in
-    // PropertiesSpec; this join shares their XOR contract.
-    a.join(b, col("bkey") === col("bkey_b") &&
-        col("blk_a").bitwiseXOR(col("blk_b")) === lit(0) &&
-        col("bits_a").bitwiseXOR(col("bits_b")) === lit(0L) &&
-        col("doc_a") < col("doc_b"))
-  }
+    * combination), signatures and the a-side radius stamp attached.
+    * Shared by the published distinct-first pairing above and the
+    * aggregate-form stream below so their collision semantics can never
+    * drift. */
+  private def simhashRawCollisions(bk: DataFrame, idCol: String): DataFrame =
+    CandidatePairs.collisions(bk, idCol, "bkey", Seq("blk", "bits"), Seq("sh", "max_hamming"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("sh_a"), col("sh_b"),
+        col("max_hamming_a").as("max_hamming"))
 
   /** The pre-distinct VERIFIED pair stream behind [[simhashPairsFromSigs]]:
     * one `(doc_a, doc_b, hamming)` row per colliding block combination
@@ -577,42 +554,23 @@ object Dedup {
   def minhashAssignFromBands(bandTable: DataFrame, shingles: DataFrame,
       threshold: Double, idCol: String = "doc_id", maxRepsPerCell: Int = 4096,
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    require(maxRepsPerCell >= 1, s"maxRepsPerCell must be >= 1, got $maxRepsPerCell")
     TableShapes.requireColumns(bandTable, Seq("band", "bucket", idCol),
       "minhashAssignFromBands",
       "build it with Dedup.minhashTable(docs, textCol, idCol)")
     TableShapes.requireColumns(shingles, Seq("sh", idCol),
       "minhashAssignFromBands",
       "build it with docs.select(id, Dedup.shingleHashes(text, n).as(\"sh\"))")
-    val spark = bandTable.sparkSession
-    import spark.implicits._
-    val multi = bandTable.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-      .select("band", "bucket")
-    val members = bandTable
-      .join(multi, Seq("band", "bucket"), "left_semi")
-      // the shingle side is corpus-sized — same no-broadcast reasoning as
-      // the embedding walk's vector fetch
-      .join(shingles.select(col(idCol), col("sh")).hint("merge"), Seq(idCol))
-      .select(col("band"), col("bucket"), col(idCol).as("member_id"), col("sh"))
     val thr = threshold
-    val cap = maxRepsPerCell
-    val cmp = comparisons
-    val elim = members
-      .as[(Int, Long, Long, Seq[Long])]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapSortedGroups(col("member_id")) { case (_, rows) =>
-        GreedyStar.walk[Array[Long]](
-          rows.collect { case (_, _, id, shSeq) if shSeq != null =>
-            val sh = shSeq.toArray
-            java.util.Arrays.sort(sh)
-            (id, sh)
-          },
-          matches = (rsh, sh) => sortedJaccard(rsh, sh) >= thr,
-          cap, cmp)
-      }
-      .toDF(idCol, "dup_of")
-      .groupBy(idCol).agg(min(col("dup_of")).as("dup_of"))
+    val elim = CandidatePairs.eliminations(bandTable, Seq("band", "bucket"), idCol,
+      CandidatePairs.Evidence[Array[Long]](Seq(col("sh")),
+        read = r => if (r.isNullAt(1)) null else {
+          val sh = r.getSeq[Long](1).toArray
+          java.util.Arrays.sort(sh)
+          sh
+        },
+        matches = (rsh, sh) => sortedJaccard(rsh, sh) >= thr,
+        source = Some(shingles.select(col(idCol), col("sh")))),
+      maxRepsPerCell, comparisons)
     shingles.select(col(idCol)).join(elim, Seq(idCol), "left_outer")
   }
 
@@ -689,93 +647,63 @@ object Dedup {
       idCol: String = "doc_id", maxRepsPerCell: Int = 4096,
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None,
       reprobe: Boolean = false): DataFrame = {
-    require(maxRepsPerCell >= 1, s"maxRepsPerCell must be >= 1, got $maxRepsPerCell")
     TableShapes.requireColumns(blockTable,
       Seq("bkey", "blk", "bits", "sh", "max_hamming", idCol),
       "simhashAssignFromBlocks",
       "build it with Dedup.simhashBlockTable(sigs, …)")
-    val spark = blockTable.sparkSession
-    import spark.implicits._
-    val multi = blockTable.groupBy("bkey", "blk", "bits")
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-      .select("bkey", "blk", "bits")
-    val members = blockTable
-      .join(multi, Seq("bkey", "blk", "bits"), "left_semi")
-      .select(col("bkey"), col("blk"), col("bits"),
-        col(idCol).as("member_id"), col("sh"), col("max_hamming"))
-    val cap = maxRepsPerCell
-    val cmp = comparisons
-    val elim1 = members
-      .as[(Long, Int, Long, Long, Long, Int)]
-      .groupByKey(t => (t._1, t._2, t._3))
-      .flatMapSortedGroups(col("member_id")) { case (_, rows) =>
-        // evidence carries the MEMBER row's stamped radius — the walk
-        // verifies at the radius of the row being judged
-        GreedyStar.walk[(Long, Int)](
-          rows.map { case (_, _, _, id, sh, radius) => (id, (sh, radius)) },
-          matches = { case ((rsh, _), (sh, radius)) =>
-            java.lang.Long.bitCount(sh ^ rsh) <= radius
-          },
-          cap, cmp)
-      }
-      .toDF(idCol, "dup_of")
-    val elim =
-      if (!reprobe) elim1
-      else {
-        // ── optional second pass: close the promotion leak ──
-        // The greedy star's one conservative gap (measured: exactly one
-        // planted twin per 16M-image capstone run, SCALE.md r15): a member
-        // whose only radius-match was ELIMINATED in the same cell before
-        // it arrived never meets it — eliminated members don't promote to
-        // representatives — so the member survives. The re-probe walks
-        // each cell once more with the roles fixed: first-pass ELIMINATED
-        // members are pre-seeded representatives (id-ascending, same cap),
-        // first-pass survivors compare against them and assign on a
-        // match. Eliminations stay sound (a genuine radius pair toward a
-        // smaller id — dup_of chains exactly like cross-cell elimination
-        // already does), survivors still contain every component minimum,
-        // and the extra mass is Σ_cells |survivors|·|eliminated| —
-        // head-mass corpora have ~1 survivor/cell, so it is bounded by
-        // the first walk's own comparisons (probe-measured, SCALE.md r16).
-        val elimFirst = elim1
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val status = members
-          .join(elimFirst.select(col(idCol).as("member_id"))
-            .distinct().withColumn("__e", lit(true)),
-            Seq("member_id"), "left_outer")
-          .select(col("bkey"), col("blk"), col("bits"), col("member_id"),
-            col("sh"), col("max_hamming"), col("__e").isNotNull.as("is_elim"))
-        val elim2 = status
-          .as[(Long, Int, Long, Long, Long, Int, Boolean)]
-          .groupByKey(t => (t._1, t._2, t._3))
-          .flatMapSortedGroups(col("member_id")) { case (_, rows) =>
-            val reps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-            rows.flatMap { case (_, _, _, id, sh, radius, isElim) =>
-              if (isElim) {
-                if (reps.length < cap) reps += ((id, sh, radius))
-                Iterator.empty
-              } else {
-                var matched = -1L
-                var r = 0
-                var n = 0L
-                while (matched < 0 && r < reps.length) {
-                  n += 1
-                  if (java.lang.Long.bitCount(sh ^ reps(r)._2) <= radius)
-                    matched = reps(r)._1
-                  r += 1
-                }
-                cmp.foreach(_.add(n))
-                if (matched >= 0) Iterator.single((id, matched))
-                else Iterator.empty
-              }
+    val cells = Seq("bkey", "blk", "bits")
+    // the signature rides IN the block rows, so no join-back; evidence
+    // carries the MEMBER row's stamped radius — the walk verifies at the
+    // radius of the row being judged
+    val ev = CandidatePairs.Evidence[(Long, Int)](Seq(col("sh"), col("max_hamming")),
+      read = r => (r.getLong(1), r.getInt(2)),
+      matches = { case ((rsh, _), (sh, radius)) =>
+        java.lang.Long.bitCount(sh ^ rsh) <= radius
+      })
+    val elim1 = CandidatePairs.eliminations(blockTable, cells, idCol, ev,
+      maxRepsPerCell, comparisons)
+    if (!reprobe) elim1
+    else {
+      // ── optional second pass: close the promotion leak ──
+      // The greedy star's one conservative gap (measured: exactly one
+      // planted twin per 16M-image capstone run, SCALE.md r15): a member
+      // whose only radius-match was ELIMINATED in the same cell before
+      // it arrived never meets it — eliminated members don't promote to
+      // representatives — so the member survives. The re-probe walks
+      // each cell once more with the roles fixed: first-pass ELIMINATED
+      // members are pre-seeded representatives (id-ascending, same cap),
+      // first-pass survivors compare against them and assign on a
+      // match. Eliminations stay sound (a genuine radius pair toward a
+      // smaller id — dup_of chains exactly like cross-cell elimination
+      // already does), survivors still contain every component minimum,
+      // and the extra mass is Σ_cells |survivors|·|eliminated| —
+      // head-mass corpora have ~1 survivor/cell, so it is bounded by
+      // the first walk's own comparisons (probe-measured, SCALE.md r16).
+      val elimFirst = elim1
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val status = CandidatePairs.members(blockTable, cells, idCol, ev)
+        .join(elimFirst.select(col(idCol).as("member_id")).withColumn("__e", lit(true)),
+          Seq("member_id"), "left_outer")
+      val elimAt = status.schema.fieldIndex("__e")
+      val elim2 = CandidatePairs.walkCells(status, cells, idCol) { rows =>
+        val reps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        rows.flatMap { r =>
+          val (id, sh, radius) = (r.getLong(0), r.getLong(1), r.getInt(2))
+          if (!r.isNullAt(elimAt)) {
+            if (reps.length < maxRepsPerCell) reps += ((id, sh))
+            Iterator.empty
+          } else {
+            val matched = reps.indexWhere { case (_, rsh) =>
+              java.lang.Long.bitCount(sh ^ rsh) <= radius
             }
+            comparisons.foreach(_.add(if (matched < 0) reps.length else matched + 1))
+            if (matched >= 0) Iterator.single((id, reps(matched)._1))
+            else Iterator.empty
           }
-          .toDF(idCol, "dup_of")
-        elimFirst.unionAll(elim2)
+        }
       }
-    // a doc eliminated in several cells reconciles to the smallest
-    // eliminating representative — deterministic on any partitioning
-    elim.groupBy(idCol).agg(min(col("dup_of")).as("dup_of"))
+      CandidatePairs.minDupOf(elimFirst.unionAll(elim2), idCol)
+    }
   }
 
   /** [[simhashAssignFromBlocks]] from raw documents — signature + block

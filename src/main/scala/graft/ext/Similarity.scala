@@ -703,8 +703,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     // the bucket table feeds both sides of the self-join — materialize so
     // the corpus scan + nPlanes·nTables hyperplane projections run once
-    lshCandidatesFromTable(lshTable(emb, nPlanes, nTables, idCol, vecCol),
-      idCol, cache = true)
+    lshCandidatesFromTable(lshTable(emb, nPlanes, nTables, idCol, vecCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), idCol)
 
   /** The persistable multi-table LSH bucket relation — the
     * [[graft.ext.Dedup.minhashTable]]/[[graft.ext.Dedup.bandCandidates]]
@@ -733,34 +733,23 @@ object Similarity {
     * so a table published bucketed on `ckey` self-joins with no exchange
     * on the collision key. Semantics vs a plain three-key equi-join are
     * fuzz-pinned in PropertiesSpec on tables whose ckey deliberately
-    * collides across (tbl, bucket) values. `cache = true` materializes
-    * the input for the two join sides (the inline path); false for
-    * storage-local persisted tables. */
-  def lshCandidatesFromTable(bucketTable: DataFrame, idCol: String = "vec_id",
-      cache: Boolean = false): DataFrame = {
+    * collides across (tbl, bucket) values. The input is not persisted
+    * here (the [[Dedup.nearDupPairs]] caching contract): persist an
+    * inline-built table first, as [[lshCandidates]] does. */
+  def lshCandidatesFromTable(bucketTable: DataFrame, idCol: String = "vec_id"): DataFrame = {
     TableShapes.requireColumns(bucketTable, Seq("ckey", "tbl", "bucket", idCol),
       "lshCandidatesFromTable",
       "build it with Similarity.lshTable(emb, nPlanes, nTables)")
-    val bk = if (!cache) bucketTable
-      else bucketTable.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lshCandidatesRaw(bk, idCol).distinct()
+    lshCandidatesRaw(bucketTable, idCol).distinct()
   }
 
   /** The PRE-distinct bucket-collision pairs — the self-join output before
     * the cross-table reconciliation, one row per (pair, colliding table).
-    * Shared by the one-shot distinct above and the bounded-scratch modes
-    * below, so their pair semantics can never drift. */
-  private def lshCandidatesRaw(bk: DataFrame, idCol: String): DataFrame = {
-    val a = bk.select(col("ckey"), col("tbl").as("tbl_a"),
-      col("bucket").as("bucket_a"), col(idCol).as("id_a"))
-    val b = bk.select(col("ckey").as("ckey_b"), col("tbl").as("tbl_b"),
-      col("bucket").as("bucket_b"), col(idCol).as("id_b"))
-    a.join(b, col("ckey") === col("ckey_b") &&
-        col("tbl_a").bitwiseXOR(col("tbl_b")) === lit(0) &&
-        col("bucket_a").bitwiseXOR(col("bucket_b")) === lit(0L) &&
-        col("id_a") < col("id_b"))
+    * Shared by the one-shot distinct above and the partitioned mode below,
+    * so their pair semantics can never drift. */
+  private def lshCandidatesRaw(bk: DataFrame, idCol: String): DataFrame =
+    CandidatePairs.collisions(bk, idCol, "ckey", Seq("tbl", "bucket"))
       .select("id_a", "id_b")
-  }
 
   /** PAIR-SPACE partitioned candidate distinct: the same (id_a, id_b) pair
     * set as [[lshCandidatesFromTable]], computed in `partitions` passes
@@ -768,13 +757,14 @@ object Similarity {
     * the peak TRANSIENT shuffle is ~raw/partitions rows no matter how
     * large the distinct output is.
     *
-    * Why a second bounded mode exists beside [[lshCandidatesStaged]]: the
-    * table-staged accumulation re-shuffles the distinct-so-far every
-    * stage, so its peak stage carries ~(raw·g/T + |distinct so far|) rows
-    * — fine when cross-table duplication makes distinct ≪ raw, but on
-    * workloads where raw ≈ distinct (hash-floor corpora: the r12
-    * 16M-pinned DNF measured 2.78B raw vs ~2.6B distinct) the accumulation
-    * term approaches the one-shot cost and staging buys little.
+    * Why pair-space slices and not table stages: accumulating the
+    * distinct pair set a few tables at a time re-shuffles the
+    * distinct-so-far every stage, so its peak stage carries
+    * ~(raw·g/T + |distinct so far|) rows, and on workloads where
+    * raw ≈ distinct (hash-floor corpora: the r12 16M-pinned DNF measured
+    * 2.78B raw vs ~2.6B distinct) that approaches the one-shot cost
+    * (measured at 2.6× the total shuffle and 2.5× the wall time of
+    * one-shot for a peak only 7% lower, SCALE.md r13).
     * Partitioning the PAIR SPACE instead makes the passes independent:
     * pass p keeps the pairs with `pmod(xxhash64(id_a), P) = p`. Keying
     * the slice by id_a ALONE (not the pair hash) is what keeps total
@@ -796,7 +786,7 @@ object Similarity {
     * 1000-executor run wants anyway. Slice balance rides id_a's
     * pair-degree distribution — bounded for LSH tables, whose per-cell
     * degree is capped by the sizer's target occupancy × tables.
-    * Measured against one-shot and staged in `tools.DedupScaleProbe
+    * Measured against one-shot in `tools.DedupScaleProbe
     * --partitionedDistinct` (SCALE.md r13). Pair-set equality vs the
     * one-shot distinct is pinned in ExtSpec.
     *
@@ -819,107 +809,6 @@ object Similarity {
     spark.read.parquet((0 until partitions).map(p => s"$scratchDir/slice_$p"): _*)
   }
 
-  /** SCRATCH-BOUNDED candidate distinct: the same (id_a, id_b) pair set
-    * as [[lshCandidatesFromTable]], computed in table-group stages so no
-    * single shuffle ever carries the full raw candidate volume.
-    *
-    * Why it exists: the one-shot distinct materializes ALL raw bucket
-    * pairs in one exchange — Σ_tables Σ_cells C(|cell|,2) rows — and that
-    * is the op that outgrows executor scratch first (r12: the 16M-doc
-    * probe pinned at (21×14) DNF'd when its 2.78B-row distinct wanted
-    * more shuffle scratch than the host had free; the same cliff waits
-    * for any under-provisioned executor at 100 TB). Within ONE table a
-    * vector occupies exactly one bucket, so per-table pairs are already
-    * distinct — the distinct only reconciles ACROSS tables. Staging
-    * exploits that: accumulate the distinct pair set `tablesPerStage`
-    * tables at a time, materializing each accumulation to `scratchDir`
-    * parquet, so stage i's largest shuffle carries
-    * ~(raw·tablesPerStage/nTables + |distinct so far|) rows — instead of
-    * all raw pairs at once. More passes (the distinct-so-far re-shuffles
-    * each stage), bounded raw term: a time-for-scratch trade whose floor
-    * is the ACCUMULATION — when cross-table duplication is low and
-    * distinct ≈ raw (hash-floor corpora), the last stages still carry
-    * ~the full pair set and staging buys little over one-shot; when
-    * distinct ≪ raw it pays. For a bound that holds regardless of the
-    * distinct size, use [[lshCandidatesPartitioned]]. Both modes are
-    * measured side by side in `tools.DedupScaleProbe --stagedDistinct` /
-    * `--partitionedDistinct` (SCALE.md r13).
-    *
-    * The returned frame READS the final accumulation (already distinct) —
-    * callers own `scratchDir`'s lifecycle; intermediate stage files are
-    * deleted as each next stage lands. Pair-set equality vs the one-shot
-    * path is pinned in ExtSpec. */
-  def lshCandidatesStaged(bucketTable: DataFrame, scratchDir: String,
-      idCol: String = "vec_id", tablesPerStage: Int = 2): DataFrame = {
-    require(tablesPerStage >= 1, s"tablesPerStage must be >= 1, got $tablesPerStage")
-    TableShapes.requireColumns(bucketTable, Seq("ckey", "tbl", "bucket", idCol),
-      "lshCandidatesStaged",
-      "build it with Similarity.lshTable(emb, nPlanes, nTables)")
-    val spark = bucketTable.sparkSession
-    val tbls = bucketTable.select("tbl").distinct().collect()
-      .map(_.getInt(0)).sorted
-    val groups = tbls.grouped(tablesPerStage).toSeq
-    var prev: Option[String] = None
-    groups.zipWithIndex.foreach { case (g, i) =>
-      val stagePairs =
-        lshCandidatesFromTable(bucketTable.where(col("tbl").isin(g.toSeq.map(Int.box): _*)),
-          idCol)
-      val acc = prev match {
-        case None => stagePairs
-        case Some(p) => spark.read.parquet(p).union(stagePairs).distinct()
-      }
-      val out = s"$scratchDir/stage_$i"
-      acc.write.mode("overwrite").parquet(out)
-      // the previous accumulation is fully contained in the new one —
-      // deleting it as we go is what keeps SCRATCH (not just shuffle)
-      // bounded to ~2 accumulations. The filesystem resolves from the
-      // PATH (Catalog.fsOf's idiom), not fs.defaultFS — a scratchDir on
-      // s3a/local under an HDFS default would otherwise throw Wrong-FS
-      // mid-computation.
-      prev.foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(path, true)
-      }
-      prev = Some(out)
-    }
-    prev.map(spark.read.parquet(_))
-      .getOrElse(spark.emptyDataFrame
-        .withColumn("id_a", lit(null).cast("long"))
-        .withColumn("id_b", lit(null).cast("long"))
-        .limit(0))
-  }
-
-  /** The production form of [[nearDupPairs]]: OR-amplified multi-table LSH.
-    *
-    * Each of `nTables` independent tables buckets every vector by `nPlanes`
-    * hyperplane sign bits (disjoint plane sets per table); candidate pairs
-    * are ids that share a (table, bucket) cell in ANY table. Pass
-    * `nPlanes = 0` (the default) to size both knobs from the corpus row
-    * count via [[lshParams]] — candidate volume is then
-    * Θ(n · targetBucketRows · nTables), linear in the corpus; an explicit
-    * (nPlanes, nTables) pair is honored verbatim for reproducible configs
-    * (the q35 oracle proof pins (4, 32), where exhaustive-scan DuckDB
-    * agreement proves zero false negatives on the verify corpora — a
-    * loose-threshold config whose candidate coverage is near-total, only
-    * for oracle-scale data). The knobs are all-or-nothing: passing only
-    * one of them is rejected rather than silently mixing an explicit value
-    * with an auto-sized partner.
-    *
-    * Shuffle discipline: the bucket self-join carries ONLY (table, bucket,
-    * id) rows — never vectors; candidates dedupe across tables on (id_a,
-    * id_b) before any scoring, and the two join-backs that fetch vectors for
-    * the surviving candidates key on id (broadcast when candidates are few).
-    * With auto-sized params no step is quadratic in the corpus; candidate
-    * growth is asserted in ExtSpec (count-based, not plan-node-based).
-    * Where even the candidate distinct's one exchange outgrows executor
-    * scratch (measured cliff: 2.78B raw pairs vs ~75 GB local scratch,
-    * SCALE.md r12/r13), run the relation level directly — [[lshTable]]
-    * then [[lshCandidatesPartitioned]] (peak transient ~raw/P) or
-    * [[lshCandidatesStaged]] (pays when distinct ≪ raw) — and verify
-    * survivors with the same exact-cosine join-back this operator uses;
-    * the default inline path here stays one-shot deliberately (lazy plan,
-    * no scratch-dir contract). */
   // ───── Survivor-oriented dedup (greedy star per cell) ─────
 
   /** Near-dup SURVIVOR mining — the head-mass answer (r13 verdict task #1).
@@ -1004,9 +893,6 @@ object Similarity {
       else lshParams(emb.count(), threshold, targetRecall)
     starEliminations(lshTable(emb, planes, tables, idCol, vecCol), emb,
       threshold, idCol, vecCol, maxRepsPerCell, None)
-      // a doc eliminated in several cells reconciles to the smallest
-      // eliminating representative — deterministic on any partitioning
-      .groupBy(idCol).agg(min(col("dup_of")).as("dup_of"))
   }
 
   /** [[nearDupAssign]] filtered to the survivor ids — what a curation
@@ -1032,9 +918,6 @@ object Similarity {
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val elim = starEliminations(bucketTable, emb, threshold, idCol, vecCol,
       maxRepsPerCell, comparisons)
-      // a doc eliminated in several cells reconciles to the smallest
-      // eliminating representative — deterministic on any partitioning
-      .groupBy(idCol).agg(min(col("dup_of")).as("dup_of"))
     emb.select(col(idCol)).join(elim, Seq(idCol), "left_outer")
   }
 
@@ -1082,119 +965,50 @@ object Similarity {
     emb.select(col(idCol)).join(elim, Seq(idCol), "left_outer")
   }
 
-  /** The pre-reconciliation per-cell eliminations — one row per
-    * (member, eliminating rep, cell), shared by the one-shot and grouped
-    * assignment forms so their semantics can never drift. */
+  /** The min-reconciled eliminations of an [[lshTable]]-shaped relation
+    * ([[CandidatePairs.eliminations]] with vector evidence joined back
+    * from `emb`), shared by the one-shot and grouped assignment forms so
+    * their semantics can never drift. */
   private def starEliminations(bucketTable: DataFrame, emb: DataFrame,
       threshold: Double, idCol: String, vecCol: String,
       maxRepsPerCell: Int,
       comparisons: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
-    require(maxRepsPerCell >= 1, s"maxRepsPerCell must be >= 1, got $maxRepsPerCell")
     TableShapes.requireColumns(bucketTable, Seq("ckey", "tbl", "bucket", idCol),
       "nearDupAssignFromTable",
       "build it with Similarity.lshTable(emb, nPlanes, nTables)")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // singleton cells can neither eliminate nor promote anything a
-    // multi-cell wouldn't — prune them BEFORE the vector join, so only
-    // multi-occupied cells ever shuffle a vector (the dominant saving at
-    // deep planes, where most cells are singletons)
-    val multi = bucketTable.groupBy("ckey", "tbl", "bucket")
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-      .select("ckey", "tbl", "bucket")
     // float corpora shuffle their vectors UN-widened (half the bytes of a
-    // cast to double — the walk widens per element inside the fold, the
-    // same exact IEEE widening the expression dot performs); double
-    // corpora ride as-is. Never downcast: a double→float cast would
-    // change cosines.
+    // cast to double — the walk widens per element, the same exact IEEE
+    // widening the expression dot performs); double corpora ride as-is.
+    // Never downcast: a double→float cast would change cosines.
     val isFloat = emb.schema(vecCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) => true
       case _ => false
     }
-    val members = bucketTable
-      .join(multi, Seq("ckey", "tbl", "bucket"), "left_semi")
-      // the vector side is the CORPUS — never broadcast-able at scale,
-      // and derived corpora (generators, narrow projections) under-report
-      // size so badly the planner tries (the 4M probe cell collected a
-      // 1 GB "broadcast" into the driver before this hint). merge = SMJ.
-      .join(emb.select(col(idCol),
-        (if (isFloat) col(vecCol) else col(vecCol).cast("array<double>")).as("v"),
-        norm2(col(vecCol)).as("n2")).hint("merge"), Seq(idCol))
-      .select(col("ckey"), col("tbl"), col("bucket"),
-        col(idCol).as("member_id"), col("n2"), col("v"))
     val thr = threshold
-    val cap = maxRepsPerCell
-    val cmp = comparisons
-    // flatMapSortedGroups, NOT repartition+sortWithinPartitions+
-    // mapPartitions: the walk's correctness depends on cell co-location,
-    // and a bare repartition is only a PREFERENCE to the planner — the
-    // initial plan elides it when a child exchange happens to satisfy it,
-    // and an AQE replan (e.g. broadcast-converting the occupancy
-    // semi-join) can then drop that exchange too, silently leaving cells
-    // split across scan partitions (caught by the r14 survivors probe:
-    // survivors = per-file-chunk minima). Grouped-map REQUIRES
-    // ClusteredDistribution(key) + in-group order, which every planner
-    // path must honor.
-    val elimDs =
-      if (isFloat)
-        members.as[(Long, Int, Long, Long, Double, Seq[Float])]
-          .groupByKey(t => (t._1, t._2, t._3))
-          .flatMapSortedGroups(col("member_id")) { case (_, rows) =>
-            greedyStarCell(rows.map { case (_, _, _, id, n2, v) =>
-              (id, n2, floatsToDoubles(v))
-            }, thr, cap, cmp)
-          }
-      else
-        members.as[(Long, Int, Long, Long, Double, Seq[Double])]
-          .groupByKey(t => (t._1, t._2, t._3))
-          .flatMapSortedGroups(col("member_id")) { case (_, rows) =>
-            greedyStarCell(rows.map { case (_, _, _, id, n2, v) =>
-              (id, n2, if (v == null) null else v.toArray)
-            }, thr, cap, cmp)
-          }
-    elimDs.toDF(idCol, "dup_of")
+    CandidatePairs.eliminations(bucketTable, Seq("ckey", "tbl", "bucket"), idCol,
+      CandidatePairs.Evidence[(Array[Double], Double)](Seq(col("n2"), col("v")),
+        // null vectors never pair (see cosine) — they sit the walk out
+        read = r => if (r.isNullAt(2)) null else {
+          val v =
+            if (isFloat) r.getSeq[Float](2).iterator.map(_.toDouble).toArray
+            else r.getSeq[Double](2).toArray
+          (v, r.getDouble(1))
+        },
+        matches = { case ((rv, rn2), (v, n2)) => roundedCosine(rv, rn2, v, n2) > thr },
+        source = Some(emb.select(col(idCol),
+          (if (isFloat) col(vecCol) else col(vecCol).cast("array<double>")).as("v"),
+          norm2(col(vecCol)).as("n2")))),
+      maxRepsPerCell, comparisons)
   }
 
-  private def floatsToDoubles(v: Seq[Float]): Array[Double] =
-    if (v == null) null
-    else {
-      val a = new Array[Double](v.length)
-      var i = 0
-      while (i < a.length) { a(i) = v(i).toDouble; i += 1 }
-      a
-    }
-
-  /** The sequential greedy star over ONE cell's members, id-ascending
-    * (the grouped-map contract guarantees the order). Streaming (flatMap
-    * over the group iterator, nothing buffered but the representative
-    * set, which `maxReps` bounds — a member matching no representative
-    * in a FULL cell survives unpromoted: conservative, never
-    * over-eliminates; an adversarial all-distinct cell costs m·maxReps,
-    * not C(m,2)).
-    *
-    * Cosine parity with [[nearDupPairs]]: the same left-to-right dot
-    * fold, the same dot/(√n2·√n2) shape, and the same HALF_UP 6-decimal
-    * rounding Catalyst's `round` applies to doubles — so a pair the pair
-    * path scores at exactly the threshold boundary gets the identical
-    * verdict here (equivalence is test-pinned). A zero-norm or NaN
-    * cosine never matches (the try_divide-null convention). */
-  private def greedyStarCell(
-      it: Iterator[(Long, Double, Array[Double])],
-      threshold: Double, maxReps: Int,
-      comparisons: Option[org.apache.spark.util.LongAccumulator]): Iterator[(Long, Long)] =
-    GreedyStar.walk[(Array[Double], Double)](
-      // null vectors never pair (see cosine) — dropped before the walk
-      it.collect { case (id, n2, v) if v != null => (id, (v, n2)) },
-      matches = { case ((rv, rn2), (v, n2)) =>
-        roundedCosine(rv, rn2, v, n2) > threshold
-      },
-      maxReps, comparisons)
-
-  /** Exact cosine with the pair path's fold order and Catalyst's
-    * double-`round(…, 6)` semantics (HALF_UP on the shortest decimal
-    * representation). Returns −∞ (never a match) where the expression
-    * form yields NULL (zero norm) or NaN. */
+  /** The greedy star's match: exact cosine with [[nearDupPairs]]' fold
+    * order — the same left-to-right dot fold, the same dot/(√n2·√n2)
+    * shape — and Catalyst's double-`round(…, 6)` semantics (HALF_UP on
+    * the shortest decimal representation), so a pair the pair path scores
+    * at exactly the threshold boundary gets the identical verdict in the
+    * walk (equivalence is test-pinned). Returns −∞ (never a match) where
+    * the expression form yields NULL (zero norm) or NaN. */
   private def roundedCosine(a: Array[Double], n2a: Double,
       b: Array[Double], n2b: Double): Double = {
     if (a.length != b.length) return Double.NegativeInfinity
@@ -1208,6 +1022,34 @@ object Similarity {
     BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
+  /** The production form of [[nearDupPairs]]: OR-amplified multi-table LSH.
+    *
+    * Each of `nTables` independent tables buckets every vector by `nPlanes`
+    * hyperplane sign bits (disjoint plane sets per table); candidate pairs
+    * are ids that share a (table, bucket) cell in ANY table. Pass
+    * `nPlanes = 0` (the default) to size both knobs from the corpus row
+    * count via [[lshParams]] — candidate volume is then
+    * Θ(n · targetBucketRows · nTables), linear in the corpus; an explicit
+    * (nPlanes, nTables) pair is honored verbatim for reproducible configs
+    * (the q35 oracle proof pins (4, 32), where exhaustive-scan DuckDB
+    * agreement proves zero false negatives on the verify corpora — a
+    * loose-threshold config whose candidate coverage is near-total, only
+    * for oracle-scale data). The knobs are all-or-nothing: passing only
+    * one of them is rejected rather than silently mixing an explicit value
+    * with an auto-sized partner.
+    *
+    * Shuffle discipline: the vectors ride the bucket rows and the exact
+    * cosine is scored inside the self-join ([[lshScoredCollisions]]), so
+    * the cross-table distinct only sees pairs that already cleared the
+    * threshold and no join-back runs. With auto-sized params no step is quadratic in the corpus; candidate
+    * growth is asserted in ExtSpec (count-based, not plan-node-based).
+    * Where even the candidate distinct's one exchange outgrows executor
+    * scratch (measured cliff: 2.78B raw pairs vs ~75 GB local scratch,
+    * SCALE.md r12/r13), run the relation level directly — [[lshTable]]
+    * then [[lshCandidatesPartitioned]] (peak transient ~raw/P) — and
+    * verify survivors with the same exact-cosine join-back this operator uses;
+    * the default inline path here stays one-shot deliberately (lazy plan,
+    * no scratch-dir contract). */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, nPlanes: Int = 0,
       nTables: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1304,21 +1146,10 @@ object Similarity {
         xxhash64(col("tbl"), col("bucket")).as("ckey"),
         col("tbl"), col("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ckey is the only equi-key; tbl/bucket equality rides as XOR-form
-    // residuals exactly as [[lshCandidatesRaw]] — same planner contract,
-    // same fuzz-pinned collision semantics (PropertiesSpec).
-    val a = fat.select(col("ckey"), col("tbl").as("tbl_a"),
-      col("bucket").as("bucket_a"), col(idCol).as("id_a"),
-      col(vecCol).as("v_a"), col("n2").as("n2_a"))
-    val b = fat.select(col("ckey").as("ckey_b"), col("tbl").as("tbl_b"),
-      col("bucket").as("bucket_b"), col(idCol).as("id_b"),
-      col(vecCol).as("v_b"), col("n2").as("n2_b"))
-    a.join(b, col("ckey") === col("ckey_b") &&
-        col("tbl_a").bitwiseXOR(col("tbl_b")) === lit(0) &&
-        col("bucket_a").bitwiseXOR(col("bucket_b")) === lit(0L) &&
-        col("id_a") < col("id_b"))
+    // the same collision join as [[lshCandidatesRaw]], vectors carried
+    CandidatePairs.collisions(fat, idCol, "ckey", Seq("tbl", "bucket"), Seq(vecCol, "n2"))
       .select(col("id_a"), col("id_b"),
-        round(cosinePre2(col("v_a"), col("v_b"), col("n2_a"), col("n2_b")), 6)
+        round(cosinePre2(col(s"${vecCol}_a"), col(s"${vecCol}_b"), col("n2_a"), col("n2_b")), 6)
           .as("cosine_sim"))
       // NaN guard as in [[nearDupPairs]]: NaN sorts above every double in
       // Spark SQL, so without it NaN-element pairs pass here while the

@@ -38,7 +38,7 @@ object Q {
     * optimization round, guide §6 / the r19 verdict's floor-audit item):
     * without it EVERY query construction re-infers each input's schema
     * from the parquet footer (measured 81 ms vs 9 ms with an explicit
-    * schema — `tools.FloorProbe` — ~a third of a sub-second query's
+    * schema, r20 — ~a third of a sub-second query's
     * total), re-paying per query what real deployments pay once at table
     * registration. Strictly METADATA: the data path still scans parquet
     * on every invocation (nothing about rows, stats, or results is

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
-import graft.ext.{Multimodal, Similarity}
+import graft.ext.{CandidatePairs, Multimodal, Similarity}
 
 /** Incremental embedding near-duplicate removal — [[IncrementalDedup]]'s
   * contract over the hyperplane-LSH collision relation
@@ -64,8 +64,7 @@ object IncrementalLshDedup {
     val news = newBuckets.select(col("ckey").as("ckey_a"), col("tbl"),
       col("bucket"), col(idCol))
     olds.join(broadcast(news), col("ckey") === col("ckey_a") &&
-        col("tbl").bitwiseXOR(col("tbl_b")) === lit(0) &&
-        col("bucket").bitwiseXOR(col("bucket_b")) === lit(0L))
+        CandidatePairs.sameCell(col("tbl") -> col("tbl_b"), col("bucket") -> col("bucket_b")))
       .select(col(idCol), col("old_id")).distinct()
   }
 }

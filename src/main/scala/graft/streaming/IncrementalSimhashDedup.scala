@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
-import graft.ext.{Dedup, Multimodal}
+import graft.ext.{CandidatePairs, Dedup, Multimodal}
 
 /** Incremental SimHash near-duplicate removal: a re-crawled document
   * arriving days later drops on arrival by Manku-blocked hamming
@@ -82,8 +82,7 @@ object IncrementalSimhashDedup {
     val news = newBlocks.select(col("bkey").as("bkey_a"), col("blk"),
       col("bits"), col(idCol), col("sh").as("sh_a"))
     olds.join(broadcast(news), col("bkey") === col("bkey_a") &&
-        col("blk").bitwiseXOR(col("blk_b")) === lit(0) &&
-        col("bits").bitwiseXOR(col("bits_b")) === lit(0L))
+        CandidatePairs.sameCell(col("blk") -> col("blk_b"), col("bits") -> col("bits_b")))
       .select(col(idCol), col("old_id"), col("sh_a"), col("sh_b")).distinct()
   }
 }

@@ -39,7 +39,7 @@ import graft.ext.{Dedup, Similarity}
   * `sbt 'runMain graft.tools.DedupScaleProbe [--sizes N,N,..] [--reps N]
   * [--families minhash,simhash,embedding] [--pinnedLsh PxT] [--mutDenom D]
   * [--multiProbeCheck] [--rawVolume] [--plantedRecall]
-  * [--corpus hash|clustered] [--measureLaw] [--stagedDistinct G]
+  * [--corpus hash|clustered] [--measureLaw] [--partitionedDistinct P]
   * [--scratchCapGB X]'`.
   * `--families` restricts a run to a subset (the 16M step only needs the
   * embedding family); `--pinnedLsh 21x14` adds a pinned-config embedding
@@ -62,14 +62,11 @@ import graft.ext.{Dedup, Similarity}
   * whenever that differs from the hash-law auto config (`--lawOnly`
   * emits just the law row + sized config — the sizing-instrument cell
   * at corpus sizes whose tables outgrow the host);
-  * `--stagedDistinct G` runs the full pairing through the
-  * scratch-bounded [[graft.ext.Similarity.lshCandidatesStaged]] at G
-  * tables per stage, reporting the listener-measured peak single-stage
-  * shuffle write (and failing if `--scratchCapGB` is set and breached);
-  * `--partitionedDistinct P` does the same through the pair-space
+  * `--partitionedDistinct P` runs the full pairing through the pair-space
   * [[graft.ext.Similarity.lshCandidatesPartitioned]] at P hash slices —
   * the mode whose peak transient shuffle is ~raw/P regardless of the
-  * distinct size. r14: `--survivors` runs the greedy-star
+  * distinct size — reporting the listener-measured peak single-stage
+  * shuffle write (and failing if `--scratchCapGB` is set and breached). r14: `--survivors` runs the greedy-star
   * [[graft.ext.Similarity.nearDupAssignFromTable]] over the same bucket
   * tables, reporting the walk's comparison count against the raw cell
   * pair mass the pair path would rerank (`--survivorsThreshold` moves
@@ -92,7 +89,6 @@ object DedupScaleProbe {
     var corpus = "hash"
     var measureLaw = false
     var lawOnly = false
-    var stagedDistinct = 0
     var partitionedDistinct = 0
     var scratchCapGb = 0.0
     var survivors = false
@@ -122,8 +118,6 @@ object DedupScaleProbe {
         case "--corpus" if i + 1 < args.length => corpus = args(i + 1); i += 2
         case "--measureLaw" => measureLaw = true; i += 1
         case "--lawOnly" => lawOnly = true; i += 1
-        case "--stagedDistinct" if i + 1 < args.length =>
-          stagedDistinct = args(i + 1).toInt; i += 2
         case "--partitionedDistinct" if i + 1 < args.length =>
           partitionedDistinct = args(i + 1).toInt; i += 2
         case "--scratchCapGB" if i + 1 < args.length =>
@@ -144,7 +138,7 @@ object DedupScaleProbe {
             "[--pinnedLsh PxT] [--mutDenom D] [--multiProbeCheck] " +
             "[--rawVolume|--rawVolumeDirect] [--plantedRecall] " +
             "[--corpus hash|clustered] [--measureLaw] " +
-            "[--stagedDistinct G | --partitionedDistinct P] [--scratchCapGB X] " +
+            "[--partitionedDistinct P] [--scratchCapGB X] " +
             "[--survivors [--survivorsThreshold T] [--noise X]]")
       }
     }
@@ -174,25 +168,22 @@ object DedupScaleProbe {
       s"--pinnedLsh out of range: $pinnedLsh")
     require(Set("hash", "clustered")(corpus), s"--corpus must be hash|clustered, got $corpus")
     require(families("embedding") || (corpus == "hash" && !measureLaw &&
-        stagedDistinct == 0 && partitionedDistinct == 0),
-      "--corpus clustered/--measureLaw/--stagedDistinct/--partitionedDistinct " +
+        partitionedDistinct == 0),
+      "--corpus clustered/--measureLaw/--partitionedDistinct " +
         s"measure the embedding family; add embedding to --families (got $families)")
     require(!lawOnly || (measureLaw && !rawVolume && !plantedRecallCheck &&
-        stagedDistinct == 0 && partitionedDistinct == 0),
+        partitionedDistinct == 0),
       "--lawOnly emits just the --measureLaw row; drop the posture modes")
-    require(stagedDistinct >= 0 && partitionedDistinct >= 0 && scratchCapGb >= 0.0,
-      s"--stagedDistinct/--partitionedDistinct/--scratchCapGB must be non-negative")
-    require(stagedDistinct == 0 || partitionedDistinct == 0,
-      "--stagedDistinct and --partitionedDistinct are alternative bounded " +
-        "modes; run them separately so the listener attributes shuffle to one")
-    require(scratchCapGb == 0.0 || stagedDistinct > 0 || partitionedDistinct > 0,
-      "--scratchCapGB bounds a bounded-distinct mode; pass --stagedDistinct G " +
-        "or --partitionedDistinct P with it")
-    require((stagedDistinct == 0 && partitionedDistinct == 0) ||
+    require(partitionedDistinct >= 0 && scratchCapGb >= 0.0,
+      s"--partitionedDistinct/--scratchCapGB must be non-negative")
+    require(scratchCapGb == 0.0 || partitionedDistinct > 0,
+      "--scratchCapGB bounds the bounded-distinct mode; pass " +
+        "--partitionedDistinct P with it")
+    require(partitionedDistinct == 0 ||
         (!rawVolume && !plantedRecallCheck),
       "bounded-distinct modes run the full pairing; drop --rawVolume/--plantedRecall")
     require(!survivors || (!rawVolume && !plantedRecallCheck && !lawOnly &&
-        stagedDistinct == 0 && partitionedDistinct == 0),
+        partitionedDistinct == 0),
       "--survivors is its own mode; drop the other posture modes")
     require(!survivors || families("embedding") ||
         (survivorsThreshold == 0.98 && survivorsTablesPerPass == 0),
@@ -528,9 +519,8 @@ object DedupScaleProbe {
               f""""comparisons":${cmp.value},"survivors":$surv,""" +
               f""""eliminated":${n - surv},"detected":$detected,""" +
               f""""true_dups":${n / 20},"wall_s":${t._1}%.3f}""")
-          } else if (stagedDistinct > 0 || partitionedDistinct > 0) {
-            // SCRATCH-BOUNDED pairing: the staged or pair-partitioned
-            // distinct, with the peak single-stage shuffle write measured
+          } else if (partitionedDistinct > 0) {
+            // SCRATCH-BOUNDED pairing: the pair-partitioned distinct, with the peak single-stage shuffle write measured
             // by listener — the number that must stay under an executor's
             // scratch where the one-shot distinct's full-raw-volume
             // shuffle could not
@@ -546,22 +536,13 @@ object DedupScaleProbe {
               }
             }
             val (check, knobJson) =
-              if (stagedDistinct > 0)
-                ("staged_distinct", s""""tables_per_stage":$stagedDistinct""")
-              else
-                ("partitioned_distinct", s""""partitions":$partitionedDistinct""")
+              ("partitioned_distinct", s""""partitions":$partitionedDistinct""")
             spark.sparkContext.addSparkListener(listener)
             val scratch = s"$dir/${check}_scratch"
             val t = timed {
-              val df =
-                if (stagedDistinct > 0)
-                  Similarity.lshCandidatesStaged(
-                    spark.read.parquet(lshDir(pp, tt)), scratch, "vec_id",
-                    tablesPerStage = stagedDistinct)
-                else
-                  Similarity.lshCandidatesPartitioned(
-                    spark.read.parquet(lshDir(pp, tt)), scratch, "vec_id",
-                    partitions = partitionedDistinct)
+              val df = Similarity.lshCandidatesPartitioned(
+                spark.read.parquet(lshDir(pp, tt)), scratch, "vec_id",
+                partitions = partitionedDistinct)
               (df, df.count())
             }
             val (bounded, pairs) = t._2

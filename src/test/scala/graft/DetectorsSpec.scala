@@ -3,15 +3,12 @@ package graft
 import java.sql.Timestamp
 import java.time.{Instant, LocalDate}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.alerts.{AlertManager, InMemorySink}
 import graft.core.FixedClock
@@ -529,41 +526,11 @@ class DetectorsSpec extends SparkSpec {
   }
 
   /** What `body` ran: root SQL executions (one per action), their executed
-    * plans, and Spark jobs started. A marker query in its own job group
-    * flushes both listeners: the listener bus delivers events in order. */
+    * plans, and Spark jobs started ([[listenedDuring]]). */
   private case class Actions(executions: Int, plans: Seq[SparkPlan], jobs: Int)
   private def actionsDuring(body: => Unit): Actions = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = s"detector-actions-marker-${System.nanoTime()}"
-    val flushed = new java.util.concurrent.CountDownLatch(2)
-    val qel = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (qe.analyzed.toString.contains(marker)) flushed.countDown()
-        else plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
-    }
-    val jl = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          flushed.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    spark.listenerManager.register(qel)
-    sc.addSparkListener(jl)
-    try {
-      body
-      sc.setJobGroup(marker, "flush")
-      try spark.range(1).select(lit(marker)).collect() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker never arrived")
-    } finally {
-      spark.listenerManager.unregister(qel)
-      sc.removeSparkListener(jl)
-    }
-    import scala.jdk.CollectionConverters._
-    Actions(plans.size, plans.asScala.toSeq, jobs.get)
+    val (plans, jobs) = listenedDuring(body)
+    Actions(plans.size, plans, jobs)
   }
 
   /** Every node of an executed plan, through adaptive stages. */

@@ -3327,7 +3327,7 @@ class ExtSpec extends SparkSpec {
     assert(blocks > 4) // genuinely exercises the combination path
     val deep = Dedup.simhashPairsFromBlocks(
       Dedup.simhashBlockTable(sigs, "doc_id", "simhash", maxHamming = 3,
-        blocks = blocks), cache = true)
+        blocks = blocks))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(deep == exhaustive,
       s"deep split missed ${exhaustive -- deep}, invented ${deep -- exhaustive}")
@@ -3497,35 +3497,6 @@ class ExtSpec extends SparkSpec {
     val p = 1.0 - math.acos(0.98) / math.Pi
     assert(1.0 - math.pow(1.0 - math.pow(p, pCl), tCl) >= 0.98 - 1e-9)
     spark.sharedState.cacheManager.clearCache()
-  }
-
-  test("lshCandidatesStaged emits exactly the one-shot pair set, at any stage width") {
-    val rnd = new scala.util.Random(11)
-    val base = (0L until 300L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
-    val twins = base.take(60).map { case (i, v) => (i + 10000L, v.map(_ + 0.2f)) }
-    val emb = (base ++ twins).toDF("vec_id", "embedding")
-    val table = Similarity.lshTable(emb, nPlanes = 6, nTables = 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val oneShot = pairSet(Similarity.lshCandidatesFromTable(table))
-    assert(oneShot.nonEmpty, "vacuous staged-distinct test: no candidates")
-    val scratchRoot = java.nio.file.Files.createTempDirectory("graft_staged").toString
-    try {
-      for (g <- Seq(1, 2, 5, 7)) {
-        val staged = pairSet(Similarity.lshCandidatesStaged(
-          table, s"$scratchRoot/g$g", tablesPerStage = g))
-        assert(staged == oneShot, s"tablesPerStage=$g: staged pair set diverged " +
-          s"(missing ${(oneShot -- staged).size}, extra ${(staged -- oneShot).size})")
-        // staged output is DISTINCT — no cross-table duplicates survive
-        val withDups = Similarity.lshCandidatesStaged(
-          table, s"$scratchRoot/gd$g", tablesPerStage = g).count()
-        assert(withDups == oneShot.size.toLong)
-      }
-    } finally {
-      table.unpersist()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(scratchRoot))
-    }
   }
 
   test("lshCandidatesPartitioned emits exactly the one-shot pair set, at any slice count") {

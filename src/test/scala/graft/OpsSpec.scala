@@ -237,7 +237,7 @@ class OpsSpec extends SparkSpec {
       // a residual predicate), so the bucket-bucketed scans satisfy the
       // join's clustering requirement outright: the self-join plans NO
       // exchange on the collision key — only the pair aggregation shuffles
-      val cand = graft.ext.Dedup.bandCandidates(spark.table(tb), cache = false)
+      val cand = graft.ext.Dedup.bandCandidates(spark.table(tb))
       val plan = cand.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("hashpartitioning(band"),

@@ -150,10 +150,38 @@ class PropertiesSpec extends SparkSpec {
   test("nearDupAssign invariants hold on fuzzed corpora (soundness, min-survival, closure bound)") {
     // random corpora with planted twins at random spots: on ANY such
     // corpus (clique or chain structure, dense or sparse), the greedy
-    // star must (a) eliminate only genuine exact-rounded-cosine pairs
+    // star must (a) eliminate only genuine exact pairs of its family
     // toward a smaller id, (b) never eliminate a component's min id, so
-    // survivors ⊇ the exact closure's min-per-component set
-    import graft.ext.Similarity
+    // survivors ⊇ the exact closure's min-per-component set. Checked for
+    // all three survivor families — embedding (exact rounded cosine),
+    // minhash (exact shingle Jaccard) and simhash (popcount radius) —
+    // each against its own pair path.
+    import graft.ext.{Dedup, Similarity}
+    def check(family: String, salt: Int, ids: Seq[Long], exact: Set[(Long, Long)],
+        assignDf: org.apache.spark.sql.DataFrame): Unit = {
+      // driver union-find, min-id roots
+      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+      def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
+      exact.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val closure = ids.filter(i => find(i) == i).toSet
+      val assign = assignDf
+        .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      assert(assign.length == ids.size)
+      val survivors = assign.collect { case (id, None) => id }.toSet
+      assert(closure.subsetOf(survivors),
+        s"$family salt=$salt: closure survivor eliminated: ${closure -- survivors}")
+      assign.foreach {
+        case (id, Some(d)) =>
+          assert(d < id && exact.contains((d, id)),
+            s"$family salt=$salt: ($id -> $d) is not a genuine exact pair")
+        case _ =>
+      }
+    }
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val gen = Gen.zip(Gen.chooseNum(20, 45), Gen.chooseNum(0, 10000))
     forAllN(gen, 6) { case (n, salt) =>
       val rnd = new scala.util.Random(salt)
@@ -164,29 +192,29 @@ class PropertiesSpec extends SparkSpec {
       }
       val emb = (base ++ twins).toDF("vec_id", "embedding")
       val thr = 0.9
-      val exact = Similarity.nearDupPairs(emb, thr)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val ids = (base ++ twins).map(_._1)
-      // driver union-find, min-id roots
-      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-      def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
-      exact.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      check("embedding", salt, (base ++ twins).map(_._1),
+        pairs(Similarity.nearDupPairs(emb, thr)),
+        Similarity.nearDupAssign(emb, thr, nPlanes = 3, nTables = 12))
+
+      // text twins: one to five words of fourteen replaced, so twins land
+      // on both sides of the Jaccard threshold and the signature radius
+      val words = (0 until 30).map(i => s"w$i")
+      val textBase = (0 until n).map(i =>
+        (i.toLong, Seq.fill(14)(words(rnd.nextInt(words.size))).mkString(" ")))
+      val textTwins = textBase.filter(_._1 % 5 == 1).map { case (i, t) =>
+        val ws = t.split(" ")
+        (0 to rnd.nextInt(5)).foreach(_ => ws(rnd.nextInt(ws.length)) = words(rnd.nextInt(words.size)))
+        (i + 1000L, ws.mkString(" "))
       }
-      val closure = ids.filter(i => find(i) == i).toSet
-      val assign = Similarity.nearDupAssign(emb, thr, nPlanes = 3, nTables = 12)
-        .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      assert(assign.length == ids.size)
-      val survivors = assign.collect { case (id, None) => id }.toSet
-      assert(closure.subsetOf(survivors),
-        s"salt=$salt: closure survivor eliminated: ${closure -- survivors}")
-      assign.foreach {
-        case (id, Some(d)) =>
-          assert(d < id && exact.contains((d, id)),
-            s"salt=$salt: ($id -> $d) is not a genuine exact pair")
-        case _ =>
-      }
+      val docs = (textBase ++ textTwins).toDF("doc_id", "text")
+      val docIds = (textBase ++ textTwins).map(_._1)
+      check("minhash", salt, docIds,
+        pairs(Dedup.nearDupPairs(docs, threshold = 0.5)),
+        Dedup.minhashAssign(docs, threshold = 0.5))
+      check("simhash", salt, docIds,
+        pairs(Dedup.simhashPairs(docs, maxHamming = 6)),
+        Dedup.simhashAssign(docs, maxHamming = 6))
+      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -217,7 +245,7 @@ class PropertiesSpec extends SparkSpec {
       } yield (ia, ib)).toSet
       val sigs = rows.toSeq.toDF("doc_id", "simhash")
       val blocked = Dedup.simhashPairsFromBlocks(
-        Dedup.simhashBlockTable(sigs, "doc_id", "simhash", h, b), cache = true)
+        Dedup.simhashBlockTable(sigs, "doc_id", "simhash", h, b))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(blocked == exhaustive,
         s"h=$h b=$b: missed ${exhaustive -- blocked}, invented ${blocked -- exhaustive}")
@@ -421,8 +449,9 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("XOR-residual collision joins equal plain equi-joins on adversarial tables") {
-    // The exchange-free collision relations (Dedup.bandCandidates /
-    // Similarity.lshCandidatesFromTable) join on ONE key and enforce the
+    // The exchange-free collision relations (Dedup.bandCandidates,
+    // Similarity.lshCandidatesFromTable and Dedup.simhashPairsFromBlocks,
+    // all CandidatePairs.collisions) join on ONE key and enforce the
     // remaining equalities as `a XOR b === 0` residuals Catalyst does not
     // lift into the equi-key set. The plan shape is pinned elsewhere at
     // fixed data; THIS case pins the SEMANTICS on randomized tables — tiny
@@ -443,7 +472,7 @@ class PropertiesSpec extends SparkSpec {
       val band = rows.map { case (id, b, bk) =>
         (id, b, bk.map(java.lang.Long.valueOf).orNull)
       }.toDF("doc_id", "band", "bucket")
-      val got = Dedup.bandCandidates(band, cache = false)
+      val got = Dedup.bandCandidates(band)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val a = band.select($"band", $"bucket", $"doc_id".as("doc_a"))
       val b = band.select($"band", $"bucket", $"doc_id".as("doc_b"))
@@ -469,6 +498,26 @@ class PropertiesSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got2 == want2, s"lshCandidatesFromTable diverged from the " +
         s"equi-join: extra=${got2 -- want2} missing=${want2 -- got2}")
+
+      // ─ simhashPairsFromBlocks vs (bkey, blk, bits) equi-join ─
+      // the same coarse hand-made key, over the block table's shape: one
+      // signature per id (its id, so popcounts vary), radius stamp 2
+      val blocks = rows.collect { case (id, blk, Some(bits)) =>
+        (id, (blk + bits) % 3, blk, bits, id, 2)
+      }.toDF("doc_id", "bkey", "blk", "bits", "sh", "max_hamming")
+      val got3 = Dedup.simhashPairsFromBlocks(blocks)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val ba = blocks.select($"bkey", $"blk", $"bits", $"doc_id".as("doc_a"),
+        $"sh".as("sh_a"), $"max_hamming")
+      val bb = blocks.select($"bkey", $"blk", $"bits", $"doc_id".as("doc_b"),
+        $"sh".as("sh_b"))
+      val want3 = ba.join(bb, Seq("bkey", "blk", "bits"))
+        .filter($"doc_a" < $"doc_b")
+        .filter(bit_count($"sh_a".bitwiseXOR($"sh_b")) <= $"max_hamming")
+        .select($"doc_a", $"doc_b", bit_count($"sh_a".bitwiseXOR($"sh_b")).cast("int"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got3 == want3, s"simhashPairsFromBlocks diverged from the " +
+        s"equi-join: extra=${got3 -- want3} missing=${want3 -- got3}")
     }
   }
 

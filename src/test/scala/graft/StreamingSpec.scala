@@ -886,64 +886,16 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Rows the file scans under each of `roots` produced across every query
-    * `body` ran, and the Spark jobs `body` started. Each executed scan
-    * counts once: a scan inside a cached relation's plan ran once however
-    * many later queries read the cache, and a re-scan is a new physical
-    * node. The listener bus delivers asynchronously but in order, so a
-    * marker query in its own job group before and after `body` bounds
-    * what each listener records: events of queries run before `body` can
-    * arrive after the listeners are registered. */
+    * `body` ran, and the Spark jobs `body` started ([[listenedDuring]]).
+    * Each executed scan counts once: a scan inside a cached relation's
+    * plan ran once however many later queries read the cache, and a
+    * re-scan is a new physical node. */
   private def rowsScanned(roots: Seq[String])(body: => Unit): (Seq[Long], Int) = {
-    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val Seq(start, end) = Seq("start", "end").map(m => s"rows-scanned-$m-${System.nanoTime()}")
-    // one latch per (listener, marker); each listener records between the
-    // two markers it has seen
-    val seenByQuery = Map(start -> new CountDownLatch(1), end -> new CountDownLatch(1))
-    val seenByJobs = Map(start -> new CountDownLatch(1), end -> new CountDownLatch(1))
-    @volatile var queriesOpen = false
-    @volatile var jobsOpen = false
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def record(qe: QueryExecution): Unit = {
-        val text = qe.analyzed.toString
-        seenByQuery.keys.find(text.contains) match {
-          case Some(m) => queriesOpen = m == start; seenByQuery(m).countDown()
-          case None => if (queriesOpen) plans.add(qe.executedPlan)
-        }
-      }
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
-    }
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).filter(seenByJobs.contains) match {
-          case Some(m) => jobsOpen = m == start; seenByJobs(m).countDown()
-          case None => if (jobsOpen) jobs.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    def mark(m: String): Unit = {
-      sc.setJobGroup(m, m)
-      try spark.range(1).select(org.apache.spark.sql.functions.lit(m)).collect()
-      finally sc.clearJobGroup()
-      assert(seenByQuery(m).await(60, TimeUnit.SECONDS) && seenByJobs(m).await(60, TimeUnit.SECONDS))
-    }
-    spark.listenerManager.register(listener)
-    sc.addSparkListener(jobListener)
-    try {
-      mark(start)
-      body
-      mark(end)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      sc.removeSparkListener(jobListener)
-    }
+    val (plans, jobs) = listenedDuring(body)
     def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator.single(p) ++ (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
@@ -952,7 +904,7 @@ class StreamingSpec extends SparkSpec {
       case other => other.children ++ other.subqueries
     }).iterator.flatMap(nodes)
     val scans = new java.util.IdentityHashMap[FileSourceScanExec, Unit]()
-    plans.forEach(p => nodes(p).foreach {
+    plans.foreach(p => nodes(p).foreach {
       case f: FileSourceScanExec => scans.put(f, ())
       case _ =>
     })
@@ -961,7 +913,7 @@ class StreamingSpec extends SparkSpec {
       scans.keySet.toArray(Array.empty[FileSourceScanExec])
         .filter(_.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(prefix)))
         .map(_.metrics("numOutputRows").value).sum
-    }, jobs.get)
+    }, jobs)
   }
 
   test("dedup twins: a batch scans its arrivals and its probed state once and leaves nothing persisted, all six families") {

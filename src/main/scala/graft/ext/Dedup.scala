@@ -136,7 +136,9 @@ object Dedup {
     * `spark.sharedState.cacheManager.clearCache()` — Verify and Bench do
     * exactly this between queries. Every form that BUILDS its cell table
     * inline persists it the same way: [[minhashCandidates]],
-    * [[simhashPairs]] and [[simhashPairsFromSigs]] (the signature table),
+    * [[simhashScoredPairsFromSigs]] (the signature table, once, for
+    * [[simhashPairs]], [[simhashPairsFromSigs]] and
+    * [[Multimodal.videoAnyFrameNearDups]] alike),
     * [[Similarity.lshCandidates]]. The forms that take an already-built
     * table ([[bandCandidates]], [[simhashPairsFromBlocks]],
     * [[Similarity.lshCandidatesFromTable]]) persist nothing: their input
@@ -331,19 +333,13 @@ object Dedup {
     * serving form when signatures are a persisted artifact (computed once
     * per corpus, re-blocked at whatever radius a job needs; see
     * q72_simhash_pairs_persisted). Identical Manku blocking, identical
-    * zero-false-negative guarantee. Same materialization contract:
-    * the signature table feeds both self-join sides, so it persists here
+    * zero-false-negative guarantee: [[simhashScoredPairsFromSigs]]'
+    * verified stream, then one distinct. Same materialization contract:
+    * the signature table feeds both self-join sides, so it persists there
     * and stays in the session cache for the caller. */
   def simhashPairsFromSigs(sigs: DataFrame, idCol: String = "doc_id",
-      sigCol: String = "simhash", maxHamming: Int = 3, blocks: Int = 0): DataFrame = {
-    // cache the NARROW signature table, not the (maxHamming+1)x exploded
-    // block relation — each join side re-derives its blocks from the cache
-    // (cheap scan-stage shifts), which is what the pre-split form did too
-    val sh = sigs.select(col(idCol), col(sigCol).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    simhashPairsFromBlocks(
-      simhashBlockTable(sh, idCol, "sh", maxHamming, blocks), idCol)
-  }
+      sigCol: String = "simhash", maxHamming: Int = 3, blocks: Int = 0): DataFrame =
+    simhashScoredPairsFromSigs(sigs, idCol, sigCol, maxHamming, blocks).distinct()
 
   /** The exploded Manku block table — the persistable form of the simhash
     * pairing's collision relation, for deployments that fix a radius and
@@ -480,56 +476,47 @@ object Dedup {
     * table published bucketed on `bkey` self-joins with no exchange on the
     * collision key (for a freshly-built table the key join is equivalent,
     * one 8-byte column through the shuffle instead of two). The verify
-    * radius comes from the table's own `max_hamming` stamp. The input is
-    * not persisted here (the [[nearDupPairs]] caching contract). */
+    * radius comes from the table's own `max_hamming` stamp; a close pair
+    * shares several blocks, and the distinct after the verify collapses
+    * them. The input is not persisted here (the [[nearDupPairs]] caching
+    * contract). */
   def simhashPairsFromBlocks(blockTable: DataFrame, idCol: String = "doc_id"): DataFrame = {
     TableShapes.requireColumns(blockTable,
       Seq("bkey", "blk", "bits", "sh", "max_hamming", idCol),
       "simhashPairsFromBlocks",
       "build it with Dedup.simhashBlockTable(sigs, …) (pairing straight " +
         "from signatures is simhashPairsFromSigs)")
-    simhashRawCollisions(blockTable, idCol)
-      // a close pair shares several blocks — collapse before the verify
-      .select(col("doc_a"), col("doc_b"), col("sh_a"), col("sh_b"), col("max_hamming"))
-      .distinct()
-      .filter(hamming(col("sh_a"), col("sh_b")) <= col("max_hamming"))
-      .select(col("doc_a"), col("doc_b"),
-        hamming(col("sh_a"), col("sh_b")).cast("int").as("hamming"))
+    simhashVerifiedPairs(blockTable, idCol).distinct()
   }
 
-  /** The pre-collapse block-collision pairs — the self-join output before
-    * the shared-block distinct, one row per (pair, colliding block
-    * combination), signatures and the a-side radius stamp attached.
-    * Shared by the published distinct-first pairing above and the
-    * aggregate-form stream below so their collision semantics can never
-    * drift. */
-  private def simhashRawCollisions(bk: DataFrame, idCol: String): DataFrame =
+  /** The verified block-collision stream: one `(doc_a, doc_b, hamming)`
+    * row per colliding block combination that passed the a-side radius
+    * stamp — a pair sharing b blocks appears b times, all with the
+    * identical hamming (one signature per id, so the popcount is a pure
+    * pair function). Both published pair forms are this stream plus one
+    * distinct. */
+  private def simhashVerifiedPairs(bk: DataFrame, idCol: String): DataFrame =
     CandidatePairs.collisions(bk, idCol, "bkey", Seq("blk", "bits"), Seq("sh", "max_hamming"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("sh_a"), col("sh_b"),
-        col("max_hamming_a").as("max_hamming"))
+      .filter(hamming(col("sh_a"), col("sh_b")) <= col("max_hamming_a"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        hamming(col("sh_a"), col("sh_b")).cast("int").as("hamming"))
 
-  /** The pre-distinct VERIFIED pair stream behind [[simhashPairsFromSigs]]:
-    * one `(doc_a, doc_b, hamming)` row per colliding block combination
-    * that already passed the radius verify — a pair sharing b blocks
-    * appears b times, all with the identical hamming (one signature per
-    * id, so the popcount is a pure pair function). Package-private for
-    * consumers whose NEXT operator aggregates over the pair key
-    * ([[Multimodal.videoAnyFrameNearDups]]' per-media min): min over a
-    * multiset equals min over its set, so they absorb the duplicates in
-    * the aggregate they already pay and skip the distinct's extra
-    * hash-aggregate pass (r20, guide §2.3 — the audioAnySegment treatment
-    * applied to the Manku-block family; the popcount repeated per
-    * duplicate row is one instruction against a saved aggregation pass). */
+  /** [[simhashVerifiedPairs]] over a signature table it persists and
+    * blocks — the pre-distinct form of [[simhashPairsFromSigs]].
+    * Package-private for consumers whose NEXT operator aggregates over the
+    * pair key ([[Multimodal.videoAnyFrameNearDups]]' per-media min): min
+    * over a multiset equals min over its set, so they absorb the
+    * duplicates in the aggregate they already pay and skip the distinct's
+    * extra hash-aggregate pass. */
   private[graft] def simhashScoredPairsFromSigs(sigs: DataFrame,
       idCol: String = "doc_id", sigCol: String = "simhash",
       maxHamming: Int = 3, blocks: Int = 0): DataFrame = {
+    // cache the NARROW signature table, not the (maxHamming+1)x exploded
+    // block relation — each join side re-derives its blocks from the cache
+    // (cheap scan-stage shifts)
     val sh = sigs.select(col(idCol), col(sigCol).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    simhashRawCollisions(
-      simhashBlockTable(sh, idCol, "sh", maxHamming, blocks), idCol)
-      .filter(hamming(col("sh_a"), col("sh_b")) <= col("max_hamming"))
-      .select(col("doc_a"), col("doc_b"),
-        hamming(col("sh_a"), col("sh_b")).cast("int").as("hamming"))
+    simhashVerifiedPairs(simhashBlockTable(sh, idCol, "sh", maxHamming, blocks), idCol)
   }
 
   // ───── Survivor-oriented MinHash dedup (greedy star per band cell) ──
@@ -726,6 +713,14 @@ object Dedup {
   final case class FamilyRecommendation(family: String, entryPoint: String,
       expectedDetection: Double, rationale: String)
 
+  import DedupFamily._
+
+  /** A ladder rung: family `f` (its entry point at `units` sampled frames
+    * or windows) with the detection and rationale the rung computed. */
+  private def pick(f: DedupFamily, units: Int = 1)(expectedDetection: Double,
+      rationale: String): FamilyRecommendation =
+    FamilyRecommendation(f.name, f.entryPoint(units), expectedDetection, rationale)
+
   /** The r15-measured IMAGE detection sweep (`tools.ImageDedupProbe`,
     * 200k-image corpus, dHash radius-3 production config, planted twins
     * at `round(churn · pixels)` single-pixel jitters + the brightness
@@ -883,12 +878,15 @@ object Dedup {
     *
     * `modality = "image"` swaps in the r15-measured [[ImageSweep]]
     * (`mutationTolerance` is then a per-PIXEL churn probability): dHash
-    * radius-3 ([[graft.ext.Multimodal.imageFingerprints]] +
-    * `imageAssign`) clears 0.985 detection across the whole measured band
-    * to 10% pixel churn, so it wins whenever it clears the caller's bar;
+    * radius-3 clears 0.985 detection across the whole measured band to
+    * 10% pixel churn, so it wins whenever it clears the caller's bar;
     * past it the semantic tier (image-embedding LSH) is the only
     * alternative; byte-identical tolerance routes to exact payload-digest
-    * dedup. */
+    * dedup.
+    *
+    * Each rung picks a [[DedupFamily]] entry, which names the family's
+    * entry point and defines how [[plan]] sizes it and [[runPlan]] runs
+    * it; the ladders only compute detection and rationale. */
   def recommendFamily(mutationTolerance: Double, minDetection: Double = 0.9,
       hasEmbeddings: Boolean = false, modality: String = "text",
       geometricTolerance: Double = 0.0,
@@ -944,29 +942,25 @@ object Dedup {
     val simhashDet = interp(_._3)
     val minhashDet = interp(_._2)
     if (mutationTolerance < 0.005)
-      FamilyRecommendation("exact", "Dedup.dropExactDuplicates", 1.0,
+      pick(Exact)(1.0,
         "sub-sweep-resolution churn tolerance: hash-groupBy exact dedup " +
           "is complete and the cheapest relation there is")
     else if (simhashDet >= minDetection)
-      FamilyRecommendation("simhash", "Dedup.simhashBlockTable + simhashPairsFromBlocks",
-        simhashDet,
+      pick(Simhash)(simhashDet,
         f"simhash r=3 clears $minDetection%.2f at ${mutationTolerance * 100}%.1f%% churn " +
           "with one 64-bit signature/doc and the smallest candidate volume " +
           "(r12 sweep: the near-identity tier)")
     else if (minhashDet >= minDetection)
-      FamilyRecommendation("minhash", "Dedup.minhashTable + bandCandidates",
-        minhashDet,
+      pick(Minhash)(minhashDet,
         f"simhash collapses at this churn (${simhashDet}%.2f measured) — minhash " +
           "k=32 b=8 owns the 2-10%% rewrite band (banding-curve decay 0.998→0.895)")
     else if (hasEmbeddings)
-      FamilyRecommendation("embedding_lsh", "Similarity.nearDupPairsLsh (corpusAwareSizing=true)",
-        1.0,
+      pick(EmbeddingLsh)(1.0,
         f"no text family reaches $minDetection%.2f at ${mutationTolerance * 100}%.1f%% churn " +
           "— the semantic tier's exact-cosine rerank measured 1.00 recall to 64M docs; " +
           "sizing should sample the corpus's own non-uniformity law (r13)")
     else
-      FamilyRecommendation("minhash", "Dedup.minhashTable + bandCandidates",
-        minhashDet,
+      pick(Minhash)(minhashDet,
         f"best available without embeddings: measured detection $minhashDet%.2f " +
           f"is BELOW the requested $minDetection%.2f — widen bands/shingles or " +
           "supply an embedding column for the semantic tier")
@@ -1011,9 +1005,7 @@ object Dedup {
       val gridEligible = recodeQuality >= 100.0
       val spectralGeo = math.min(spectralDet, spectralRecode)
       return if (gridEligible && gridDet >= minDetection)
-        FamilyRecommendation("image_grid_lsh",
-          "Multimodal.imageGridFeatures + imageFeatureAssign (threshold 0.9)",
-          gridDet,
+        pick(ImageGridLsh)(gridDet,
           f"geometric tolerance ${geometricTolerance}%.0f px is past the " +
             f"perceptual-fingerprint family (dHash crop detection " +
             f"$dhashDet%.3f measured, r15 sweep) — the block-mean grid " +
@@ -1021,9 +1013,7 @@ object Dedup {
             "this shift (r16 crop sweep), and is the cheaper, " +
             "byte-exact-oracled descriptor inside its 1 px band")
       else if (spectralGeo >= minDetection)
-        FamilyRecommendation("image_spectral_lsh",
-          "Multimodal.imageSpectralFeatures + imageFeatureAssign (threshold 0.9)",
-          spectralGeo,
+        pick(ImageSpectralLsh)(spectralGeo,
           f"geometric tolerance ${geometricTolerance}%.0f px is past both " +
             f"aligned-cell descriptors (dHash $dhashDet%.3f measured" +
             (if (gridEligible) f", grid $gridDet%.3f measured) — "
@@ -1034,17 +1024,13 @@ object Dedup {
             "sweeps): shifts change phases and quantization lives in the " +
             "high band, neither touches the low-band magnitudes")
       else if (hasEmbeddings)
-        FamilyRecommendation("embedding_lsh",
-          "Similarity.nearDupPairsLsh (corpusAwareSizing=true) over image embeddings",
-          1.0,
+        pick(EmbeddingLsh)(1.0,
           f"spectral-descriptor detection $spectralGeo%.3f misses " +
             f"$minDetection%.2f at ${geometricTolerance}%.0f px shift — " +
             "only a model image-embedding column sees past the measured " +
             "geometric band")
       else
-        FamilyRecommendation("image_spectral_lsh",
-          "Multimodal.imageSpectralFeatures + imageFeatureAssign (threshold 0.9)",
-          spectralGeo,
+        pick(ImageSpectralLsh)(spectralGeo,
           f"best available without embeddings: measured detection " +
             f"$spectralGeo%.3f is BELOW the requested $minDetection%.2f — " +
             "supply an image-embedding column for the semantic tier")
@@ -1052,14 +1038,12 @@ object Dedup {
     val churnDet = interpSweep(ImageSweep, mutationTolerance)
     val det = math.min(churnDet, dhashRecode)
     if (mutationTolerance < 0.0005 && recodeQuality >= 100.0)
-      FamilyRecommendation("exact", "Dedup.dropExactDuplicates over payload digests",
-        1.0,
+      pick(Exact)(1.0,
         "sub-sweep-resolution churn tolerance: byte-identical payloads " +
           "dedup on a sha256/md5 digest groupBy — complete and the " +
           "cheapest relation there is")
     else if (det >= minDetection)
-      FamilyRecommendation("image_dhash",
-        "Multimodal.imageFingerprints + imageAssign", det,
+      pick(ImageDhash)(det,
         f"dHash radius-3 clears $minDetection%.2f at " +
           f"${mutationTolerance * 100}%.1f%% pixel churn (r15 sweep: " +
           f"$churnDet%.4f — the law is flat, a jittered pixel moves one " +
@@ -1075,24 +1059,19 @@ object Dedup {
       // descriptor's recode law is measured FLAT 1.000 to quality 10 —
       // the tier that survives brutal recompression where the 64-bit
       // fingerprint's radius saturates (r17 sweep: dHash 0.868 at q30)
-      FamilyRecommendation("image_spectral_lsh",
-        "Multimodal.imageSpectralFeatures + imageFeatureAssign (threshold 0.9)",
-        spectralRecode,
+      pick(ImageSpectralLsh)(spectralRecode,
         f"quality-${recodeQuality}%.0f recodes exceed the dHash radius " +
           f"(r17 sweep: $dhashRecode%.4f) — the low-band DFT-magnitude " +
           f"descriptor measured $spectralRecode%.3f there (quantization " +
           "perturbs the high band the descriptor ignores)")
     else if (hasEmbeddings)
-      FamilyRecommendation("embedding_lsh",
-        "Similarity.nearDupPairsLsh (corpusAwareSizing=true) over image embeddings",
-        1.0,
+      pick(EmbeddingLsh)(1.0,
         f"dHash detection $det%.4f misses $minDetection%.2f at " +
           f"${mutationTolerance * 100}%.1f%% pixel churn — past the perceptual-" +
           "fingerprint band only the embedding tier sees it (measured recall " +
           "1.00 on cosine-0.999 pairs to 64M docs)")
     else
-      FamilyRecommendation("image_dhash",
-        "Multimodal.imageFingerprints + imageAssign", det,
+      pick(ImageDhash)(det,
         f"best available without embeddings: measured detection $det%.4f " +
           f"is BELOW the requested $minDetection%.2f — supply an image-" +
           "embedding column for the semantic tier")
@@ -1144,11 +1123,7 @@ object Dedup {
       if (geometricTolerance > 0) {
         val shiftDet = interpLinearSweep(AudioShiftSweepSpectral,
           geometricTolerance)
-        return FamilyRecommendation("audio_anysegment_spectral_lsh",
-          s"Multimodal.audioSegmentFeatures(segments = $k, descriptor = " +
-            "\"spectral\") + audioAnySegmentNearDups (threshold 0.9, " +
-            "pair-closure assignment)",
-          shiftDet,
+        return pick(AudioAnySegmentSpectralLsh, k)(shiftDet,
           f"audio pool with trim tolerance $trimTolerance window(s) AND " +
             f"${geometricTolerance}%.0f samples of off-grid shift: " +
             f"per-window |DFT| magnitudes hold the r16 shift law " +
@@ -1158,10 +1133,7 @@ object Dedup {
             "stationarity caveat and the null control live in SCALE.md r19")
       }
       val det = interpSweep(AudioJitterSweepEnvelope, mutationTolerance)
-      return FamilyRecommendation("audio_anysegment_lsh",
-        s"Multimodal.audioSegmentFeatures(segments = $k) + " +
-          "audioAnySegmentNearDups (threshold 0.9, pair-closure assignment)",
-        det,
+      return pick(AudioAnySegmentLsh, k)(det,
         f"audio pool with trim tolerance $trimTolerance window(s): " +
           f"any-segment matching over $k fixed-length windows holds " +
           f"measured 1.000 detection through a $trimTolerance-window cut " +
@@ -1176,39 +1148,30 @@ object Dedup {
       val envDet = interpLinearSweep(AudioShiftSweepEnvelope, geometricTolerance)
       val spectralDet = interpLinearSweep(AudioShiftSweepSpectral, geometricTolerance)
       return if (envDet >= minDetection)
-        FamilyRecommendation("audio_envelope_lsh",
-          "Multimodal.audioEnvelopeFeatures + audioFeatureAssign (threshold 0.9)",
-          envDet,
+        pick(AudioEnvelopeLsh)(envDet,
           f"time-shift tolerance ${geometricTolerance}%.0f samples sits inside " +
             f"the envelope tier's measured band (detection $envDet%.3f, r16 " +
             "shift sweep — aligned 32-sample frames decorrelate at one frame " +
             "length): the cheaper, byte-exact-oracled descriptor wins there")
       else if (spectralDet >= minDetection)
-        FamilyRecommendation("audio_spectral_lsh",
-          "Multimodal.audioSpectralFeatures + audioFeatureAssign (threshold 0.9)",
-          spectralDet,
+        pick(AudioSpectralLsh)(spectralDet,
           f"time-shift tolerance ${geometricTolerance}%.0f samples is past the " +
             f"aligned-bin envelope (detection $envDet%.3f measured) — the " +
             f"low-band DFT-magnitude descriptor measured $spectralDet%.3f at " +
             "this shift (r16 sweep): a shift changes phases, not magnitudes")
       else if (hasEmbeddings)
-        FamilyRecommendation("embedding_lsh",
-          "Similarity.nearDupPairsLsh (corpusAwareSizing=true) over audio embeddings",
-          1.0,
+        pick(EmbeddingLsh)(1.0,
           f"spectral-descriptor detection $spectralDet%.3f misses " +
             f"$minDetection%.2f at ${geometricTolerance}%.0f samples — only a " +
             "model audio-embedding column sees past the measured shift band")
       else
-        FamilyRecommendation("audio_spectral_lsh",
-          "Multimodal.audioSpectralFeatures + audioFeatureAssign (threshold 0.9)",
-          spectralDet,
+        pick(AudioSpectralLsh)(spectralDet,
           f"best available without embeddings: measured detection " +
             f"$spectralDet%.3f is BELOW the requested $minDetection%.2f — " +
             "supply an audio-embedding column for the semantic tier")
     }
     if (mutationTolerance < 0.0005)
-      return FamilyRecommendation("exact", "Dedup.dropExactDuplicates over payload digests",
-        1.0,
+      return pick(Exact)(1.0,
         "sub-sweep-resolution churn tolerance: byte-identical payloads " +
           "dedup on a sha256/md5 digest groupBy — complete and the " +
           "cheapest relation there is")
@@ -1217,25 +1180,19 @@ object Dedup {
     // selection below interpolates measured cells across all of [0, 1]
     val det = interpSweep(AudioJitterSweepEnvelope, mutationTolerance)
     if (det >= minDetection)
-      FamilyRecommendation("audio_envelope_lsh",
-        "Multimodal.audioEnvelopeFeatures + audioFeatureAssign (threshold 0.9)",
-        det,
+      pick(AudioEnvelopeLsh)(det,
         f"the mean-centered envelope clears $minDetection%.2f at " +
           f"${mutationTolerance * 100}%.1f%% sample churn (r16+r17 sweeps: " +
           f"detection $det%.4f, flat to 80%% and 0.993 at full churn — value " +
           "noise dilutes across 32-sample frame means, and a re-level gain " +
           "cancels exactly); 64 floats/clip, byte-exact oracle (q88)")
     else if (hasEmbeddings)
-      FamilyRecommendation("embedding_lsh",
-        "Similarity.nearDupPairsLsh (corpusAwareSizing=true) over audio embeddings",
-        1.0,
+      pick(EmbeddingLsh)(1.0,
         f"envelope detection $det%.4f misses $minDetection%.2f at " +
           f"${mutationTolerance * 100}%.1f%% sample churn — the semantic tier " +
           "is the next measured option")
     else
-      FamilyRecommendation("audio_envelope_lsh",
-        "Multimodal.audioEnvelopeFeatures + audioFeatureAssign (threshold 0.9)",
-        det,
+      pick(AudioEnvelopeLsh)(det,
         f"best available without embeddings: measured detection $det%.4f " +
           f"is BELOW the requested $minDetection%.2f — supply an audio-" +
           "embedding column for the semantic tier")
@@ -1274,16 +1231,13 @@ object Dedup {
         "a re-cut video shares no byte identity — raise mutationTolerance " +
         "to the frame-churn level you must still catch, or drop the trim knob")
     if (mutationTolerance < 0.0005)
-      FamilyRecommendation("exact", "Dedup.dropExactDuplicates over payload digests",
-        1.0,
+      pick(Exact)(1.0,
         "sub-sweep-resolution churn tolerance: byte-identical payloads " +
           "dedup on a sha256/md5 digest groupBy — complete and the " +
           "cheapest relation there is (a re-encoded video is NOT " +
           "byte-identical: that needs the semantic tier)")
     else if (hasEmbeddings)
-      FamilyRecommendation("embedding_lsh",
-        "Similarity.nearDupPairsLsh (corpusAwareSizing=true) over video embeddings",
-        1.0,
+      pick(EmbeddingLsh)(1.0,
         f"content-level video similarity over arbitrary codecs needs the " +
           "model-embedding tier (frame decode exists for MJPEG-AVI and " +
           "jpeg-codec mp4 only); " +
@@ -1300,10 +1254,7 @@ object Dedup {
       // MIN, the r17 conservative convention — pure trim costs nothing.
       val det = interpSweep(ImageSweep, mutationTolerance)
       val k = trimTolerance + 1
-      FamilyRecommendation("video_anyframe_dhash",
-        s"Multimodal.videoFrameFingerprints(frames = $k) + " +
-          "videoAnyFrameNearDups (pair-closure assignment)",
-        det,
+      pick(VideoAnyFrameDhash, k)(det,
         f"frame-decodable video pool (MJPEG-AVI / jpeg-codec mp4) with " +
           f"trim tolerance $trimTolerance: any-frame " +
           f"matching over $k sampled frames holds measured 1.000 " +
@@ -1321,19 +1272,14 @@ object Dedup {
       // spot-check reads the same values — the frames are the same
       // JpegGray bytes either way)
       val det = interpSweep(ImageSweep, mutationTolerance)
-      FamilyRecommendation("image_dhash",
-        "Multimodal.imageFingerprints (frame-0 dHash via the container " +
-          "walks + ImageCodecs) + imageNearDups/fingerprintAssign",
-        det,
+      pick(ImageDhash)(det,
         f"frame-decodable video pool: frame-0 decode makes video content dedup THE " +
           f"image dHash problem — measured detection $det%.3f at " +
           f"${mutationTolerance * 100}%.1f%% frame-pixel churn (r18 AVI-path " +
           "sweep == r15 image law); re-trims/re-crops need the descriptor " +
           "tiers over frame 0, re-encodes follow the r17 recode law")
     } else
-      FamilyRecommendation("video_header_blocking",
-        "Multimodal.videoHeaderCandidates (candidate pairs ONLY — no verification)",
-        0.0,
+      pick(VideoHeaderBlocking)(0.0,
         f"UNMEASURED: content-level video similarity at " +
           f"${mutationTolerance * 100}%.1f%% churn needs frame decode " +
           "(available for MJPEG-AVI / jpeg-codec mp4 pools — this pool " +
@@ -1398,50 +1344,36 @@ object Dedup {
     val rec = recommendFamily(mutationTolerance, minDetection, hasEmbeddings,
       modality, geometricTolerance, recodeQuality, frameDecodable,
       trimTolerance)
-    // the descriptor families (image grid/spectral, audio
-    // envelope/spectral) ARE the embedding family over a derived
-    // descriptor column — they share the embedding tier's sizing,
-    // budget, and mining-mode economics verbatim (`emb` is then the
-    // FEATURE table — Multimodal.image*Features / audio*Features output
-    // with null-feature rows dropped — and `vecCol` = "feature")
-    val embeddingLike = Set("embedding_lsh", "image_grid_lsh",
-      "image_spectral_lsh", "audio_envelope_lsh", "audio_spectral_lsh")
-    // the derived-descriptor tiers are PACKAGED configs: their
-    // expectedDetection values are the r16 sweeps, which were measured at
-    // cosine threshold 0.9 over the descriptor (the entry-point strings
-    // say so) — a plan that stamped the caller's generic `threshold`
-    // (default 0.98) would EXECUTE above the measured operating point and
-    // silently void the quoted detection (planted shift-crop cosines
-    // median 0.93-0.98 sit between the two cuts). So descriptor plans
-    // always stamp and size at 0.9; a caller wanting a different cosine
-    // cut owns the embedding family directly with their own column.
-    val descriptorTier = Set("image_grid_lsh", "image_spectral_lsh",
-      "audio_envelope_lsh", "audio_spectral_lsh", "audio_anysegment_lsh",
-      "audio_anysegment_spectral_lsh")
-    // r16 advice: an EXPLICIT caller threshold that conflicts with the
-    // descriptor operating point must fail loudly, not be silently
+    val family = named(rec.family)
+    // a descriptor tier's expectedDetection was measured at its cosine
+    // operating point (0.9 over the descriptor): a plan that stamped the
+    // caller's generic `threshold` (default 0.98) would EXECUTE above it
+    // and silently void the quoted detection (planted shift-crop cosines
+    // median 0.93-0.98 sit between the two cuts). An EXPLICIT caller
+    // threshold that conflicts must fail loudly, not be silently
     // overridden — a caller passing 0.95 to avoid false eliminations
     // would otherwise get MORE-aggressive 0.9 execution. Only the
-    // untouched default (0.98) is re-stamped to the measured point.
-    if (descriptorTier(rec.family))
-      require(threshold == 0.98 || threshold == 0.9,
+    // untouched default (0.98) is re-stamped; a caller wanting a
+    // different cut owns the embedding family with their own column.
+    family.operatingPoint.foreach { op =>
+      require(threshold == 0.98 || threshold == op,
         f"plan: descriptor tier '${rec.family}' executes at its measured " +
-          f"cosine operating point 0.9 (the r16 sweeps' detection is only " +
+          f"cosine operating point $op (the r16 sweeps' detection is only " +
           f"valid there); caller passed explicit threshold=$threshold%.2f. " +
-          "Pass 0.9 (or leave the default), or own the embedding family " +
+          s"Pass $op (or leave the default), or own the embedding family " +
           "directly with your own feature column and cut.")
-    val execThreshold = if (descriptorTier(rec.family)) 0.9 else threshold
+    }
+    val execThreshold = family.operatingPoint.getOrElse(threshold)
     val rationale0 =
-      if (descriptorTier(rec.family) && threshold != 0.9)
+      if (family.operatingPoint.exists(_ != threshold))
         rec.rationale + " | NOTE: descriptor tiers execute at their " +
-          "measured cosine operating point 0.9 (default threshold 0.98 " +
-          "re-stamped — the sweep's detection is only valid at 0.9)"
+          s"measured cosine operating point $execThreshold (default " +
+          s"threshold 0.98 re-stamped — the sweep's detection is only " +
+          s"valid at $execThreshold)"
       else rec.rationale
-    if (!embeddingLike(rec.family))
-      // execThreshold, not the caller's raw threshold: the any-segment
-      // tier is descriptor-tier (operating point 0.9) but not
-      // embedding-like (it sizes its own LSH from the SEGMENT-row count
-      // at run time); for every other family here the two are equal
+    if (!family.embeddingLike)
+      // execThreshold: the any-segment tiers have an operating point but
+      // size their own LSH from the segment-row count at run time
       DedupPlan(rec.family, rec.entryPoint, rec.expectedDetection, rationale0,
         None, "one_shot", 1, 0.0, 0.0, budgetSatisfied = true, execThreshold)
     else {
@@ -1477,139 +1409,30 @@ object Dedup {
 
   /** EXECUTE a [[DedupPlan]] into a survivor assignment — the call a
     * 100 TB user actually makes after [[plan]]: (idCol, `dup_of`) over
-    * every input row, null ⇒ survivor, dispatching the family and mining
-    * mode the plan chose so the measured pieces compose behind one entry
-    * point (each family's semantics are exactly its direct call,
-    * ExtSpec-pinned):
+    * every input row, null ⇒ survivor, running the family the plan chose
+    * as its [[DedupFamily]] entry defines it (each family's semantics are
+    * exactly its direct call, ExtSpec-pinned). The embedding tiers run at
+    * the plan's sized (planes, tables) and mining mode; a partitioned plan
+    * needs `scratchDir` for its pass files, whose lifecycle is the
+    * caller's. `video_header_blocking` refuses: header bands verify
+    * nothing about content.
     *
-    *  - `exact` → min-id-per-digest assignment (the [[dropExactDuplicates]]
-    *    survivor set as an assignment relation; one 32-char-keyed shuffle).
-    *  - `simhash` → [[simhashAssign]] at the production radius, with the
-    *    split auto-deepened by [[simhashParams]] from the corpus size —
-    *    the plan's one family whose sizing happens at RUN time (the
-    *    collision economics depend only on n, no sampling needed).
-    *  - `minhash` → [[minhashAssign]] at the production (k=32, b=8) the
-    *    detection sweep measured, verifying at `jaccardThreshold`.
-    *  - `embedding_lsh` one-shot → [[Similarity.nearDupAssignFromTable]]
-    *    over [[Similarity.lshTable]] at the plan's sized (planes, tables)
-    *    and stamped threshold.
-    *  - `embedding_lsh` partitioned → [[Similarity.nearDupAssignGrouped]]
-    *    with tablesPerPass = ⌈tables/P⌉, so the walk's one scale-sensitive
-    *    shuffle runs in the plan's P budget-bounded passes (`scratchDir`
-    *    REQUIRED; pass-file lifecycle is the caller's, the
-    *    lshCandidatesPartitioned contract).
-    *  - `audio_envelope_lsh` / `audio_spectral_lsh` → identically, over
-    *    a [[Multimodal.audioEnvelopeFeatures]] /
-    *    [[Multimodal.audioSpectralFeatures]] table.
-    *  - `image_grid_lsh` / `image_spectral_lsh` → the same embedding
-    *    machinery (both mining modes) over the crop-tolerant descriptor:
-    *    `data` is a [[Multimodal.imageGridFeatures]] /
-    *    [[Multimodal.imageSpectralFeatures]] table (pass idCol =
-    *    "media_id", vecCol = "feature"); undecodable rows (null feature)
-    *    survive by definition, the imageFeatureAssign contract.
-    *
-    * `data` must carry `textCol` for the text families / `vecCol` for the
-    * embedding family / (media_id, dhash) fingerprints for `image_dhash`;
-    * the text knobs (`jaccardThreshold`, `maxHamming`) are run-time
-    * inputs because [[plan]] sizes only the embedding tier — the text
-    * families' production configs are constants the detection sweep
-    * measured. An image plan that resolved to `exact` runs the digest
-    * window over the payload column: pass `textCol = "payload"` (binary
-    * casts to binary trivially; the digest is byte-exact either way). */
+    * `data` is the family's mining table: `textCol` for the text families
+    * (or the payload column for `exact` over media), `vecCol` for the
+    * embedding family, and [[DedupFamily]]'s derived table for a media
+    * family (pass idCol = "media_id", and vecCol = "feature" for the
+    * descriptor tiers). The text knobs (`jaccardThreshold`, `maxHamming`)
+    * are run-time inputs because [[plan]] sizes only the embedding tier;
+    * the Manku-blocked families size their split from the corpus at run
+    * time, from `knownCount` when the caller supplies one (a negative
+    * value counts `data`; both return identical assignments). */
   def runPlan(p: DedupPlan, data: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", vecCol: String = "embedding",
       jaccardThreshold: Double = 0.5, maxHamming: Int = 3,
       scratchDir: String = "", maxRepsPerCell: Int = 4096,
-      knownCount: Long = -1L): DataFrame = {
-    // the simhash/image branches size their block split from n; a caller
-    // who already knows the corpus size (it counted for plan(), or reads a
-    // manifest row count) supplies it and skips the per-branch
-    // data.count() — on a 100 TB input that second scan is metadata-only
-    // on parquet but a real pass on anything else (r15 verdict nit).
-    // Supplied-count vs counted paths return identical assignments
-    // (spec-pinned); a negative value means "count it here".
-    def corpusN: Long = if (knownCount >= 0) knownCount else data.count()
-    p.family match {
-      case "exact" =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(md5(col(textCol).cast("binary")))
-        data
-          .select(col(idCol), min(col(idCol)).over(w).as("__keeper"))
-          .select(col(idCol),
-            when(col(idCol) === col("__keeper"), lit(null).cast("long"))
-              .otherwise(col("__keeper")).as("dup_of"))
-      case "simhash" =>
-        val (blocks, _) = simhashParams(corpusN, maxHamming)
-        simhashAssign(data, textCol, idCol, maxHamming, maxRepsPerCell, blocks)
-      case "minhash" =>
-        minhashAssign(data, textCol, idCol, shingleN = 3, k = 32, bands = 8,
-          jaccardThreshold, maxRepsPerCell)
-      case "image_dhash" =>
-        // data = a fingerprint table (media_id, dhash) — the
-        // Multimodal.imageFingerprints contract; split auto-deepened at
-        // run time like the simhash family
-        val (blocks, _) = simhashParams(corpusN, maxHamming)
-        Multimodal.imageAssign(data, maxHamming, maxRepsPerCell, blocks)
-      case "video_anyframe_dhash" =>
-        // data = a FRAME fingerprint table (media_id, frame_idx, dhash) —
-        // the Multimodal.videoFrameFingerprints contract. Assignment is
-        // the PAIR-CLOSURE form (dup_of = the smallest any-frame pair
-        // partner; everything with a smaller partner drops — the q44
-        // batch-sweep convention rather than the per-cell greedy star,
-        // strictly MORE corpus shrinkage on chains and the same survivor
-        // soundness: every elimination is a genuine radius pair toward a
-        // smaller id, component minima always survive). Videos with no
-        // decodable frame match nothing and survive. The Manku split is
-        // auto-deepened from the FRAME-row count (corpusN here counts the
-        // frame table, K rows per clip) exactly like the image_dhash
-        // branch above — the any-frame tier's collision mass is linear in
-        // frame rows, so it must size on that axis, not on clips.
-        val (blocks, _) = simhashParams(corpusN, maxHamming)
-        val pairs = Multimodal.videoAnyFrameNearDups(data, maxHamming, blocks)
-        data.select(col("media_id").as(idCol)).distinct()
-          .join(pairs.groupBy(col("media_b").as(idCol))
-            .agg(min(col("media_a")).as("dup_of")),
-            Seq(idCol), "left_outer")
-      case "audio_anysegment_lsh" | "audio_anysegment_spectral_lsh" =>
-        // data = a SEGMENT feature table (media_id, segment_idx, feature)
-        // — the Multimodal.audioSegmentFeatures contract. Pair-closure
-        // assignment exactly like the video any-frame branch: dup_of =
-        // the smallest any-segment pair partner above the plan's cosine
-        // operating point; clips with no decodable window match nothing
-        // and survive. The LSH config auto-sizes inside
-        // audioAnySegmentNearDups from the segment-row count.
-        val pairs = Multimodal.audioAnySegmentNearDups(data, p.threshold)
-        data.select(col("media_id").as(idCol)).distinct()
-          .join(pairs.groupBy(col("media_b").as(idCol))
-            .agg(min(col("media_a")).as("dup_of")),
-            Seq(idCol), "left_outer")
-      case "embedding_lsh" =>
-        runEmbeddingPlan(p, data, idCol, vecCol, scratchDir, maxRepsPerCell)
-      case "image_grid_lsh" | "image_spectral_lsh" |
-           "audio_envelope_lsh" | "audio_spectral_lsh" =>
-        // data = a feature table (media_id, feature) — the
-        // Multimodal.imageGridFeatures / imageSpectralFeatures /
-        // audioEnvelopeFeatures / audioSpectralFeatures contract (pass
-        // idCol = "media_id", vecCol = "feature"). All four families
-        // ARE the embedding machinery at the plan's sized config;
-        // undecodable payloads (null feature) survive by definition —
-        // the imageFeatureAssign / audioFeatureAssign contract
-        data.select(col(idCol)).join(
-          runEmbeddingPlan(p, data.filter(col(vecCol).isNotNull),
-            idCol, vecCol, scratchDir, maxRepsPerCell),
-          Seq(idCol), "left_outer")
-      case "video_header_blocking" => throw new IllegalArgumentException(
-        "video_header_blocking is a candidate PRE-FILTER, not an " +
-          "assignment: header bands verify nothing about content " +
-          "(frame decode is stubbed), so runPlan refuses rather than " +
-          "return unverified eliminations — call " +
-          "Multimodal.videoHeaderCandidates directly for the candidate " +
-          "pairs, or supply a video-embedding column / byte-identical " +
-          "tolerance to get an executable plan")
-      case other => throw new IllegalArgumentException(
-        s"unknown plan family '$other' — runPlan executes plans built by Dedup.plan")
-    }
-  }
+      knownCount: Long = -1L): DataFrame =
+    named(p.family).run(Run(p, data, idCol, textCol, vecCol, jaccardThreshold,
+      maxHamming, scratchDir, maxRepsPerCell, knownCount))
 
   /** Per-kind plans for a MIXED media corpus (r17 verdict item #5): a
     * real curation run is not one modality — the media table carries
@@ -1658,24 +1481,25 @@ object Dedup {
     try planByKindFrom(headed, mutationTolerance, minDetection,
       imageGeometricTolerance, audioGeometricTolerance,
       videoMutationTolerance, scratchBudgetGb, imageRecodeQuality,
-      videoTrimTolerance, audioTrimTolerance)
+      videoTrimTolerance, audioTrimTolerance).map { case (m, (p, _)) => m -> p }
     finally headed.unpersist(blocking = false)
   }
 
   /** [[planByKind]]'s body over an already-kind-detected (and ideally
     * persisted) frame — shared with [[runPlanByKind]] so the two never
-    * pay or drift on separate header passes. */
+    * pay or drift on separate header passes. Each plan comes with the
+    * mining table it was sized on, its family's derived table. */
   private def planByKindFrom(headed: DataFrame, mutationTolerance: Double,
       minDetection: Double, imageGeometricTolerance: Double,
       audioGeometricTolerance: Double, videoMutationTolerance: Double,
       scratchBudgetGb: Double,
       imageRecodeQuality: Double = 100.0,
       videoTrimTolerance: Int = 0,
-      audioTrimTolerance: Int = 0): Map[String, DedupPlan] = {
+      audioTrimTolerance: Int = 0): Map[String, (DedupPlan, DataFrame)] = {
     val present = headed.groupBy("__kind").count()
       .collect().map(_.getString(0)).toSet
     def modalityPlan(kinds: Set[String], modality: String, tol: Double,
-        geo: Double, recodeQ: Double): Option[(String, DedupPlan)] =
+        geo: Double, recodeQ: Double): Option[(String, (DedupPlan, DataFrame))] =
       if (kinds.intersect(present).isEmpty) None
       else {
         val rows = headed.filter(col("__kind").isin(kinds.toSeq: _*))
@@ -1711,13 +1535,17 @@ object Dedup {
         val rec = recommendFamily(tol, minDetection, hasEmbeddings = false,
           modality, geo, recodeQ, frameDecodable = decodable,
           trimTolerance = trim)
-        Some(modality -> plan(
-          derivedTable(rows, rec.family, videoFrames = trim + 1,
-            audioSegments = trim + 1), tol,
+        // trim + 1 sampled frames or windows per clip
+        val derived = named(rec.family).derive.getOrElse(
+          throw new IllegalArgumentException(s"no derived-table rule for " +
+            s"family '${rec.family}' in the by-kind dispatch (embedding " +
+            "tiers need caller-supplied columns — own the per-modality call " +
+            "directly)"))(rows, trim + 1)
+        Some(modality -> (plan(derived, tol,
           minDetection, scratchBudgetGb, targetRecall = 0.98,
           hasEmbeddings = false, vecCol = "feature", modality = modality,
           geometricTolerance = geo, recodeQuality = recodeQ,
-          frameDecodable = decodable, trimTolerance = trim))
+          frameDecodable = decodable, trimTolerance = trim), derived))
       }
     (modalityPlan(ModalityKinds("image"), "image", mutationTolerance,
       imageGeometricTolerance, imageRecodeQuality) ++
@@ -1791,7 +1619,7 @@ object Dedup {
     * content to match — every media family's contract). Equality with
     * per-kind direct calls is ExtSpec-pinned; an unexecutable video plan
     * (tolerance past byte-identity without embeddings) refuses loudly
-    * through [[runPlan]]'s video_header_blocking branch.
+    * through [[runPlan]] (the video_header_blocking entry refuses).
     *
     * Scale: ONE header parse per row (O(markers)) splits the pools; each
     * pool then pays exactly its modality's scan-stage decode + mining —
@@ -1822,12 +1650,10 @@ object Dedup {
       val pooled = modalityKinds.collect {
         case (modality, kinds) if plans.contains(modality) =>
           val rows = headed.filter(col("__kind").isin(kinds.toSeq: _*))
-          val p = plans(modality)
-          runPlan(p, derivedTable(rows.select(col("media_id"), col("payload")),
-              p.family, videoFrames = videoTrimTolerance + 1,
-              audioSegments = audioTrimTolerance + 1),
-            idCol = "media_id", textCol = "payload", vecCol = "feature",
-            scratchDir = scratchDir, maxRepsPerCell = maxRepsPerCell)
+          val (p, derived) = plans(modality)
+          runPlan(p, derived, idCol = "media_id", textCol = "payload",
+            vecCol = "feature", scratchDir = scratchDir,
+            maxRepsPerCell = maxRepsPerCell)
             .join(rows.select(col("media_id"), col("__kind")), Seq("media_id"))
             .select(col("media_id"), col("__kind").as("kind"), col("dup_of"))
       }
@@ -1856,51 +1682,4 @@ object Dedup {
   private def withDetectedKind(media: DataFrame): DataFrame =
     media.withColumn("__kind",
       graft.functions.MediaHeader(col("payload")).getField("format"))
-
-  /** The derived table each plan family mines over — the [[runPlan]]
-    * input contract resolved per family: raw payloads for the exact
-    * rung, dHash fingerprints for the perceptual rung, descriptor
-    * features for the geometric/audio tiers. */
-  private def derivedTable(rows: DataFrame, family: String,
-      videoFrames: Int = 1, audioSegments: Int = 1): DataFrame =
-    family match {
-      case "exact" | "video_header_blocking" => rows
-      case "image_dhash" => Multimodal.imageFingerprints(rows)
-      case "video_anyframe_dhash" =>
-        Multimodal.videoFrameFingerprints(rows, videoFrames)
-      case "audio_anysegment_lsh" =>
-        Multimodal.audioSegmentFeatures(rows, segments = audioSegments)
-      case "audio_anysegment_spectral_lsh" =>
-        Multimodal.audioSegmentFeatures(rows, segments = audioSegments,
-          descriptor = "spectral")
-      case "image_grid_lsh" => Multimodal.imageGridFeatures(rows)
-      case "image_spectral_lsh" => Multimodal.imageSpectralFeatures(rows)
-      case "audio_envelope_lsh" => Multimodal.audioEnvelopeFeatures(rows)
-      case "audio_spectral_lsh" => Multimodal.audioSpectralFeatures(rows)
-      case other => throw new IllegalArgumentException(
-        s"no derived-table rule for family '$other' in the by-kind " +
-          "dispatch (embedding tiers need caller-supplied columns — own " +
-          "the per-modality call directly)")
-    }
-
-  /** The embedding-family body of [[runPlan]] — ONE definition shared by
-    * the `embedding_lsh` and `image_grid_lsh` dispatches so the two can
-    * never drift on mining-mode semantics. */
-  private def runEmbeddingPlan(p: DedupPlan, emb: DataFrame, idCol: String,
-      vecCol: String, scratchDir: String, maxRepsPerCell: Int): DataFrame = {
-    val (planes, tables) = p.lshConfig.getOrElse(throw new IllegalArgumentException(
-      s"${p.family} plan carries no lshConfig — build plans with Dedup.plan"))
-    val bucketTable = Similarity.lshTable(emb, planes, tables, idCol, vecCol)
-    if (p.miningMode == "one_shot")
-      Similarity.nearDupAssignFromTable(bucketTable, emb, p.threshold,
-        idCol, vecCol, maxRepsPerCell)
-    else {
-      require(scratchDir.nonEmpty,
-        "partitioned embedding mining needs a scratchDir (pass files; " +
-          "caller-owned lifecycle)")
-      val perPass = math.max(1, math.ceil(tables.toDouble / p.partitions).toInt)
-      Similarity.nearDupAssignGrouped(bucketTable, emb, p.threshold,
-        scratchDir, idCol, vecCol, maxRepsPerCell, perPass)
-    }
-  }
 }

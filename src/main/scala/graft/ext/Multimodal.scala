@@ -582,27 +582,30 @@ object Multimodal {
       .select(col("media_id"), col("f.feature").as("feature"),
         col("f.error").as("error"))
 
-  /** Survivor-oriented CROP-TOLERANT image dedup — a derived image
-    * descriptor ([[imageGridFeatures]] or [[imageSpectralFeatures]], both
-    * emit the same (media_id, feature, error) shape) fed through the
-    * embedding-LSH greedy star ([[Similarity.nearDupAssign]], reused
-    * verbatim: the descriptor IS an embedding, so the image family's
-    * geometric tier inherits the embedding family's auto-sizing, plan
-    * hygiene, and soundness contract). Returns ALL feature rows as
-    * (media_id, dup_of): null ⇒ survivor; undecodable images (null
-    * feature) survive by definition, mirroring [[imageAssign]].
-    * `threshold` is cosine over the descriptor — the r16 crop sweep
-    * measures where each descriptor's planted shift-crops sit against it
-    * (SCALE.md r16: the grid tier owns ≤ 1 px, the spectral tier the
-    * measured 1-4 px band). */
-  def imageFeatureAssign(features: DataFrame, threshold: Double = 0.9,
+  /** Survivor-oriented descriptor dedup — a derived image or audio
+    * descriptor ([[imageGridFeatures]], [[imageSpectralFeatures]],
+    * [[audioEnvelopeFeatures]] or [[audioSpectralFeatures]], all emit the
+    * same (media_id, feature, error) shape) fed through the embedding-LSH
+    * greedy star ([[Similarity.nearDupAssign]], reused verbatim: the
+    * descriptor IS an embedding, so the geometric and audio tiers inherit
+    * the embedding family's auto-sizing, plan hygiene, and soundness
+    * contract). Returns ALL feature rows as (media_id, dup_of): null ⇒
+    * survivor; undecodable payloads (null feature) survive by definition,
+    * mirroring [[imageAssign]]. `threshold` is cosine over the descriptor
+    * — the r16 sweeps measure where each descriptor's planted twins sit
+    * against it (SCALE.md r16: the grid tier owns ≤ 1 px, the spectral
+    * tier the measured 1-4 px band). */
+  def featureAssign(features: DataFrame, threshold: Double = 0.9,
       maxRepsPerCell: Int = 4096, targetRecall: Double = 0.98): DataFrame = {
     TableShapes.requireColumns(features, Seq("media_id", "feature"),
-      "imageFeatureAssign",
-      "build it with Multimodal.imageGridFeatures(media) or " +
-        "Multimodal.imageSpectralFeatures(media)")
-    // eliminations-only join, as [[audioFeatureAssign]] (r20): the
-    // completion join below makes nearDupAssign's internal one redundant
+      "featureAssign",
+      "build it with Multimodal.imageGridFeatures, imageSpectralFeatures, " +
+        "audioEnvelopeFeatures or audioSpectralFeatures")
+    // join the min-reconciled ELIMINATIONS directly (r20): the left join
+    // below is already the completion join over the full feature id set,
+    // so [[Similarity.nearDupAssign]]'s own emb-ids completion join would
+    // be a second, redundant join stage — eliminated ids ⊆ non-null
+    // feature ids ⊆ these ids, so the rows are identical (oracle-verified)
     val elim = Similarity.nearDupEliminations(
       features.filter(col("feature").isNotNull),
       threshold, idCol = "media_id", vecCol = "feature",
@@ -865,22 +868,31 @@ object Multimodal {
     TableShapes.requireColumns(frameFps, Seq("media_id", "frame_idx", "dhash"),
       "videoAnyFrameNearDups",
       "build it with Multimodal.videoFrameFingerprints(media)")
-    val packed = frameFps.filter(col("dhash").isNotNull)
-      .select((shiftleft(col("media_id"), 6) + col("frame_idx")).as("fid"),
-        col("dhash"))
-    // aggregate-form reconciliation (r20, the audioAnySegmentNearDups
-    // treatment): the per-media min below absorbs duplicate (pair,
-    // hamming) rows — min over a multiset equals min over its set — so
-    // consume the pre-distinct verified stream and skip the distinct's
-    // hash-aggregate pass over the collision survivors (oracle-verified,
-    // q95)
-    Dedup.simhashScoredPairsFromSigs(packed, "fid", "dhash", maxHamming, blocks)
-      .select(shiftright(col("doc_a"), 6).as("media_a"),
-        shiftright(col("doc_b"), 6).as("media_b"),
-        col("hamming"))
+    anyUnitNearDups(frameFps, "frame_idx", "dhash")(
+      Dedup.simhashScoredPairsFromSigs(_, "fid", "dhash", maxHamming, blocks),
+      h => min(h).cast("long").as("min_hamming"))
+  }
+
+  /** The any-unit pair form of the trim tiers ([[videoAnyFrameNearDups]],
+    * [[audioAnySegmentNearDups]]): unit rows with a non-null `value` pack
+    * as `fid = media_id << 6 | idx`, the family's `scored` stream pairs
+    * the packed units as (fid_a, fid_b, score), same-media pairs drop, and
+    * `best` reduces each media pair's scores. The stream may repeat a
+    * pair (one row per colliding block or table): `best` is a min or max,
+    * which a repeat does not move, so no distinct is paid before it
+    * (oracle-verified, q95/q97/q98). Pair order is media_a < media_b
+    * (monotone fid packing). */
+  private def anyUnitNearDups(units: DataFrame, idx: String, value: String)(
+      scored: DataFrame => DataFrame, best: Column => Column): DataFrame = {
+    val packed = units.filter(col(value).isNotNull)
+      .select((shiftleft(col("media_id"), 6) + col(idx)).as("fid"), col(value))
+    val pairs = scored(packed)
+    val Array(a, b, score) = pairs.columns
+    pairs.select(shiftright(col(a), 6).as("media_a"),
+        shiftright(col(b), 6).as("media_b"), col(score))
       .filter(col("media_a") =!= col("media_b"))
       .groupBy("media_a", "media_b")
-      .agg(min(col("hamming")).cast("long").as("min_hamming"))
+      .agg(best(col(score)))
   }
 
   /** The amplitude-modulated sine field behind [[syntheticAudio]] —
@@ -961,33 +973,6 @@ object Multimodal {
       .select(col("media_id"), col("f.feature").as("feature"),
         col("f.error").as("error"))
 
-  /** Survivor-oriented audio dedup — a derived audio descriptor
-    * ([[audioEnvelopeFeatures]] or [[audioSpectralFeatures]], both emit
-    * the (media_id, feature, error) shape) fed through the embedding-LSH
-    * greedy star, exactly [[imageFeatureAssign]] over the audio column:
-    * the descriptor IS an embedding, so the audio family inherits the
-    * embedding family's auto-sizing, plan hygiene, and soundness
-    * contract. Returns ALL feature rows as (media_id, dup_of): null ⇒
-    * survivor; undecodable clips (null feature) survive by definition. */
-  def audioFeatureAssign(features: DataFrame, threshold: Double = 0.9,
-      maxRepsPerCell: Int = 4096, targetRecall: Double = 0.98): DataFrame = {
-    TableShapes.requireColumns(features, Seq("media_id", "feature"),
-      "audioFeatureAssign",
-      "build it with Multimodal.audioEnvelopeFeatures(media) or " +
-        "Multimodal.audioSpectralFeatures(media)")
-    // join the min-reconciled ELIMINATIONS directly (r20): the left join
-    // below is already the completion join over the full feature id set,
-    // so [[Similarity.nearDupAssign]]'s own emb-ids completion join would
-    // be a second, redundant join stage — eliminated ids ⊆ non-null
-    // feature ids ⊆ these ids, so the rows are identical (oracle-verified)
-    val elim = Similarity.nearDupEliminations(
-      features.filter(col("feature").isNotNull),
-      threshold, idCol = "media_id", vecCol = "feature",
-      targetRecall = targetRecall, maxRepsPerCell = maxRepsPerCell)
-    features.select(col("media_id"))
-      .join(elim, Seq("media_id"), "left_outer")
-  }
-
   /** The fid packing bound for [[audioAnySegmentNearDups]]: segment rows
     * key as `media_id << 6 | segment_idx` (the [[MaxVideoFrames]]
     * convention applied to audio windows). */
@@ -1051,24 +1036,10 @@ object Multimodal {
     TableShapes.requireColumns(segFeats,
       Seq("media_id", "segment_idx", "feature"), "audioAnySegmentNearDups",
       "build it with Multimodal.audioSegmentFeatures(media)")
-    val packed = segFeats.filter(col("feature").isNotNull)
-      .select((shiftleft(col("media_id"), 6) + col("segment_idx")).as("fid"),
-        col("feature"))
-    // Aggregate-form pair reconciliation (r20, guide §2.3): the per-media
-    // max BELOW already absorbs duplicate (pair, cosine) rows — max over a
-    // multiset equals max over its set — so consume the pre-distinct
-    // scored collision stream instead of [[Similarity.nearDupPairsLsh]]
-    // and skip its distinct's extra hash-aggregate pass over the survivor
-    // multiplicity (plus its orderBy, which the old shape paid only to
-    // re-aggregate). Pair-set and best_cosine equality with the
-    // distinct-first shape is exact; oracle-verified (q97/q98).
-    Similarity.lshScoredCollisions(packed, threshold, nPlanes, nTables,
-        idCol = "fid", vecCol = "feature", targetRecall = targetRecall)
-      .select(shiftright(col("id_a"), 6).as("media_a"),
-        shiftright(col("id_b"), 6).as("media_b"), col("cosine_sim"))
-      .filter(col("media_a") =!= col("media_b"))
-      .groupBy("media_a", "media_b")
-      .agg(max(col("cosine_sim")).as("best_cosine"))
+    anyUnitNearDups(segFeats, "segment_idx", "feature")(
+      Similarity.lshScoredCollisions(_, threshold, nPlanes, nTables,
+        idCol = "fid", vecCol = "feature", targetRecall = targetRecall),
+      c => max(c).as("best_cosine"))
   }
 
   /** Frame/segment sampling stub: slices the payload into `every`-byte

@@ -875,7 +875,7 @@ object Similarity {
     * `(idCol, dup_of)` row PER ELIMINATED doc only (survivors absent),
     * auto-sized exactly like [[nearDupAssign]]. Package-private for
     * wrappers that already left-join the result onto their own complete
-    * id set ([[Multimodal.audioFeatureAssign]]/`imageFeatureAssign`):
+    * id set ([[Multimodal.featureAssign]]):
     * joining eliminations directly is row-identical to joining the full
     * assignment — eliminated ids ⊆ emb ids ⊆ the wrapper's ids — and
     * skips [[nearDupAssign]]'s completion join outright (r20, one fewer

@@ -1746,7 +1746,7 @@ object ExtQ {
             Multimodal.syntheticImages(t(s, dir, "documents"))),
           "media.q86_feats")
         val feats = cat.load("media.q86_feats")
-        cat.save(Multimodal.imageFeatureAssign(feats, threshold = 0.9),
+        cat.save(Multimodal.featureAssign(feats, threshold = 0.9),
           "media.q86_assign")
         cat.load("media.q86_assign")
           .filter(col("dup_of").isNotNull)
@@ -2269,7 +2269,7 @@ object ExtQ {
             Multimodal.syntheticAudio(t(s, dir, "documents"))),
           "media.q89_feats")
         val feats = cat.load("media.q89_feats")
-        cat.save(Multimodal.audioFeatureAssign(feats, threshold = 0.9),
+        cat.save(Multimodal.featureAssign(feats, threshold = 0.9),
           "media.q89_assign")
         cat.load("media.q89_assign")
           .filter(col("dup_of").isNotNull)

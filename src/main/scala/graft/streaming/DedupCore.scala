@@ -141,15 +141,21 @@ private[streaming] abstract class DedupCore(catalog: Catalog,
         .filter(accept(col(pa), col(pb)))
         .select(owner(col("u_b")).as(idCol))
 
-      // one action judges the batch: every arrival id, flagged when it
-      // drops; the appends filter by the collected ids, so neither re-runs
-      // the probe
+      // one action judges the batch: every arrival id, then every dropped
+      // id flagged; the appends filter by the collected ids, so neither
+      // re-runs the probe. A union, not a join of the arrivals against the
+      // dropped ids: adaptive execution finishes such a join as soon as
+      // the cached arrivals read empty, and leaves the dropped side's
+      // stages running on caches the `finally` below releases (each
+      // then logs failed block fetches and recomputes its partitions).
+      // Dropped ids are non-null arrival ids, so each is counted once
+      // among the arrivals.
       val dropped = droppedVsState.union(droppedIntra).distinct()
-        .withColumn("__dropped", lit(true))
-      val judged = batch.select(col(idCol))
-        .join(broadcast(dropped), Seq(idCol), "left_outer").collect()
-      val droppedIds = judged.collect { case r if !r.isNullAt(1) => r.get(0) }
-      val n = (judged.length - droppedIds.length).toLong
+        .filter(col(idCol).isNotNull)
+      val judged = batch.select(col(idCol), lit(false).as("__dropped"))
+        .union(dropped.select(col(idCol), lit(true))).collect()
+      val droppedIds = judged.collect { case r if r.getBoolean(1) => r.get(0) }
+      val n = (judged.length - 2 * droppedIds.length).toLong
       def kept(c: Column): Column = !c.isin(droppedIds.toSeq: _*)
       if (n > 0) {
         // a null id never matches a dropped one: its row survives, as under

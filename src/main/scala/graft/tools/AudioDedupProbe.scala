@@ -201,7 +201,7 @@ object AudioDedupProbe {
         org.apache.spark.sql.functions.size(col("feature"))).first().getInt(0)
       val cmp = spark.sparkContext.longAccumulator("audio_star_comparisons")
       val t1 = System.nanoTime()
-      // the AUTO-SIZED config, exactly audioFeatureAssign's path: the
+      // the AUTO-SIZED config, exactly featureAssign's path: the
       // first cut ran a fixed (8, 4) and measured the predictable
       // failure — comparisons went superlinear (2,093 → 7,800/clip at
       // 200k → 1M on this phase-class-heavy envelope corpus) and

@@ -179,81 +179,107 @@ class AudioTrimSpec extends SparkSpec {
   }
 
   test("IncrementalAudioSegmentDedup: a trimmed re-upload drops on arrival; equals the batch sweep; crash replay") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-incaudioseg").toString
-    val cat = new graft.core.Catalog(spark, root)
-    val loop = new graft.streaming.IncrementalAudioSegmentDedup(cat,
-      "cur.aclips", "cur.abuckets", "cur.asegs",
-      nPlanes = 8, nTables = 4, threshold = 0.9,
-      segments = 2, segmentSamples = Seg)
-    // batch 1: two originals + an undecodable clip (survives, no state)
-    loop.processBatch(Seq((1L, clip(800L, windows = 2)),
-      (2L, clip(900L, windows = 2)), (3L, "junk".getBytes))
-      .toDF("media_id", "payload"), 1L)
-    // batch 2: a head-trimmed re-encode of clip 1 — drops on arrival —
-    // and a fresh clip that survives
-    val n2 = loop.processBatch(Seq(
-      (4L, clip(800L, windows = 2, trim = Seg)),
-      (5L, clip(950L, windows = 2)))
-      .toDF("media_id", "payload"), 2L)
-    assert(n2 == 1L)
-    val kept = cat.load("cur.aclips").select("media_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 2L, 3L, 5L), s"kept $kept")
-    // segment state exists exactly for decodable survivors
-    assert(cat.load("cur.asegs")
-      .select(shiftright(col("fid"), 6)).distinct()
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 5L))
-
-    // chain-free equality with the batch any-segment sweep
-    val all = Seq((1L, clip(800L, windows = 2)), (2L, clip(900L, windows = 2)),
-      (3L, "junk".getBytes), (4L, clip(800L, windows = 2, trim = Seg)),
-      (5L, clip(950L, windows = 2))).toDF("media_id", "payload")
-    val dropB = Multimodal.audioAnySegmentNearDups(
-      Multimodal.audioSegmentFeatures(all, Seg, 2, 16), threshold = 0.9)
-      .select(col("media_b").as("media_id")).distinct()
-    val sweep = all.join(dropB, Seq("media_id"), "left_anti")
-      .select("media_id").collect().map(_.getLong(0)).toSet
-    assert(sweep == kept, s"batch sweep $sweep vs stream $kept")
-
-    // crash between the clips append and the state appends, then replay:
-    // exactly-once (no duplicate clip rows, state converges)
-    val root2 = java.nio.file.Files.createTempDirectory("graft-incaudioseg2").toString
-    val cat2 = new graft.core.Catalog(spark, root2)
-    val loop2 = new graft.streaming.IncrementalAudioSegmentDedup(cat2,
-      "cur.bclips", "cur.bbuckets", "cur.bsegs",
-      nPlanes = 8, nTables = 4, segments = 2, segmentSamples = Seg)
-    loop2.processBatch(Seq((1L, clip(800L, windows = 2)))
-      .toDF("media_id", "payload"), 1L)
-    loop2.crashBetweenAppendsOnce = true
-    val b2 = Seq((2L, clip(800L, windows = 2, trim = Seg)),
-      (3L, clip(990L, windows = 2))).toDF("media_id", "payload")
-    intercept[RuntimeException] { loop2.processBatch(b2, 2L) }
-    loop2.processBatch(b2, 2L) // replay
-    assert(cat2.load("cur.bclips").select("media_id")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    assert(cat2.load("cur.bclips").count() == 2L, "duplicate clip rows")
-    assert(cat2.load("cur.bsegs").select("fid").distinct().count() ==
-      cat2.load("cur.bsegs").count(), "duplicate segment state rows")
-
-    // the KindRouter knob routes the audio pool through this loop
-    val root3 = java.nio.file.Files.createTempDirectory("graft-incaudioseg3").toString
-    val cat3 = new graft.core.Catalog(spark, root3)
-    val router = new graft.streaming.CurationStream.KindRouter(cat3,
-      "cur.amix", audioTrimTolerance = 1, segmentSamples = Seg)
-    router.processBatch(Seq((1L, clip(800L, windows = 2)))
-      .toDF("media_id", "payload"), 1L)
-    val counts = router.processBatch(Seq(
-      (2L, clip(800L, windows = 2, trim = Seg)))
-      .toDF("media_id", "payload"), 2L)
-    assert(counts("audio") == 0L, s"trimmed re-upload survived: $counts")
-    assert(cat3.load("cur.amix_audio").select("media_id")
-      .collect().map(_.getLong(0)).toSet == Set(1L))
-    // a negative knob refuses at construction
-    intercept[IllegalArgumentException] {
-      new graft.streaming.CurationStream.KindRouter(cat3, "cur.aneg",
-        audioTrimTolerance = -1)
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // a failed block fetch means a Spark job outlived the batch whose
+    // cache it read: Spark logs it at ERROR and recomputes the partition
+    val failedFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("failed-fetch-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("Failed to fetch block")) failedFetches.add(m)
+      }
     }
+    capture.start()
+    val rootLogger = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    rootLogger.addAppender(capture)
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      val root = java.nio.file.Files.createTempDirectory("graft-incaudioseg").toString
+      val cat = new graft.core.Catalog(spark, root)
+      val loop = new graft.streaming.IncrementalAudioSegmentDedup(cat,
+        "cur.aclips", "cur.abuckets", "cur.asegs",
+        nPlanes = 8, nTables = 4, threshold = 0.9,
+        segments = 2, segmentSamples = Seg)
+      // batch 1: two originals + an undecodable clip (survives, no state)
+      loop.processBatch(Seq((1L, clip(800L, windows = 2)),
+        (2L, clip(900L, windows = 2)), (3L, "junk".getBytes))
+        .toDF("media_id", "payload"), 1L)
+      // batch 2: a head-trimmed re-encode of clip 1 — drops on arrival —
+      // and a fresh clip that survives
+      val n2 = loop.processBatch(Seq(
+        (4L, clip(800L, windows = 2, trim = Seg)),
+        (5L, clip(950L, windows = 2)))
+        .toDF("media_id", "payload"), 2L)
+      assert(n2 == 1L)
+      val kept = cat.load("cur.aclips").select("media_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(kept == Set(1L, 2L, 3L, 5L), s"kept $kept")
+      // segment state exists exactly for decodable survivors
+      assert(cat.load("cur.asegs")
+        .select(shiftright(col("fid"), 6)).distinct()
+        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 5L))
+
+      // chain-free equality with the batch any-segment sweep
+      val all = Seq((1L, clip(800L, windows = 2)), (2L, clip(900L, windows = 2)),
+        (3L, "junk".getBytes), (4L, clip(800L, windows = 2, trim = Seg)),
+        (5L, clip(950L, windows = 2))).toDF("media_id", "payload")
+      val dropB = Multimodal.audioAnySegmentNearDups(
+        Multimodal.audioSegmentFeatures(all, Seg, 2, 16), threshold = 0.9)
+        .select(col("media_b").as("media_id")).distinct()
+      val sweep = all.join(dropB, Seq("media_id"), "left_anti")
+        .select("media_id").collect().map(_.getLong(0)).toSet
+      assert(sweep == kept, s"batch sweep $sweep vs stream $kept")
+
+      // crash between the clips append and the state appends, then replay:
+      // exactly-once (no duplicate clip rows, state converges)
+      val root2 = java.nio.file.Files.createTempDirectory("graft-incaudioseg2").toString
+      val cat2 = new graft.core.Catalog(spark, root2)
+      val loop2 = new graft.streaming.IncrementalAudioSegmentDedup(cat2,
+        "cur.bclips", "cur.bbuckets", "cur.bsegs",
+        nPlanes = 8, nTables = 4, segments = 2, segmentSamples = Seg)
+      loop2.processBatch(Seq((1L, clip(800L, windows = 2)))
+        .toDF("media_id", "payload"), 1L)
+      loop2.crashBetweenAppendsOnce = true
+      val b2 = Seq((2L, clip(800L, windows = 2, trim = Seg)),
+        (3L, clip(990L, windows = 2))).toDF("media_id", "payload")
+      intercept[RuntimeException] { loop2.processBatch(b2, 2L) }
+      loop2.processBatch(b2, 2L) // replay
+      assert(cat2.load("cur.bclips").select("media_id")
+        .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
+      assert(cat2.load("cur.bclips").count() == 2L, "duplicate clip rows")
+      assert(cat2.load("cur.bsegs").select("fid").distinct().count() ==
+        cat2.load("cur.bsegs").count(), "duplicate segment state rows")
+
+      // the KindRouter knob routes the audio pool through this loop
+      val root3 = java.nio.file.Files.createTempDirectory("graft-incaudioseg3").toString
+      val cat3 = new graft.core.Catalog(spark, root3)
+      val router = new graft.streaming.CurationStream.KindRouter(cat3,
+        "cur.amix", audioTrimTolerance = 1, segmentSamples = Seg)
+      router.processBatch(Seq((1L, clip(800L, windows = 2)))
+        .toDF("media_id", "payload"), 1L)
+      val counts = router.processBatch(Seq(
+        (2L, clip(800L, windows = 2, trim = Seg)))
+        .toDF("media_id", "payload"), 2L)
+      assert(counts("audio") == 0L, s"trimmed re-upload survived: $counts")
+      assert(cat3.load("cur.amix_audio").select("media_id")
+        .collect().map(_.getLong(0)).toSet == Set(1L))
+      // a negative knob refuses at construction
+      intercept[IllegalArgumentException] {
+        new graft.streaming.CurationStream.KindRouter(cat3, "cur.aneg",
+          audioTrimTolerance = -1)
+      }
+      // a job still running here would log its failed fetches later
+      while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty)
+        Thread.sleep(50)
+    } finally {
+      rootLogger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(failedFetches.isEmpty, s"failed block fetches: $failedFetches")
     spark.sharedState.cacheManager.clearCache()
   }
 }

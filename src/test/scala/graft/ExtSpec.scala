@@ -337,6 +337,13 @@ class ExtSpec extends SparkSpec {
       assert(fromSigs == inline, s"maxHamming=$h")
       spark.sharedState.cacheManager.clearCache()
     }
+    // an id repeated with two signatures at the same distance from a
+    // partner publishes the pair once: the distinct runs after the verify,
+    // over (doc_a, doc_b, hamming), not over the signatures
+    val repeated = Seq((1L, 0x0L), (1L, 0x3L), (2L, 0x1L)).toDF("doc_id", "simhash")
+    assert(Dedup.simhashPairsFromSigs(repeated).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq == Seq((1L, 2L, 1)))
+    spark.sharedState.cacheManager.clearCache()
   }
 
   test("simhash block table: bucketed self-join is exchange-free; radius self-stamped") {
@@ -2523,13 +2530,13 @@ class ExtSpec extends SparkSpec {
       assert(envBad(2L) == "audio_too_short" && specBad(2L) == "audio_too_short")
 
       // ── the survivor form: planted gain+jitter twins eliminate soundly
-      // through audioFeatureAssign over envelope descriptors ──
+      // through featureAssign over envelope descriptors ──
       val corpus = graft.tools.AudioDedupProbe.corpus(spark, 400, 1, 2048)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val feats = Multimodal.audioEnvelopeFeatures(corpus)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val assign = Multimodal.audioFeatureAssign(feats, threshold = 0.9)
+        val assign = Multimodal.featureAssign(feats, threshold = 0.9)
           .collect().map(r => (r.getLong(0),
             if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
         assert(assign.size == 400)

@@ -78,7 +78,7 @@ class OptR20Spec extends SparkSpec {
       (i, Some(Array.tabulate(6)(d =>
         (math.cos((i % 20) * 1.1 + d) + 2.0).toFloat).toSeq))
     } :+ (99L, None)).toDF("media_id", "feature")
-    val wrapper = Multimodal.audioFeatureAssign(feats, threshold = 0.95)
+    val wrapper = Multimodal.featureAssign(feats, threshold = 0.95)
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
     val old = feats.select(col("media_id"))

@@ -23,7 +23,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    (the delete+rename swap this replaces had one);
   *  - a replayed streaming batch (`batchId <= lastBatchId`) is skipped
   *    before any data is written, making append-path ingest exactly-once
-  *    WITHOUT per-table `__batch_id` partitions and anti-join probes.
+  *    with no per-table replay probe.
   *
   * The reference relies on idempotent re-runs for its retry semantics
   * (`dag/financial_monitoring_dag.py:45-50` retries,

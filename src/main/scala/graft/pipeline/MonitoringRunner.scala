@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.{Duration, DurationInt}
 
@@ -50,25 +51,28 @@ final class MonitoringRunner(alerts: AlertManager,
     // nor the recover sees them) leaves its future permanently incomplete;
     // an unbounded Await would then hang the WHOLE run, suppressing the
     // healthy detectors' alerts and the daily report. Timing out degrades
-    // the one check to the same CHECK FAILED row a thrown check produces.
+    // the one check to a TIMED OUT report row, apart from a thrown check's
+    // CHECK FAILED (a hung check and a failing one need different fixes).
     // The timeout is logged like a thrown check, for the same reason.
+    val timedOut = mutable.Set.empty[String]
     def await[T](name: String, f: Future[Option[T]]): Option[T] =
       try Await.result(f, checkTimeout)
       catch {
         case _: java.util.concurrent.TimeoutException =>
           log.warn(s"monitoring check '$name' timed out after $checkTimeout")
+          timedOut += name
           None
       }
 
     // fan-out (8 parallel checks) + barrier
     val fs = (opt("feeds", feeds), opt("revenue", revenue),
       opt("volume", volume), opt("freshness", freshness),
-      opt("patterns", patterns), opt("recon", recon),
+      opt("patterns", patterns), opt("reconciliation", recon),
       opt("sla", sla), opt("quality", quality))
     val (f, r, v, fr, p, rc, s, q) = (
       await("feeds", fs._1), await("revenue", fs._2),
       await("volume", fs._3), await("freshness", fs._4),
-      await("patterns", fs._5), await("recon", fs._6),
+      await("patterns", fs._5), await("reconciliation", fs._6),
       await("sla", fs._7), await("quality", fs._8))
 
     // guarded dispatch — same predicates as financial_monitoring_complete.py:117-168
@@ -108,16 +112,19 @@ final class MonitoringRunner(alerts: AlertManager,
         "dup_pct" -> st.dupPct.toString), Nil))
 
     MonitoringResult(f, r, v, fr, p, rc, s, q, sent,
-      renderReport(f, r, v, fr, p, rc, s, q, sent))
+      renderReport(f, r, v, fr, p, rc, s, q, sent, timedOut.toSet))
   }
 
-  /** Daily report synthesis (D9, `financial_monitoring_dag.py:111-145`). */
+  /** Daily report synthesis (D9, `financial_monitoring_dag.py:111-145`).
+    * A check with no status reads TIMED OUT when its name is in
+    * `timedOut`, else CHECK FAILED (it threw). */
   private def renderReport(
       f: Option[FeedStatus], r: Option[RevenueStatus], v: Option[VolumeStatus],
       fr: Option[FreshnessStatus], p: Option[PatternStatus], rc: Option[ReconStatus],
-      s: Option[SlaStatus], q: Option[QualityStatus], sent: Int): String = {
+      s: Option[SlaStatus], q: Option[QualityStatus], sent: Int,
+      timedOut: Set[String]): String = {
     def line(name: String, status: Option[String]): String =
-      f"  $name%-16s ${status.getOrElse("CHECK FAILED")}"
+      f"  $name%-16s ${status.getOrElse(if (timedOut(name)) "TIMED OUT" else "CHECK FAILED")}"
     Seq(
       "=== Daily Monitoring Report ===",
       line("feeds", f.map(x => s"${x.missingFeeds.size} missing (${x.severity})")),

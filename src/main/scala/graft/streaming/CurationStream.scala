@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.{Catalog, Clock, SystemClock}
 import graft.ext.TextStats
@@ -135,7 +135,6 @@ object CurationStream {
       queryName: String = "graft_media_curation_stream",
       continuous: Boolean = false, interval: String = "1 minute",
       checkpoint: Option[String] = None,
-      exactlyOnce: Boolean = false,
       geometricTolerance: Double = 0.0, spectralMaxFreq: Int = 3,
       nPlanes: Int = 8, nTables: Int = 4,
       threshold: Double = 0.9): StreamingQuery = {
@@ -145,11 +144,11 @@ object CurationStream {
     val process: (DataFrame, Long) => Unit =
       if (geometricTolerance > 0.0) {
         val dedup = new IncrementalLshDedup(catalog, table, blocksTable,
-          nPlanes, nTables, threshold, idCol, "feature", exactlyOnce)
+          nPlanes, nTables, threshold, idCol, "feature")
         (batch, id) => dedup.processBatch(batch, id)
       } else {
         val dedup = IncrementalImageDedup(catalog, table, blocksTable,
-          maxHamming, payloadCol, idCol, exactlyOnce)
+          maxHamming, payloadCol, idCol)
         (batch, id) => dedup.processBatch(batch, id)
       }
     StreamingAppend.startForeachBatch(gated, queryName, continuous,
@@ -225,10 +224,9 @@ object CurationStream {
       watermark: String = "1 hour",
       queryName: String = "graft_audio_curation_stream",
       continuous: Boolean = false, interval: String = "1 minute",
-      checkpoint: Option[String] = None,
-      exactlyOnce: Boolean = false): StreamingQuery = {
+      checkpoint: Option[String] = None): StreamingQuery = {
     val dedup = new IncrementalLshDedup(catalog, table, bucketsTable,
-      nPlanes, nTables, threshold, idCol, "feature", exactlyOnce)
+      nPlanes, nTables, threshold, idCol, "feature")
     val gated = curateAudio(media, payloadCol, idCol, tsCol,
       minSampleRate, sampleRate, frames, watermark)
     StreamingAppend.startForeachBatch(gated, queryName, continuous,
@@ -289,7 +287,6 @@ object CurationStream {
       maxHamming: Int = 3, nPlanes: Int = 8, nTables: Int = 4,
       threshold: Double = 0.9, frames: Int = 64,
       payloadCol: String = "payload", idCol: String = "media_id",
-      exactlyOnce: Boolean = false,
       videoTrimTolerance: Int = 0,
       audioTrimTolerance: Int = 0,
       segmentSamples: Int = 2048,
@@ -305,7 +302,7 @@ object CurationStream {
       s"audioTrimTolerance must be in [0, " +
         s"${graft.ext.Multimodal.MaxAudioSegments}), got $audioTrimTolerance")
     private val image = IncrementalImageDedup(catalog, s"${tablePrefix}_image",
-      s"${tablePrefix}_image_blocks", maxHamming, payloadCol, idCol, exactlyOnce)
+      s"${tablePrefix}_image_blocks", maxHamming, payloadCol, idCol)
     // audioTrimTolerance > 0 swaps the audio pool's rung exactly like the
     // batch dispatcher's knob (r19): any-SEGMENT matching over trim+1
     // fixed-length windows (drops a head-trimmed re-encode the whole-clip
@@ -315,7 +312,7 @@ object CurationStream {
       if (audioTrimTolerance == 0)
         Some(new IncrementalLshDedup(catalog, s"${tablePrefix}_audio",
           s"${tablePrefix}_audio_buckets", nPlanes, nTables, threshold,
-          idCol, "feature", exactlyOnce))
+          idCol, "feature"))
       else None
     private val audioSegs: Option[IncrementalAudioSegmentDedup] =
       if (audioTrimTolerance > 0)
@@ -323,8 +320,7 @@ object CurationStream {
           s"${tablePrefix}_audio", s"${tablePrefix}_audio_buckets",
           s"${tablePrefix}_audio_segs", nPlanes, nTables, threshold,
           segments = audioTrimTolerance + 1, segmentSamples = segmentSamples,
-          payloadCol = payloadCol, idCol = idCol, exactlyOnce = exactlyOnce,
-          spectral = audioSegmentSpectral))
+          payloadCol = payloadCol, idCol = idCol, spectral = audioSegmentSpectral))
       else None
     // videoTrimTolerance > 0 swaps the video pool's rung exactly like the
     // batch dispatcher's knob: any-frame matching over trim+1 sampled
@@ -333,13 +329,13 @@ object CurationStream {
     private val videoExact: Option[IncrementalExactDedup] =
       if (videoTrimTolerance == 0)
         Some(new IncrementalExactDedup(catalog, s"${tablePrefix}_video",
-          s"${tablePrefix}_video_digests", payloadCol, idCol, exactlyOnce))
+          s"${tablePrefix}_video_digests", payloadCol, idCol))
       else None
     private val videoFrames: Option[IncrementalVideoFrameDedup] =
       if (videoTrimTolerance > 0)
         Some(new IncrementalVideoFrameDedup(catalog, s"${tablePrefix}_video",
           s"${tablePrefix}_video_blocks", videoTrimTolerance + 1, maxHamming,
-          payloadCol, idCol, exactlyOnce))
+          payloadCol, idCol))
       else None
     private val othersChecked = scala.collection.mutable.Set.empty[String]
 
@@ -411,8 +407,7 @@ object CurationStream {
         val nOth = passThrough.count()
         if (nOth > 0)
           StreamingAppend.appendOnce(catalog, s"${tablePrefix}_others",
-            passThrough, batchId, keys = Seq(idCol), partitionBy = Nil,
-            partitionMode = exactlyOnce, modeChecked = othersChecked)
+            passThrough, batchId, Nil, othersChecked)
         Map("image" -> nImg, "audio" -> nAud, "video" -> nVid,
           "others" -> nOth)
       } finally headed.unpersist(blocking = false)
@@ -432,15 +427,13 @@ object CurationStream {
       queryName: String = "graft_mixed_curation_stream",
       continuous: Boolean = false, interval: String = "1 minute",
       checkpoint: Option[String] = None,
-      exactlyOnce: Boolean = false,
       videoTrimTolerance: Int = 0,
       audioTrimTolerance: Int = 0,
       segmentSamples: Int = 2048,
       audioSegmentSpectral: Boolean = false): StreamingQuery = {
     val router = new KindRouter(catalog, tablePrefix, maxHamming, nPlanes,
-      nTables, threshold, frames, payloadCol, idCol, exactlyOnce,
-      videoTrimTolerance, audioTrimTolerance, segmentSamples,
-      audioSegmentSpectral)
+      nTables, threshold, frames, payloadCol, idCol, videoTrimTolerance,
+      audioTrimTolerance, segmentSamples, audioSegmentSpectral)
     val gated = (if (media.isStreaming) media.withWatermark(tsCol, watermark)
                  else media)
       .filter(graft.ext.Sampling.mixtureKeep(col(idCol), sampleRate))

@@ -29,9 +29,9 @@ import graft.core.Catalog
   *     of the same batch (the batch sweeps' min-id-keeper rule) — one
   *     action collects the dropped ids;
   *  6. appends survivors to the corpus, then their state rows, all
-  *     filtered by those ids, exactly-once via
-  *     [[StreamingAppend.appendOnce]]; everything persisted is released in
-  *     one `finally`.
+  *     filtered by those ids, each as one batch-id-keyed manifest commit
+  *     ([[StreamingAppend.appendOnce]]); everything persisted is released
+  *     in one `finally`.
   *
   * Semantics: greedy-prefix (online) dedup against ACCEPTED units only. On
   * chain-free data this equals the batch sweep (each family's StreamingSpec
@@ -39,23 +39,18 @@ import graft.core.Catalog
   * keeps it (B was never accepted, so C duplicates nothing downstream).
   *
   * Durability: the corpus appends before the state, so a crash between
-  * them replays cleanly in either append mode. Manifest commits (default)
-  * skip a replayed batch id per table; the recomputed survivors are the
-  * same, because the crashed attempt's corpus rows have no state rows yet.
-  * `exactlyOnce = true` tags rows with the batch id and anti-joins a
-  * replay against its own partial commit; the probe then excludes this
-  * batch's partially committed state rows
-  * ([[StreamingAppend.acceptedState]]), or the batch would drop as a
-  * duplicate of itself and never write its missing state rows. */
+  * them replays cleanly. Each commit is all-or-nothing and a replayed
+  * batch id is skipped per table, so the probe never sees a partial
+  * commit of this batch; the recomputed survivors are the same, because
+  * the crashed attempt's corpus rows have no state rows yet. */
 private[streaming] abstract class DedupCore(catalog: Catalog,
-    corpusTable: String, idCol: String, exactlyOnce: Boolean,
-    defaultQueryName: String) {
+    corpusTable: String, idCol: String, defaultQueryName: String) {
 
   /** Fault-injection hook (tests): throw once AFTER the corpus append but
     * BEFORE the state appends — the window a plain replay would double. */
   private[graft] var crashBetweenAppendsOnce: Boolean = false
 
-  private val modeChecked = mutable.Set.empty[String]
+  private val layoutChecked = mutable.Set.empty[String]
   // the radius stamp is checked once per loop (single-writer contract)
   private var stampChecked = false
 
@@ -80,8 +75,8 @@ private[streaming] abstract class DedupCore(catalog: Catalog,
   /** Old payloads: a table keyed by `unit` and the payload expression over
     * it, or None when the probe carries them. */
   protected def joinBack: Option[(String, Column)] = None
-  /** State appends in order: (table, rows, replay keys). */
-  protected def stateAppends(units: DataFrame, cells: DataFrame): Seq[(String, DataFrame, Seq[String])]
+  /** State appends in order: (table, rows). */
+  protected def stateAppends(units: DataFrame, cells: DataFrame): Seq[(String, DataFrame)]
   /** The blocking radius the probed table must be stamped with
     * (`max_hamming`), for families whose pigeonhole blocks depend on it. */
   protected def stampedRadius: Option[Int] = None
@@ -104,15 +99,14 @@ private[streaming] abstract class DedupCore(catalog: Catalog,
       def withPayload(pairs: DataFrame, key: String, as: String): DataFrame =
         pairs.join(broadcast(unitRows.select(col(unit).as(key), col(payload).as(as))), Seq(key))
 
-      // loadIfReadable, not exists+load: a FIRST-batch crash during the
-      // state append (partition mode) leaves only _temporary droppings,
-      // which take the fresh-table branch instead of wedging every replay
+      // loadIfReadable, not exists+load: a state directory holding only
+      // the _temporary droppings of a crashed plain write takes the
+      // fresh-table branch instead of wedging every replay
       val droppedVsState = StreamingAppend.loadIfReadable(catalog, probed) match {
         case None => batch.select(col(idCol)).limit(0)
         case Some(loaded) =>
           if (!stampChecked) stampedRadius.foreach(checkRadius(loaded, _))
-          val candidates = once(probe(
-            StreamingAppend.acceptedState(loaded, batchId, exactlyOnce), cellRows))
+          val candidates = once(probe(loaded, cellRows))
           val scored = joinBack match {
             case None => candidates
             case Some((table, old)) =>
@@ -161,14 +155,14 @@ private[streaming] abstract class DedupCore(catalog: Catalog,
         // a null id never matches a dropped one: its row survives, as under
         // an anti-join, and carries no state rows
         appendOnce(batch.filter(col(idCol).isNull || kept(col(idCol))), corpusTable,
-          Seq(idCol), batchId)
+          batchId)
         if (crashBetweenAppendsOnce) {
           crashBetweenAppendsOnce = false
           throw new RuntimeException("injected crash between the corpus append and the state appends")
         }
-        stateAppends(unitRows, cellRows).foreach { case (table, rows, keys) =>
+        stateAppends(unitRows, cellRows).foreach { case (table, rows) =>
           val o = owner(col(unit))
-          appendOnce(rows.filter(o.isNotNull && kept(o)), table, keys, batchId)
+          appendOnce(rows.filter(o.isNotNull && kept(o)), table, batchId)
         }
       }
       n
@@ -183,16 +177,13 @@ private[streaming] abstract class DedupCore(catalog: Catalog,
     StreamingAppend.startForeachBatch(stream, queryName, continuous,
       interval, checkpoint) { (batch, id) => processBatch(batch, id); () }
 
-  private def appendOnce(rows: DataFrame, table: String, keys: Seq[String],
-      batchId: Long): Unit =
-    StreamingAppend.appendOnce(catalog, table, rows, batchId, keys = keys,
-      partitionBy = Nil, partitionMode = exactlyOnce, modeChecked = modeChecked)
+  private def appendOnce(rows: DataFrame, table: String, batchId: Long): Unit =
+    StreamingAppend.appendOnce(catalog, table, rows, batchId, Nil, layoutChecked)
 
   /** Blocks encode `radius + 1` pigeonhole slots, so probing a table
     * blocked at another radius silently loses the recall guarantee: the
-    * table's self-stamped radius must match. It reads the UNFILTERED rows
-    * (a crashed attempt's partial rows carry the stamp too); an empty
-    * table (an all-undecodable first batch) carries none yet. */
+    * table's self-stamped radius must match. An empty table (an
+    * all-undecodable first batch) carries no stamp yet. */
   private def checkRadius(loaded: DataFrame, radius: Int): Unit =
     loaded.select("max_hamming").limit(1).collect().headOption.foreach { row =>
       require(row.getInt(0) == radius,

@@ -21,14 +21,12 @@ import graft.ext.Dedup
   *    re-derived from the corpus keyed by candidate id (state stays
   *    narrow instead of staging every shingle array).
   *
-  * Crash-replay is injected and asserted for both append modes in
-  * StreamingSpec. */
+  * Crash-replay is injected and asserted in StreamingSpec. */
 final class IncrementalDedup(
     catalog: Catalog, docsTable: String, bandsTable: String,
     textCol: String = "text", idCol: String = "doc_id",
-    shingleN: Int = 3, k: Int = 32, bands: Int = 8, threshold: Double = 0.5,
-    exactlyOnce: Boolean = false)
-    extends DedupCore(catalog, docsTable, idCol, exactlyOnce, "graft_incremental_dedup") {
+    shingleN: Int = 3, k: Int = 32, bands: Int = 8, threshold: Double = 0.5)
+    extends DedupCore(catalog, docsTable, idCol, "graft_incremental_dedup") {
   protected def payload = "sh"
   protected def units(batch: DataFrame) =
     batch.select(col(idCol), Dedup.shingleHashes(col(textCol), shingleN).as("sh"))
@@ -44,7 +42,7 @@ final class IncrementalDedup(
   override protected def joinBack =
     Some((docsTable, Dedup.shingleHashes(col(textCol), shingleN)))
   protected def stateAppends(units: DataFrame, cells: DataFrame) =
-    Seq((bandsTable, cells, Seq(idCol, "band")))
+    Seq((bandsTable, cells))
 }
 
 object IncrementalDedup {
@@ -73,9 +71,8 @@ object IncrementalDedup {
   * row — the cheapest of the six streaming dedup families. */
 final class IncrementalExactDedup(
     catalog: Catalog, docsTable: String, digestsTable: String,
-    payloadCol: String = "payload", idCol: String = "media_id",
-    exactlyOnce: Boolean = false)
-    extends DedupCore(catalog, docsTable, idCol, exactlyOnce, "graft_incremental_exact") {
+    payloadCol: String = "payload", idCol: String = "media_id")
+    extends DedupCore(catalog, docsTable, idCol, "graft_incremental_exact") {
   protected def payload = "fp"
   protected def units(batch: DataFrame) =
     batch.select(col(idCol), md5(col(payloadCol)).as("fp"))
@@ -89,5 +86,5 @@ final class IncrementalExactDedup(
       .select(col(idCol), col("fp").as("fp_a"), col("fp_b"))
   protected def accept(a: Column, b: Column) = a === b
   protected def stateAppends(units: DataFrame, cells: DataFrame) =
-    Seq((digestsTable, units, Seq(idCol)))
+    Seq((digestsTable, units))
 }

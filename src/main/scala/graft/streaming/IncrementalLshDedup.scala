@@ -23,9 +23,8 @@ import graft.ext.{CandidatePairs, Multimodal, Similarity}
 final class IncrementalLshDedup(
     catalog: Catalog, vecsTable: String, bucketsTable: String,
     nPlanes: Int, nTables: Int, threshold: Double,
-    idCol: String = "vec_id", vecCol: String = "embedding",
-    exactlyOnce: Boolean = false)
-    extends DedupCore(catalog, vecsTable, idCol, exactlyOnce, "graft_incremental_lsh") {
+    idCol: String = "vec_id", vecCol: String = "embedding")
+    extends DedupCore(catalog, vecsTable, idCol, "graft_incremental_lsh") {
   require(nPlanes >= 1 && nTables >= 1,
     s"explicit LSH config required, got ($nPlanes, $nTables)")
   protected def payload = vecCol
@@ -39,7 +38,7 @@ final class IncrementalLshDedup(
   protected def accept(a: Column, b: Column) = IncrementalLshDedup.accept(a, b, threshold)
   override protected def joinBack = Some((vecsTable, col(vecCol)))
   protected def stateAppends(units: DataFrame, cells: DataFrame) =
-    Seq((bucketsTable, cells, Seq(idCol, "tbl")))
+    Seq((bucketsTable, cells))
 }
 
 object IncrementalLshDedup {
@@ -91,9 +90,8 @@ final class IncrementalAudioSegmentDedup(
     nPlanes: Int, nTables: Int, threshold: Double = 0.9,
     segments: Int = 4, segmentSamples: Int = 2048, frames: Int = 16,
     payloadCol: String = "payload", idCol: String = "media_id",
-    exactlyOnce: Boolean = false,
     spectral: Boolean = false)
-    extends DedupCore(catalog, clipsTable, idCol, exactlyOnce, "graft_incremental_audioseg") {
+    extends DedupCore(catalog, clipsTable, idCol, "graft_incremental_audioseg") {
   require(nPlanes >= 1 && nTables >= 1,
     s"explicit LSH config required, got ($nPlanes, $nTables)")
   require(segments >= 1 && segments <= Multimodal.MaxAudioSegments,
@@ -117,5 +115,5 @@ final class IncrementalAudioSegmentDedup(
   protected def accept(a: Column, b: Column) = IncrementalLshDedup.accept(a, b, threshold)
   override protected def joinBack = Some((segsTable, col("feature")))
   protected def stateAppends(units: DataFrame, cells: DataFrame) =
-    Seq((segsTable, units, Seq("fid")), (bucketsTable, cells, Seq("fid", "tbl")))
+    Seq((segsTable, units), (bucketsTable, cells))
 }

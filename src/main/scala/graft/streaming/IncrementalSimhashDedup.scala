@@ -29,9 +29,8 @@ import graft.ext.{CandidatePairs, Dedup, Multimodal}
 final class IncrementalSimhashDedup(
     catalog: Catalog, docsTable: String, blocksTable: String,
     maxHamming: Int = 3, textCol: String = "text", idCol: String = "doc_id",
-    exactlyOnce: Boolean = false,
     signature: Column => Column = Dedup.simhash)
-    extends DedupCore(catalog, docsTable, idCol, exactlyOnce, "graft_incremental_simhash") {
+    extends DedupCore(catalog, docsTable, idCol, "graft_incremental_simhash") {
   require(maxHamming >= 0 && maxHamming <= 15,
     s"maxHamming must be in [0, 15], got $maxHamming")
   protected def payload = "sh"
@@ -46,7 +45,7 @@ final class IncrementalSimhashDedup(
     IncrementalSimhashDedup.stateCandidates(state, cells, idCol)
   protected def accept(a: Column, b: Column) = Dedup.hamming(a, b) <= maxHamming
   protected def stateAppends(units: DataFrame, cells: DataFrame) =
-    Seq((blocksTable, cells, Seq(idCol, "blk")))
+    Seq((blocksTable, cells))
   override protected def stampedRadius = Some(maxHamming)
 }
 
@@ -60,10 +59,9 @@ final class IncrementalSimhashDedup(
 object IncrementalImageDedup {
   def apply(catalog: Catalog, mediaTable: String, blocksTable: String,
       maxHamming: Int = 3, payloadCol: String = "payload",
-      idCol: String = "media_id", exactlyOnce: Boolean = false): IncrementalSimhashDedup =
+      idCol: String = "media_id"): IncrementalSimhashDedup =
     new IncrementalSimhashDedup(catalog, mediaTable, blocksTable, maxHamming,
-      payloadCol, idCol, exactlyOnce,
-      signature = p => graft.functions.ImageDHash(p).getField("dhash"))
+      payloadCol, idCol, signature = p => graft.functions.ImageDHash(p).getField("dhash"))
 }
 
 object IncrementalSimhashDedup {
@@ -105,9 +103,8 @@ object IncrementalSimhashDedup {
 final class IncrementalVideoFrameDedup(
     catalog: Catalog, docsTable: String, blocksTable: String,
     frames: Int = 3, maxHamming: Int = 3,
-    payloadCol: String = "payload", idCol: String = "media_id",
-    exactlyOnce: Boolean = false)
-    extends DedupCore(catalog, docsTable, idCol, exactlyOnce, "graft_incremental_videoframe") {
+    payloadCol: String = "payload", idCol: String = "media_id")
+    extends DedupCore(catalog, docsTable, idCol, "graft_incremental_videoframe") {
   require(frames >= 1 && frames <= Multimodal.MaxVideoFrames,
     s"frames must be 1..${Multimodal.MaxVideoFrames}, got $frames")
   require(maxHamming >= 0 && maxHamming <= 15,
@@ -129,6 +126,6 @@ final class IncrementalVideoFrameDedup(
     IncrementalSimhashDedup.stateCandidates(state, cells, "fid")
   protected def accept(a: Column, b: Column) = Dedup.hamming(a, b) <= maxHamming
   protected def stateAppends(units: DataFrame, cells: DataFrame) =
-    Seq((blocksTable, cells, Seq("fid", "blk")))
+    Seq((blocksTable, cells))
   override protected def stampedRadius = Some(maxHamming)
 }

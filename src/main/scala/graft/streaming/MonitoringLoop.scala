@@ -25,7 +25,7 @@ final case class BatchOutcome(batchId: Long, batchRows: Long, result: Monitoring
   * driver — the same 1-hour window as the reference (`alert_manager.py:199`).
   *
   * Scale design:
-  *  - Ingest is an append-only parquet write (atomic per task file); at
+  *  - Ingest is an append-only manifest commit (atomic per batch); at
   *    100 TB partition it by event date so the detectors' date-window
   *    filters prune partitions instead of scanning history. Per-batch
   *    detector cost is bounded by their trailing windows, not total size.
@@ -48,7 +48,6 @@ final class MonitoringLoop(
     maxAgeMinutes: Long = 240L,
     partitionBy: Seq[String] = Nil,
     clock: Option[Clock] = None,
-    dedupKeys: Seq[String] = Nil,
     reconDest: Option[String] = None) {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -111,35 +110,16 @@ final class MonitoringLoop(
     * through on restart. */
   private[graft] var crashAfterAppendOnce: Boolean = false
 
-  /** Ingest one micro-batch — EXACTLY-once either way:
-    *
-    *  - Default: an atomic manifest commit ([[Catalog.commitAppend]])
-    *    carrying the micro-batch id. The commit is all-or-nothing (a torn
-    *    append publishes nothing a reader can see) and idempotent (a
-    *    replayed batch id is skipped before any data is written), so no
-    *    per-table replay probe runs at all.
-    *  - With `dedupKeys` set, the pre-manifest batch-id-partition
-    *    convention: rows are tagged with the micro-batch id, the table is
-    *    additionally partitioned by that tag, and a replayed batch (crash
-    *    between append and offset commit) anti-joins away whatever its
-    *    crashed attempt already committed — including rows from a PARTIAL
-    *    append, since the comparison is per key, not per batch. Kept for
-    *    deployments that need a plain-directory table layout; at scale the
-    *    batch-id partition keeps the replay probe to one partition
-    *    directory's worth of IO, and the one-batch prior side broadcasts.
-    *
-    * Both mirror the reference's idempotent WRITE_TRUNCATE transform
-    * semantics (scripts/transform_script:17-24) in append-only form. Both
-    * conventions, their mode guards (each direction fails loudly instead
-    * of corrupting the other's layout), and the null-safe replay anti-join
-    * live in [[StreamingAppend.appendOnce]], shared with the incremental
-    * dedup families' [[DedupCore]]. */
-  private val modeChecked = mutable.Set.empty[String]
+  /** Ingest one micro-batch EXACTLY-once: an atomic manifest commit
+    * carrying the micro-batch id ([[StreamingAppend.appendOnce]], shared
+    * with the incremental dedup families' [[DedupCore]]). The commit is
+    * all-or-nothing (a torn append publishes nothing a reader can see)
+    * and idempotent (a replayed batch id is skipped before any data is
+    * written), so no per-table replay probe runs at all. */
+  private val layoutChecked = mutable.Set.empty[String]
 
   private def ingest(batch: DataFrame, batchId: Long): Unit =
-    StreamingAppend.appendOnce(catalog, table, batch, batchId,
-      keys = dedupKeys, partitionBy = partitionBy,
-      partitionMode = dedupKeys.nonEmpty, modeChecked = modeChecked)
+    StreamingAppend.appendOnce(catalog, table, batch, batchId, partitionBy, layoutChecked)
 
   private def loadIfReadable(t: String): Option[DataFrame] =
     StreamingAppend.loadIfReadable(catalog, t)
@@ -175,11 +155,10 @@ final class MonitoringLoop(
     }
 
     // loadIfReadable, not load: when the FIRST-ever micro-batch is empty
-    // under a partitioned layout (dedupKeys mode writes only _SUCCESS;
-    // a partitionBy stage has no files to publish), the table directory
-    // is absent or footer-less and a plain load would throw here —
-    // OUTSIDE the detectors' recover wrappers — killing the always-on
-    // query on every restart until data arrives. No readable table means
+    // under a partitioned layout (a partitionBy stage has no files to
+    // publish), the table has no committed snapshot and a plain load
+    // would throw here — OUTSIDE the detectors' recover wrappers —
+    // killing the always-on query on every restart until data arrives. No readable table means
     // no ingested history: monitor the empty frame (batch 1 on an empty
     // table is the documented detectors-run-on-empty-history case).
     val events = loadIfReadable(table).getOrElse(
@@ -250,11 +229,9 @@ final class MonitoringLoop(
     *
     * Pass `checkpoint` for restart durability: offsets commit after each
     * batch, so a restarted job resumes at the first unprocessed batch.
-    * Ingest is EXACTLY-once in both modes — the default atomic manifest
-    * commit skips a replayed batch id outright; `dedupKeys`
-    * (e.g. `Seq("event_id")`) selects the batch-id-partition convention
-    * instead, where [[ingest]] drops a replayed batch's already-committed
-    * rows by (batch id, key). Alert dedup absorbs replays either way. */
+    * Ingest is EXACTLY-once — the atomic manifest commit skips a replayed
+    * batch id outright — and alert dedup absorbs the replayed batch's
+    * detector run. */
   def start(stream: DataFrame, queryName: String = "graft_monitoring_loop",
       continuous: Boolean = false, interval: String = "1 minute",
       checkpoint: Option[String] = None): StreamingQuery =

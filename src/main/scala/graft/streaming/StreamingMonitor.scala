@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Exact
 
@@ -95,9 +95,8 @@ object StreamingMonitor {
     * cadence (AvailableNow) or continuously. */
   def start(anomalies: DataFrame, queryName: String,
       continuous: Boolean = false, interval: String = "1 minute"): StreamingQuery = {
-    val w: DataStreamWriter[org.apache.spark.sql.Row] = anomalies.writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-    (if (continuous) w.trigger(Trigger.ProcessingTime(interval))
-     else w.trigger(Trigger.AvailableNow())).start()
+    anomalies.writeStream.format("memory").queryName(queryName)
+      .outputMode("append")
+      .trigger(StreamingAppend.trigger(continuous, interval)).start()
   }
 }

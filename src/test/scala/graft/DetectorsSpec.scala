@@ -476,10 +476,11 @@ class DetectorsSpec extends SparkSpec {
     assert(result.revenue.exists(_.isAnomaly))
     assert(result.alertsSent >= 2)           // missing feeds + revenue anomaly
     assert(result.report.contains("CHECK FAILED"))
+    assert(!result.report.contains("TIMED OUT"))   // it threw; it did not hang
     assert(result.report.contains("3 missing"))
   }
 
-  test("MonitoringRunner: hung check times out to CHECK FAILED; run still completes") {
+  test("MonitoringRunner: hung check reports TIMED OUT; run still completes") {
     // a fatal throwable in a check body (StackOverflowError, interrupt)
     // escapes both Future.apply and the recover, so its future never
     // completes — the barrier must time out rather than hang the whole run
@@ -517,9 +518,12 @@ class DetectorsSpec extends SparkSpec {
       logger.setLevel(level)
       capture.stop()
     }
-    assert(result.feeds.isEmpty)             // timed out => failed, not hung
+    assert(result.feeds.isEmpty)             // timed out => no status, not hung
     assert(result.revenue.isDefined && result.quality.isDefined)
-    assert(result.report.contains("CHECK FAILED"))
+    // the report tells the hung check apart from one that threw
+    val feedsLine = result.report.linesIterator.find(_.trim.startsWith("feeds"))
+    assert(feedsLine.exists(_.trim == "feeds            TIMED OUT"), result.report)
+    assert(!result.report.contains("CHECK FAILED"), result.report)
     // and the timeout leaves a trace naming the check and the limit
     assert(warnings.toArray.toSeq == Seq("monitoring check 'feeds' timed out after 2 seconds"),
       warnings)

@@ -161,70 +161,6 @@ class StreamingSpec extends SparkSpec {
     assert(mem.received.nonEmpty)
   }
 
-  test("MonitoringLoop exactly-once ingest survives a crash between append and commit") {
-    import graft.alerts.{AlertManager, InMemorySink}
-    import graft.core.FixedClock
-    import graft.streaming.MonitoringLoop
-    implicit val sqlCtx = spark.sqlContext
-
-    val root = java.nio.file.Files.createTempDirectory("graft-eo").toString
-    val catalog = new graft.core.Catalog(spark, root)
-    val am = new AlertManager(FixedClock.at("2024-01-31T18:00:00Z"),
-      Seq(new InMemorySink("log")))
-    val loop = new MonitoringLoop(catalog, "monitoring.eo", am,
-      expectedFeeds = Seq("click"), dedupKeys = Seq("event_id"))
-    val checkpoint = Some(s"$root/chk")
-
-    val input = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
-    val stream = input.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-
-    // batch 0 commits cleanly
-    var q = loop.start(stream, continuous = true, interval = "1 second",
-      checkpoint = checkpoint)
-    input.addData((1L, ts("2024-01-31T17:30:00Z"), 10L, "click", 5.0, "{}"))
-    q.processAllAvailable()
-    q.stop()
-
-    // batch 1 crashes AFTER its append lands but BEFORE the offset commit —
-    // the window in which a plain append double-ingests on restart
-    loop.crashAfterAppendOnce = true
-    q = loop.start(stream, continuous = true, interval = "1 second",
-      checkpoint = checkpoint)
-    input.addData(
-      (2L, ts("2024-01-31T17:40:00Z"), 11L, "click", 2.0, "{}"),
-      (3L, ts("2024-01-31T17:45:00Z"), 12L, "click", 3.0, "{}"))
-    intercept[Throwable] { q.processAllAvailable(); q.awaitTermination() }
-    // the crashed attempt really did commit its rows first
-    assert(catalog.load("monitoring.eo").count() == 3)
-
-    // restart from the same checkpoint: batch 1 replays, and the
-    // (batch id, event_id) anti-join drops the already-committed rows
-    q = loop.start(stream, continuous = true, interval = "1 second",
-      checkpoint = checkpoint)
-    q.processAllAvailable()
-    q.stop()
-    val ingested = catalog.load("monitoring.eo")
-    assert(ingested.count() == 3, "replayed batch double-ingested")
-    assert(ingested.select("event_id").distinct().count() == 3)
-
-    // switching an existing plain-append table to exactly-once mode is
-    // rejected loudly: mixing __batch_id=N partition directories with flat
-    // files would corrupt parquet partition discovery
-    catalog.save(
-      Seq((9L, ts("2024-01-31T10:00:00Z"), 1L, "click", 1.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
-      "monitoring.plain")
-    val plainLoop = new MonitoringLoop(catalog, "monitoring.plain", am,
-      expectedFeeds = Seq("click"), dedupKeys = Seq("event_id"))
-    val err = intercept[IllegalArgumentException] {
-      plainLoop.runBatch(
-        Seq((10L, ts("2024-01-31T11:00:00Z"), 2L, "click", 1.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), 0L)
-    }
-    assert(err.getMessage.contains("__batch_id"))
-  }
-
   test("exactly-once ingest recovers a FIRST batch that crashed before any commit") {
     import graft.alerts.{AlertManager, InMemorySink}
     import graft.core.FixedClock
@@ -238,7 +174,7 @@ class StreamingSpec extends SparkSpec {
     val am = new AlertManager(FixedClock.at("2024-01-31T18:00:00Z"),
       Seq(new InMemorySink("log")))
     val loop = new MonitoringLoop(catalog, "monitoring.eofirst", am,
-      expectedFeeds = Seq("click"), dedupKeys = Seq("event_id"))
+      expectedFeeds = Seq("click"))
     // the replay must take the fresh-table branch instead of dying on
     // schema inference and wedging the loop until manual cleanup
     val r = loop.runBatch(
@@ -293,7 +229,7 @@ class StreamingSpec extends SparkSpec {
     val catalog = new graft.core.Catalog(spark, root)
     val am = new AlertManager(FixedClock.at("2024-01-31T18:00:00Z"),
       Seq(new InMemorySink("log")))
-    // NO dedupKeys: the default manifest commit alone must absorb the replay
+    // the manifest commit alone must absorb the replay
     val loop = new MonitoringLoop(catalog, "monitoring.mfeo", am,
       expectedFeeds = Seq("click"))
     val checkpoint = Some(s"$root/chk")
@@ -718,71 +654,6 @@ class StreamingSpec extends SparkSpec {
     assert(sweep == kept)
   }
 
-  test("IncrementalDedup exactlyOnce: a crash between the two appends replays cleanly") {
-    import graft.streaming.IncrementalDedup
-    val root = java.nio.file.Files.createTempDirectory("graft-incdedup-eo").toString
-    val catalog = new graft.core.Catalog(spark, root)
-    val inc = new IncrementalDedup(catalog, "eo.docs", "eo.bands",
-      threshold = 0.3, exactlyOnce = true)
-
-    val base = "the quick brown fox jumps over the lazy dog near the old barn today"
-    val fresh = "statistical machine translation systems were replaced by large transformers"
-    val freshNear = "statistical machine translation systems were replaced by huge transformers"
-
-    inc.processBatch(Seq((1L, base)).toDF("doc_id", "text"), 0L)
-
-    // batch 1 crashes AFTER its docs append but BEFORE its bands append —
-    // the window where a plain replay would duplicate the docs
-    inc.crashBetweenAppendsOnce = true
-    val b1 = Seq((2L, fresh)).toDF("doc_id", "text")
-    intercept[RuntimeException] { inc.processBatch(b1, 1L) }
-    assert(catalog.load("eo.docs").filter($"doc_id" === 2L).count() == 1)
-    assert(catalog.load("eo.bands").filter($"doc_id" === 2L).count() == 0)
-
-    // the replay appends NOTHING to docs (batch-id anti-join) and lands
-    // the missing bands, restoring consistency
-    inc.processBatch(b1, 1L)
-    assert(catalog.load("eo.docs").filter($"doc_id" === 2L).count() == 1)
-    assert(catalog.load("eo.bands").filter($"doc_id" === 2L)
-      .select("band").distinct().count() == 8)
-
-    // state is whole again: a later near-dup of the replayed doc drops
-    inc.processBatch(Seq((3L, freshNear)).toDF("doc_id", "text"), 2L)
-    assert(catalog.load("eo.docs").filter($"doc_id" === 3L).count() == 0)
-    assert(catalog.load("eo.docs").count() == 2)
-  }
-
-  test("IncrementalDedup: switching exactlyOnce over an existing table fails loudly both ways") {
-    import graft.streaming.IncrementalDedup
-    val root = java.nio.file.Files.createTempDirectory("graft-incdedup-mode").toString
-    val catalog = new graft.core.Catalog(spark, root)
-    val doc = "the quick brown fox jumps over the lazy dog near the old barn today"
-    val doc2 = "completely different content about spark query engines and shuffles here"
-
-    // at-least-once tables, then exactlyOnce = true: the replay probe would
-    // hit a missing __batch_id column — must throw, not AnalysisException
-    new IncrementalDedup(catalog, "m.docs", "m.bands", threshold = 0.3)
-      .processBatch(Seq((1L, doc)).toDF("doc_id", "text"), 0L)
-    val toExact = new IncrementalDedup(catalog, "m.docs", "m.bands",
-      threshold = 0.3, exactlyOnce = true)
-    val e1 = intercept[IllegalArgumentException] {
-      toExact.processBatch(Seq((2L, doc2)).toDF("doc_id", "text"), 1L)
-    }
-    assert(e1.getMessage.contains("__batch_id"))
-
-    // exactly-once tables, then exactlyOnce = false: a plain append would
-    // mix flat files into the partitioned layout and the replay protection
-    // would degrade silently — must throw
-    new IncrementalDedup(catalog, "m2.docs", "m2.bands",
-      threshold = 0.3, exactlyOnce = true)
-      .processBatch(Seq((1L, doc)).toDF("doc_id", "text"), 0L)
-    val toPlain = new IncrementalDedup(catalog, "m2.docs", "m2.bands", threshold = 0.3)
-    val e2 = intercept[IllegalArgumentException] {
-      toPlain.processBatch(Seq((2L, doc2)).toDF("doc_id", "text"), 1L)
-    }
-    assert(e2.getMessage.contains("exactly-once"))
-  }
-
   test("MonitoringLoop restart: event clock reseeds from the table; manifest mode guards the eo layout") {
     import graft.alerts.{AlertManager, InMemorySink}
     import graft.core.FixedClock
@@ -811,18 +682,39 @@ class StreamingSpec extends SparkSpec {
     restarted.runBatch(row(2L, "2024-01-31T12:00:00Z"), 1L)
     assert(restarted.currentEventTime.contains(hiWater))
 
-    // reverse mode guard: a manifest-mode loop pointed at a table written
-    // in the exactly-once partition convention must fail loudly — adopting
-    // it would publish a snapshot that orphans the table's history
-    val eoLoop = new MonitoringLoop(catalog, "monitoring.reseedeo", am,
-      expectedFeeds = Seq("click"), dedupKeys = Seq("event_id"))
-    eoLoop.runBatch(row(3L, "2024-01-31T17:00:00Z"), 0L)
-    val plain = new MonitoringLoop(catalog, "monitoring.reseedeo", am,
+    // legacy-layout guard: tables written by earlier releases' batch-id-
+    // partition convention (rows tagged and partitioned by __batch_id)
+    // must be refused loudly by MonitoringLoop and the dedup families —
+    // adopting one would publish a snapshot that orphans its history
+    import org.apache.spark.sql.functions.lit
+    import graft.streaming.IncrementalDedup
+    def legacy(df: org.apache.spark.sql.DataFrame, t: String): Unit =
+      catalog.append(df.withColumn("__batch_id", lit(0L)), t, Seq("__batch_id"))
+    legacy(row(3L, "2024-01-31T17:00:00Z"), "monitoring.legacy")
+    val onLegacy = new MonitoringLoop(catalog, "monitoring.legacy", am,
       expectedFeeds = Seq("click"))
     val err = intercept[IllegalArgumentException] {
-      plain.runBatch(row(4L, "2024-01-31T17:10:00Z"), 1L)
+      onLegacy.runBatch(row(4L, "2024-01-31T17:10:00Z"), 1L)
     }
     assert(err.getMessage.contains("__batch_id"))
+
+    val doc = "the quick brown fox jumps over the lazy dog near the old barn today"
+    val doc2 = "completely different content about spark query engines and shuffles here"
+    val docs = Seq((1L, doc)).toDF("doc_id", "text")
+    legacy(docs, "legacy.docs")
+    legacy(graft.ext.Dedup.minhashTable(docs, "text", "doc_id", 3, 32, 8), "legacy.bands")
+    val dedup = new IncrementalDedup(catalog, "legacy.docs", "legacy.bands", threshold = 0.3)
+    val err2 = intercept[IllegalArgumentException] {
+      dedup.processBatch(Seq((2L, doc2)).toDF("doc_id", "text"), 1L)
+    }
+    assert(err2.getMessage.contains("__batch_id"))
+    // refused before any commit: all three tables are as the earlier release left them
+    Seq("monitoring.legacy", "legacy.docs", "legacy.bands").foreach { t =>
+      val (ns, name) = catalog.parseRef(t)
+      assert(!catalog.isManifest(ns, name), s"$t was adopted into manifest commits")
+    }
+    assert(catalog.load("monitoring.legacy").count() == 1)
+    assert(catalog.load("legacy.docs").count() == 1)
   }
 
   test("exactly-once replay dedups null-keyed rows too") {
@@ -835,9 +727,9 @@ class StreamingSpec extends SparkSpec {
     val am = new AlertManager(FixedClock.at("2024-01-31T18:00:00Z"),
       Seq(new InMemorySink("log")))
     val loop = new MonitoringLoop(catalog, "monitoring.nullkey", am,
-      expectedFeeds = Seq("click"), dedupKeys = Seq("event_id"))
+      expectedFeeds = Seq("click"))
     // one well-formed row, one with a NULL key — exactly the malformed
-    // shape a plain equi-anti-join can never match on replay
+    // shape a key-based replay probe (an equi-anti-join) never matches
     val batch = Seq(
       (Some(1L), ts("2024-01-31T17:30:00Z"), 10L, "click", 5.0, "{}"),
       (Option.empty[Long], ts("2024-01-31T17:31:00Z"), 11L, "click", 2.0, "{}"))
@@ -845,44 +737,10 @@ class StreamingSpec extends SparkSpec {
     loop.runBatch(batch, 0L)
     assert(catalog.load("monitoring.nullkey").count() == 2)
     // same batch id again = the crash-between-append-and-offset replay:
-    // the null-safe anti-join must drop BOTH committed rows
+    // the commit skips the whole batch by its id, null-keyed row included
     loop.runBatch(batch, 0L)
     assert(catalog.load("monitoring.nullkey").count() == 2,
       "replay double-ingested a null-keyed row")
-  }
-
-  test("IncrementalDedup exactlyOnce: a crash PARTWAY through the bands append replays clean") {
-    import graft.ext.Dedup
-    import graft.streaming.IncrementalDedup
-    import org.apache.spark.sql.functions.{col, lit}
-
-    val root = java.nio.file.Files.createTempDirectory("graft-partband").toString
-    val catalog = new graft.core.Catalog(spark, root)
-    val dedup = new IncrementalDedup(catalog, "cur.pdocs", "cur.pbands",
-      threshold = 0.5, exactlyOnce = true)
-    val doc1 = "the quick brown fox jumps over the lazy dog again and again"
-    val doc2 = "an entirely different document about spark manifests and streams"
-    assert(dedup.processBatch(Seq((1L, doc1)).toDF("doc_id", "text"), 0L) == 1L)
-
-    // batch 1 crashes between the docs append and the bands append...
-    val batch2 = Seq((2L, doc2)).toDF("doc_id", "text")
-    dedup.crashBetweenAppendsOnce = true
-    intercept[RuntimeException] { dedup.processBatch(batch2, 1L) }
-    // ...and worse: a SUBSET of its band rows did land before the crash
-    // (plain parquet appends are atomic per task file, not per job)
-    val partial = Dedup.minhashTable(batch2, "text", "doc_id", 3, 32, 8)
-      .limit(3).withColumn("__batch_id", lit(1L))
-    catalog.append(partial, "cur.pbands", Seq("__batch_id"))
-
-    // replay: the batch's docs must NOT collide with their own partial
-    // band rows (jaccard 1.0 against itself) — they stay survivors, and
-    // the bands append fills in exactly the missing rows
-    assert(dedup.processBatch(batch2, 1L) == 1L,
-      "replayed batch dropped its own docs as self-duplicates")
-    assert(catalog.load("cur.pdocs").filter(col("doc_id") === 2L).count() == 1)
-    val bandRows = catalog.load("cur.pbands").filter(col("doc_id") === 2L)
-    assert(bandRows.count() == 8, "partial band set never completed")
-    assert(bandRows.select("band").distinct().count() == 8)
   }
 
   /** Rows the file scans under each of `roots` produced across every query
@@ -1831,8 +1689,8 @@ class StreamingSpec extends SparkSpec {
     assert(inc.processBatch(Seq((9L, near)).toDF("doc_id", "text"), 2L) == 0L)
   }
 
-  test("dedup twins crash fuzz: a crashed+replayed run equals a clean run, all families, both modes") {
-    // Seeded state-machine fuzz over the three incremental dedup loops:
+  test("dedup twins crash fuzz: a crashed+replayed run equals a clean run, all families") {
+    // Seeded state-machine fuzz over the six incremental dedup loops:
     // drive the same randomized batch stream through a CRASHY instance
     // (between-appends crash injected on ~1/3 of batches, each followed by
     // the replay the streaming runtime would issue) and a CLEAN instance
@@ -1852,32 +1710,32 @@ class StreamingSpec extends SparkSpec {
     // arrivals are (globally-unique id, content key) pairs — dup CONTENT
     // always re-arrives under a fresh id, so survivor sets are
     // content-determined
-    val families = Seq[(String, (graft.core.Catalog, String, String, Boolean) => Harness, Seq[(Long, Int)] => org.apache.spark.sql.DataFrame)](
-      ("minhash", (c, d, s, eo) => {
-        val l = new IncrementalDedup(c, d, s, threshold = 0.3, exactlyOnce = eo)
+    val families = Seq[(String, (graft.core.Catalog, String, String) => Harness, Seq[(Long, Int)] => org.apache.spark.sql.DataFrame)](
+      ("minhash", (c, d, s) => {
+        val l = new IncrementalDedup(c, d, s, threshold = 0.3)
         Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
           () => l.crashBetweenAppendsOnce = false)
       }, rows => rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")),
-      ("simhash", (c, d, s, eo) => {
-        val l = new IncrementalSimhashDedup(c, d, s, maxHamming = 3, exactlyOnce = eo)
+      ("simhash", (c, d, s) => {
+        val l = new IncrementalSimhashDedup(c, d, s, maxHamming = 3)
         Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
           () => l.crashBetweenAppendsOnce = false)
       }, rows => rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")),
-      ("lsh", (c, d, s, eo) => {
+      ("lsh", (c, d, s) => {
         val l = new IncrementalLshDedup(c, d, s, nPlanes = 4, nTables = 8,
-          threshold = 0.999, exactlyOnce = eo)
+          threshold = 0.999)
         Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
           () => l.crashBetweenAppendsOnce = false)
       }, rows => rows.map { case (id, k) => (id, vec(k)) }.toDF("vec_id", "embedding")),
-      ("exact", (c, d, s, eo) => {
-        val l = new graft.streaming.IncrementalExactDedup(c, d, s, exactlyOnce = eo)
+      ("exact", (c, d, s) => {
+        val l = new graft.streaming.IncrementalExactDedup(c, d, s)
         Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
           () => l.crashBetweenAppendsOnce = false)
       }, rows => rows.map { case (id, k) => (id, text(k).getBytes) }
         .toDF("media_id", "payload")),
-      ("videoframe", (c, d, s, eo) => {
+      ("videoframe", (c, d, s) => {
         val l = new graft.streaming.IncrementalVideoFrameDedup(c, d, s,
-          frames = 2, maxHamming = 3, exactlyOnce = eo)
+          frames = 2, maxHamming = 3)
         Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
           () => l.crashBetweenAppendsOnce = false)
       }, rows => rows.map { case (id, k) =>
@@ -1885,9 +1743,9 @@ class StreamingSpec extends SparkSpec {
           graft.functions.JpegGray.encodeGray(16, 16,
             graft.ext.Multimodal.patternPixels(k * 131L + f, 16, 16), 92))))
       }.toDF("media_id", "payload")),
-      ("audioseg", (c, d, s, eo) => {
+      ("audioseg", (c, d, s) => {
         val l = new graft.streaming.IncrementalAudioSegmentDedup(c, d, s, s"${s}_segs",
-          nPlanes = 8, nTables = 4, threshold = 0.999, segments = 2, exactlyOnce = eo)
+          nPlanes = 8, nTables = 4, threshold = 0.999, segments = 2)
         Harness(l.processBatch, () => l.crashBetweenAppendsOnce = true,
           () => l.crashBetweenAppendsOnce = false)
       }, rows => rows.map { case (id, k) =>
@@ -1895,8 +1753,8 @@ class StreamingSpec extends SparkSpec {
           graft.ext.Multimodal.waveformSamples(k.toLong, 2 * 2048, 0)))
       }.toDF("media_id", "payload")))
 
-    for ((fam, mkLoop, mkBatch) <- families; eo <- Seq(false, true)) {
-      val rnd = new scala.util.Random(fam.hashCode ^ (if (eo) 77 else 13))
+    for ((fam, mkLoop, mkBatch) <- families) {
+      val rnd = new scala.util.Random(fam.hashCode ^ 13)
       // the batch stream: content keys, ~40% re-arrivals of earlier keys
       val seen = scala.collection.mutable.ArrayBuffer[Int]()
       var nextId = 0L
@@ -1909,10 +1767,10 @@ class StreamingSpec extends SparkSpec {
           (nextId, k)
         }
       }
-      val root = java.nio.file.Files.createTempDirectory(s"graft-fz-$fam-$eo").toString
+      val root = java.nio.file.Files.createTempDirectory(s"graft-fz-$fam").toString
       val cat = new graft.core.Catalog(spark, root)
-      val crashy = mkLoop(cat, s"fz.${fam}_docs", s"fz.${fam}_state", eo)
-      val clean = mkLoop(cat, s"fz.${fam}_docs2", s"fz.${fam}_state2", eo)
+      val crashy = mkLoop(cat, s"fz.${fam}_docs", s"fz.${fam}_state")
+      val clean = mkLoop(cat, s"fz.${fam}_docs2", s"fz.${fam}_state2")
       batches.zipWithIndex.foreach { case (keys, b) =>
         val df = mkBatch(keys)
         if (rnd.nextDouble() < 0.35) {
@@ -1937,27 +1795,28 @@ class StreamingSpec extends SparkSpec {
       def ids(t: String) = cat.load(t).select(idCol).collect()
         .map(_.getLong(0)).toSet
       assert(ids(s"fz.${fam}_docs") == ids(s"fz.${fam}_docs2"),
-        s"$fam eo=$eo: crashed+replayed survivors differ from clean run")
+        s"$fam: crashed+replayed survivors differ from clean run")
       assert(cat.load(s"fz.${fam}_state").count() ==
         cat.load(s"fz.${fam}_state2").count(),
-        s"$fam eo=$eo: state row counts diverged")
+        s"$fam: state row counts diverged")
       // and re-arrivals of every surviving content key still drop: state
       // is complete after the crashes
       val replay = seen.distinct.take(4).zipWithIndex
         .map { case (k, i) => (900000L + i, k) }
       val n = crashy.process(mkBatch(replay.toSeq), 99L)
-      assert(n == 0L, s"$fam eo=$eo: $n re-arrivals survived against healed state")
+      assert(n == 0L, s"$fam: $n re-arrivals survived against healed state")
       spark.sharedState.cacheManager.clearCache()
     }
   }
 
   test("dedup twins: a first-batch crash that left only _temporary droppings does not wedge replays") {
-    // A FIRST state-table append that crashed between job start and the
-    // first task-file commit leaves the directory existing but with no
-    // readable parquet — exists() says present, load() throws
+    // A plain parquet write into a state directory that crashed between job
+    // start and the first task-file commit leaves the directory existing
+    // but with no readable parquet — exists() says present, load() throws
     // UNABLE_TO_INFER_SCHEMA. The probes must treat readable-nothing as a
-    // fresh table (the loadIfReadable contract) or every replay wedges
-    // until manual cleanup.
+    // fresh table (the loadIfReadable contract), and the first manifest
+    // commit must land beside the droppings, or every replay wedges until
+    // manual cleanup.
     import graft.streaming.{IncrementalDedup, IncrementalLshDedup, IncrementalSimhashDedup}
     import org.apache.spark.sql.functions.{col, shiftright}
     val root = java.nio.file.Files.createTempDirectory("graft-wedge").toString
@@ -1969,20 +1828,19 @@ class StreamingSpec extends SparkSpec {
     val text = "the quick brown fox jumps over the lazy dog near the old barn today"
 
     plantDroppings("w", "bands")
-    val mh = new IncrementalDedup(cat, "w.docs", "w.bands", threshold = 0.3,
-      exactlyOnce = true)
+    val mh = new IncrementalDedup(cat, "w.docs", "w.bands", threshold = 0.3)
     assert(mh.processBatch(Seq((1L, text)).toDF("doc_id", "text"), 0L) == 1L)
     assert(cat.load("w.bands").select("doc_id").distinct().count() == 1L)
 
     plantDroppings("w", "sblocks")
     val sh = new IncrementalSimhashDedup(cat, "w.sdocs", "w.sblocks",
-      maxHamming = 3, exactlyOnce = true)
+      maxHamming = 3)
     assert(sh.processBatch(Seq((1L, text)).toDF("doc_id", "text"), 0L) == 1L)
     assert(cat.load("w.sblocks").select("doc_id").distinct().count() == 1L)
 
     plantDroppings("w", "vbuckets")
     val lsh = new IncrementalLshDedup(cat, "w.vecs", "w.vbuckets",
-      nPlanes = 4, nTables = 8, threshold = 0.9, exactlyOnce = true)
+      nPlanes = 4, nTables = 8, threshold = 0.9)
     val vec = Seq.tabulate(8)(i => if (i == 0) 1f else 0f)
     assert(lsh.processBatch(Seq((1L, vec)).toDF("vec_id", "embedding"), 0L) == 1L)
     assert(cat.load("w.vbuckets").select("vec_id").distinct().count() == 1L)
@@ -1994,21 +1852,20 @@ class StreamingSpec extends SparkSpec {
     def media(payload: Array[Byte]) = Seq((1L, payload)).toDF("media_id", "payload")
 
     plantDroppings("w", "digests")
-    val exact = new graft.streaming.IncrementalExactDedup(cat, "w.edocs", "w.digests",
-      exactlyOnce = true)
+    val exact = new graft.streaming.IncrementalExactDedup(cat, "w.edocs", "w.digests")
     assert(exact.processBatch(media(text.getBytes), 0L) == 1L)
     assert(cat.load("w.digests").select("media_id").distinct().count() == 1L)
 
     plantDroppings("w", "iblocks")
     val image = graft.streaming.IncrementalImageDedup(cat, "w.idocs", "w.iblocks",
-      maxHamming = 3, exactlyOnce = true)
+      maxHamming = 3)
     assert(image.processBatch(media(graft.functions.PngGray.encodeGray(32, 32,
       graft.ext.Multimodal.patternPixels(1L, 32, 32))), 0L) == 1L)
     assert(cat.load("w.iblocks").select("media_id").distinct().count() == 1L)
 
     plantDroppings("w", "fblocks")
     val video = new graft.streaming.IncrementalVideoFrameDedup(cat, "w.fdocs", "w.fblocks",
-      frames = 2, maxHamming = 3, exactlyOnce = true)
+      frames = 2, maxHamming = 3)
     assert(video.processBatch(media(graft.functions.MjpegAvi.encode(16, 16, (0 until 2).map(f =>
       graft.functions.JpegGray.encodeGray(16, 16,
         graft.ext.Multimodal.patternPixels(131L + f, 16, 16), 92)))), 0L) == 1L)
@@ -2017,7 +1874,7 @@ class StreamingSpec extends SparkSpec {
     plantDroppings("w", "abuckets")
     plantDroppings("w", "asegs")
     val audio = new graft.streaming.IncrementalAudioSegmentDedup(cat, "w.aclips",
-      "w.abuckets", "w.asegs", nPlanes = 8, nTables = 4, segments = 2, exactlyOnce = true)
+      "w.abuckets", "w.asegs", nPlanes = 8, nTables = 4, segments = 2)
     assert(audio.processBatch(media(graft.functions.WavPcm.encodePcm16(16000, 1,
       graft.ext.Multimodal.waveformSamples(1L, 2 * 2048, 0))), 0L) == 1L)
     assert(owners("w.abuckets", "fid") == 1L && owners("w.asegs", "fid") == 1L)
@@ -2270,12 +2127,12 @@ class StreamingSpec extends SparkSpec {
     val catalog = new graft.core.Catalog(spark, root)
     val am = new AlertManager(FixedClock.at("2024-01-31T18:00:00Z"),
       Seq(new InMemorySink("log")))
-    // dedupKeys mode: an empty batch 0 writes only _SUCCESS — the table
-    // dir exists but has no parquet footer, so a plain load would throw
-    // OUTSIDE the detectors' recover wrappers and kill the query on every
-    // restart until data arrives
+    // a partitioned empty batch 0 stages no files, so its commit publishes
+    // no snapshot — the table reads as absent, and a plain load would
+    // throw OUTSIDE the detectors' recover wrappers and kill the query on
+    // every restart until data arrives
     val loop = new MonitoringLoop(catalog, "monitoring.emptyfirst", am,
-      expectedFeeds = Seq("click"), dedupKeys = Seq("event_id"))
+      expectedFeeds = Seq("click"), partitionBy = Seq("event_type"))
     val empty = Seq.empty[(Long, Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     loop.runBatch(empty, 0L) // must not throw

@@ -11,14 +11,22 @@ import org.apache.spark.util.LongAccumulator
   * (ckey, tbl, bucket) bucket — and two operators over it:
   *
   *  - [[collisions]], the cell self-join behind every pair form;
-  *  - [[eliminations]], the greedy-star walk behind every survivor form.
+  *  - [[assign]], the survivor assignment behind every survivor form: the
+  *    family's id set left-joined to the greedy-star [[eliminations]].
   *
-  * The families differ only in their cell columns, the evidence a member
-  * carries and their match predicate; the join shape, the collision rule
-  * and the walk are written once here, so their semantics cannot drift
-  * between families (or between a family's batch and streaming twins,
-  * whose state probes build their residuals with the same [[sameCell]]). */
+  * The families differ only in their cell columns, the [[Evidence]] a
+  * member carries (Jaccard over shingle hashes, popcount within the
+  * stamped radius, rounded cosine) and their match predicate; the join
+  * shape, the collision rule, the walk and the completion join are
+  * written once here, so their semantics cannot drift between families
+  * (or between a family's batch and streaming twins, whose state probes
+  * build their residuals with the same [[sameCell]]). */
 private[graft] object CandidatePairs {
+
+  /** The representatives a cell promotes at most (see [[eliminations]]):
+    * a full cell's non-matches survive unpromoted, so an adversarial
+    * all-distinct cell costs members·cap comparisons, not C(members, 2). */
+  val MaxRepsPerCell = 4096
 
   /** Equality of the non-key cell columns as `a XOR b === 0` residuals:
     * EqualTo over a both-sides expression, so Catalyst never lifts it into
@@ -65,7 +73,7 @@ private[graft] object CandidatePairs {
     * so badly the planner tries (a 4M-vector probe collected a 1 GB
     * "broadcast" into the driver before the hint) — so it joins back
     * `merge`-hinted. */
-  def members(cells: DataFrame, cellKeys: Seq[String], idCol: String,
+  private def members(cells: DataFrame, cellKeys: Seq[String], idCol: String,
       ev: Evidence[_]): DataFrame = {
     val multi = cells.groupBy(cellKeys.map(col): _*)
       .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
@@ -86,7 +94,7 @@ private[graft] object CandidatePairs {
     * (survivors = per-file-chunk minima). A grouped map REQUIRES
     * ClusteredDistribution(key) plus in-group order, which every planner
     * path honors. */
-  def walkCells(members: DataFrame, cellKeys: Seq[String], idCol: String)(
+  private def walkCells(members: DataFrame, cellKeys: Seq[String], idCol: String)(
       walk: Iterator[Row] => Iterator[(Long, Long)]): DataFrame = {
     val keyAt = cellKeys.map(members.schema.fieldIndex)
     members
@@ -97,21 +105,33 @@ private[graft] object CandidatePairs {
       .toDF(idCol, "dup_of")
   }
 
+  /** The survivor assignment: every id of `ids` as `(idCol, dup_of)`,
+    * `dup_of` null ⇒ survivor — `ids` left-joined to the [[eliminations]]
+    * of `cells`. Every batch survivor form is this call with its family's
+    * cells and evidence. `ids` must cover every id of `cells`; a wrapper
+    * holding a wider id set (rows with no content, hence no cells) passes
+    * that set, and those rows survive. `comparisons` counts match
+    * evaluations for the scale probes (a task retry can double-count it —
+    * probe metric only). */
+  def assign[E](ids: DataFrame, cells: DataFrame, cellKeys: Seq[String],
+      idCol: String, ev: Evidence[E],
+      comparisons: Option[LongAccumulator] = None): DataFrame =
+    ids.join(eliminations(cells, cellKeys, idCol, ev, comparisons),
+      Seq(idCol), "left_outer")
+
   /** The greedy-star survivor walk over a cell table: per cell, members
     * walk id-ascending against the cell's representatives — the first
     * match eliminates, a non-match promotes while the representative set
-    * is under `maxRepsPerCell` (a full cell's non-matches survive
-    * unpromoted: conservative, never over-eliminating; an adversarial
-    * all-distinct cell costs m·cap, not C(m, 2)). A doc eliminated in
-    * several cells reconciles to the smallest eliminating representative,
+    * is under `cap` (a full cell's non-matches survive unpromoted:
+    * conservative, never over-eliminating). A doc eliminated in several
+    * cells reconciles to the smallest eliminating representative,
     * deterministic on any partitioning. Returns one `(idCol, dup_of)` row
-    * per ELIMINATED id (survivors absent). `comparisons` counts match
-    * evaluations for the scale probes (a task retry can double-count it —
-    * probe metric only). */
+    * per ELIMINATED id (survivors absent). `cap` is [[MaxRepsPerCell]]
+    * outside the tests that pin its semantics. */
   def eliminations[E](cells: DataFrame, cellKeys: Seq[String], idCol: String,
-      ev: Evidence[E], maxRepsPerCell: Int,
-      comparisons: Option[LongAccumulator]): DataFrame = {
-    require(maxRepsPerCell >= 1, s"maxRepsPerCell must be >= 1, got $maxRepsPerCell")
+      ev: Evidence[E], comparisons: Option[LongAccumulator] = None,
+      cap: Int = MaxRepsPerCell): DataFrame = {
+    require(cap >= 1, s"cap must be >= 1, got $cap")
     // the closure takes the functions, never the Evidence (its source is
     // a DataFrame)
     val (read, matches) = (ev.read, ev.matches)
@@ -119,7 +139,7 @@ private[graft] object CandidatePairs {
       greedyStar(rows.flatMap { r =>
         val e = read(r)
         if (e == null) Iterator.empty else Iterator.single((r.getLong(0), e))
-      }, matches, maxRepsPerCell, comparisons)), idCol)
+      }, matches, cap, comparisons)), idCol)
   }
 
   /** Keeps the smallest `dup_of` per id. */

@@ -537,9 +537,10 @@ object Dedup {
     * embedding walk's vector rows, with the same head-mass economics:
     * a cell of true near-dups costs ~members verifies, not C(members, 2).
     *
-    * Returns ALL doc ids as (idCol, dup_of): null ⇒ survivor. */
+    * Returns ALL doc ids as (idCol, dup_of): null ⇒ survivor — a
+    * [[CandidatePairs.assign]] over the shingle ids. */
   def minhashAssignFromBands(bandTable: DataFrame, shingles: DataFrame,
-      threshold: Double, idCol: String = "doc_id", maxRepsPerCell: Int = 4096,
+      threshold: Double, idCol: String = "doc_id",
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     TableShapes.requireColumns(bandTable, Seq("band", "bucket", idCol),
       "minhashAssignFromBands",
@@ -548,7 +549,8 @@ object Dedup {
       "minhashAssignFromBands",
       "build it with docs.select(id, Dedup.shingleHashes(text, n).as(\"sh\"))")
     val thr = threshold
-    val elim = CandidatePairs.eliminations(bandTable, Seq("band", "bucket"), idCol,
+    CandidatePairs.assign(shingles.select(col(idCol)), bandTable,
+      Seq("band", "bucket"), idCol,
       CandidatePairs.Evidence[Array[Long]](Seq(col("sh")),
         read = r => if (r.isNullAt(1)) null else {
           val sh = r.getSeq[Long](1).toArray
@@ -557,19 +559,18 @@ object Dedup {
         },
         matches = (rsh, sh) => sortedJaccard(rsh, sh) >= thr,
         source = Some(shingles.select(col(idCol), col("sh")))),
-      maxRepsPerCell, comparisons)
-    shingles.select(col(idCol)).join(elim, Seq(idCol), "left_outer")
+      comparisons)
   }
 
   /** [[minhashAssignFromBands]] from raw documents — band table + shingle
     * hashes derived inline. */
   def minhashAssign(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxRepsPerCell: Int = 4096): DataFrame =
+      threshold: Double = 0.5): DataFrame =
     minhashAssignFromBands(
       minhashTable(docs, textCol, idCol, shingleN, k, bands),
       docs.select(col(idCol), shingleHashes(col(textCol), shingleN).as("sh")),
-      threshold, idCol, maxRepsPerCell)
+      threshold, idCol)
 
   /** Exact Jaccard of two SORTED distinct-hash arrays — the pair path's
     * `size(array_intersect)/size(array_union)` on the same values (integer
@@ -600,112 +601,46 @@ object Dedup {
     * semantics contract (eliminations are genuine radius pairs toward a
     * smaller id; component minima always survive; clique corpora equal
     * the closure) — ExtSpec-pinned against [[simhashPairsFromBlocks]]'
-    * closure.
+    * closure. Its one conservative gap: a member whose only radius-match
+    * was eliminated in its cell before it arrived survives (exactly one
+    * planted twin per 16M-image capstone run, SCALE.md r15).
     *
-    * `reprobe = true` adds the optional second pass closing the one
-    * measured conservative gap (a member whose only radius-match was
-    * eliminated in its cell before it arrived survives — exactly one
-    * planted twin per 16M-image capstone run): survivors re-walk each
-    * cell against the cell's first-pass ELIMINATED members. Same
-    * soundness contract, strictly more eliminations, ~one extra pass of
-    * mass (probe-measured); it persists the first-pass eliminations for
-    * the plan's lifetime (the [[nearDupPairsLsh]] caching contract —
-    * callers release after materializing).
-    *
-    * Returns ALL doc ids as (idCol, dup_of): null ⇒ survivor. */
+    * Returns ALL doc ids as (idCol, dup_of): null ⇒ survivor — a
+    * [[CandidatePairs.assign]] over the block table's ids. */
   def simhashAssignFromBlocks(blockTable: DataFrame, idCol: String = "doc_id",
-      maxRepsPerCell: Int = 4096,
-      comparisons: Option[org.apache.spark.util.LongAccumulator] = None,
-      reprobe: Boolean = false): DataFrame =
-    blockTable.select(col(idCol)).distinct()
-      .join(simhashEliminations(blockTable, idCol, maxRepsPerCell,
-        comparisons, reprobe), Seq(idCol), "left_outer")
-
-  /** The min-reconciled eliminations behind [[simhashAssignFromBlocks]] —
-    * one `(idCol, dup_of)` row PER ELIMINATED doc only (survivors
-    * absent). Package-private for wrappers that already left-join the
-    * result onto their own complete id set
-    * ([[Multimodal.imageAssign]]): joining eliminations directly is
-    * row-identical to joining the full assignment — eliminated ids ⊆
-    * blockTable ids ⊆ the wrapper's ids — and skips BOTH the blockTable
-    * id distinct and the redundant completion join (r20, two fewer
-    * stages on a fixed-overhead-dominated path; oracle-verified on q84). */
-  private[graft] def simhashEliminations(blockTable: DataFrame,
-      idCol: String = "doc_id", maxRepsPerCell: Int = 4096,
-      comparisons: Option[org.apache.spark.util.LongAccumulator] = None,
-      reprobe: Boolean = false): DataFrame = {
-    TableShapes.requireColumns(blockTable,
-      Seq("bkey", "blk", "bits", "sh", "max_hamming", idCol),
+      comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+    TableShapes.requireColumns(blockTable, BlockCells ++ Seq("sh", "max_hamming", idCol),
       "simhashAssignFromBlocks",
       "build it with Dedup.simhashBlockTable(sigs, …)")
-    val cells = Seq("bkey", "blk", "bits")
-    // the signature rides IN the block rows, so no join-back; evidence
-    // carries the MEMBER row's stamped radius — the walk verifies at the
-    // radius of the row being judged
-    val ev = CandidatePairs.Evidence[(Long, Int)](Seq(col("sh"), col("max_hamming")),
+    CandidatePairs.assign(blockTable.select(col(idCol)).distinct(), blockTable,
+      BlockCells, idCol, HammingEvidence, comparisons)
+  }
+
+  /** The cell columns of a [[simhashBlockTable]]-shaped relation. */
+  private[graft] val BlockCells = Seq("bkey", "blk", "bits")
+
+  /** The simhash families' greedy-star evidence: the signature rides IN
+    * the block rows, so no join-back; evidence carries the MEMBER row's
+    * stamped radius — the walk verifies at the radius of the row being
+    * judged. */
+  private[graft] val HammingEvidence =
+    CandidatePairs.Evidence[(Long, Int)](Seq(col("sh"), col("max_hamming")),
       read = r => (r.getLong(1), r.getInt(2)),
       matches = { case ((rsh, _), (sh, radius)) =>
         java.lang.Long.bitCount(sh ^ rsh) <= radius
       })
-    val elim1 = CandidatePairs.eliminations(blockTable, cells, idCol, ev,
-      maxRepsPerCell, comparisons)
-    if (!reprobe) elim1
-    else {
-      // ── optional second pass: close the promotion leak ──
-      // The greedy star's one conservative gap (measured: exactly one
-      // planted twin per 16M-image capstone run, SCALE.md r15): a member
-      // whose only radius-match was ELIMINATED in the same cell before
-      // it arrived never meets it — eliminated members don't promote to
-      // representatives — so the member survives. The re-probe walks
-      // each cell once more with the roles fixed: first-pass ELIMINATED
-      // members are pre-seeded representatives (id-ascending, same cap),
-      // first-pass survivors compare against them and assign on a
-      // match. Eliminations stay sound (a genuine radius pair toward a
-      // smaller id — dup_of chains exactly like cross-cell elimination
-      // already does), survivors still contain every component minimum,
-      // and the extra mass is Σ_cells |survivors|·|eliminated| —
-      // head-mass corpora have ~1 survivor/cell, so it is bounded by
-      // the first walk's own comparisons (probe-measured, SCALE.md r16).
-      val elimFirst = elim1
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val status = CandidatePairs.members(blockTable, cells, idCol, ev)
-        .join(elimFirst.select(col(idCol).as("member_id")).withColumn("__e", lit(true)),
-          Seq("member_id"), "left_outer")
-      val elimAt = status.schema.fieldIndex("__e")
-      val elim2 = CandidatePairs.walkCells(status, cells, idCol) { rows =>
-        val reps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        rows.flatMap { r =>
-          val (id, sh, radius) = (r.getLong(0), r.getLong(1), r.getInt(2))
-          if (!r.isNullAt(elimAt)) {
-            if (reps.length < maxRepsPerCell) reps += ((id, sh))
-            Iterator.empty
-          } else {
-            val matched = reps.indexWhere { case (_, rsh) =>
-              java.lang.Long.bitCount(sh ^ rsh) <= radius
-            }
-            comparisons.foreach(_.add(if (matched < 0) reps.length else matched + 1))
-            if (matched >= 0) Iterator.single((id, reps(matched)._1))
-            else Iterator.empty
-          }
-        }
-      }
-      CandidatePairs.minDupOf(elimFirst.unionAll(elim2), idCol)
-    }
-  }
 
   /** [[simhashAssignFromBlocks]] from raw documents — signature + block
     * table derived inline (the [[simhashPairs]] convenience applied to
     * the survivor form). `blocks` deepens the split per [[simhashParams]]
     * (0 = the legacy `maxHamming + 1` split). */
   def simhashAssign(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxHamming: Int = 3,
-      maxRepsPerCell: Int = 4096, blocks: Int = 0,
-      reprobe: Boolean = false): DataFrame =
+      idCol: String = "doc_id", maxHamming: Int = 3, blocks: Int = 0): DataFrame =
     simhashAssignFromBlocks(
       simhashBlockTable(
         docs.select(col(idCol), simhash(col(textCol)).as("simhash")),
         idCol, "simhash", maxHamming, blocks),
-      idCol, maxRepsPerCell, reprobe = reprobe)
+      idCol)
 
   /** A dedup-family recommendation: which collision relation to run, with
     * the production-config entry point it names, the expected detection
@@ -1429,10 +1364,9 @@ object Dedup {
   def runPlan(p: DedupPlan, data: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", vecCol: String = "embedding",
       jaccardThreshold: Double = 0.5, maxHamming: Int = 3,
-      scratchDir: String = "", maxRepsPerCell: Int = 4096,
-      knownCount: Long = -1L): DataFrame =
+      scratchDir: String = "", knownCount: Long = -1L): DataFrame =
     named(p.family).run(Run(p, data, idCol, textCol, vecCol, jaccardThreshold,
-      maxHamming, scratchDir, maxRepsPerCell, knownCount))
+      maxHamming, scratchDir, knownCount))
 
   /** Per-kind plans for a MIXED media corpus (r17 verdict item #5): a
     * real curation run is not one modality — the media table carries
@@ -1632,7 +1566,6 @@ object Dedup {
       audioGeometricTolerance: Double = 0.0,
       videoMutationTolerance: Double = 0.0,
       scratchBudgetGb: Double = 0.0, scratchDir: String = "",
-      maxRepsPerCell: Int = 4096,
       imageRecodeQuality: Double = 100.0,
       videoTrimTolerance: Int = 0,
       audioTrimTolerance: Int = 0): DataFrame = {
@@ -1652,8 +1585,7 @@ object Dedup {
           val rows = headed.filter(col("__kind").isin(kinds.toSeq: _*))
           val (p, derived) = plans(modality)
           runPlan(p, derived, idCol = "media_id", textCol = "payload",
-            vecCol = "feature", scratchDir = scratchDir,
-            maxRepsPerCell = maxRepsPerCell)
+            vecCol = "feature", scratchDir = scratchDir)
             .join(rows.select(col("media_id"), col("__kind")), Seq("media_id"))
             .select(col("media_id"), col("__kind").as("kind"), col("dup_of"))
       }

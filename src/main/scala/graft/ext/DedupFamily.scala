@@ -30,8 +30,7 @@ private[graft] object DedupFamily {
   /** [[Dedup.runPlan]]'s arguments, as a family's `run` reads them. */
   final case class Run(plan: Dedup.DedupPlan, data: DataFrame, idCol: String,
       textCol: String, vecCol: String, jaccardThreshold: Double,
-      maxHamming: Int, scratchDir: String, maxRepsPerCell: Int,
-      knownCount: Long) {
+      maxHamming: Int, scratchDir: String, knownCount: Long) {
     /** The Manku split for the corpus size: the Manku-blocked families
       * size at run time, from `knownCount` when the caller supplies one
       * (a second scan of a large non-parquet input otherwise), else by
@@ -61,26 +60,26 @@ private[graft] object DedupFamily {
     _ => "Dedup.simhashBlockTable + simhashPairsFromBlocks",
     None, embeddingLike = false, operatingPoint = None,
     run = r => Dedup.simhashAssign(r.data, r.textCol, r.idCol, r.maxHamming,
-      r.maxRepsPerCell, r.blocks))
+      r.blocks))
 
   // the production (k=32, b=8) the detection sweep measured
   val Minhash = DedupFamily("minhash",
     _ => "Dedup.minhashTable + bandCandidates",
     None, embeddingLike = false, operatingPoint = None,
     run = r => Dedup.minhashAssign(r.data, r.textCol, r.idCol, shingleN = 3, k = 32,
-      bands = 8, r.jaccardThreshold, r.maxRepsPerCell))
+      bands = 8, r.jaccardThreshold))
 
   val EmbeddingLsh = DedupFamily("embedding_lsh",
-    _ => "Similarity.nearDupPairsLsh (corpusAwareSizing=true)",
+    _ => "Similarity.lshParamsMeasured + nearDupPairsLsh (at that config)",
     None, embeddingLike = true, operatingPoint = None,
-    run = r => embeddingAssign(r, r.data))
+    run = embeddingAssign)
 
   // data = a (media_id, dhash) fingerprint table
   val ImageDhash = DedupFamily("image_dhash",
     _ => "Multimodal.imageFingerprints + imageAssign",
     Some((rows, _) => Multimodal.imageFingerprints(rows)),
     embeddingLike = false, operatingPoint = None,
-    run = r => Multimodal.imageAssign(r.data, r.maxHamming, r.maxRepsPerCell, r.blocks))
+    run = r => Multimodal.imageAssign(r.data, r.maxHamming, r.blocks))
 
   // data = a (media_id, frame_idx, dhash) frame fingerprint table
   val VideoAnyFrameDhash = DedupFamily("video_anyframe_dhash",
@@ -93,16 +92,15 @@ private[graft] object DedupFamily {
 
   /** A descriptor tier: the embedding family over a derived
     * (media_id, feature) column, packaged at the cosine operating point
-    * its sweep measured. Undecodable payloads (null feature) survive, the
-    * [[Multimodal.featureAssign]] contract. */
+    * its sweep measured. Undecodable payloads (null feature) hash to no
+    * cell and survive, the [[Multimodal.featureAssign]] contract; the
+    * derived table's ids are the assignment's id set. */
   private def descriptorTier(name: String, features: String,
       derive: DataFrame => DataFrame): DedupFamily =
     DedupFamily(name, _ => s"Multimodal.$features + featureAssign (threshold 0.9)",
       Some((rows, _) => derive(rows)), embeddingLike = true,
       operatingPoint = Some(0.9),
-      run = r => r.data.select(col(r.idCol)).join(
-        embeddingAssign(r, r.data.filter(col(r.vecCol).isNotNull)),
-        Seq(r.idCol), "left_outer"))
+      run = embeddingAssign)
 
   val ImageGridLsh = descriptorTier("image_grid_lsh", "imageGridFeatures",
     Multimodal.imageGridFeatures(_))
@@ -166,25 +164,26 @@ private[graft] object DedupFamily {
         .agg(min(col("media_a")).as("dup_of")),
         Seq(r.idCol), "left_outer")
 
-  /** The embedding families' assignment at the plan's sized
-    * (planes, tables): one-shot through the bucket table, or in the plan's
-    * P budget-bounded passes (pass files under `scratchDir`, whose
-    * lifecycle is the caller's — the lshCandidatesPartitioned contract). */
-  private def embeddingAssign(r: Run, emb: DataFrame): DataFrame = {
+  /** The embedding families' assignment of every `data` row at the plan's
+    * sized (planes, tables): one-shot through the bucket table, or in the
+    * plan's P budget-bounded passes (pass files under `scratchDir`, whose
+    * lifecycle is the caller's — the lshCandidatesPartitioned contract).
+    * Null vectors hash to no cell, so their rows survive. */
+  private def embeddingAssign(r: Run): DataFrame = {
     val p = r.plan
     val (planes, tables) = p.lshConfig.getOrElse(throw new IllegalArgumentException(
       s"${p.family} plan carries no lshConfig — build plans with Dedup.plan"))
-    val bucketTable = Similarity.lshTable(emb, planes, tables, r.idCol, r.vecCol)
+    val bucketTable = Similarity.lshTable(r.data, planes, tables, r.idCol, r.vecCol)
     if (p.miningMode == "one_shot")
-      Similarity.nearDupAssignFromTable(bucketTable, emb, p.threshold,
-        r.idCol, r.vecCol, r.maxRepsPerCell)
+      Similarity.nearDupAssignFromTable(bucketTable, r.data, p.threshold,
+        r.idCol, r.vecCol)
     else {
       require(r.scratchDir.nonEmpty,
         "partitioned embedding mining needs a scratchDir (pass files; " +
           "caller-owned lifecycle)")
       val perPass = math.max(1, math.ceil(tables.toDouble / p.partitions).toInt)
-      Similarity.nearDupAssignGrouped(bucketTable, emb, p.threshold,
-        r.scratchDir, r.idCol, r.vecCol, r.maxRepsPerCell, perPass)
+      Similarity.nearDupAssignGrouped(bucketTable, r.data, p.threshold,
+        r.scratchDir, r.idCol, r.vecCol, perPass)
     }
   }
 }

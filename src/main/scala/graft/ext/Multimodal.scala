@@ -515,34 +515,28 @@ object Multimodal {
       .withColumnRenamed("doc_b", "media_b")
 
   /** Survivor-oriented image dedup — the greedy star over Manku block
-    * cells ([[Dedup.simhashAssignFromBlocks]], reused verbatim: hamming
-    * over dHash bits is the same algebra as over token-vote simhash
-    * bits), completing the survivor matrix's fourth family. Returns ALL
-    * fingerprint rows as (media_id, dup_of): null ⇒ survivor. Undecodable
-    * images (null dhash) survive by definition — they have no content to
-    * match, mirroring [[imageNearDups]] dropping them from pairing.
-    * `blocks` deepens the split per [[Dedup.simhashParams]] at corpus
-    * scale (0 = the legacy `maxHamming + 1` split). Same soundness
-    * contract as every survivor family — eliminations are genuine
-    * radius pairs toward a smaller id, component minima always survive —
-    * ExtSpec-pinned against [[imageNearDups]]' closure and q84-oracled
-    * over persisted fingerprints. */
+    * cells ([[Dedup.simhashAssignFromBlocks]]' cells and evidence, reused
+    * verbatim: hamming over dHash bits is the same algebra as over
+    * token-vote simhash bits), completing the survivor matrix's fourth
+    * family. Returns ALL fingerprint rows as (media_id, dup_of): null ⇒
+    * survivor. Undecodable images (null dhash) survive by definition —
+    * they have no content to match, mirroring [[imageNearDups]] dropping
+    * them from pairing. `blocks` deepens the split per
+    * [[Dedup.simhashParams]] at corpus scale (0 = the legacy
+    * `maxHamming + 1` split). Same soundness contract as every survivor
+    * family — eliminations are genuine radius pairs toward a smaller id,
+    * component minima always survive — ExtSpec-pinned against
+    * [[imageNearDups]]' closure and q84-oracled over persisted
+    * fingerprints. */
   def imageAssign(fingerprints: DataFrame, maxHamming: Int = 3,
-      maxRepsPerCell: Int = 4096, blocks: Int = 0,
-      reprobe: Boolean = false): DataFrame = {
+      blocks: Int = 0): DataFrame = {
     TableShapes.requireColumns(fingerprints, Seq("media_id", "dhash"),
       "imageAssign", "build it with Multimodal.imageFingerprints(media)")
-    // eliminations-only join (r20): the completion join below already
-    // covers every fingerprint id, so simhashAssignFromBlocks' blockTable
-    // id distinct + its own completion join would be two redundant stages
-    // — eliminated ids ⊆ blocked ids ⊆ these ids (oracle-verified, q84)
-    val elim = Dedup.simhashEliminations(
-      Dedup.simhashBlockTable(
-        fingerprints.filter(col("dhash").isNotNull),
+    // the fingerprint ids are the complete id set: blocked ids ⊆ them
+    CandidatePairs.assign(fingerprints.select(col("media_id")),
+      Dedup.simhashBlockTable(fingerprints.filter(col("dhash").isNotNull),
         "media_id", "dhash", maxHamming, blocks),
-      "media_id", maxRepsPerCell, reprobe = reprobe)
-    fingerprints.select(col("media_id"))
-      .join(elim, Seq("media_id"), "left_outer")
+      Dedup.BlockCells, "media_id", Dedup.HammingEvidence)
   }
 
   /** Decoded-luminance dump (media_id, width, height, pix, error) — one
@@ -586,32 +580,29 @@ object Multimodal {
     * descriptor ([[imageGridFeatures]], [[imageSpectralFeatures]],
     * [[audioEnvelopeFeatures]] or [[audioSpectralFeatures]], all emit the
     * same (media_id, feature, error) shape) fed through the embedding-LSH
-    * greedy star ([[Similarity.nearDupAssign]], reused verbatim: the
-    * descriptor IS an embedding, so the geometric and audio tiers inherit
-    * the embedding family's auto-sizing, plan hygiene, and soundness
-    * contract). Returns ALL feature rows as (media_id, dup_of): null ⇒
+    * greedy star ([[Similarity.nearDupAssignFromTable]] at
+    * [[Similarity.nearDupAssign]]'s auto-sizing over the decodable rows:
+    * the descriptor IS an embedding, so the geometric and audio tiers
+    * inherit the embedding family's plan hygiene and soundness contract).
+    * Returns ALL feature rows as (media_id, dup_of): null ⇒
     * survivor; undecodable payloads (null feature) survive by definition,
     * mirroring [[imageAssign]]. `threshold` is cosine over the descriptor
     * — the r16 sweeps measure where each descriptor's planted twins sit
     * against it (SCALE.md r16: the grid tier owns ≤ 1 px, the spectral
     * tier the measured 1-4 px band). */
   def featureAssign(features: DataFrame, threshold: Double = 0.9,
-      maxRepsPerCell: Int = 4096, targetRecall: Double = 0.98): DataFrame = {
+      targetRecall: Double = 0.98): DataFrame = {
     TableShapes.requireColumns(features, Seq("media_id", "feature"),
       "featureAssign",
       "build it with Multimodal.imageGridFeatures, imageSpectralFeatures, " +
         "audioEnvelopeFeatures or audioSpectralFeatures")
-    // join the min-reconciled ELIMINATIONS directly (r20): the left join
-    // below is already the completion join over the full feature id set,
-    // so [[Similarity.nearDupAssign]]'s own emb-ids completion join would
-    // be a second, redundant join stage — eliminated ids ⊆ non-null
-    // feature ids ⊆ these ids, so the rows are identical (oracle-verified)
-    val elim = Similarity.nearDupEliminations(
-      features.filter(col("feature").isNotNull),
-      threshold, idCol = "media_id", vecCol = "feature",
-      targetRecall = targetRecall, maxRepsPerCell = maxRepsPerCell)
-    features.select(col("media_id"))
-      .join(elim, Seq("media_id"), "left_outer")
+    // [[Similarity.nearDupAssign]]'s auto-sizing over the decodable rows;
+    // a null feature hashes to no cell, so every row keeps its id
+    val (planes, tables) = Similarity.lshParams(
+      features.filter(col("feature").isNotNull).count(), threshold, targetRecall)
+    Similarity.nearDupAssignFromTable(
+      Similarity.lshTable(features, planes, tables, "media_id", "feature"),
+      features, threshold, "media_id", "feature")
   }
 
   // ───── Audio near-dup (real WAV PCM decode → deterministic descriptors) ─

@@ -726,6 +726,16 @@ object Similarity {
       .select(col(idCol), xxhash64(col("tbl"), col("bucket")).as("ckey"),
         col("tbl"), col("bucket"))
 
+  /** The cell columns of an [[lshTable]]-shaped relation. */
+  private[graft] val LshCells = Seq("ckey", "tbl", "bucket")
+
+  private def requireLshTable(bucketTable: DataFrame, idCol: String,
+      caller: String): DataFrame = {
+    TableShapes.requireColumns(bucketTable, LshCells :+ idCol, caller,
+      "build it with Similarity.lshTable(emb, nPlanes, nTables)")
+    bucketTable
+  }
+
   /** Candidate pairs over an (id, ckey, tbl, bucket) [[lshTable]]-shaped
     * relation. `ckey` is the ONLY equi-key — the same planner contract as
     * [[graft.ext.Dedup.bandCandidates]]: table/bucket equality rides as
@@ -737,9 +747,7 @@ object Similarity {
     * here (the [[Dedup.nearDupPairs]] caching contract): persist an
     * inline-built table first, as [[lshCandidates]] does. */
   def lshCandidatesFromTable(bucketTable: DataFrame, idCol: String = "vec_id"): DataFrame = {
-    TableShapes.requireColumns(bucketTable, Seq("ckey", "tbl", "bucket", idCol),
-      "lshCandidatesFromTable",
-      "build it with Similarity.lshTable(emb, nPlanes, nTables)")
+    requireLshTable(bucketTable, idCol, "lshCandidatesFromTable")
     lshCandidatesRaw(bucketTable, idCol).distinct()
   }
 
@@ -795,18 +803,26 @@ object Similarity {
   def lshCandidatesPartitioned(bucketTable: DataFrame, scratchDir: String,
       idCol: String = "vec_id", partitions: Int = 8): DataFrame = {
     require(partitions >= 1, s"partitions must be >= 1, got $partitions")
-    TableShapes.requireColumns(bucketTable, Seq("ckey", "tbl", "bucket", idCol),
-      "lshCandidatesPartitioned",
-      "build it with Similarity.lshTable(emb, nPlanes, nTables)")
-    val spark = bucketTable.sparkSession
+    requireLshTable(bucketTable, idCol, "lshCandidatesPartitioned")
     val raw = lshCandidatesRaw(bucketTable, idCol)
-    (0 until partitions).foreach { p =>
+    writePasses(bucketTable, scratchDir, "slice", partitions)(p =>
       raw.where(pmod(xxhash64(col("id_a")), lit(partitions.toLong))
           === lit(p.toLong))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$scratchDir/slice_$p")
+        .distinct())
+  }
+
+  /** The pass files of the bounded forms ([[lshCandidatesPartitioned]],
+    * [[nearDupAssignGrouped]]): pass `i` of `passes` lands as parquet in
+    * `scratchDir/<name>_i`, and the returned frame reads them all back.
+    * Each pass is independently restartable; callers own `scratchDir`'s
+    * lifecycle (the files are not manifest-atomic). */
+  private def writePasses(from: DataFrame, scratchDir: String, name: String,
+      passes: Int)(pass: Int => DataFrame): DataFrame = {
+    val paths = (0 until passes).map(i => s"$scratchDir/${name}_$i")
+    paths.zipWithIndex.foreach { case (path, i) =>
+      pass(i).write.mode("overwrite").parquet(path)
     }
-    spark.read.parquet((0 until partitions).map(p => s"$scratchDir/slice_$p"): _*)
+    from.sparkSession.read.parquet(paths: _*)
   }
 
   // ───── Survivor-oriented dedup (greedy star per cell) ─────
@@ -845,65 +861,25 @@ object Similarity {
     * amplification is ≤ nTables× and usually far less; no pair relation
     * ever materializes, which is why this composes with the same
     * persisted [[lshTable]] artifacts the bounded-distinct modes mine
-    * ([[nearDupAssignFromTable]]). The per-cell walk is genuinely
-    * sequential (each verdict depends on the previous promotions), so it
-    * runs as a `flatMapSortedGroups` grouped-map — the one imperative
-    * island, kept to the walk itself; hashing, occupancy pruning, vector
-    * fetch, and the cross-cell reconciliation all stay declarative, and
-    * the grouped-map's required distribution is what guarantees cell
-    * co-location on every planner path (see the in-body comment).
+    * ([[nearDupAssignFromTable]]). The walk is [[CandidatePairs.assign]]
+    * with [[cosineEvidence]].
     *
-    * Returns ALL docs as (idCol, dup_of): `dup_of` null ⇒ survivor.
-    * Sizing knobs as [[nearDupPairsLsh]]. */
+    * Returns ALL docs as (idCol, dup_of): `dup_of` null ⇒ survivor;
+    * filter to `dup_of IS NULL` for the survivor ids. Sizing knobs as
+    * [[nearDupPairsLsh]]; for corpus-measured sizing pass
+    * [[lshParamsMeasured]]'s config explicitly. */
   def nearDupAssign(emb: DataFrame, threshold: Double, nPlanes: Int = 0,
       nTables: Int = 0, idCol: String = "vec_id", vecCol: String = "embedding",
-      targetRecall: Double = 0.98, corpusAwareSizing: Boolean = false,
-      maxRepsPerCell: Int = 4096): DataFrame = {
+      targetRecall: Double = 0.98): DataFrame = {
     require(nPlanes >= 0 && nTables >= 0 && (nPlanes > 0) == (nTables > 0),
       s"pass BOTH nPlanes and nTables explicitly or NEITHER (auto-sizing); " +
         s"got nPlanes=$nPlanes, nTables=$nTables")
-    require(!(corpusAwareSizing && nPlanes > 0),
-      "corpusAwareSizing measures the corpus to SIZE the config — it is " +
-        "meaningless beside an explicit (nPlanes, nTables)")
-    emb.select(col(idCol)).join(
-      nearDupEliminations(emb, threshold, nPlanes, nTables, idCol, vecCol,
-        targetRecall, corpusAwareSizing, maxRepsPerCell),
-      Seq(idCol), "left_outer")
-  }
-
-  /** The min-reconciled eliminations behind [[nearDupAssign]] — one
-    * `(idCol, dup_of)` row PER ELIMINATED doc only (survivors absent),
-    * auto-sized exactly like [[nearDupAssign]]. Package-private for
-    * wrappers that already left-join the result onto their own complete
-    * id set ([[Multimodal.featureAssign]]):
-    * joining eliminations directly is row-identical to joining the full
-    * assignment — eliminated ids ⊆ emb ids ⊆ the wrapper's ids — and
-    * skips [[nearDupAssign]]'s completion join outright (r20, one fewer
-    * join stage on a fixed-overhead-dominated path; oracle-verified on
-    * q86/q89). */
-  private[graft] def nearDupEliminations(emb: DataFrame, threshold: Double,
-      nPlanes: Int = 0, nTables: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      targetRecall: Double = 0.98, corpusAwareSizing: Boolean = false,
-      maxRepsPerCell: Int = 4096): DataFrame = {
     val (planes, tables) =
       if (nPlanes > 0) (nPlanes, nTables)
-      else if (corpusAwareSizing)
-        lshParamsMeasured(emb, threshold, targetRecall, vecCol = vecCol)
       else lshParams(emb.count(), threshold, targetRecall)
-    starEliminations(lshTable(emb, planes, tables, idCol, vecCol), emb,
-      threshold, idCol, vecCol, maxRepsPerCell, None)
+    nearDupAssignFromTable(lshTable(emb, planes, tables, idCol, vecCol), emb,
+      threshold, idCol, vecCol)
   }
-
-  /** [[nearDupAssign]] filtered to the survivor ids — what a curation
-    * pipeline keeps. */
-  def nearDupSurvivors(emb: DataFrame, threshold: Double, nPlanes: Int = 0,
-      nTables: Int = 0, idCol: String = "vec_id", vecCol: String = "embedding",
-      targetRecall: Double = 0.98, corpusAwareSizing: Boolean = false,
-      maxRepsPerCell: Int = 4096): DataFrame =
-    nearDupAssign(emb, threshold, nPlanes, nTables, idCol, vecCol,
-      targetRecall, corpusAwareSizing, maxRepsPerCell)
-      .filter(col("dup_of").isNull).select(col(idCol))
 
   /** [[nearDupAssign]] over a persisted [[lshTable]]-shaped relation — the
     * re-mine path for deployments that publish the bucket table once at
@@ -911,15 +887,14 @@ object Similarity {
     * accumulates the number of member-vs-representative cosine
     * evaluations the walk performed — a PROBE metric (task retries can
     * double-count it), there so `tools.DedupScaleProbe --survivors` can
-    * read rerank work against the cell pair mass it replaces. */
+    * read rerank work against the cell pair mass it replaces. Rows of
+    * `emb` with a null vector hash to no cell and survive. */
   def nearDupAssignFromTable(bucketTable: DataFrame, emb: DataFrame,
       threshold: Double, idCol: String = "vec_id", vecCol: String = "embedding",
-      maxRepsPerCell: Int = 4096,
-      comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val elim = starEliminations(bucketTable, emb, threshold, idCol, vecCol,
-      maxRepsPerCell, comparisons)
-    emb.select(col(idCol)).join(elim, Seq(idCol), "left_outer")
-  }
+      comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    CandidatePairs.assign(emb.select(col(idCol)),
+      requireLshTable(bucketTable, idCol, "nearDupAssignFromTable"), LshCells,
+      idCol, cosineEvidence(emb, threshold, idCol, vecCol), comparisons)
 
   /** [[nearDupAssignFromTable]] with the one scale-sensitive shuffle
     * BOUNDED: the walk's input is (multi-cell member × vector) rows —
@@ -933,17 +908,14 @@ object Similarity {
     * elimination is cell-local and cells never span tables, so the union
     * of per-pass eliminations followed by the same min-reconciliation is
     * EXACTLY the one-shot assignment (set equality pinned in ExtSpec at
-    * several widths). Each pass is independently restartable — the
-    * 1000-executor posture. Callers own `scratchDir`'s lifecycle; the
-    * same caveat as [[lshCandidatesPartitioned]] applies (slice files
-    * are not manifest-atomic). */
+    * several widths). Pass files as [[lshCandidatesPartitioned]]'s. */
   def nearDupAssignGrouped(bucketTable: DataFrame, emb: DataFrame,
       threshold: Double, scratchDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxRepsPerCell: Int = 4096, tablesPerPass: Int = 4,
+      tablesPerPass: Int = 4,
       comparisons: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     require(tablesPerPass >= 1, s"tablesPerPass must be >= 1, got $tablesPerPass")
-    val spark = emb.sparkSession
+    requireLshTable(bucketTable, idCol, "nearDupAssignGrouped")
     val tbls = bucketTable.select("tbl").distinct().collect()
       .map(_.getInt(0)).sorted
     // an empty bucket table writes zero pass files, and a zero-path
@@ -953,29 +925,21 @@ object Similarity {
       return emb.select(col(idCol))
         .withColumn("dup_of", lit(null).cast("long"))
     val groups = tbls.grouped(tablesPerPass).toSeq
-    groups.zipWithIndex.foreach { case (g, i) =>
-      starEliminations(
-        bucketTable.where(col("tbl").isin(g.toSeq.map(Int.box): _*)),
-        emb, threshold, idCol, vecCol, maxRepsPerCell, comparisons)
-        .write.mode("overwrite").parquet(s"$scratchDir/pass_$i")
-    }
-    val elim = spark.read
-      .parquet(groups.indices.map(i => s"$scratchDir/pass_$i"): _*)
-      .groupBy(idCol).agg(min(col("dup_of")).as("dup_of"))
-    emb.select(col(idCol)).join(elim, Seq(idCol), "left_outer")
+    val ev = cosineEvidence(emb, threshold, idCol, vecCol)
+    val elim = writePasses(emb, scratchDir, "pass", groups.size)(i =>
+      CandidatePairs.eliminations(
+        bucketTable.where(col("tbl").isin(groups(i).toSeq.map(Int.box): _*)),
+        LshCells, idCol, ev, comparisons))
+    emb.select(col(idCol))
+      .join(CandidatePairs.minDupOf(elim, idCol), Seq(idCol), "left_outer")
   }
 
-  /** The min-reconciled eliminations of an [[lshTable]]-shaped relation
-    * ([[CandidatePairs.eliminations]] with vector evidence joined back
-    * from `emb`), shared by the one-shot and grouped assignment forms so
-    * their semantics can never drift. */
-  private def starEliminations(bucketTable: DataFrame, emb: DataFrame,
-      threshold: Double, idCol: String, vecCol: String,
-      maxRepsPerCell: Int,
-      comparisons: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
-    TableShapes.requireColumns(bucketTable, Seq("ckey", "tbl", "bucket", idCol),
-      "nearDupAssignFromTable",
-      "build it with Similarity.lshTable(emb, nPlanes, nTables)")
+  /** The embedding families' greedy-star evidence: the vector and its
+    * squared norm joined back from `emb`, matched by exact rounded cosine
+    * above `threshold` ([[roundedCosine]]). Null vectors sit the walk
+    * out. */
+  private[graft] def cosineEvidence(emb: DataFrame, threshold: Double,
+      idCol: String, vecCol: String): CandidatePairs.Evidence[(Array[Double], Double)] = {
     // float corpora shuffle their vectors UN-widened (half the bytes of a
     // cast to double — the walk widens per element, the same exact IEEE
     // widening the expression dot performs); double corpora ride as-is.
@@ -986,20 +950,18 @@ object Similarity {
       case _ => false
     }
     val thr = threshold
-    CandidatePairs.eliminations(bucketTable, Seq("ckey", "tbl", "bucket"), idCol,
-      CandidatePairs.Evidence[(Array[Double], Double)](Seq(col("n2"), col("v")),
-        // null vectors never pair (see cosine) — they sit the walk out
-        read = r => if (r.isNullAt(2)) null else {
-          val v =
-            if (isFloat) r.getSeq[Float](2).iterator.map(_.toDouble).toArray
-            else r.getSeq[Double](2).toArray
-          (v, r.getDouble(1))
-        },
-        matches = { case ((rv, rn2), (v, n2)) => roundedCosine(rv, rn2, v, n2) > thr },
-        source = Some(emb.select(col(idCol),
-          (if (isFloat) col(vecCol) else col(vecCol).cast("array<double>")).as("v"),
-          norm2(col(vecCol)).as("n2")))),
-      maxRepsPerCell, comparisons)
+    CandidatePairs.Evidence[(Array[Double], Double)](Seq(col("n2"), col("v")),
+      // null vectors never pair (see cosine) — they sit the walk out
+      read = r => if (r.isNullAt(2)) null else {
+        val v =
+          if (isFloat) r.getSeq[Float](2).iterator.map(_.toDouble).toArray
+          else r.getSeq[Double](2).toArray
+        (v, r.getDouble(1))
+      },
+      matches = { case ((rv, rn2), (v, n2)) => roundedCosine(rv, rn2, v, n2) > thr },
+      source = Some(emb.select(col(idCol),
+        (if (isFloat) col(vecCol) else col(vecCol).cast("array<double>")).as("v"),
+        norm2(col(vecCol)).as("n2"))))
   }
 
   /** The greedy star's match: exact cosine with [[nearDupPairs]]' fold
@@ -1053,13 +1015,10 @@ object Similarity {
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, nPlanes: Int = 0,
       nTables: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      targetRecall: Double = 0.98, corpusAwareSizing: Boolean = false): DataFrame = {
+      targetRecall: Double = 0.98): DataFrame = {
     require(nPlanes >= 0 && nTables >= 0 && (nPlanes > 0) == (nTables > 0),
       s"pass BOTH nPlanes and nTables explicitly or NEITHER (auto-sizing); " +
         s"got nPlanes=$nPlanes, nTables=$nTables")
-    require(!(corpusAwareSizing && nPlanes > 0),
-      "corpusAwareSizing measures the corpus to SIZE the config — it is " +
-        "meaningless beside an explicit (nPlanes, nTables)")
     // targetRecall is the honest knob of the approximation: at the default
     // 0.98, ~2% of pairs sitting exactly AT the threshold can drop (e.g.
     // the sf0.1 driver corpus recovers 142/144 = 98.6% of loose-threshold
@@ -1067,7 +1026,7 @@ object Similarity {
     // full recall). Dial 0.999 when completeness beats cost — tables (and
     // candidate volume) grow roughly with log(1 - recall).
     lshScoredCollisions(emb, threshold, nPlanes, nTables, idCol, vecCol,
-      targetRecall, corpusAwareSizing)
+      targetRecall)
       // cross-table reconciliation AFTER the threshold filter: cosine_sim
       // is a pure function of the pair, so distinct over
       // (id_a, id_b, cosine_sim) is pair-distinct — it just runs over the
@@ -1090,16 +1049,13 @@ object Similarity {
   private[graft] def lshScoredCollisions(emb: DataFrame, threshold: Double,
       nPlanes: Int = 0, nTables: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      targetRecall: Double = 0.98, corpusAwareSizing: Boolean = false): DataFrame = {
+      targetRecall: Double = 0.98): DataFrame = {
     // one count serves both the auto-sizing and the data-sized partition
     // count below (the explicit-config path pays it only for the sizing
     // of the repartition — one zero-column scan)
     val n = emb.count()
     val (planes, tables) =
       if (nPlanes > 0) (nPlanes, nTables)
-      else if (corpusAwareSizing)
-        lshParams(n, threshold, targetRecall,
-          law = measureNonUniformityLaw(emb, n, vecCol = vecCol))
       else lshParams(n, threshold, targetRecall)
     // Rerank-in-join (r19 optimization round, guide §2.3/§2.4): the vector
     // and its squared norm ride the bucket rows, the exact cosine is

@@ -70,30 +70,16 @@ object BucketedDistinctProbe {
       "ckey", buckets)
     val publishS = (System.nanoTime() - t0) / 1e9
 
-    val peak = new java.util.concurrent.atomic.AtomicLong(0)
-    val totalW = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val b = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        totalW.addAndGet(b)
-        peak.getAndUpdate(p => math.max(p, b))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val scratch = s"$root/n$rows/bucketed_part_scratch"
-    val t1 = System.nanoTime()
-    val df = Similarity.lshCandidatesPartitioned(spark.table(tb), scratch,
-      "vec_id", partitions)
-    val pairs = df.count()
-    val wallS = (System.nanoTime() - t1) / 1e9
-    // snapshot the scratch metrics BEFORE the verification query — its
-    // shuffle is not part of the bounded-distinct cost being measured; the
-    // async listener bus gets a moment to land late stage-completed events.
-    Thread.sleep(500)
-    spark.sparkContext.removeSparkListener(listener)
-    val peakGb = peak.get() / 1e9
-    val totalGb = totalW.get() / 1e9
+    // the scratch metrics cover the pairing only — the verification query
+    // below is not part of the bounded-distinct cost being measured
+    val ((df, pairs, wallS), peakGb, totalGb) = DedupScaleProbe.shuffleWriteGb(spark) {
+      val t1 = System.nanoTime()
+      val df = Similarity.lshCandidatesPartitioned(spark.table(tb), scratch,
+        "vec_id", partitions)
+      val pairs = df.count()
+      (df, pairs, (System.nanoTime() - t1) / 1e9)
+    }
     val detected = df.filter(col("id_b") === col("id_a") + 1 &&
       pmod(col("id_b"), lit(20)) === 1).count()
     println(f"""{"check":"bucketed_partitioned_distinct","rows":$rows,""" +

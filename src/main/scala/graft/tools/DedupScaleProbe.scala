@@ -76,6 +76,31 @@ import graft.ext.{Dedup, Similarity}
   * /tmp/graft_dedup_scale/n<rows> and are rebuilt only when absent. */
 object DedupScaleProbe {
 
+  /** `body`'s result with the peak single-stage and the total shuffle
+    * write, in GB, of the Spark stages that completed while it ran —
+    * the scratch metric of the bounded-distinct cells (this probe's
+    * `--partitionedDistinct`, [[BucketedDistinctProbe]]). The listener
+    * bus is async, so late stage-completed events get a moment to land
+    * before the listener detaches. */
+  def shuffleWriteGb[A](spark: SparkSession)(body: => A): (A, Double, Double) = {
+    val peak = new java.util.concurrent.atomic.AtomicLong(0)
+    val total = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val b = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+        total.addAndGet(b)
+        peak.getAndUpdate(p => math.max(p, b))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Thread.sleep(500)
+      (out, peak.get() / 1e9, total.get() / 1e9)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     var sizes = Seq(250000L, 1000000L, 4000000L)
     var reps = 2
@@ -525,36 +550,19 @@ object DedupScaleProbe {
             // scratch where the one-shot distinct's full-raw-volume
             // shuffle could not
             val build = ensureLsh(pp, tt)
-            val peak = new java.util.concurrent.atomic.AtomicLong(0)
-            val totalW = new java.util.concurrent.atomic.AtomicLong(0)
-            val listener = new org.apache.spark.scheduler.SparkListener {
-              override def onStageCompleted(
-                  sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-                val b = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-                totalW.addAndGet(b)
-                peak.getAndUpdate(p => math.max(p, b))
-              }
-            }
             val (check, knobJson) =
               ("partitioned_distinct", s""""partitions":$partitionedDistinct""")
-            spark.sparkContext.addSparkListener(listener)
             val scratch = s"$dir/${check}_scratch"
-            val t = timed {
+            // the scratch metrics cover the pairing only — the
+            // verification query below is not part of the bounded-distinct
+            // cost this mode exists to measure
+            val (t, peakGb, totalGb) = shuffleWriteGb(spark)(timed {
               val df = Similarity.lshCandidatesPartitioned(
                 spark.read.parquet(lshDir(pp, tt)), scratch, "vec_id",
                 partitions = partitionedDistinct)
               (df, df.count())
-            }
+            })
             val (bounded, pairs) = t._2
-            // snapshot the scratch metrics BEFORE the verification query —
-            // its shuffle stages are not part of the bounded-distinct cost
-            // this mode exists to measure. The listener bus is async, so
-            // give the count's late stage-completed events a moment to land
-            // before detaching.
-            Thread.sleep(500)
-            spark.sparkContext.removeSparkListener(listener)
-            val peakGb = peak.get() / 1e9
-            val totalGb = totalW.get() / 1e9
             val detected = bounded
               .filter(col("id_b") === col("id_a") + 1 &&
                 pmod(col("id_b"), lit(20)) === 1).count()

@@ -161,7 +161,6 @@ object ImageDedupProbe {
     var radius = 3
     var blocks = 0
     var survivors = false
-    var reprobe = false
     var cropShifts: Seq[Int] = Nil
     var family = "dhash" // dhash | grid (the crop-tolerant descriptor tier)
     var gridThreshold = 0.9
@@ -178,7 +177,6 @@ object ImageDedupProbe {
         case "--radius" if i + 1 < args.length => radius = args(i + 1).toInt; i += 2
         case "--blocks" if i + 1 < args.length => blocks = args(i + 1).toInt; i += 2
         case "--survivors" => survivors = true; i += 1
-        case "--reprobe" => reprobe = true; i += 1
         case "--cropSweep" if i + 1 < args.length =>
           cropShifts = args(i + 1).split(",").map(_.toInt).toSeq; i += 2
         case "--family" if i + 1 < args.length => family = args(i + 1); i += 2
@@ -192,7 +190,7 @@ object ImageDedupProbe {
           recodeOrigin = args(i + 1); i += 2
         case other => sys.error(s"unknown arg '$other'; usage: ImageDedupProbe " +
           "[--size N] [--mutations 0.01,..] [--radius H] [--blocks B] " +
-          "[--survivors] [--reprobe] [--cropSweep 1,2,4] [--family dhash|grid|spectral] " +
+          "[--survivors] [--cropSweep 1,2,4] [--family dhash|grid|spectral] " +
           "[--gridThreshold 0.9] [--codec png|jpeg|jpeg420|jpegprog|gif|bmp|mjpegavi] [--throughput]")
       }
     }
@@ -451,13 +449,13 @@ object ImageDedupProbe {
       val cmp = spark.sparkContext.longAccumulator("image_star_comparisons")
       val t0 = System.nanoTime()
       val assign = graft.ext.Dedup.simhashAssignFromBlocks(blockTable,
-        "media_id", comparisons = Some(cmp), reprobe = reprobe)
+        "media_id", comparisons = Some(cmp))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val surv = assign.filter(col("dup_of").isNull).count()
       val detected = assign.filter(col("dup_of").isNotNull &&
         pmod(col("media_id"), lit(20)) === 1).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"""{"check":"image_survivors","rows":$size,"mutation":$m,"reprobe":$reprobe,""" +
+      println(f"""{"check":"image_survivors","rows":$size,"mutation":$m,""" +
         f""""radius":$radius,"raw_pair_mass":$mass,"comparisons":${cmp.value},""" +
         f""""survivors":$surv,"eliminated":${size - surv},"detected":$detected,""" +
         f""""true_dups":${size / 20},"wall_s":$dt%.3f}""")

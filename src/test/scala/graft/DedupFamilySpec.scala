@@ -2,6 +2,9 @@ package graft
 
 import graft.ext.{Dedup, DedupFamily, Multimodal}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 /** The dedup planner's family table against its ladders: every family
@@ -78,5 +81,21 @@ class DedupFamilySpec extends SparkSpec {
       }
     }
     finally spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("a descriptor tier's assignment joins its id set once") {
+    val media = Multimodal.syntheticImages(spark.range(40).select($"id".as("doc_id")))
+    val feats = DedupFamily.ImageGridLsh.derive.get(media, 1)
+    val p = Dedup.plan(feats, mutationTolerance = 0.01, minDetection = 0.75,
+      vecCol = "feature", modality = "image", geometricTolerance = 1)
+    assert(p.family == "image_grid_lsh" && p.miningMode == "one_shot")
+    val assign = Dedup.runPlan(p, feats, idCol = "media_id", vecCol = "feature")
+    // the completion join is the core's: null-feature rows hash to no
+    // cell, so the derived table's ids are the assignment's id set
+    val outer = new AdaptiveSparkPlanHelper {}.collect(assign.queryExecution.executedPlan) {
+      case j: BaseJoinExec if j.joinType == LeftOuter => j
+    }
+    assert(outer.size == 1, assign.queryExecution.executedPlan.toString)
+    assert(assign.count() == 40)
   }
 }

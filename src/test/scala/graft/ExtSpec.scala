@@ -3244,7 +3244,7 @@ class ExtSpec extends SparkSpec {
     } finally { fps.unpersist(); spark.sharedState.cacheManager.clearCache() }
   }
 
-  test("survivor reprobe closes the promotion leak; the default walk is untouched") {
+  test("survivor walk: the documented promotion leak, and clique corpora") {
     import graft.ext.Dedup
     // the measured leak shape (SCALE.md r15, one twin per 16M capstone):
     // R eliminates O in their shared cell BEFORE T arrives; T is within
@@ -3260,21 +3260,12 @@ class ExtSpec extends SparkSpec {
         if (x.isNullAt(1)) None else Some(x.getLong(1)))).toSet
     assert(aset(Dedup.simhashAssignFromBlocks(bt)) ==
       Set((0L, None), (1L, Some(0L)), (2L, None))) // the documented leak
-    assert(aset(Dedup.simhashAssignFromBlocks(bt, reprobe = true)) ==
-      Set((0L, None), (1L, Some(0L)), (2L, Some(1L)))) // closed, soundly:
-    // T's elimination is a genuine radius pair toward a smaller id (O),
-    // chaining through O -> R exactly like cross-cell elimination does
 
-    // corpora with no leak are unchanged by the second pass (clique)
+    // a clique collapses onto its min id
     val clique = (0L until 4L).map(i => (i, 0x5a5aL)).toDF("doc_id", "simhash")
     val cb = Dedup.simhashBlockTable(clique, maxHamming = 3)
-    assert(aset(Dedup.simhashAssignFromBlocks(cb, reprobe = true)) ==
-      aset(Dedup.simhashAssignFromBlocks(cb)))
-
-    // the image family's plumb-through (same algebra over dhash)
-    val fps = Seq((0L, r), (1L, o), (2L, tt)).toDF("media_id", "dhash")
-    assert(aset(Multimodal.imageAssign(fps, reprobe = true)) ==
-      Set((0L, None), (1L, Some(0L)), (2L, Some(1L))))
+    assert(aset(Dedup.simhashAssignFromBlocks(cb)) ==
+      Set((0L, None), (1L, Some(0L)), (2L, Some(0L)), (3L, Some(0L))))
   }
 
   test("simhashParams: combination blocking stays pigeonhole-exact at auto sizes") {
@@ -3611,8 +3602,9 @@ class ExtSpec extends SparkSpec {
           s"elimination ($id -> $dupOf) is not an exact near-dup pair")
       case _ =>
     }
-    // nearDupSurvivors is the filtered view of the same assignment
-    val sv = Similarity.nearDupSurvivors(emb, thr, nPlanes = 4, nTables = 32)
+    // the survivor ids are the filtered view of the same assignment
+    val sv = Similarity.nearDupAssign(emb, thr, nPlanes = 4, nTables = 32)
+      .filter(col("dup_of").isNull).select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(sv == survivors)
   }
@@ -3728,33 +3720,32 @@ class ExtSpec extends SparkSpec {
         anchor.map(x => x + 0.02f * rnd.nextGaussian().toFloat)))
     }
     val gEmb = groups.toDF("vec_id", "embedding")
-    def surv(cap: Int) = Similarity.nearDupAssign(gEmb, 0.95,
-        nPlanes = 2, nTables = 8, maxRepsPerCell = cap)
-      .filter(col("dup_of").isNull).collect().map(_.getLong(0)).toSet
+    def surv(cap: Int) = groups.map(_._1).toSet --
+      graft.ext.CandidatePairs.eliminations(Similarity.lshTable(gEmb, 2, 8),
+        Similarity.LshCells, "vec_id",
+        Similarity.cosineEvidence(gEmb, 0.95, "vec_id", "embedding"), cap = cap)
+        .collect().map(_.getLong(0))
     val capped = surv(1)
-    val full = surv(4096)
+    val full = surv(graft.ext.CandidatePairs.MaxRepsPerCell)
+    assert(capped != full, "vacuous cap test: cap 1 changed nothing")
     assert(full.subsetOf(capped),
       s"cap over-eliminated: ${full -- capped} survived uncapped but not capped")
   }
 
-  test("nearDupPairsLsh corpusAwareSizing: measured-law sizing keeps exactness on real embeddings") {
+  test("nearDupPairsLsh at the lshParamsMeasured config keeps exactness on real embeddings") {
     assume(new java.io.File("/root/testdata/sf0.01").isDirectory)
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.nearDupPairs(emb, 0.45))
-    val aware = pairs(Similarity.nearDupPairsLsh(emb, 0.45, targetRecall = 0.999,
-      corpusAwareSizing = true))
+    val (planes, tables) = Similarity.lshParamsMeasured(emb, 0.45, targetRecall = 0.999)
+    val aware = pairs(Similarity.nearDupPairsLsh(emb, 0.45, nPlanes = planes,
+      nTables = tables))
     // exact rerank: zero false positives; 0.999 target: full recall on
-    // this corpus (the non-aware twin's established property — the
+    // this corpus (the hash-law sizing's established property — the
     // measured law must not break either side of it)
     assert(aware.subsetOf(exact))
     assert(aware == exact, s"corpus-aware sizing missed ${(exact -- aware).size} pairs")
-    // explicit config beside corpusAwareSizing is a contradiction
-    intercept[IllegalArgumentException] {
-      Similarity.nearDupPairsLsh(emb, 0.45, nPlanes = 4, nTables = 8,
-        corpusAwareSizing = true)
-    }
     spark.sharedState.cacheManager.clearCache()
   }
 

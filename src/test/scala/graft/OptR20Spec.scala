@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   *    reconciles to exactly [[Similarity.nearDupPairsLsh]]'s pair set —
   *    and the aggregate-form consumer ([[Multimodal.audioAnySegmentNearDups]])
   *    equals the old distinct-first composition.
-  * 2. The eliminations-only completion joins
-  *    ([[Similarity.nearDupEliminations]]/[[Dedup.simhashEliminations]]
-  *    under the feature/image assign wrappers) equal the old
-  *    assignment-join composition.
+  * 2. The feature/image assign wrappers, which hand their complete id
+  *    set to the one completion join of [[graft.ext.CandidatePairs.assign]],
+  *    equal the old assignment-join composition.
   */
 class OptR20Spec extends SparkSpec {
   import spark.implicits._

@@ -81,17 +81,19 @@ object Bench {
     // in min-of-N (a 0.3s crash beside a 25s success would report an ~80x
     // phantom speedup in the one JSON line the driver consumes).
     def once(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-      // capture BEFORE the cache teardown so the measured time is the
-      // query alone, not the unpersist housekeeping
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // queries that persist() an internal stage leave it in the cache
-      // manager keyed by logical plan — without this, a later sample
-      // would read an earlier sample's cache and min-of-N would report a
-      // warm-cache time instead of the query
+      // each sample runs in its own Scope, which releases the stages the
+      // query persisted: a later sample never reads an earlier sample's
+      // cache, so min-of-N reports the query, not a warm-cache time
+      val (ok, elapsed) = graft.core.Scope {
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
+        // capture BEFORE the scope's release so the measured time is the
+        // query alone, not the unpersist housekeeping
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
+      // a second safeguard: whatever a query cached outside its Scope
       spark.sharedState.cacheManager.clearCache()
       if (ok) Some(elapsed) else None
     }

@@ -46,12 +46,15 @@ object Verify {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // each query runs in its own Scope, which releases the stages it
+      // persisted once its result is written
+      try graft.core.Scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // keep query runs independent: drop stages persist()ed inside queries
+      // a second safeguard: whatever a query cached outside its Scope
       spark.sharedState.cacheManager.clearCache()
     }
     def q(s: String): String = SparkEntry.jsonString(s)

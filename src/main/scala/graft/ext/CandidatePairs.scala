@@ -44,7 +44,8 @@ private[graft] object CandidatePairs {
     * `<c>_a` and `<c>_b` (the optimizer prunes the ones a caller never
     * reads). Output: `key`, `<key>_b`, `id_a`, `id_b` and the suffixed
     * residual and carried columns. The input feeds both sides — persist
-    * it first when it is built inline rather than read from storage. */
+    * it first ([[graft.core.Scope.persist]]) when it is built inline
+    * rather than read from storage. */
   def collisions(cells: DataFrame, idCol: String, key: String,
       residuals: Seq[String], carry: Seq[String] = Nil): DataFrame = {
     def side(s: String, keyCol: Column) = cells.select(keyCol +:

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Scope
+
 /** Eval-set decontamination: drop (or flag) training documents that share
   * any word n-gram with an evaluation set — the published train/test
   * contamination rule (GPT-3 appendix C's 13-gram overlap; Lee et al. 2021
@@ -133,26 +135,19 @@ object Decontaminate {
   def contaminationPredicate(evalNg: DataFrame, text: Column, n: Int): Column = {
     // the ceiling guard (count) and the collect both execute the eval
     // pipeline — typically an explode + distinct shuffle; persist so the
-    // plan materializes once, not twice per predicate construction.
-    // Only unpersist what THIS call persisted: a caller following the
-    // "built once, reused across shards" advice may have cached evalNg
-    // itself, and evicting their cache would silently re-run the eval
-    // shuffle for every later shard.
-    val alreadyCached =
-      evalNg.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cached =
-      if (alreadyCached) evalNg
-      else evalNg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val items =
-      try {
-        val total = cached.count()
-        require(total <= PredicateMaxNgrams,
-          s"contaminationPredicate: $total eval n-grams exceeds the " +
-            s"driver-collectable ceiling of $PredicateMaxNgrams — use " +
-            "contaminatedIdsBloom (scan-time Bloom prune + exact semi-join) " +
-            "for reference sets this large")
-        cached.collect().map(_.getString(0))
-      } finally if (!alreadyCached) cached.unpersist()
+    // plan materializes once, not twice per predicate construction. A
+    // caller following the "built once, reused across shards" advice may
+    // have cached evalNg itself: the Scope leaves that cache alone.
+    val items = Scope {
+      val cached = Scope.persist(evalNg)
+      val total = cached.count()
+      require(total <= PredicateMaxNgrams,
+        s"contaminationPredicate: $total eval n-grams exceeds the " +
+          s"driver-collectable ceiling of $PredicateMaxNgrams — use " +
+          "contaminatedIdsBloom (scan-time Bloom prune + exact semi-join) " +
+          "for reference sets this large")
+      cached.collect().map(_.getString(0))
+    }
     val probe =
       if (items.length <= PredicateLiteralMax)
         graft.functions.AnyInSet(ngrams(text, n), items.toIndexedSeq)

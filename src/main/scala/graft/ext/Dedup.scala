@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Scope
+
 /** Deduplication operators for training-data pipelines (BASELINE.json
   * extension surface): exact, MinHash+LSH, SimHash, n-gram Jaccard.
   *
@@ -127,25 +129,11 @@ object Dedup {
     * shingle universe), and the candidate shuffle moves 8 bytes per shingle
     * instead of the n-gram text.
     *
-    * Caching contract: the returned (lazy) plan reads two stages this call
-    * `persist`s (the band table [[minhashCandidates]] builds and the
-    * shingle-hash table) — they cannot unpersist here because the caller
-    * has not consumed them yet, so they stay in the session cache
-    * afterwards (disk blocks are never auto-evicted). Long-lived sessions
-    * should release them once the result is materialized, e.g.
-    * `spark.sharedState.cacheManager.clearCache()` — Verify and Bench do
-    * exactly this between queries. Every form that BUILDS its cell table
-    * inline persists it the same way: [[minhashCandidates]],
-    * [[simhashScoredPairsFromSigs]] (the signature table, once, for
-    * [[simhashPairs]], [[simhashPairsFromSigs]] and
-    * [[Multimodal.videoAnyFrameNearDups]] alike),
-    * [[Similarity.lshCandidates]]. The forms that take an already-built
-    * table ([[bandCandidates]], [[simhashPairsFromBlocks]],
-    * [[Similarity.lshCandidatesFromTable]]) persist nothing: their input
-    * is expected storage-local, and a caller feeding them an inline-built
-    * table persists it first. Fully-materialized helpers
-    * ([[graft.ext.Ivf.trainCentroids]], [[graft.streaming.IncrementalDedup]])
-    * unpersist internally instead.
+    * The returned (lazy) plan reads two stages this call persists (the
+    * band table [[minhashCandidates]] builds and the shingle-hash table)
+    * through [[graft.core.Scope.persist]]: the caller's open scope owns
+    * and releases them, the session when none is open. Every pair form
+    * that builds its cell table inline persists it the same way.
     */
   def nearDupPairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, k: Int = 32, bands: Int = 8, threshold: Double = 0.5): DataFrame = {
@@ -155,9 +143,8 @@ object Dedup {
     // + shingle lineage — the text would be walked twice more per
     // invocation. The persisted rows are narrow (ids + longs), exactly
     // what a 100 TB job would stage between passes.
-    val sh = docs.select(col(idCol),
-      shingleHashes(col(textCol), shingleN).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Scope.persist(docs.select(col(idCol),
+      shingleHashes(col(textCol), shingleN).as("sh")))
     candidates
       .join(sh.select(col(idCol).as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col(idCol).as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
@@ -174,8 +161,7 @@ object Dedup {
     * `shared_bands` = the number of bands that agree — the LSH collision
     * count, a monotone estimator of signature agreement (a pair sharing
     * b' of b bands has estimated Jaccard ≥ the banding curve at b'/b).
-    * The input feeds both self-join sides and is not persisted here (the
-    * [[nearDupPairs]] caching contract): persist an inline-BUILT band
+    * The input feeds both self-join sides: persist an inline-BUILT band
     * table first, as [[minhashCandidates]] does, or the exploded relation
     * and the signature scan recompute once per side. The self-join is
     * [[CandidatePairs.collisions]]. The no-exchange published-table path: for a
@@ -212,8 +198,7 @@ object Dedup {
       shingleN: Int = 3, k: Int = 32, bands: Int = 8): DataFrame =
     // the band table feeds both self-join sides: materialize it so the
     // exploded relation and the signature scan run once
-    bandCandidates(minhashTable(docs, textCol, idCol, shingleN, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), idCol)
+    bandCandidates(Scope.persist(minhashTable(docs, textCol, idCol, shingleN, k, bands)), idCol)
       .select("doc_a", "doc_b")
 
   /** (k, bands) sized to a Jaccard threshold — the MinHash twin of
@@ -334,9 +319,8 @@ object Dedup {
     * per corpus, re-blocked at whatever radius a job needs; see
     * q72_simhash_pairs_persisted). Identical Manku blocking, identical
     * zero-false-negative guarantee: [[simhashScoredPairsFromSigs]]'
-    * verified stream, then one distinct. Same materialization contract:
-    * the signature table feeds both self-join sides, so it persists there
-    * and stays in the session cache for the caller. */
+    * verified stream, then one distinct. The signature table feeds both
+    * self-join sides, so it is persisted there, into the caller's scope. */
   def simhashPairsFromSigs(sigs: DataFrame, idCol: String = "doc_id",
       sigCol: String = "simhash", maxHamming: Int = 3, blocks: Int = 0): DataFrame =
     simhashScoredPairsFromSigs(sigs, idCol, sigCol, maxHamming, blocks).distinct()
@@ -478,8 +462,7 @@ object Dedup {
     * one 8-byte column through the shuffle instead of two). The verify
     * radius comes from the table's own `max_hamming` stamp; a close pair
     * shares several blocks, and the distinct after the verify collapses
-    * them. The input is not persisted here (the [[nearDupPairs]] caching
-    * contract). */
+    * them. The input feeds both sides and is not persisted here. */
   def simhashPairsFromBlocks(blockTable: DataFrame, idCol: String = "doc_id"): DataFrame = {
     TableShapes.requireColumns(blockTable,
       Seq("bkey", "blk", "bits", "sh", "max_hamming", idCol),
@@ -514,8 +497,7 @@ object Dedup {
     // cache the NARROW signature table, not the (maxHamming+1)x exploded
     // block relation — each join side re-derives its blocks from the cache
     // (cheap scan-stage shifts)
-    val sh = sigs.select(col(idCol), col(sigCol).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Scope.persist(sigs.select(col(idCol), col(sigCol).as("sh")))
     simhashVerifiedPairs(simhashBlockTable(sh, idCol, "sh", maxHamming, blocks), idCol)
   }
 
@@ -1410,13 +1392,12 @@ object Dedup {
     // own persist: sizing a descriptor-tier plan re-reads the pool (count
     // + sampled law), and re-running the header parse per pass would turn
     // "one parse per row" into three
-    val headed = withDetectedKind(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try planByKindFrom(headed, mutationTolerance, minDetection,
-      imageGeometricTolerance, audioGeometricTolerance,
-      videoMutationTolerance, scratchBudgetGb, imageRecodeQuality,
-      videoTrimTolerance, audioTrimTolerance).map { case (m, (p, _)) => m -> p }
-    finally headed.unpersist(blocking = false)
+    Scope {
+      planByKindFrom(Scope.persist(withDetectedKind(media)), mutationTolerance,
+        minDetection, imageGeometricTolerance, audioGeometricTolerance,
+        videoMutationTolerance, scratchBudgetGb, imageRecodeQuality,
+        videoTrimTolerance, audioTrimTolerance).map { case (m, (p, _)) => m -> p }
+    }
   }
 
   /** [[planByKind]]'s body over an already-kind-detected (and ideally
@@ -1559,8 +1540,8 @@ object Dedup {
     * pool then pays exactly its modality's scan-stage decode + mining —
     * nothing cross-modality shuffles together, so the mixed call costs
     * what the three direct calls it replaces would. The returned
-    * assignment comes back PERSISTED (it is materialized so the shared
-    * kind-detected scan can be freed) — unpersist it when done. */
+    * assignment comes back materialized, persisted into the caller's
+    * scope, so the shared kind-detected scan is freed on return. */
   def runPlanByKind(media: DataFrame, mutationTolerance: Double,
       minDetection: Double = 0.9, imageGeometricTolerance: Double = 0.0,
       audioGeometricTolerance: Double = 0.0,
@@ -1571,9 +1552,8 @@ object Dedup {
       audioTrimTolerance: Int = 0): DataFrame = {
     TableShapes.requireColumns(media, Seq("media_id", "payload"),
       "runPlanByKind", "the media-family (media_id, payload) shape")
-    val headed = withDetectedKind(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val headed = Scope.persist(withDetectedKind(media))
       val plans = planByKindFrom(headed, mutationTolerance, minDetection,
         imageGeometricTolerance, audioGeometricTolerance,
         videoMutationTolerance, scratchBudgetGb, imageRecodeQuality,
@@ -1600,13 +1580,12 @@ object Dedup {
         .filter(col("__kind").isNull || !col("__kind").isin(handledKinds: _*))
         .select(col("media_id"), col("__kind").as("kind"),
           lit(null).cast("long").as("dup_of"))
-      // materialize before unpersist: the union is lazy and `headed`
-      // backs every branch
-      val out = (pooled :+ others).reduce(_.unionByName(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize before the scope releases `headed`: the union is lazy
+      // and `headed` backs every branch; the returned frame outlives it
+      val out = Scope.persist((pooled :+ others).reduce(_.unionByName(_)))
       out.count()
       out
-    } finally headed.unpersist(blocking = false)
+    }
   }
 
   /** Kind detection shared by [[planByKind]] and [[runPlanByKind]] — the

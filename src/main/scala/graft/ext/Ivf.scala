@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Catalog
+import graft.core.{Catalog, Scope}
 import graft.functions.NearestCentroid
 
 /** IVF (inverted-file) approximate nearest neighbour — the k-means-coarse-
@@ -48,9 +48,8 @@ object Ivf {
     // training issues iters+1 actions over the same projection — persist
     // for its duration (and release after: the function is fully
     // materialized, so the cache has no live consumers once it returns)
-    val proj = emb.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val proj = Scope.persist(emb.select(col(idCol), col(vecCol)))
       // seed: the k vectors with smallest hashed id — a deterministic
       // pseudo-random sample, independent of row order and partitioning
       var cents: Array[Array[Double]] = proj
@@ -66,16 +65,14 @@ object Ivf {
         // generate loop and re-evaluates it per EXPLODED row — a dim×
         // blowup of the k·dim distance scan (the Pq.trainCodebooks
         // lesson; a cache barrier costs no network, unlike a shuffle)
-        val assigned = proj
-          .select(NearestCentroid(col(vecCol), cents).as("cluster"), col(vecCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sums = try {
-          assigned
+        val sums = Scope {
+          Scope.persist(proj
+            .select(NearestCentroid(col(vecCol), cents).as("cluster"), col(vecCol)))
             .select(col("cluster"), posexplode(col(vecCol)))
             .groupBy(col("cluster"), col("pos"))
             .agg(avg(col("col")).as("m"))
             .collect()
-        } finally assigned.unpersist(blocking = false)
+        }
         val byCluster = sums.groupBy(_.getInt(0))
         cents = cents.zipWithIndex.map { case (prev, c) =>
           byCluster.get(c)
@@ -85,7 +82,7 @@ object Ivf {
         it += 1
       }
       cents
-    } finally proj.unpersist(blocking = false)
+    }
   }
 
   /** Cluster assignment column for writing/bucketing the corpus. */
@@ -154,9 +151,8 @@ object Ivf {
     // actions) source twice AND could let the ledger count disagree with
     // the rows actually written — persist, count the cached frame, write
     // the same cache
-    val assigned = assign(newRows, cents, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val assigned = Scope.persist(assign(newRows, cents, vecCol))
       val n = assigned.count()
       catalog.append(assigned, corpusRef, partitionBy = Seq("cluster"))
       if (ledgerRef.nonEmpty) {
@@ -165,7 +161,7 @@ object Ivf {
           l.copy(appendedCount = l.appendedCount + n))
       }
       n
-    } finally assigned.unpersist(blocking = false)
+    }
   }
 
   /** The rebuild-policy ledger persisted beside the centroids: how much
@@ -220,8 +216,8 @@ object Ivf {
     * appended-union corpus to read what churn cost, and over appended
     * rows only (`queryFilter`) to read the worst case — drifted queries
     * probing cells trained without them. Driver loop of 2·nQueries
-    * k-sized jobs; persist `emb` around the call when it is not already
-    * storage-backed. */
+    * k-sized jobs; persist `emb` in the caller's [[graft.core.Scope]] when
+    * it is not already storage-backed. */
   def measureRecall(emb: DataFrame, centroids: Array[Array[Double]],
       k: Int = 10, nProbe: Int = 2, nQueries: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Catalog
+import graft.core.{Catalog, Scope}
 import graft.functions.{NearestCentroid, PqAdc}
 
 /** Product quantization (PQ) — the memory-bound serving shape of ANN
@@ -62,9 +62,8 @@ object Pq {
     val dim = dimRows(0).getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subvectors")
     val subDim = dim / m
-    val proj = emb.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val proj = Scope.persist(emb.select(col(idCol), col(vecCol)))
       // seed: the k vectors with smallest hashed id (Ivf's convention),
       // sliced driver-side into every subvector's initial codebook
       val seeds = proj
@@ -85,16 +84,14 @@ object Pq {
         // cache (storage-local) beats a repartition barrier (iters ×
         // corpus bytes over the network) — training shuffle volume
         // stays m·k·subDim, the Ivf contract.
-        val assigned = proj.select(col(vecCol), assigns.as("cl"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sums = try {
-          assigned
+        val sums = Scope {
+          Scope.persist(proj.select(col(vecCol), assigns.as("cl")))
             .select(col("cl"), posexplode(col(vecCol)))
             .select(sub.as("sub"), element_at(col("cl"), sub + 1).as("cluster"),
               pmod(col("pos"), lit(subDim)).as("d"), col("col"))
             .groupBy("sub", "cluster", "d").agg(avg("col").as("mavg"))
             .collect()
-        } finally assigned.unpersist(blocking = false)
+        }
         val bySub = sums.groupBy(_.getInt(0))
         books = Array.tabulate(m) { j =>
           val byCluster = bySub.getOrElse(j, Array.empty).groupBy(_.getInt(1))
@@ -107,7 +104,7 @@ object Pq {
         it += 1
       }
       Codebooks(books, subDim)
-    } finally proj.unpersist(blocking = false)
+    }
   }
 
   /** Corpus + `codes` column (`array<int>`, length m): each subvector's
@@ -214,9 +211,8 @@ object Pq {
     val cb = loadCodebooks(catalog, codebooksRef)
     // single-evaluation discipline (the Ivf.appendAssign contract): the
     // ledger count and the written rows come from the same cached frame
-    val encoded = encode(newRows, cb, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val encoded = Scope.persist(encode(newRows, cb, vecCol))
       val n = encoded.count()
       catalog.append(encoded, codesRef)
       if (ledgerRef.nonEmpty) {
@@ -225,7 +221,7 @@ object Pq {
           l.copy(appendedCount = l.appendedCount + n))
       }
       n
-    } finally encoded.unpersist(blocking = false)
+    }
   }
 
   /** COMPOSED IVF-PQ append maintenance (r17 verdict item #3): extend a
@@ -246,9 +242,8 @@ object Pq {
       vecCol: String = "embedding", ledgerRef: String = ""): Long = {
     val cents = Ivf.loadCentroids(catalog, centroidsRef)
     val cb = loadCodebooks(catalog, codebooksRef)
-    val prepared = encode(Ivf.assign(newRows, cents, vecCol), cb, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val prepared = Scope.persist(encode(Ivf.assign(newRows, cents, vecCol), cb, vecCol))
       val n = prepared.count()
       catalog.append(prepared, corpusRef, partitionBy = Seq("cluster"))
       if (ledgerRef.nonEmpty) {
@@ -257,7 +252,7 @@ object Pq {
           l.copy(appendedCount = l.appendedCount + n))
       }
       n
-    } finally prepared.unpersist(blocking = false)
+    }
   }
 
   /** ADC-ordering recall vs the exact squared-L2 ordering — [[Ivf

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Scope
+
 /** Similarity search over an embedding column `array<float>` (BASELINE.json
   * extension surface): brute-force cosine top-k as the exact baseline, and an
   * LSH-bucketed (random-hyperplane) variant as the 100 TB scale path.
@@ -559,14 +561,13 @@ object Similarity {
       vecCol: String = "embedding",
       depths: Seq[Int] = Nil): NonUniformityLaw = {
     val m = math.min(n, sampleRows)
-    val sample =
-      (if (m >= n) emb.select(col(vecCol))
-       else emb.select(col(vecCol))
-         .sample(withReplacement = false, math.min(1.0, m.toDouble * 1.05 / n),
-           seed = 42)
-         .limit(m.toInt))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val sample = Scope.persist(
+        if (m >= n) emb.select(col(vecCol))
+        else emb.select(col(vecCol))
+          .sample(withReplacement = false, math.min(1.0, m.toDouble * 1.05 / n),
+            seed = 42)
+          .limit(m.toInt))
       val mm = sample.count()
       // deepest depth where tables·C(m,2)/2^k still expects ≥200 uniform
       // pairs — past it the ratio estimate is shot noise
@@ -577,8 +578,8 @@ object Similarity {
         else Seq(kMax, kMax - 3, kMax - 6, kMax - 9).filter(_ >= 4).distinct
       // a corpus too small to measure ANY depth (a few hundred rows) has
       // no collision economics to speak of — fall back to the hash floor
-      if (ks.isEmpty) return HashCorpusNonUniformity
-      val measured = ks.sorted.map { k =>
+      if (ks.isEmpty) HashCorpusNonUniformity
+      else fitNonUniformity(ks.sorted.map { k =>
         val realized = lshTable(sample.withColumn("vec_id", lit(0L)), k,
             nTables, "vec_id", vecCol)
           .groupBy("ckey").count()
@@ -587,9 +588,8 @@ object Similarity {
         val uniform = nTables.toDouble * mm * (mm - 1) / 2.0 /
           math.pow(2.0, k)
         k -> math.max(1.0, realized / uniform)
-      }
-      fitNonUniformity(measured)
-    } finally sample.unpersist()
+      })
+    }
   }
 
   /** The log-linear fit behind [[measureNonUniformityLaw]], exposed for
@@ -696,15 +696,12 @@ object Similarity {
   /** The (tbl, bucket) self-join candidate pairs for [[nearDupPairsLsh]] —
     * exposed so tests can assert candidate VOLUME (the actual scale
     * property), not just the absence of a CartesianProduct plan node.
-    * Caching contract as [[Dedup.nearDupPairs]]: the returned plan reads a
-    * stage persisted here; callers in long-lived sessions release it after
-    * materializing (`spark.sharedState.cacheManager.clearCache()`). */
+    * The bucket table is persisted into the caller's [[graft.core.Scope]]. */
   def lshCandidates(emb: DataFrame, nPlanes: Int, nTables: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     // the bucket table feeds both sides of the self-join — materialize so
     // the corpus scan + nPlanes·nTables hyperplane projections run once
-    lshCandidatesFromTable(lshTable(emb, nPlanes, nTables, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), idCol)
+    lshCandidatesFromTable(Scope.persist(lshTable(emb, nPlanes, nTables, idCol, vecCol)), idCol)
 
   /** The persistable multi-table LSH bucket relation — the
     * [[graft.ext.Dedup.minhashTable]]/[[graft.ext.Dedup.bandCandidates]]
@@ -743,9 +740,8 @@ object Similarity {
     * so a table published bucketed on `ckey` self-joins with no exchange
     * on the collision key. Semantics vs a plain three-key equi-join are
     * fuzz-pinned in PropertiesSpec on tables whose ckey deliberately
-    * collides across (tbl, bucket) values. The input is not persisted
-    * here (the [[Dedup.nearDupPairs]] caching contract): persist an
-    * inline-built table first, as [[lshCandidates]] does. */
+    * collides across (tbl, bucket) values. The input feeds both sides:
+    * persist an inline-built table first, as [[lshCandidates]] does. */
   def lshCandidatesFromTable(bucketTable: DataFrame, idCol: String = "vec_id"): DataFrame = {
     requireLshTable(bucketTable, idCol, "lshCandidatesFromTable")
     lshCandidatesRaw(bucketTable, idCol).distinct()
@@ -1093,15 +1089,14 @@ object Similarity {
     val par = math.max(1L, math.min(
       emb.sparkSession.sparkContext.defaultParallelism.toLong,
       (n * tables + BucketRowsPerTask - 1) / BucketRowsPerTask)).toInt
-    val fat = emb
+    val fat = Scope.persist(emb
       .repartition(par, col(idCol))
       .select(col(idCol), col(vecCol), norm2(col(vecCol)).as("n2"),
         posexplode(graft.functions.HyperplaneLsh(col(vecCol), planes, tables)))
       .toDF(idCol, vecCol, "n2", "tbl", "bucket")
       .select(col(idCol), col(vecCol), col("n2"),
         xxhash64(col("tbl"), col("bucket")).as("ckey"),
-        col("tbl"), col("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("tbl"), col("bucket")))
     // the same collision join as [[lshCandidatesRaw]], vectors carried
     CandidatePairs.collisions(fat, idCol, "ckey", Seq("tbl", "bucket"), Seq(vecCol, "n2"))
       .select(col("id_a"), col("id_b"),

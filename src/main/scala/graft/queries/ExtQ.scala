@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.core.Scope
 import graft.ext._
 import graft.ops._
 import Q._
@@ -418,12 +418,11 @@ object ExtQ {
         // documents scan + LangId + TextMetrics lineage, and at 100 TB a
         // curation job must materialize between stages (MEMORY_AND_DISK so
         // an executor-memory shortfall spills instead of recomputing).
-        val exactKept = scored
+        val exactKept = Scope.persist(scored
           .withColumn("keep_id",
             min(col("doc_id")).over(Window.partitionBy(col("fp"))))
           .filter(col("doc_id") === col("keep_id"))
-          .drop("keep_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .drop("keep_id"))
         val dropB = Dedup.nearDupPairs(exactKept, shingleN = 3, threshold = 0.3)
           .select(col("doc_b").as("doc_id")).distinct()
         exactKept.join(dropB, Seq("doc_id"), "left_anti")
@@ -1503,9 +1502,9 @@ object ExtQ {
         // table, vector fetch, and both sides of the soundness join —
         // and each consumer re-derived it from parquet before. Values,
         // partitioning and therefore the assignment are unchanged (the
-        // exact oracle re-proves); the bench clears the cache manager
-        // between samples, so no run ever reads a prior sample's cache.
-        val corpus = twinCorpus(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+        // exact oracle re-proves); the caller's scope releases it, so no
+        // bench sample ever reads a prior sample's cache.
+        val corpus = Scope.persist(twinCorpus(s, dir))
         cat.save(
           Similarity.nearDupAssign(corpus, threshold = 0.9, targetRecall = 0.9999),
           "ann.q81_assign")
@@ -1796,8 +1795,8 @@ object ExtQ {
         // values and partitioning are unchanged, so the trained centroids
         // are bit-identical; unpersisted before the search, which reads
         // only the persisted artifact
-        val emb = t(s, dir, "embeddings").persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        Scope {
+          val emb = Scope.persist(t(s, dir, "embeddings"))
           val evens = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
           val odds = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
           val cents = Ivf.trainCentroids(evens, k = 8, iters = 3)
@@ -1808,7 +1807,7 @@ object ExtQ {
           cat.save(Ivf.assign(evens, cents), "ann.q87_corpus",
             partitionBy = Seq("cluster"))
           Ivf.appendAssign(cat, "ann.q87_corpus", "ann.q87_centroids", odds)
-        } finally emb.unpersist(blocking = false)
+        }
         Ivf.ivfTopKPartitioned(cat.load("ann.q87_corpus"),
           Ivf.loadCentroids(cat, "ann.q87_centroids"),
           queryId = 0L, k = 10, nProbe = 3)
@@ -1832,8 +1831,8 @@ object ExtQ {
         val cat = new graft.core.Catalog(s, annRoot(dir))
         // shared materialization across train + write + append (q87's
         // r20 convention; values unchanged, codebooks bit-identical)
-        val emb = t(s, dir, "embeddings").persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        Scope {
+          val emb = Scope.persist(t(s, dir, "embeddings"))
           val evens = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
           val odds = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
           val cb = Pq.trainCodebooks(evens, m = 8, k = 64, iters = 3)
@@ -1842,7 +1841,7 @@ object ExtQ {
           // (the oracle globs the directory — q87's convention)
           cat.save(Pq.encode(evens, cb), "ann.q90_corpus")
           Pq.appendEncode(cat, "ann.q90_corpus", "ann.q90_codebooks", odds)
-        } finally emb.unpersist(blocking = false)
+        }
         val enc = cat.load("ann.q90_corpus")
         val qRows = enc.filter(col("vec_id") === 0L)
           .select(col("embedding")).take(1)
@@ -1875,8 +1874,8 @@ object ExtQ {
         val cat = new graft.core.Catalog(s, annRoot(dir))
         // shared materialization across BOTH trainers + write + append
         // (q87's r20 convention; values unchanged, artifacts bit-identical)
-        val emb = t(s, dir, "embeddings").persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        Scope {
+          val emb = Scope.persist(t(s, dir, "embeddings"))
           val evens = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
           val odds = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
           val cents = Ivf.trainCentroids(evens, k = 8, iters = 3)
@@ -1889,7 +1888,7 @@ object ExtQ {
             partitionBy = Seq("cluster"))
           Pq.appendAssignEncode(cat, "ann.q92_corpus", "ann.q92_centroids",
             "ann.q92_codebooks", odds)
-        } finally emb.unpersist(blocking = false)
+        }
         val corpus = cat.load("ann.q92_corpus")
         val qRows = corpus.filter(col("vec_id") === 0L)
           .select(col("embedding")).take(1)
@@ -2355,13 +2354,13 @@ object ExtQ {
     // and therefore the trained centroids are bit-identical — persist
     // only cuts the repeated scan). Unpersisted before returning: every
     // downstream read is from the persisted artifact, not this lineage.
-    val emb = t(s, dir, "embeddings").persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val emb = Scope.persist(t(s, dir, "embeddings"))
       val cents = Ivf.trainCentroids(emb, k = 8, iters = 3)
       Ivf.saveCentroids(cat, "ann.q68_centroids", cents)
       cat.save(Ivf.assign(emb, cents), "ann.q68_corpus",
         partitionBy = Seq("cluster"))
-    } finally emb.unpersist(blocking = false)
+    }
   }
 
   private def serveIvf(cat: graft.core.Catalog): DataFrame =
@@ -2398,12 +2397,12 @@ object ExtQ {
   private def buildPqArtifacts(s: SparkSession, dir: String,
       cat: graft.core.Catalog): Unit = {
     // shared materialization, as [[buildIvfArtifacts]] (r20)
-    val emb = t(s, dir, "embeddings").persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val emb = Scope.persist(t(s, dir, "embeddings"))
       val cb = Pq.trainCodebooks(emb, m = 8, k = 64, iters = 3)
       Pq.saveCodebooks(cat, "ann.q69_codebooks", cb)
       cat.save(Pq.encode(emb, cb), "ann.q69_corpus")
-    } finally emb.unpersist(blocking = false)
+    }
   }
 
   private def servePq(cat: graft.core.Catalog): DataFrame = {
@@ -2450,15 +2449,15 @@ object ExtQ {
       cat: graft.core.Catalog): Unit = {
     // shared materialization, as [[buildIvfArtifacts]] (r20): BOTH
     // trainers plus the encode-write read it
-    val emb = t(s, dir, "embeddings").persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val emb = Scope.persist(t(s, dir, "embeddings"))
       val cents = Ivf.trainCentroids(emb, k = 8, iters = 3)
       val cb = Pq.trainCodebooks(emb, m = 8, k = 64, iters = 3)
       Ivf.saveCentroids(cat, "ann.q70_centroids", cents)
       Pq.saveCodebooks(cat, "ann.q70_codebooks", cb)
       cat.save(Pq.encode(Ivf.assign(emb, cents), cb), "ann.q70_corpus",
         partitionBy = Seq("cluster"))
-    } finally emb.unpersist(blocking = false)
+    }
   }
 
   private def serveIvfPq(cat: graft.core.Catalog): DataFrame = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{Catalog, Clock, SystemClock}
+import graft.core.{Catalog, Clock, Scope, SystemClock}
 import graft.ext.TextStats
 
 /** Streaming twin of the q44 curation pipeline — the always-on ingest form
@@ -340,77 +340,74 @@ object CurationStream {
     private val othersChecked = scala.collection.mutable.Set.empty[String]
 
     /** Route one micro-batch; returns per-pool survivor counts. */
-    def processBatch(batchRaw: DataFrame, batchId: Long): Map[String, Long] = {
+    def processBatch(batchRaw: DataFrame, batchId: Long): Map[String, Long] = Scope {
       import graft.ext.Dedup.ModalityKinds
-      val headed = batchRaw.withColumn("__kind",
+      val headed = Scope.persist(batchRaw.withColumn("__kind",
         coalesce(graft.functions.MediaHeader(col(payloadCol))
-          .getField("format"), lit("unknown")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        def pool(kinds: Set[String]): DataFrame =
-          headed.filter(col("__kind").isin(kinds.toSeq: _*)).drop("__kind")
-        val img = pool(ModalityKinds("image"))
-        val audRaw = pool(ModalityKinds("audio"))
-        // the envelope feature is computed ONLY for the whole-clip LSH
-        // rung; the segment rung computes its own per-window features
-        // inside IncrementalAudioSegmentDedup (one decode per clip)
-        def aud = audRaw
-          .withColumn("feature",
-            graft.functions.AudioEnvelopeFeature(col(payloadCol), frames)
-              .getField("feature"))
-        val vid = pool(ModalityKinds("video"))
-        // the trim rung's promise holds only for frame-decodable
-        // containers — a non-decodable arrival (e.g. an opaque-codec mp4)
-        // yields no frames and would SURVIVE FOREVER, even byte-identical
-        // re-uploads. The batch dispatcher refuses exactly this mixed
-        // pool (planByKindFrom's require); mirror it per micro-batch so
-        // stream and batch cannot drift (r18 advice, medium).
-        if (videoFrames.isDefined) {
-          val vidKinds = headed
-            .filter(col("__kind").isin(
-              graft.ext.Dedup.ModalityKinds("video").toSeq: _*))
-            .select("__kind").distinct().collect().map(_.getString(0)).toSet
-          val blockers =
-            if (vidKinds.subsetOf(graft.ext.Dedup.FrameDecodableKinds))
-              Set.empty[String]
-            else graft.ext.Dedup.videoPoolBlockers(headed, vidKinds,
-              payloadCol)
-          require(blockers.isEmpty,
-            s"videoTrimTolerance $videoTrimTolerance needs a " +
-              "frame-decodable video pool " +
-              s"(${graft.ext.Dedup.FrameDecodableKinds.mkString("/")} or " +
-              s"jpeg-codec mp4) but batch $batchId carries $blockers — " +
-              "drop the knob, split the stream, or supply video " +
-              "embeddings (the batch dispatcher refuses this same pool)")
-        }
-        // coalesce above makes __kind non-null, so a bare NOT-isin is
-        // null-safe here (the r17-advice trap this router must not re-dig)
-        val handled = ModalityKinds.values.flatten.toSeq
-        val others = headed.filter(!col("__kind").isin(handled: _*))
-          .drop("__kind")
-        // header-parsed but content-undecodable audio SURVIVES (batch
-        // contract). Routing differs by rung, each mirroring ITS batch
-        // family: the whole-clip LSH rung sends undecodable clips to the
-        // others append; the segment rung keeps them in the clips table
-        // (they emit no segment rows and match nothing — the
-        // runPlanByKind audio-pool assignment shape)
-        val audBad =
-          if (audioSegs.isDefined) audRaw.limit(0)
-          else aud.filter(col("feature").isNull).drop("feature")
-        val nImg = image.processBatch(img, batchId)
-        val nAud = audioSegs.map(_.processBatch(audRaw, batchId))
-          .orElse(audioLsh.map(_.processBatch(
-            aud.filter(col("feature").isNotNull), batchId))).get
-        val nVid = videoExact.map(_.processBatch(vid, batchId))
-          .orElse(videoFrames.map(_.processBatch(vid, batchId))).get
-        val passThrough = others.unionByName(audBad)
-        val nOth = passThrough.count()
-        if (nOth > 0)
-          StreamingAppend.appendOnce(catalog, s"${tablePrefix}_others",
-            passThrough, batchId, Nil, othersChecked)
-        Map("image" -> nImg, "audio" -> nAud, "video" -> nVid,
-          "others" -> nOth)
-      } finally headed.unpersist(blocking = false)
+          .getField("format"), lit("unknown"))))
+      def pool(kinds: Set[String]): DataFrame =
+        headed.filter(col("__kind").isin(kinds.toSeq: _*)).drop("__kind")
+      val img = pool(ModalityKinds("image"))
+      val audRaw = pool(ModalityKinds("audio"))
+      // the envelope feature is computed ONLY for the whole-clip LSH
+      // rung; the segment rung computes its own per-window features
+      // inside IncrementalAudioSegmentDedup (one decode per clip)
+      def aud = audRaw
+        .withColumn("feature",
+          graft.functions.AudioEnvelopeFeature(col(payloadCol), frames)
+            .getField("feature"))
+      val vid = pool(ModalityKinds("video"))
+      // the trim rung's promise holds only for frame-decodable
+      // containers — a non-decodable arrival (e.g. an opaque-codec mp4)
+      // yields no frames and would SURVIVE FOREVER, even byte-identical
+      // re-uploads. The batch dispatcher refuses exactly this mixed
+      // pool (planByKindFrom's require); mirror it per micro-batch so
+      // stream and batch cannot drift (r18 advice, medium).
+      if (videoFrames.isDefined) {
+        val vidKinds = headed
+          .filter(col("__kind").isin(
+            graft.ext.Dedup.ModalityKinds("video").toSeq: _*))
+          .select("__kind").distinct().collect().map(_.getString(0)).toSet
+        val blockers =
+          if (vidKinds.subsetOf(graft.ext.Dedup.FrameDecodableKinds))
+            Set.empty[String]
+          else graft.ext.Dedup.videoPoolBlockers(headed, vidKinds,
+            payloadCol)
+        require(blockers.isEmpty,
+          s"videoTrimTolerance $videoTrimTolerance needs a " +
+            "frame-decodable video pool " +
+            s"(${graft.ext.Dedup.FrameDecodableKinds.mkString("/")} or " +
+            s"jpeg-codec mp4) but batch $batchId carries $blockers — " +
+            "drop the knob, split the stream, or supply video " +
+            "embeddings (the batch dispatcher refuses this same pool)")
+      }
+      // coalesce above makes __kind non-null, so a bare NOT-isin is
+      // null-safe here (the r17-advice trap this router must not re-dig)
+      val handled = ModalityKinds.values.flatten.toSeq
+      val others = headed.filter(!col("__kind").isin(handled: _*))
+        .drop("__kind")
+      // header-parsed but content-undecodable audio SURVIVES (batch
+      // contract). Routing differs by rung, each mirroring ITS batch
+      // family: the whole-clip LSH rung sends undecodable clips to the
+      // others append; the segment rung keeps them in the clips table
+      // (they emit no segment rows and match nothing — the
+      // runPlanByKind audio-pool assignment shape)
+      val audBad =
+        if (audioSegs.isDefined) audRaw.limit(0)
+        else aud.filter(col("feature").isNull).drop("feature")
+      val nImg = image.processBatch(img, batchId)
+      val nAud = audioSegs.map(_.processBatch(audRaw, batchId))
+        .orElse(audioLsh.map(_.processBatch(
+          aud.filter(col("feature").isNotNull), batchId))).get
+      val nVid = videoExact.map(_.processBatch(vid, batchId))
+        .orElse(videoFrames.map(_.processBatch(vid, batchId))).get
+      val passThrough = others.unionByName(audBad)
+      val nOth = passThrough.count()
+      if (nOth > 0)
+        StreamingAppend.appendOnce(catalog, s"${tablePrefix}_others",
+          passThrough, batchId, Nil, othersChecked)
+      Map("image" -> nImg, "audio" -> nAud, "video" -> nVid,
+        "others" -> nOth)
     }
   }
 

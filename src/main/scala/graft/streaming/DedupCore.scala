@@ -5,9 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.storage.StorageLevel
-
-import graft.core.Catalog
+import graft.core.{Catalog, Scope}
 
 /** The single-pass incremental deduper every streaming dedup family is a
   * definition over: the always-on form of a batch near-dup sweep, with
@@ -30,8 +28,8 @@ import graft.core.Catalog
   *     action collects the dropped ids;
   *  6. appends survivors to the corpus, then their state rows, all
   *     filtered by those ids, each as one batch-id-keyed manifest commit
-  *     ([[StreamingAppend.appendOnce]]); everything persisted is released
-  *     in one `finally`.
+  *     ([[StreamingAppend.appendOnce]]); the batch runs in one
+  *     [[graft.core.Scope]], which releases everything it persisted.
   *
   * Semantics: greedy-prefix (online) dedup against ACCEPTED units only. On
   * chain-free data this equals the batch sweep (each family's StreamingSpec
@@ -87,86 +85,82 @@ private[streaming] abstract class DedupCore(catalog: Catalog,
   /** Deduplicate one micro-batch against the accumulated corpus and itself;
     * append survivors. Returns the survivor count. Public so batch
     * backfills and tests drive the exact streaming per-tick logic. */
-  def processBatch(batchRaw: DataFrame, batchId: Long): Long = {
-    val cached = mutable.ArrayBuffer.empty[DataFrame]
-    def once(df: DataFrame): DataFrame = { cached += df.persist(StorageLevel.MEMORY_AND_DISK); df }
-    try {
-      val batch = once(StreamingAppend.collapseSameId(batchRaw, idCol))
-      val unitRows = if (keepsUnits) once(units(batch)) else units(batch)
-      val cellRows = if (keepsCells) once(cells(batch, unitRows)) else cells(batch, unitRows)
-      val (pa, pb) = (s"${payload}_a", s"${payload}_b")
-      // the arrivals' payloads join each verify side as a broadcast
-      def withPayload(pairs: DataFrame, key: String, as: String): DataFrame =
-        pairs.join(broadcast(unitRows.select(col(unit).as(key), col(payload).as(as))), Seq(key))
+  def processBatch(batchRaw: DataFrame, batchId: Long): Long = Scope {
+    val batch = Scope.persist(StreamingAppend.collapseSameId(batchRaw, idCol))
+    val unitRows = if (keepsUnits) Scope.persist(units(batch)) else units(batch)
+    val cellRows = if (keepsCells) Scope.persist(cells(batch, unitRows)) else cells(batch, unitRows)
+    val (pa, pb) = (s"${payload}_a", s"${payload}_b")
+    // the arrivals' payloads join each verify side as a broadcast
+    def withPayload(pairs: DataFrame, key: String, as: String): DataFrame =
+      pairs.join(broadcast(unitRows.select(col(unit).as(key), col(payload).as(as))), Seq(key))
 
-      // loadIfReadable, not exists+load: a state directory holding only
-      // the _temporary droppings of a crashed plain write takes the
-      // fresh-table branch instead of wedging every replay
-      val droppedVsState = StreamingAppend.loadIfReadable(catalog, probed) match {
-        case None => batch.select(col(idCol)).limit(0)
-        case Some(loaded) =>
-          if (!stampChecked) stampedRadius.foreach(checkRadius(loaded, _))
-          val candidates = once(probe(loaded, cellRows))
-          val scored = joinBack match {
-            case None => candidates
-            case Some((table, old)) =>
-              // candidates are collision-bounded: their old ids broadcast
-              // and the join-back table is scan-only
-              val olds = catalog.load(table)
-                .join(broadcast(candidates.select(col("old_id").as(unit)).distinct()), Seq(unit))
-                .select(col(unit).as("old_id"), old.as(pb))
-              withPayload(candidates, unit, pa).join(olds, Seq("old_id"))
-          }
-          // a bare id column, not an alias of itself, when units are arrivals
-          scored.filter(accept(col(pa), col(pb)))
-            .select(if (packed) owner(col(unit)).as(idCol) else col(idCol))
-      }
-
-      // intra-batch: a unit near-duplicating a LOWER-owner arrival's drops
-      val carried = joinBack.isEmpty
-      def side(s: String) = cellRows.select(cellKeys.map(col) ++ Seq(col(unit).as(s"u_$s")) ++
-        (if (carried) Seq(col(payload).as(s"${payload}_$s")) else Nil): _*)
-      val pairs = side("a").join(side("b"), cellKeys)
-        .filter(owner(col("u_a")) < owner(col("u_b")))
-        .select((Seq("u_a", "u_b") ++ (if (carried) Seq(pa, pb) else Nil)).map(col): _*)
-        .distinct()
-      val droppedIntra = (if (carried) pairs
-          else withPayload(withPayload(pairs, "u_a", pa), "u_b", pb))
-        .filter(accept(col(pa), col(pb)))
-        .select(owner(col("u_b")).as(idCol))
-
-      // one action judges the batch: every arrival id, then every dropped
-      // id flagged; the appends filter by the collected ids, so neither
-      // re-runs the probe. A union, not a join of the arrivals against the
-      // dropped ids: adaptive execution finishes such a join as soon as
-      // the cached arrivals read empty, and leaves the dropped side's
-      // stages running on caches the `finally` below releases (each
-      // then logs failed block fetches and recomputes its partitions).
-      // Dropped ids are non-null arrival ids, so each is counted once
-      // among the arrivals.
-      val dropped = droppedVsState.union(droppedIntra).distinct()
-        .filter(col(idCol).isNotNull)
-      val judged = batch.select(col(idCol), lit(false).as("__dropped"))
-        .union(dropped.select(col(idCol), lit(true))).collect()
-      val droppedIds = judged.collect { case r if r.getBoolean(1) => r.get(0) }
-      val n = (judged.length - 2 * droppedIds.length).toLong
-      def kept(c: Column): Column = !c.isin(droppedIds.toSeq: _*)
-      if (n > 0) {
-        // a null id never matches a dropped one: its row survives, as under
-        // an anti-join, and carries no state rows
-        appendOnce(batch.filter(col(idCol).isNull || kept(col(idCol))), corpusTable,
-          batchId)
-        if (crashBetweenAppendsOnce) {
-          crashBetweenAppendsOnce = false
-          throw new RuntimeException("injected crash between the corpus append and the state appends")
+    // loadIfReadable, not exists+load: a state directory holding only
+    // the _temporary droppings of a crashed plain write takes the
+    // fresh-table branch instead of wedging every replay
+    val droppedVsState = StreamingAppend.loadIfReadable(catalog, probed) match {
+      case None => batch.select(col(idCol)).limit(0)
+      case Some(loaded) =>
+        if (!stampChecked) stampedRadius.foreach(checkRadius(loaded, _))
+        val candidates = Scope.persist(probe(loaded, cellRows))
+        val scored = joinBack match {
+          case None => candidates
+          case Some((table, old)) =>
+            // candidates are collision-bounded: their old ids broadcast
+            // and the join-back table is scan-only
+            val olds = catalog.load(table)
+              .join(broadcast(candidates.select(col("old_id").as(unit)).distinct()), Seq(unit))
+              .select(col(unit).as("old_id"), old.as(pb))
+            withPayload(candidates, unit, pa).join(olds, Seq("old_id"))
         }
-        stateAppends(unitRows, cellRows).foreach { case (table, rows) =>
-          val o = owner(col(unit))
-          appendOnce(rows.filter(o.isNotNull && kept(o)), table, batchId)
-        }
+        // a bare id column, not an alias of itself, when units are arrivals
+        scored.filter(accept(col(pa), col(pb)))
+          .select(if (packed) owner(col(unit)).as(idCol) else col(idCol))
+    }
+
+    // intra-batch: a unit near-duplicating a LOWER-owner arrival's drops
+    val carried = joinBack.isEmpty
+    def side(s: String) = cellRows.select(cellKeys.map(col) ++ Seq(col(unit).as(s"u_$s")) ++
+      (if (carried) Seq(col(payload).as(s"${payload}_$s")) else Nil): _*)
+    val pairs = side("a").join(side("b"), cellKeys)
+      .filter(owner(col("u_a")) < owner(col("u_b")))
+      .select((Seq("u_a", "u_b") ++ (if (carried) Seq(pa, pb) else Nil)).map(col): _*)
+      .distinct()
+    val droppedIntra = (if (carried) pairs
+        else withPayload(withPayload(pairs, "u_a", pa), "u_b", pb))
+      .filter(accept(col(pa), col(pb)))
+      .select(owner(col("u_b")).as(idCol))
+
+    // one action judges the batch: every arrival id, then every dropped
+    // id flagged; the appends filter by the collected ids, so neither
+    // re-runs the probe. A union, not a join of the arrivals against the
+    // dropped ids: adaptive execution finishes such a join as soon as
+    // the cached arrivals read empty, and leaves the dropped side's
+    // stages running on caches the scope releases (each
+    // then logs failed block fetches and recomputes its partitions).
+    // Dropped ids are non-null arrival ids, so each is counted once
+    // among the arrivals.
+    val dropped = droppedVsState.union(droppedIntra).distinct()
+      .filter(col(idCol).isNotNull)
+    val judged = batch.select(col(idCol), lit(false).as("__dropped"))
+      .union(dropped.select(col(idCol), lit(true))).collect()
+    val droppedIds = judged.collect { case r if r.getBoolean(1) => r.get(0) }
+    val n = (judged.length - 2 * droppedIds.length).toLong
+    def kept(c: Column): Column = !c.isin(droppedIds.toSeq: _*)
+    if (n > 0) {
+      // a null id never matches a dropped one: its row survives, as under
+      // an anti-join, and carries no state rows
+      appendOnce(batch.filter(col(idCol).isNull || kept(col(idCol))), corpusTable,
+        batchId)
+      if (crashBetweenAppendsOnce) {
+        crashBetweenAppendsOnce = false
+        throw new RuntimeException("injected crash between the corpus append and the state appends")
       }
-      n
-    } finally cached.foreach(_.unpersist(blocking = false))
+      stateAppends(unitRows, cellRows).foreach { case (table, rows) =>
+        val o = owner(col(unit))
+        appendOnce(rows.filter(o.isNotNull && kept(o)), table, batchId)
+      }
+    }
+    n
   }
 
   /** Attach to a stream (same trigger conventions as

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.alerts.AlertManager
-import graft.core.{Catalog, Clock, EventViews, FixedClock}
+import graft.core.{Catalog, Clock, EventViews, FixedClock, Scope}
 import graft.detectors._
 import graft.pipeline.{MonitoringResult, MonitoringRunner}
 
@@ -126,29 +126,26 @@ final class MonitoringLoop(
 
   /** The foreachBatch body — public so batch jobs and tests can drive the
     * exact same per-tick logic without a streaming source. */
-  def runBatch(batch: DataFrame, batchId: Long): MonitoringResult = {
+  def runBatch(batch: DataFrame, batchId: Long): MonitoringResult = Scope {
     // restart rehydration of the event clock (no-op after the first tick)
     seedEventTime()
     // persist so the count, the max-ts probe, and the append execute the
-    // micro-batch source once, not three times; finally-guarded so a
-    // failed ingest can't leak one cached micro-batch per restart attempt
-    batch.persist()
-    val rows =
-      try {
-        val n = batch.count()
-        // the event-time high-water mark only feeds tickClock's fallback;
-        // with a wall clock configured it is never consulted, so skip the
-        // per-batch aggregation job (the seedEventTime gate, applied here)
-        if (clock.isEmpty)
-          batch.agg(max(col("ts").cast("timestamp"))).head().get(0) match {
-            case t: java.sql.Timestamp =>
-              if (maxEventTime.forall(_.isBefore(t.toInstant)))
-                maxEventTime = Some(t.toInstant)
-            case _ => ()
-          }
-        ingest(batch, batchId)
-        n
-      } finally batch.unpersist()
+    // micro-batch source once, not three times; the batch's scope releases
+    // it, so a failed ingest can't leak one cached micro-batch per restart
+    // attempt
+    Scope.persist(batch)
+    val rows = batch.count()
+    // the event-time high-water mark only feeds tickClock's fallback;
+    // with a wall clock configured it is never consulted, so skip the
+    // per-batch aggregation job (the seedEventTime gate, applied here)
+    if (clock.isEmpty)
+      batch.agg(max(col("ts").cast("timestamp"))).head().get(0) match {
+        case t: java.sql.Timestamp =>
+          if (maxEventTime.forall(_.isBefore(t.toInstant)))
+            maxEventTime = Some(t.toInstant)
+        case _ => ()
+      }
+    ingest(batch, batchId)
     if (crashAfterAppendOnce) {
       crashAfterAppendOnce = false
       throw new RuntimeException("injected crash between append and offset commit")

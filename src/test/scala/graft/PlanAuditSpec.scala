@@ -12,6 +12,9 @@ package graft
   * BroadcastNestedLoopJoin only for the queries that intentionally
   * broadcast a ONE-ROW side (single-query-vector similarity scans, scalar
   * CTE combines) — a 1-row BNLJ is a map-side probe, not a pair blow-up.
+  * Also audits resource ownership: every query run inside a
+  * [[graft.core.Scope]] leaves no persisted stage behind, and the scope's
+  * own rules are pinned.
   */
 class PlanAuditSpec extends SparkSpec {
 
@@ -61,6 +64,91 @@ class PlanAuditSpec extends SparkSpec {
       else None
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every registry query run in a Scope leaves nothing persisted and fetches no released block") {
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir not present")
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val sc = spark.sparkContext
+    def cleared(): Unit = {
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    }
+    // a failed block fetch means a job read a cache released under it
+    val failedFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("registry-fetch-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("Failed to fetch block")) failedFetches.add(m)
+      }
+    }
+    capture.start()
+    val rootLogger = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    rootLogger.addAppender(capture)
+    cleared()
+    val leaks = try {
+      val found = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+        graft.core.Scope { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+        val rdds = sc.getPersistentRDDs.size
+        val cacheEmpty = spark.sharedState.cacheManager.isEmpty
+        if (rdds == 0 && cacheEmpty) None
+        else {
+          cleared()
+          Some(s"$name: $rdds persisted RDDs, cache manager empty: $cacheEmpty")
+        }
+      }
+      // a job still running here would log its failed fetches later
+      while (sc.statusTracker.getActiveJobIds().nonEmpty) Thread.sleep(50)
+      found
+    } finally {
+      rootLogger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+    assert(failedFetches.isEmpty, s"failed block fetches: $failedFetches")
+  }
+
+  test("Scope: a failing body releases, a nested scope releases only its own, " +
+      "a caller's cache survives, no scope leaves the session the owner") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.storage.StorageLevel
+    import graft.core.Scope
+    import spark.implicits._
+    def cached(df: org.apache.spark.sql.DataFrame) = df.storageLevel != StorageLevel.NONE
+    def frame(i: Int) = spark.range(10).select((col("id") * i).as("v"))
+    // a throwing body releases what it registered
+    val failed = frame(2)
+    intercept[IllegalStateException] {
+      Scope { Scope.persist(failed).count(); throw new IllegalStateException("mid-query") }
+    }
+    assert(!cached(failed), "a failing scope kept its frame")
+    // a nested scope releases only its own frames; a registered frame it
+    // returns passes to the enclosing scope
+    val (outer, inner, returned) = (frame(3), frame(4), frame(5))
+    Scope {
+      Scope.persist(outer)
+      val kept = Scope { Scope.persist(inner).count(); Scope.persist(returned) }
+      assert(kept eq returned)
+      assert(!cached(inner), "the inner scope kept its frame")
+      assert(cached(outer) && cached(returned), "the inner scope released the outer's frames")
+    }
+    assert(!cached(outer) && !cached(returned), "the outer scope kept its frames")
+    // a frame the caller cached beforehand is not the scope's: the
+    // contaminationPredicate case, whose eval n-grams are often cached once
+    // and reused across shards
+    val evalNg = graft.ext.Decontaminate.evalNgrams(
+      Seq("the quick brown fox jumps over the lazy dog").toDF("text"), $"text", 4).persist()
+    Scope { graft.ext.Decontaminate.contaminationPredicate(evalNg, $"text", 4) }
+    assert(cached(evalNg), "the scope evicted the caller's cache")
+    evalNg.unpersist()
+    // with no scope open, the session owns the persist
+    val sessionOwned = Scope.persist(frame(6))
+    assert(cached(sessionOwned))
+    sessionOwned.unpersist()
   }
 
   test("q44 curation pipeline scans documents once (persisted stage reused)") {

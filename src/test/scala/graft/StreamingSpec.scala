@@ -879,6 +879,43 @@ class StreamingSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("long-lived loops keep the persisted-RDD count flat: MonitoringLoop.runBatch and KindRouter.processBatch over 6 batches") {
+    import graft.alerts.{AlertManager, InMemorySink}
+    import graft.core.FixedClock
+    import graft.streaming.{CurationStream, MonitoringLoop}
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val root = java.nio.file.Files.createTempDirectory("graft-flat").toString
+    val catalog = new graft.core.Catalog(spark, root)
+    val loop = new MonitoringLoop(catalog, "flat.events",
+      new AlertManager(FixedClock.at("2024-01-31T18:00:00Z"), Seq(new InMemorySink("log"))),
+      expectedFeeds = Seq("click", "view"))
+    val router = new CurationStream.KindRouter(catalog, "flat.media")
+    def noise(seed: Long): Array[Byte] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(32 * 32)(r.nextInt(256).toByte)
+    }
+    val counts = (0 until 6).map { b =>
+      loop.runBatch(Seq(
+        (b * 2L, ts(s"2024-01-31T1${b}:00:00Z"), 10L, "click", 5.0, "{}"),
+        (b * 2L + 1, ts(s"2024-01-31T1${b}:30:00Z"), 11L, "view", 3.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), b.toLong)
+      val afterLoop = sc.getPersistentRDDs.size
+      // a fresh image, a repeat of batch 0's image, a wav and an opaque blob
+      router.processBatch(Seq(
+        (b * 4L, graft.functions.PngGray.encodeGray(32, 32, noise(b + 100L))),
+        (b * 4L + 1, graft.functions.PngGray.encodeGray(32, 32, noise(100L))),
+        (b * 4L + 2, graft.functions.WavPcm.encodePcm16(16000, 1,
+          graft.ext.Multimodal.waveformSamples(b.toLong, 2048, 0))),
+        (b * 4L + 3, s"blob $b".getBytes)).toDF("media_id", "payload"), b.toLong)
+      (afterLoop, sc.getPersistentRDDs.size)
+    }
+    assert(counts.forall(_ == counts.head), s"persisted RDDs after each batch: $counts")
+    assert(catalog.load("flat.events").count() == 12L)
+    assert(catalog.load("flat.media_image").count() == 6L)
+  }
+
   test("IncrementalDedup state probe broadcasts the micro-batch, never shuffles the state") {
     // the state table reads from storage (corpus-global, grows without
     // bound); the batch-derived band frame broadcasts — the probe must

@@ -638,7 +638,7 @@ object Dedup {
       rationale: String): FamilyRecommendation =
     FamilyRecommendation(f.name, f.entryPoint(units), expectedDetection, rationale)
 
-  /** The r15-measured IMAGE detection sweep (`tools.ImageDedupProbe`,
+  /** The r15-measured IMAGE detection sweep (`probes.ImageDedupProbe`,
     * 200k-image corpus, dHash radius-3 production config, planted twins
     * at `round(churn · pixels)` single-pixel jitters + the brightness
     * shift dHash is exactly invariant to): (pixel churn, detection).
@@ -657,7 +657,7 @@ object Dedup {
     (0.001, 1.0), (0.005, 1.0), (0.01, 1.0),
     (0.02, 0.9997), (0.05, 0.9954), (0.10, 0.9854))
 
-  /** The r15/r16-measured GEOMETRIC sweeps (`tools.ImageDedupProbe
+  /** The r15/r16-measured GEOMETRIC sweeps (`probes.ImageDedupProbe
     * --cropSweep`; dHash at 200k images r15, the descriptor tiers at 20k
     * r16 — 1000 planted pairs/cell; planted twins cropped at an
     * (s, s)-pixel shift into the same field): (shift px, detection).
@@ -684,7 +684,7 @@ object Dedup {
   private val ImageCropSweepSpectral = Seq(
     (1.0, 1.0), (2.0, 1.0), (4.0, 0.993), (8.0, 0.970))
 
-  /** The r17-measured CROSS-CODEC recode sweeps (`ImageDedupProbe
+  /** The r17-measured CROSS-CODEC recode sweeps (`probes.ImageDedupProbe
     * --recodeSweep`, 200k images, 10k planted pairs/cell): dup twins are
     * the predecessor's EXACT pixels re-encoded as baseline JPEG at the
     * given quality while originals stay PNG — byte-different, so exact
@@ -707,7 +707,7 @@ object Dedup {
   private val ImageRecodeSweepSpectral = Seq(
     (10.0, 1.0), (30.0, 1.0), (50.0, 1.0), (100.0, 1.0))
 
-  /** The r16-measured AUDIO sweeps (`tools.AudioDedupProbe`, 20k clips of
+  /** The r16-measured AUDIO sweeps (`probes.AudioDedupProbe`, 20k clips of
     * 2048 samples, 1000 planted pairs per cell, cosine threshold 0.9).
     *
     * Value churn (×1.25 gain + per-sample jitters): the mean-centered

@@ -133,7 +133,7 @@ object Ivf {
     * trained one — spec-pinned), but RECALL drifts as appended data
     * diverges from the trained cells: new-regime vectors land in
     * stretched cells the probe ranks poorly. The measured curve
-    * (`tools.IvfDriftProbe`, SCALE.md r16) is what [[IvfLedger]] encodes:
+    * (`probes.IvfDriftProbe`, SCALE.md r16) is what [[IvfLedger]] encodes:
     * track appended mass against the trained base and rebuild at the
     * measured threshold instead of guessing.
     *
@@ -168,7 +168,7 @@ object Ivf {
     * was trained on, how much has been appended since, and the measured
     * append fraction past which the quantizer must retrain.
     * `maxAppendFraction` defaults to [[MeasuredRebuildFraction]] — a
-    * MEASURED threshold (IvfDriftProbe), not a guess. */
+    * MEASURED threshold (`probes.IvfDriftProbe`), not a guess. */
   final case class IvfLedger(baseCount: Long, appendedCount: Long,
       maxAppendFraction: Double) {
     def appendFraction: Double =
@@ -176,7 +176,7 @@ object Ivf {
       else appendedCount.toDouble / baseCount
   }
 
-  /** The r16-measured rebuild threshold (`tools.IvfDriftProbe`, SCALE.md
+  /** The r16-measured rebuild threshold (`probes.IvfDriftProbe`, SCALE.md
     * r16, 200k base / 32 queries / nProbe 3 of 64 cells). The measured
     * shape: iid appends cost NOTHING (stale appended-query recall 1.000
     * at every fraction to 2.0× — a rebuild never pays); fully-unseen-

@@ -822,7 +822,7 @@ object Multimodal {
     * frame 0 is new content. Sampling K frames and matching on ANY
     * frame pair recovers trims up to K−1 frames (a t-frame trim still
     * shares K−t frames with the original) — the video analogue of the
-    * audio shift tier, measured in SCALE.md r18 (`VideoDedupProbe`). */
+    * audio shift tier, measured in SCALE.md r18 (`probes.VideoDedupProbe`). */
   def videoFrameFingerprints(media: DataFrame, frames: Int = 3): DataFrame = {
     require(frames >= 1 && frames <= MaxVideoFrames,
       s"frames must be 1..$MaxVideoFrames (the fid packing bound), got $frames")

@@ -193,7 +193,7 @@ object Pq {
     * BIT-IDENTICAL to what a full re-encode would give them — the spec
     * pin) and append into the codes table. What staleness costs is NOT
     * placement (PQ has no cells to misroute) but QUANTIZATION
-    * DISTORTION — and the measured verdict (`IvfDriftProbe --family pq`,
+    * DISTORTION — and the measured verdict (`probes.IvfDriftProbe --family pq`,
     * SCALE.md r16) is a NULL result worth having: the shortlist
     * multiplier reaching 0.9 recall is 16× in every probed condition —
     * stale or retrained codebooks, iid or fully-unseen-regime appends,
@@ -380,7 +380,7 @@ object Pq {
 
   /** SAMPLE-MEASURED shortlist multiplier — the
     * [[Similarity.measureNonUniformityLaw]] move applied to PQ's one open
-    * quality knob (the r13 AnnRecallProbe `--shortlists` sweep measured
+    * quality knob (the r13 `probes.AnnRecallProbe --shortlists` sweep measured
     * recall@k 0.18→0.74 from 4×k to 128×k on a near-tie corpus while the
     * contrastful regime saturates at 4×k — no fixed default serves both).
     *

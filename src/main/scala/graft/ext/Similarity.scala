@@ -417,8 +417,9 @@ object Similarity {
     * cosine `threshold`: the fewest independent tables making a
     * threshold-cosine pair's all-tables miss probability ≤ 1 − recall.
     * THE formula behind [[lshParams]] — exposed so external validators
-    * (e.g. `tools.LshProbe`) probe exactly the configs the engine would
-    * produce instead of replicating the math and silently drifting. */
+    * (e.g. `DedupScaleProbe --pinnedLsh`, SCALE.md "Embedding-LSH posture
+    * at 16M docs") probe exactly the configs the engine would produce
+    * instead of replicating the math and silently drifting. */
   def lshTablesFor(nPlanes: Int, threshold: Double, targetRecall: Double): Int = {
     val p = 1.0 - math.acos(math.max(-1.0, math.min(1.0, threshold))) / math.Pi
     lshTablesForCollision(math.pow(p, nPlanes), targetRecall)
@@ -522,7 +523,7 @@ object Similarity {
   }
 
   /** The default law: least-squares fit of ln(ratio) vs depth over the
-    * nine r12 `DedupScaleProbe --rawVolume` measurements on hash-derived
+    * nine r12 `probes.DedupScaleProbe --rawVolume` measurements on hash-derived
     * (near-isotropic) corpora — 2.80× at 19 planes, 3.26-3.40× at 21,
     * 4.24-4.35× at 23, 4.77-4.82× at 24, 7.09× at 27 (SCALE.md "The 64M
     * step") — which the fit reproduces within 4% at every point, and
@@ -790,7 +791,7 @@ object Similarity {
     * 1000-executor run wants anyway. Slice balance rides id_a's
     * pair-degree distribution — bounded for LSH tables, whose per-cell
     * degree is capped by the sizer's target occupancy × tables.
-    * Measured against one-shot in `tools.DedupScaleProbe
+    * Measured against one-shot in `probes.DedupScaleProbe
     * --partitionedDistinct` (SCALE.md r13). Pair-set equality vs the
     * one-shot distinct is pinned in ExtSpec.
     *
@@ -882,7 +883,7 @@ object Similarity {
     * ingest (optionally `ckey`-bucketed). `comparisons`, when given,
     * accumulates the number of member-vs-representative cosine
     * evaluations the walk performed — a PROBE metric (task retries can
-    * double-count it), there so `tools.DedupScaleProbe --survivors` can
+    * double-count it), there so `probes.DedupScaleProbe --survivors` can
     * read rerank work against the cell pair mass it replaces. Rows of
     * `emb` with a null vector hash to no cell and survive. */
   def nearDupAssignFromTable(bucketTable: DataFrame, emb: DataFrame,

@@ -1786,7 +1786,7 @@ object ExtQ {
     // certifies the append path end to end: appended rows land in the
     // right cluster partitions, prune correctly, and score identically.
     // Recall drift vs appended fraction is the probe's measurement
-    // (tools.IvfDriftProbe, SCALE.md r16); the rebuild threshold it
+    // (probes.IvfDriftProbe, SCALE.md r16); the rebuild threshold it
     // measured is Ivf.MeasuredRebuildFraction, enforced via IvfLedger.
     "q87_ivf_search_after_append" -> QueryDef(
       (s, dir) => {
@@ -1824,7 +1824,7 @@ object ExtQ {
     // search is q69's ADC scan over the union and the oracle is the SAME
     // replayed-arithmetic SQL under the q90 tag. A hash match certifies
     // the append path end to end. What staleness costs here is measured
-    // separately (IvfDriftProbe --family pq, SCALE.md r16): quantization
+    // separately (probes.IvfDriftProbe --family pq, SCALE.md r16): quantization
     // DISTORTION on unseen-regime appends, not placement.
     "q90_pq_search_after_append" -> QueryDef(
       (s, dir) => {

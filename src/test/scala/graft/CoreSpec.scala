@@ -136,7 +136,7 @@ class CoreSpec extends AnyFunSuite {
 
   test("ServeScaleProbe whole-device pattern: generic across families, " +
       "never a partition row") {
-    val p = graft.tools.ServeScaleProbe.WholeDevicePattern
+    val p = graft.probes.ServeScaleProbe.WholeDevicePattern
     for (dev <- Seq("sda", "sdb", "sdab", "xvdf", "vda", "vdb", "hda",
         "nvme0n1", "nvme10n2", "mmcblk0"))
       assert(dev.matches(p), s"whole device $dev must match")
@@ -150,10 +150,10 @@ class CoreSpec extends AnyFunSuite {
     // smaller sample than the probe's default (the suite shouldn't spend
     // 10s on Monte Carlo) — statistical assertions get tolerances sized
     // to ~1000×8 samples per depth
-    val rows = graft.tools.DedupScaleProbe.multiProbeRows(
+    val rows = graft.probes.DedupScaleProbe.multiProbeRows(
       nPairs = 1000, nTablesSampled = 8, depths = Seq(17, 21))
     // seeded RNG + the production plane family: bit-identical on re-run
-    assert(rows == graft.tools.DedupScaleProbe.multiProbeRows(
+    assert(rows == graft.probes.DedupScaleProbe.multiProbeRows(
       nPairs = 1000, nTablesSampled = 8, depths = Seq(17, 21)))
     assert(rows.map(r => (r.planes, r.probes)) ==
       Seq((17, 1), (17, 2), (17, 3), (21, 1), (21, 2), (21, 3)))
@@ -187,7 +187,7 @@ class CoreSpec extends AnyFunSuite {
     // form (one table — more can neither help nor hurt) instead of
     // dividing by log(0) and emitting tablesMp=0 / volume_factor=0.0,
     // which would read as "multi-probe is infinitely cheaper"
-    val rows = graft.tools.DedupScaleProbe.multiProbeRows(
+    val rows = graft.probes.DedupScaleProbe.multiProbeRows(
       threshold = 1.0, nPairs = 50, nTablesSampled = 4, depths = Seq(17))
     rows.foreach { r =>
       assert(r.pTableMp == 1.0, r.toString)

@@ -1343,11 +1343,11 @@ class ExtSpec extends SparkSpec {
     // 1-(1-p^k)^T banding curve within Monte Carlo tolerance
     val n = 20000L
     val (hitDeep, truthDeep) =
-      graft.tools.DedupScaleProbe.plantedRecall(spark, n, 19, 12)
+      graft.probes.DedupScaleProbe.plantedRecall(spark, n, 19, 12)
     assert(truthDeep == n / 20)
     assert(hitDeep == truthDeep, s"deep config missed ${truthDeep - hitDeep}")
     val (hitShallow, truthShallow) =
-      graft.tools.DedupScaleProbe.plantedRecall(spark, n, 24, 1)
+      graft.probes.DedupScaleProbe.plantedRecall(spark, n, 24, 1)
     // the planted pairs' realized cosine is ~0.9985-0.999 (5%-amplitude
     // dim-64 perturbation), so the analytic anchor itself spans ~0.68-0.71
     // — tolerance covers that spread plus ~3 sigma of 1000-pair Monte Carlo
@@ -1484,7 +1484,7 @@ class ExtSpec extends SparkSpec {
   test("Dedup.plan composes family choice, measured-law sizing, and a budget-bound P") {
     import graft.ext.Dedup
     val n = 20000L
-    val emb = graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, n)
+    val emb = graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // text-tier churn plans a text family, one-shot, no LSH config
@@ -1583,7 +1583,7 @@ class ExtSpec extends SparkSpec {
     // embedding family, both mining modes, on the clustered corpus: the
     // plan's sized config executed verbatim; partitioned passes land the
     // identical assignment (grouped == one-shot is the standing pin)
-    val emb = graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 5000L)
+    val emb = graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 5000L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val p0 = Dedup.plan(emb, mutationTolerance = 0.2, scratchBudgetGb = 0.0)
@@ -2179,7 +2179,7 @@ class ExtSpec extends SparkSpec {
     // through runPlan to EXACTLY the direct call's assignment, eliminates
     // (nearly) every planted twin soundly, while the dHash family's
     // radius-3 pairing sees none of them (the r15 boundary)
-    val media = graft.tools.ImageDedupProbe.cropCorpus(spark, 400, 4)
+    val media = graft.probes.ImageDedupProbe.cropCorpus(spark, 400, 4)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val dhashDetected = Multimodal.imageNearDups(
@@ -2531,7 +2531,7 @@ class ExtSpec extends SparkSpec {
 
       // ── the survivor form: planted gain+jitter twins eliminate soundly
       // through featureAssign over envelope descriptors ──
-      val corpus = graft.tools.AudioDedupProbe.corpus(spark, 400, 1, 2048)
+      val corpus = graft.probes.AudioDedupProbe.corpus(spark, 400, 1, 2048)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val feats = Multimodal.audioEnvelopeFeatures(corpus)
@@ -2606,7 +2606,7 @@ class ExtSpec extends SparkSpec {
     // runs through runPlan to EXACTLY the direct call's assignment,
     // eliminates (nearly) every planted twin soundly, while the envelope
     // tier's aligned bins see none of them (the measured boundary)
-    val media = graft.tools.AudioDedupProbe.shiftCorpus(spark, 400, 64, 2048)
+    val media = graft.probes.AudioDedupProbe.shiftCorpus(spark, 400, 64, 2048)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val envFeats = Multimodal.audioEnvelopeFeatures(media)
@@ -3403,10 +3403,10 @@ class ExtSpec extends SparkSpec {
     // test-scale values so corpus-determinism keeps them stable while a
     // real quality regression (wrong cell probed, rerank metric drift)
     // still fails.
-    val emb = graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 20000L)
+    val emb = graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 20000L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val r = graft.tools.AnnRecallProbe.probeCorpus(spark, emb, "clustered",
+      val r = graft.probes.AnnRecallProbe.probeCorpus(spark, emb, "clustered",
         20000L, 6, 10)
       info(s"clustered test-scale recalls: ${r.toSeq.sortBy(_._1)}")
       assert(r("ivf@16") >= 0.85, s"ivf@16 ${r("ivf@16")}")
@@ -3426,9 +3426,9 @@ class ExtSpec extends SparkSpec {
 
   test("measureNonUniformityLawCached: digest-gated law reuse beside the LSH artifact") {
     val n = 12000L
-    val emb = graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, n)
+    val emb = graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val other = graft.tools.DedupScaleProbe.syntheticVecCorpus(spark, n)
+    val other = graft.probes.DedupScaleProbe.syntheticVecCorpus(spark, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val root = java.nio.file.Files.createTempDirectory("graft-lshlaw").toString
@@ -3470,10 +3470,10 @@ class ExtSpec extends SparkSpec {
   test("measureNonUniformityLaw: clustered corpora measure far above the hash floor and size deeper") {
     val n = 20000L
     val hashLaw = Similarity.measureNonUniformityLaw(
-      graft.tools.DedupScaleProbe.syntheticVecCorpus(spark, n), n,
+      graft.probes.DedupScaleProbe.syntheticVecCorpus(spark, n), n,
       sampleRows = 10000L)
     val clLaw = Similarity.measureNonUniformityLaw(
-      graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, n), n,
+      graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, n), n,
       sampleRows = 10000L)
     // the hash corpus is the non-uniformity FLOOR: its sampled weights sit
     // in the same decade as the default law over the measurable band,
@@ -4601,9 +4601,9 @@ class ExtSpec extends SparkSpec {
       assert(rs.zip(rs.tail).forall { case (a, b) => b >= a - 1e-12 },
         s"recall ladder not monotone: ${sm.ladder}")
     }
-    val hashEmb = graft.tools.DedupScaleProbe.syntheticVecCorpus(spark, 20000L)
+    val hashEmb = graft.probes.DedupScaleProbe.syntheticVecCorpus(spark, 20000L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val clEmb = graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 20000L)
+    val clEmb = graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 20000L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cbH = Pq.trainCodebooks(hashEmb, m = 8, k = 16, iters = 5)
@@ -4656,7 +4656,7 @@ class ExtSpec extends SparkSpec {
     // metric through ivfPqTopKVec itself
     val k = 10
     val target = 0.6
-    val emb = graft.tools.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 20000L)
+    val emb = graft.probes.DedupScaleProbe.syntheticClusteredVecCorpus(spark, 20000L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cents = Ivf.trainCentroids(emb, k = 64, iters = 4)

@@ -1176,7 +1176,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     // avi(seed, trim): a 3-frame MJPEG AVI of fields seed·131 + trim+k —
-    // the VideoDedupProbe construction, byte-identical overlapping frames
+    // the probes.VideoDedupProbe construction, byte-identical overlapping frames
     def avi(seed: Long, trim: Int = 0): Array[Byte] =
       MjpegAvi.encode(32, 32, (0 until 3).map(k =>
         JpegGray.encodeGray(32, 32,

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,7 +30,7 @@ import graft.ext.{Ivf, Pq, Similarity}
   *      production default shortlist, across probe budgets.
   *
   * Emits one JSON line per (corpus, family, config). Run via
-  * `sbt 'runMain graft.tools.AnnRecallProbe [--rows N] [--queries Q]
+  * `sbt 'Test/runMain graft.probes.AnnRecallProbe [--rows N] [--queries Q]
   * [--k K] [--corpora hash,clustered]'`. ExtSpec pins the clustered-
   * corpus lower bounds at test scale; SCALE.md records the probe-scale
   * rows. */

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,7 +27,7 @@ import graft.ext.Multimodal
   *    DFT-magnitude tier to hold (a shift changes phases, not
   *    magnitudes).
   *
-  * `sbt 'runMain graft.tools.AudioDedupProbe [--size N]
+  * `sbt 'Test/runMain graft.probes.AudioDedupProbe [--size N]
   * [--shiftSweep 8,32,...|--jitterSweep 0.001,...]
   * [--family envelope|spectral] [--threshold 0.9] [--samples 2048]'`
   * — one JSON line per cell: planted detection, total pairs, planted

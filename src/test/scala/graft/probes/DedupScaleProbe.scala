@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,7 +36,7 @@ import graft.ext.{Dedup, Similarity}
   * derivation number independent of generation cost.
   *
   * Not part of the driver contract; run via
-  * `sbt 'runMain graft.tools.DedupScaleProbe [--sizes N,N,..] [--reps N]
+  * `sbt 'Test/runMain graft.probes.DedupScaleProbe [--sizes N,N,..] [--reps N]
   * [--families minhash,simhash,embedding] [--pinnedLsh PxT] [--mutDenom D]
   * [--multiProbeCheck] [--rawVolume] [--plantedRecall]
   * [--corpus hash|clustered] [--measureLaw] [--partitionedDistinct P]
@@ -79,7 +79,7 @@ object DedupScaleProbe {
   /** `body`'s result with the peak single-stage and the total shuffle
     * write, in GB, of the Spark stages that completed while it ran —
     * the scratch metric of the bounded-distinct cells (this probe's
-    * `--partitionedDistinct`, [[BucketedDistinctProbe]]). The listener
+    * `--partitionedDistinct`, r13's BucketedDistinctProbe). The listener
     * bus is async, so late stage-completed events get a moment to land
     * before the listener detaches. */
   def shuffleWriteGb[A](spark: SparkSession)(body: => A): (A, Double, Double) = {
@@ -730,7 +730,7 @@ object DedupScaleProbe {
     }
   }
 
-  private[tools] def multiProbeDecision(): Unit =
+  private[probes] def multiProbeDecision(): Unit =
     multiProbeRows().foreach { r =>
       println(f"""{"check":"multi_probe","planes":${r.planes},"probes":${r.probes},""" +
         f""""p_table_auto":${r.pTableAuto}%.4f,"p_table_mp":${r.pTableMp}%.4f,""" +

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,7 +20,7 @@ import graft.ext.Multimodal
   * sweep measures the JITTER response alone). True pairs = n/20 exactly,
   * at every size and mutation.
   *
-  * `sbt 'runMain graft.tools.ImageDedupProbe [--size N]
+  * `sbt 'Test/runMain graft.probes.ImageDedupProbe [--size N]
   * [--mutations 0.001,0.01,...] [--radius H] [--blocks B]'`
   * — one JSON line per mutation level: planted detection, total pairs,
   * leakage (pairs beyond the planted ones — all still genuine radius

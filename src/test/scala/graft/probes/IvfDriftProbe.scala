@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +35,7 @@ import graft.ext.{Ivf, Pq}
   * blur ([[graft.ext.Pq.measureRecall]], pure ADC — rerank would mask
   * exactly the distortion being metered).
   *
-  * `sbt 'runMain graft.tools.IvfDriftProbe [--base N] [--fractions
+  * `sbt 'Test/runMain graft.probes.IvfDriftProbe [--base N] [--fractions
   * 0.25,0.5,1,2] [--cells K] [--nProbe P] [--queries M] [--dim D]
   * [--family ivf|pq|ivfpq] [--m M] [--codewords K]'`
   *

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.functions._
 
@@ -6,7 +6,7 @@ import graft.ext.{Dedup, Multimodal}
 
 /** Streaming scale cell for the mixed-modality ingest path (r19 — the
   * r18 verdict's #3 item): the BATCH dispatch capstone is measured
-  * ([[MixedDispatchProbe]], 1M rows), but a real always-on ingest runs
+  * (SCALE.md r18 capstone, 1M rows), but a real always-on ingest runs
   * the STREAMING form — [[graft.streaming.CurationStream.KindRouter]]
   * deduplicating each micro-batch against Catalog-persisted state. This
   * probe feeds the SAME six-container corpus through the router in N
@@ -28,7 +28,7 @@ import graft.ext.{Dedup, Multimodal}
   *     corpora; this cell measures how far the conventions drift at
   *     chain-dense scale.
   *
-  * `sbt 'runMain graft.tools.KindRouterStreamProbe [--size N]
+  * `sbt 'Test/runMain graft.probes.KindRouterStreamProbe [--size N]
   * [--batches B]'` — one JSON line per batch + one summary line. Corpus
   * mix = the capstone's: 40% images / 25% audio / 15% avi / 10% mp4 /
   * 10% garbage, every family's planted-dup structure. */
@@ -60,7 +60,7 @@ object KindRouterStreamProbe {
     val nAvi = size * 15 / 100
     val nMp4 = size * 10 / 100
     val nJunk = size - nImg - nAud - nAvi - nMp4
-    // the MixedDispatchProbe corpus, re-keyed CONTIGUOUSLY so id-ordered
+    // the r18 capstone's corpus, re-keyed CONTIGUOUSLY so id-ordered
     // micro-batches interleave all six containers (a per-modality id
     // banding would feed whole pools one at a time — not an ingest):
     // media_id = row * 5 + modality slot, preserving the per-family

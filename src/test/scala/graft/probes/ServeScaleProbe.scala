@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -7,7 +7,7 @@ import graft.core.Catalog
 import graft.ext.{Ivf, Pq}
 
 /** Cold-vs-warm ANN serving at artifact sizes that OUTGROW the sf0.1
-  * corpus ([[ServeProbe]] measured cold/warm 0.9-1.1× there and correctly
+  * corpus (r9's ServeProbe measured cold/warm 0.9-1.1× there and correctly
   * diagnosed why: MB-scale artifacts live in the page cache). This probe
   * answers the capacity-planning question that measurement could not: at
   * what artifact size does the physical cold read start to matter, and
@@ -33,7 +33,7 @@ import graft.ext.{Ivf, Pq}
   *
   * Not part of the driver contract; run via
   * `SPARK_GRAFT_FLUSH_CMD='sync; echo 3 > /proc/sys/vm/drop_caches' \
-  *    sbt 'runMain graft.tools.ServeScaleProbe [--sizes N,N,..] [--reps N]'`.
+  *    sbt 'Test/runMain graft.probes.ServeScaleProbe [--sizes N,N,..] [--reps N]'`.
   * Artifacts cache under /tmp/graft_ann_scale/n<rows> and are rebuilt only
   * when absent (the q75-q77 `_SUCCESS` servability contract). */
 object ServeScaleProbe {

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,7 +31,7 @@ import graft.ext.Multimodal
   * re-encoded re-upload — the realistic case the r18 verdict asked to
   * compose: trim × churn × recode in one measured cell).
   *
-  * `sbt 'runMain graft.tools.VideoDedupProbe [--size N] [--frames K]
+  * `sbt 'Test/runMain graft.probes.VideoDedupProbe [--size N] [--frames K]
   * [--trimSweep 0,1,2,3] [--churn 0.01] [--container avi|mp4|mixed]
   * [--recodeQuality 92]'` — one JSON line per trim cell.
   */

@@ -215,7 +215,10 @@ object Ivf {
     * partitioning-independent). The drift meter: run it over the
     * appended-union corpus to read what churn cost, and over appended
     * rows only (`queryFilter`) to read the worst case — drifted queries
-    * probing cells trained without them. Driver loop of 2·nQueries
+    * probing cells trained without them. A corpus that stores its
+    * `cluster` column is probed through the STORED cells (the served
+    * index, [[Similarity.Probe]]'s rule), so measure candidate centroids on
+    * a corpus without that column. Driver loop of 2·nQueries
     * k-sized jobs; persist `emb` in the caller's [[graft.core.Scope]] when
     * it is not already storage-backed. */
   def measureRecall(emb: DataFrame, centroids: Array[Array[Double]],
@@ -235,11 +238,12 @@ object Ivf {
       "measureRecall: queryFilter matched no rows - the meter cannot " +
         "report a recall (a default 1.0 here would mask exactly the " +
         "drift condition being monitored)")
+    def ids(probe: Similarity.Probe, qid: Long, qv: Array[Double]): Set[Long] =
+      Similarity.topK(emb, qv, k, probe, Some(qid), idCol, vecCol)
+        .collect().map(_.getLong(0)).toSet
     val recalls = qs.map { case (qid, qv) =>
-      val exact = Similarity.bruteForceTopKVec(emb, qv, k, Some(qid),
-        idCol, vecCol).collect().map(_.getLong(0)).toSet
-      val approx = ivfTopKVec(emb, centroids, qv, k, nProbe, Some(qid),
-        idCol, vecCol).collect().map(_.getLong(0)).toSet
+      val exact = ids(Similarity.Probe.All, qid, qv)
+      val approx = ids(Similarity.Probe.Ivf(centroids, nProbe), qid, qv)
       if (exact.isEmpty) 1.0
       else exact.intersect(approx).size.toDouble / exact.size
     }
@@ -266,72 +270,19 @@ object Ivf {
     centroids.zipWithIndex.map { case (c, i) => (l2(qv, c), i) }
       .sorted.take(nProbe).map(_._2).toSeq
 
-  /** Left-to-right squared norm, [[Similarity.norm2Vec]] — the same fold
-    * order as the scan-side expression, so values are bit-identical. */
-  private def norm2Vec(qv: Array[Double]): Double = Similarity.norm2Vec(qv)
-
-  /** Exact-cosine rerank of `cells` against an already-collected query
-    * vector, top-k. The vector and its squared norm ride the plan as
-    * LITERALS — no second corpus lookup, no join: the round-4 form
-    * re-filtered the (partitioned) corpus for the query row inside the
-    * rerank, a full-partition scan that diluted the probe's pruning.
-    * ONE definition ([[Similarity.rerankVecLit]]) — the rounding/tie-break
-    * contract every oracle equality depends on must not fork per module. */
-  private def rerankVec(cells: DataFrame, qv: Array[Double], excludeId: Option[Long],
-      k: Int, idCol: String, vecCol: String): DataFrame =
-    Similarity.rerankVecLit(cells, qv, excludeId, k, idCol, vecCol)
-
-  /** Empty (idCol, cosine_sim) result — the degraded shape every sibling
-    * top-k returns when the queryId is absent. */
-  private def emptyTopK(emb: DataFrame, idCol: String): DataFrame =
-    Similarity.emptyTopK(emb, idCol)
-
-  /** Vector-first IVF top-k — the production entry point: query vectors
-    * come from OUTSIDE the corpus (a user query embedded on the fly), so
-    * there is no row to look up and no scan to pay for one. Probes the
-    * `nProbe` cells nearest `qv`, exact-reranks by cosine inside them.
-    * `excludeId` drops one corpus id from the result (how the id-keyed
-    * form excludes the query's own row); external queries leave it unset. */
-  def ivfTopKVec(emb: DataFrame, centroids: Array[Array[Double]], qv: Array[Double],
-      k: Int, nProbe: Int = 2, excludeId: Option[Long] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probes = nearestClusters(qv, centroids, nProbe)
-    rerankVec(
-      assign(emb, centroids, vecCol).filter(col("cluster").isin(probes: _*)),
-      qv, excludeId, k, idCol, vecCol)
-  }
-
-  /** IVF top-k keyed by a corpus id: looks the vector up once, then
-    * delegates to [[ivfTopKVec]] (bit-identical — test-pinned). Same output
-    * shape/ordering as [[Similarity.bruteForceTopK]]; recall vs that
-    * baseline is measured in ExtSpec. A missing `queryId` degrades to an
-    * empty result, like every sibling top-k. */
-  def ivfTopK(emb: DataFrame, centroids: Array[Array[Double]], queryId: Long,
-      k: Int, nProbe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qRows = emb.filter(col(idCol) === queryId).select(col(vecCol)).take(1)
-    if (qRows.isEmpty) return emptyTopK(emb, idCol)
-    ivfTopKVec(emb, centroids, toVec(qRows(0), 0), k, nProbe, Some(queryId),
-      idCol, vecCol)
-  }
-
-  /** IVF top-k over a CLUSTER-PARTITIONED corpus — the 100 TB probe path.
+  /** IVF top-k over a CLUSTER-PARTITIONED corpus — the 100 TB serving
+    * shape, kept as a named form for its loud shape check: [[Similarity.topK]]
+    * with [[Similarity.Probe.Ivf]] would silently assign an unclustered
+    * corpus inline, scanning all of it.
     *
     * `clustered` must carry a stored `cluster` column, i.e. the corpus was
     * written once via `Catalog.save(Ivf.assign(emb, cents), ref,
     * partitionBy = Seq("cluster"))` and re-loaded. The probe filter then
-    * hits the PARTITION column, so the parquet scan prunes to the nProbe
-    * cell directories (`PartitionFilters` in the plan; pruning is
-    * plan-asserted in ExtSpec) instead of scanning the corpus and
-    * recomputing assignments — the classic IVF inverted-file lookup,
-    * expressed as Spark partition pruning. Results are identical to
-    * [[ivfTopK]] on the same corpus + centroids (also test-asserted). */
-  /** Vector-first [[ivfTopKPartitioned]] — with the query vector in hand
-    * the WHOLE query touches exactly the nProbe probed cell directories:
-    * no id lookup, so no full-partition scan anywhere in the plan
-    * (single pruned FileSourceScan, plan-asserted in ExtSpec). This is the
-    * 100 TB serving shape: train once ([[saveCentroids]]), cluster-write
-    * once, then every external query reads nProbe/k of the corpus. */
+    * hits the PARTITION column, so with the query vector in hand the WHOLE
+    * query is a single FileSourceScan pruned to the nProbe probed cell
+    * directories (plan-asserted in ExtSpec) — no id lookup, no
+    * re-assignment. Train once ([[saveCentroids]]), cluster-write once,
+    * then every external query reads nProbe/k of the corpus. */
   def ivfTopKPartitionedVec(clustered: DataFrame, centroids: Array[Array[Double]],
       qv: Array[Double], k: Int, nProbe: Int = 2, excludeId: Option[Long] = None,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -339,91 +290,8 @@ object Ivf {
       "ivfTopKPartitionedVec requires a stored 'cluster' column — write the " +
         "corpus once via Catalog.save(Ivf.assign(emb, centroids), ref, " +
         "partitionBy = Seq(\"cluster\")) and pass the re-loaded table " +
-        "(use ivfTopKVec for an unpartitioned corpus)")
-    val probes = nearestClusters(qv, centroids, nProbe)
-    rerankVec(
-      clustered.filter(col("cluster").isin(probes: _*)),
-      qv, excludeId, k, idCol, vecCol)
-  }
-
-  def ivfTopKPartitioned(clustered: DataFrame, centroids: Array[Array[Double]],
-      queryId: Long, k: Int, nProbe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(TableShapes.hasColumn(clustered, "cluster"),
-      "ivfTopKPartitioned requires a stored 'cluster' column — write the " +
-        "corpus once via Catalog.save(Ivf.assign(emb, centroids), ref, " +
-        "partitionBy = Seq(\"cluster\")) and pass the re-loaded table " +
-        "(use ivfTopK for an unpartitioned corpus)")
-    val qRows = clustered.filter(col(idCol) === queryId).select(col(vecCol)).take(1)
-    if (qRows.isEmpty) return emptyTopK(clustered, idCol)
-    ivfTopKPartitionedVec(clustered, centroids, toVec(qRows(0), 0), k, nProbe,
-      Some(queryId), idCol, vecCol)
-  }
-
-  /** IVF top-k for a BATCH of query ids in ONE probe job — the IVF member
-    * of the q47/q48 batched family.
-    *
-    * The m query vectors collect once (m·dim doubles — driver-scale by
-    * construction, same as the per-query lookup); their probe sets derive
-    * driver-side from the centroid matrix, exactly like the per-query path,
-    * so probing issues NO extra Spark job. The corpus is filtered to the
-    * UNION of probed cells — on a cluster-partitioned corpus that `isin`
-    * hits the partition column and the scan prunes to the probed
-    * directories (plan-asserted in ExtSpec) — then each row joins the
-    * (broadcast) queries probing ITS cell, scores one dot per (row, query),
-    * and reduces through the bounded [[graft.functions.TopKAgg]]: the
-    * shuffle carries at most k·partitions rows per query, never the full
-    * scored set. Scores are bit-identical to the per-query [[ivfTopK]]
-    * (same literal-vector cosine), so per-query equality is test-pinned.
-    *
-    * Pass a corpus that already carries a stored `cluster` column (written
-    * once via `Catalog.save(Ivf.assign(...), ref, partitionBy =
-    * Seq("cluster"))`) to skip re-assignment entirely; an unclustered
-    * corpus is assigned on the fly. Pair with [[saveCentroids]]/
-    * [[loadCentroids]] for the train-once / probe-many split. */
-  def ivfTopKBatch(emb: DataFrame, centroids: Array[Array[Double]],
-      queryIds: Seq[Long], k: Int, nProbe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qRows = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol), col(vecCol)).collect()
-    ivfTopKBatchVec(emb, centroids,
-      qRows.toSeq.map(r => (r.getLong(0), toVec(r, 1))), k, nProbe,
-      excludeSelf = true, idCol, vecCol)
-  }
-
-  /** Vector-first [[ivfTopKBatch]]: the m (label, vector) queries arrive
-    * from outside the corpus (an embedded query batch), skipping the
-    * corpus lookup scan entirely — the serving-path twin of
-    * [[ivfTopKPartitionedVec]] for batches. `excludeSelf` drops corpus
-    * rows whose id equals the query's label (the id-keyed form's
-    * own-row exclusion); external labels leave it false. */
-  def ivfTopKBatchVec(emb: DataFrame, centroids: Array[Array[Double]],
-      queries: Seq[(Long, Array[Double])], k: Int, nProbe: Int = 2,
-      excludeSelf: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    if (queries.isEmpty)
-      return emb.select(col(idCol).as("query_id"), col(idCol),
-        lit(0.0d).as("cosine_sim")).limit(0)
-    val probeRows = queries.flatMap { case (qid, qv) =>
-      nearestClusters(qv, centroids, nProbe)
-        .map(c => (qid, c, qv, norm2Vec(qv)))
-    }
-    val probes = probeRows.toDF("query_id", "cluster", "qv", "n2q")
-    val corpus =
-      // analyzer-rules membership: a raw contains("cluster") would miss a
-      // stored CLUSTER column, silently re-assign the whole corpus, and
-      // case-insensitively REPLACE the stored assignments
-      if (TableShapes.hasColumn(emb, "cluster")) emb else assign(emb, centroids, vecCol)
-    val cells = corpus.filter(
-      col("cluster").isin(probeRows.map(_._2).distinct: _*))
-    val joined = cells.join(broadcast(probes), Seq("cluster"))
-    val scored = (if (excludeSelf) joined.filter(col(idCol) =!= col("query_id"))
-                  else joined)
-      .select(col("query_id"), col(idCol).as("id"),
-        round(Similarity.cosinePre(col(vecCol), col("qv"), col("n2q")), 6)
-          .as("score"))
-    Similarity.topKPerQuery(scored, k, idCol)
+        "(use Similarity.topK with Probe.Ivf for an unpartitioned corpus)")
+    Similarity.topK(clustered, qv, k, Similarity.Probe.Ivf(centroids, nProbe),
+      excludeId, idCol, vecCol)
   }
 }

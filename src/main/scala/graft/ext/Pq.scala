@@ -360,9 +360,9 @@ object Pq {
       vecCol: String = "embedding"): DataFrame = {
     TableShapes.requireColumns(clusteredEncoded, Seq("cluster", "codes"),
       "ivfPqTopKVec", "'cluster' comes from Ivf.assign, 'codes' from Pq.encode")
-    val probes = Ivf.nearestClusters(query, centroids, nProbe)
     pqTopKRerankVec(
-      clusteredEncoded.filter(col("cluster").isin(probes: _*)),
+      Similarity.Probe.Ivf(centroids, nProbe)
+        .rowsFor(clusteredEncoded, Seq(query), vecCol),
       query, cb, topK, shortlist, idCol, vecCol)
   }
 

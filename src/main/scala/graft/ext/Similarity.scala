@@ -4,20 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Scope
+import graft.functions.NearestCentroid
 
 /** Similarity search over an embedding column `array<float>` (BASELINE.json
-  * extension surface): brute-force cosine top-k as the exact baseline, and an
-  * LSH-bucketed (random-hyperplane) variant as the 100 TB scale path.
+  * extension surface): one top-k search — a [[Similarity.Probe]] choosing
+  * the rows a query scores (all of them, LSH buckets or IVF cells), then
+  * one exact rounded-cosine rerank — plus embedding near-dup mining.
   *
-  * The arithmetic stays in codegen'd higher-order functions (`zip_with` +
-  * `aggregate` fold): floats widen to double and accumulate left-to-right,
-  * which both keeps it deterministic and matches the oracle's semantics.
+  * The arithmetic stays in codegen'd native expressions: floats widen to
+  * double and accumulate left-to-right, which both keeps it deterministic
+  * and matches the oracle's semantics.
   *
-  * Scale design: brute-force is one scan with a TakeOrderedAndProject — fine
-  * for one query vector over any corpus size (no shuffle of the corpus).
-  * For batched query workloads, `annTopK` buckets the corpus by hyperplane
-  * sign bits so each query probes ~corpus/2^bits vectors; the buckets are the
-  * partitioning key, so a 1000-executor cluster prunes instead of scanning.
+  * Scale design: a single query is one scan with a TakeOrderedAndProject —
+  * fine for one query vector over any corpus size (no shuffle of the
+  * corpus). A cell probe cuts that scan to ~nProbe/cells of the corpus, and
+  * a corpus that stores its cell column as the partition key prunes files
+  * instead of scanning, so a 1000-executor cluster reads only probed cells.
   */
 object Similarity {
 
@@ -87,98 +89,12 @@ object Similarity {
     s
   }
 
-  /** `qv` + its norm as plan literals, scoring `rows` top-k — the shared
-    * tail of every vector-first single-query form. */
-  private[ext] def rerankVecLit(rows: DataFrame, qv: Array[Double],
-      excludeId: Option[Long], k: Int, idCol: String, vecCol: String): DataFrame = {
-    val qvLit = array(qv.map(lit).toSeq: _*)
-    excludeId.fold(rows)(q => rows.filter(col(idCol) =!= q))
-      .select(col(idCol),
-        round(cosinePre(col(vecCol), qvLit, lit(norm2Vec(qv))), 6).as("cosine_sim"))
-      .orderBy(desc("cosine_sim"), col(idCol))
-      .limit(k)
-  }
-
-  private[ext] def emptyTopK(emb: DataFrame, idCol: String): DataFrame =
-    emb.select(col(idCol), lit(0.0d).as("cosine_sim")).limit(0)
-
-  /** Vector-first exact top-k — the production entry point: query vectors
-    * come from OUTSIDE the corpus (embedded on the fly), so no lookup scan
-    * runs; the vector rides the plan as literals. `excludeId` drops one
-    * corpus id (how the id-keyed form excludes the query's own row). */
-  def bruteForceTopKVec(emb: DataFrame, qv: Array[Double], k: Int,
-      excludeId: Option[Long] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    rerankVecLit(emb, qv, excludeId, k, idCol, vecCol)
-
-  /** Exact top-k neighbours of the vector belonging to `queryId`: one
-    * 1-row lookup, then [[bruteForceTopKVec]] (bit-identical scores —
-    * same literal-vector cosine). Ordering is by rounded score with an id
-    * tie-break for determinism. */
-  def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qRows = emb.filter(col(idCol) === queryId).select(col(vecCol)).take(1)
-    if (qRows.isEmpty) return emptyTopK(emb, idCol)
-    bruteForceTopKVec(emb, toVec(qRows(0), 0), k, Some(queryId), idCol, vecCol)
-  }
-
   /** Sign-bit bucket of a vector under `nPlanes` seeded hyperplanes,
     * starting at plane index `planeOffset` (so independent LSH tables can
     * draw disjoint plane sets from the same deterministic family). Backed by
     * the native single-pass [[graft.functions.HyperplaneLsh]] expression. */
   def lshBucket(vec: Column, nPlanes: Int, planeOffset: Int = 0): Column =
     element_at(graft.functions.HyperplaneLsh(vec, nPlanes, 1, planeOffset), 1)
-
-  /** Vector-first ANN top-k: the query's bucket derives DRIVER-side from
-    * the same deterministic plane family the scan-side expression folds
-    * (bit-identity test-pinned), so the bucket filter is a pushable literal
-    * predicate and no lookup or bucket-join runs. */
-  def annTopKVec(emb: DataFrame, qv: Array[Double], k: Int, nPlanes: Int = 4,
-      excludeId: Option[Long] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    annTopKMultiProbeVec(emb, qv, k, nPlanes, nProbe = 1, excludeId, idCol, vecCol)
-
-  /** ANN top-k: probe only the corpus bucket(s) matching the query vector's
-    * bucket, then exact-rerank. Trades recall for a 2^nPlanes scan reduction;
-    * recall is measured against `bruteForceTopK` in the test suite. One
-    * 1-row lookup, then [[annTopKVec]] (bit-identical). */
-  def annTopK(emb: DataFrame, queryId: Long, k: Int, nPlanes: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qRows = emb.filter(col(idCol) === queryId).select(col(vecCol)).take(1)
-    if (qRows.isEmpty) return emptyTopK(emb, idCol)
-    annTopKVec(emb, toVec(qRows(0), 0), k, nPlanes, Some(queryId), idCol, vecCol)
-  }
-
-  /** Multi-probe ANN top-k (classic multi-probe LSH): probe the query's own
-    * bucket PLUS the buckets reached by flipping its lowest-|projection|
-    * sign bits, in margin order. A vector near a hyperplane is the one whose
-    * true neighbours sit on the other side — flipping that (cheap-to-know)
-    * bit recovers them without paying for more tables or shallower buckets.
-    * `nProbe` counts probed buckets (1 = plain [[annTopK]] semantics; capped
-    * at nPlanes+1 single-bit flips). The probe set derives DRIVER-side from
-    * [[graft.functions.HyperplaneLsh.projections]] — the same deterministic
-    * plane family the expression folds, bit-identity test-pinned — so no
-    * extra job runs; the corpus keeps one bucket column and the scan prunes
-    * to nProbe buckets (the same filter a cluster would partition-prune on).
-    * Recall-vs-probes monotonicity is measured in ExtSpec. */
-  def annTopKMultiProbe(emb: DataFrame, queryId: Long, k: Int, nPlanes: Int = 4,
-      nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qRows = emb.filter(col(idCol) === queryId).select(col(vecCol)).take(1)
-    if (qRows.isEmpty) return emptyTopK(emb, idCol)
-    annTopKMultiProbeVec(emb, toVec(qRows(0), 0), k, nPlanes, nProbe,
-      Some(queryId), idCol, vecCol)
-  }
-
-  /** Vector-first [[annTopKMultiProbe]]: probe set AND scores derive from
-    * the given vector alone — the plan is one bucket-filtered corpus scan,
-    * no lookup, no join (the vector and its norm are literals). */
-  def annTopKMultiProbeVec(emb: DataFrame, qv: Array[Double], k: Int,
-      nPlanes: Int = 4, nProbe: Int = 4, excludeId: Option[Long] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    annTopKPersistedVec(
-      emb.withColumn("bucket", lshBucket(col(vecCol), nPlanes)),
-      qv, k, probeSet(qv, nPlanes, nProbe), excludeId, idCol, vecCol)
 
   /** The multi-probe bucket sequence for a query vector: its own bucket,
     * then the buckets reached by flipping its lowest-|projection| sign bits
@@ -195,146 +111,135 @@ object Similarity {
     }).take(math.max(1, nProbe)).toSeq
   }
 
-  /** ANN top-k over a corpus whose LSH bucket is PERSISTED — computed once
-    * at ingest (`lshBucket`) and stored, optionally as the partition column,
-    * so the probe filter partition-prunes exactly like an IVF cell scan
-    * instead of re-hashing every vector per query. The serving shape at
-    * 100 TB: bucket assignment is write-path work, a query touches
-    * nProbe/2^nPlanes of the files. Scoring and the top-k cut are
-    * bit-identical to [[annTopKMultiProbeVec]] (same fold, same rounded-6dp
-    * ordering); pass `probeSet(qv, …)` for classic multi-probe semantics. */
-  def annTopKPersistedVec(corpus: DataFrame, qv: Array[Double], k: Int,
-      probes: Seq[Long], excludeId: Option[Long] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCol: String = "bucket"): DataFrame = {
-    TableShapes.requireColumns(corpus, Seq(bucketCol), "annTopKPersistedVec",
-      "write the corpus once with lshBucket(vec, nPlanes) (optionally " +
-        s"partitionBy(\"$bucketCol\") for pruning); an unbucketed corpus " +
-        "takes annTopKMultiProbeVec")
-    rerankVecLit(corpus.filter(col(bucketCol).isin(probes: _*)),
-      qv, excludeId, k, idCol, vecCol)
-  }
+  // ───── Top-k search: one probe step, one exact rerank ─────
 
-  /** Batched ANN over a persisted-bucket corpus: the m query rows (vector
-    * AND stored bucket) collect driver-side, broadcast, and join the corpus
-    * on the bucket column — no per-query re-hash of the corpus, same
-    * bounded [[graft.functions.TopKAgg]] reduction as [[annTopKBatch]].
-    * Queries must be corpus members (self-excluded); external vectors take
-    * [[annTopKPersistedVec]] per query or [[annTopKBatchVec]]. */
-  def annTopKBatchPersisted(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCol: String = "bucket"): DataFrame = {
-    TableShapes.requireColumns(corpus, Seq(bucketCol), "annTopKBatchPersisted",
-      "write the corpus once with lshBucket(vec, nPlanes); an unbucketed " +
-        "corpus takes annTopKBatch")
-    val qRows = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol), col(vecCol), col(bucketCol)).collect().toSeq
-    val queries = qRows.map(r => (r.getLong(0), toVec(r, 1)))
-    // partition-column buckets read back as Int; stored columns as Long
-    val buckets = qRows.map(_.getAs[Number](2).longValue)
-    val scored = scoreAgainst(
-      corpus.join(broadcast(queriesDF(corpus, queries, Some(bucketCol -> buckets))),
-        Seq(bucketCol)),
-      excludeSelf = true, idCol, vecCol)
-    topKPerQuery(scored, k, idCol)
-  }
-
-  /** Exact top-k neighbours for a BATCH of query ids in ONE corpus pass.
+  /** Which corpus rows a query scores — the candidate-pruning step of every
+    * top-k search; the exact rounded-cosine rerank after it is shared.
     *
-    * The per-query form ([[bruteForceTopK]]) plans a global
-    * TakeOrderedAndProject — right for one query, but m queries would mean
-    * m corpus scans. Here the m query vectors broadcast, every corpus row
-    * scores against all of them in the scan stage, and the per-query top-k
-    * reduces through [[graft.functions.TopKAgg]] — a bounded typed
-    * Aggregator whose map-side partial aggregation sends at most
-    * k·partitions rows per query through the shuffle instead of the n·m
-    * scored rows a `row_number()` window would move (the difference between
-    * a working plan and an impossible one at 100 TB). The typed aggregation
-    * costs one object conversion per scored row; the comparator (score
-    * DESC, id ASC) is a total order, so results are identical on any
-    * partitioning — equality with the window form is test-pinned. */
-  def bruteForceTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    bruteForceTopKBatchVec(emb, collectQueries(emb, queryIds, idCol, vecCol),
-      k, excludeSelf = true, idCol, vecCol)
-
-  /** Vector-first [[bruteForceTopKBatch]]: m external (label, vector)
-    * queries broadcast from the driver — no corpus lookup scan. The
-    * broadcast side is built from collected doubles; scores are
-    * bit-identical to the column form (same fold order, norms precomputed
-    * by [[norm2Vec]]). `excludeSelf` drops corpus rows whose id equals the
-    * query's label; external labels leave it false. */
-  def bruteForceTopKBatchVec(emb: DataFrame, queries: Seq[(Long, Array[Double])],
-      k: Int, excludeSelf: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val scored = scoreAgainst(emb.crossJoin(broadcast(queriesDF(emb, queries))),
-      excludeSelf, idCol, vecCol)
-    topKPerQuery(scored, k, idCol)
+    * [[Probe.All]] scores every row (exact search). A cell probe scores
+    * only the rows in the query's probed cells: hyperplane-LSH buckets
+    * ([[Probe.Lsh]], via [[probeSet]]) or IVF cells ([[Probe.Ivf]], the
+    * nearest centroids). The cells derive DRIVER-side from the query
+    * vector, so probing runs no job and the cell filter is a pushable
+    * literal IN-predicate. A cell probe reads the corpus's stored cell
+    * column (`bucket` / `cluster`) when it has one — assigned once at
+    * ingest, optionally as the partition column, so the probe filter
+    * partition-prunes to the probed cell directories — and derives it
+    * inline otherwise. Membership follows the analyzer's rules
+    * ([[TableShapes.hasColumn]]): a stored column is never silently
+    * re-assigned. A stored column must come from the same planes /
+    * centroids as the probe. */
+  sealed trait Probe {
+    /** `corpus` cut to the rows in the cells any of `qvs` probes. */
+    private[ext] def rowsFor(corpus: DataFrame, qvs: Seq[Array[Double]],
+        vecCol: String): DataFrame
   }
 
-  /** ANN variant of [[bruteForceTopKBatch]]: corpus and queries bucket
-    * under the same hyperplanes, and each query scores only its bucket's
-    * corpus rows (~n/2^nPlanes of the scan) before the same bounded top-k
-    * reduction. Recall vs the exact batch is measured in ExtSpec. */
-  def annTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int, nPlanes: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    annTopKBatchVec(emb, collectQueries(emb, queryIds, idCol, vecCol), k,
-      nPlanes, excludeSelf = true, idCol, vecCol)
+  object Probe {
+    case object All extends Probe {
+      private[ext] def rowsFor(corpus: DataFrame, qvs: Seq[Array[Double]],
+          vecCol: String): DataFrame = corpus
+    }
 
-  /** Vector-first [[annTopKBatch]]: each external query's bucket derives
-    * driver-side from the shared deterministic plane family, so the
-    * bucket-join probes exactly the queries' buckets with no lookup scan. */
-  def annTopKBatchVec(emb: DataFrame, queries: Seq[(Long, Array[Double])],
-      k: Int, nPlanes: Int = 4, excludeSelf: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val withBucket = queriesDF(emb, queries).withColumn("bucket",
-      lshBucket(col("qv"), nPlanes))
-    val bucketed = emb.withColumn("bucket", lshBucket(col(vecCol), nPlanes))
-    val scored = scoreAgainst(bucketed.join(broadcast(withBucket), Seq("bucket")),
-      excludeSelf, idCol, vecCol)
-    topKPerQuery(scored, k, idCol)
-  }
+    /** A probe over the cells named by one corpus column. */
+    sealed abstract class Cells(private[ext] val cellCol: String) extends Probe {
+      /** The scan-side cell of a vector, for a corpus without the column. */
+      protected def assign(vec: Column): Column
+      /** The cells a query vector probes. */
+      private[ext] def cellsOf(qv: Array[Double]): Seq[Long]
 
-  /** Collect the (id, vector) pairs for a batch of corpus query ids. */
-  private def collectQueries(emb: DataFrame, queryIds: Seq[Long],
-      idCol: String, vecCol: String): Seq[(Long, Array[Double])] =
-    emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol), col(vecCol)).collect()
-      .toSeq.map(r => (r.getLong(0), toVec(r, 1)))
+      private[ext] def rowsFor(corpus: DataFrame, qvs: Seq[Array[Double]],
+          vecCol: String): DataFrame = {
+        val celled =
+          if (TableShapes.hasColumn(corpus, cellCol)) corpus
+          else corpus.withColumn(cellCol, assign(col(vecCol)))
+        celled.filter(col(cellCol).isin(qvs.flatMap(cellsOf).distinct: _*))
+      }
+    }
 
-  /** Driver-held queries → broadcastable (query_id, qv, n2q) frame; empty
-    * input still carries the right schema (via the corpus session). The
-    * norm precomputation lives HERE only — every batched path (inline,
-    * persisted-bucket, IVF) shares the same fold contract. `withBuckets`
-    * appends a per-query stored-bucket column for the persisted-bucket
-    * join ([[annTopKBatchPersisted]]), zipped in query order. */
-  private def queriesDF(emb: DataFrame, queries: Seq[(Long, Array[Double])],
-      withBuckets: Option[(String, Seq[Long])] = None): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val base = queries.map { case (qid, qv) => (qid, qv, norm2Vec(qv)) }
-    withBuckets match {
-      case None => base.toDF("query_id", "qv", "n2q")
-      case Some((name, buckets)) =>
-        base.zip(buckets).map { case ((q, v, n), b) => (q, v, n, b) }
-          .toDF("query_id", "qv", "n2q", name)
+    /** Multi-probe hyperplane LSH: the query's bucket under `nPlanes`
+      * planes plus its lowest-margin bit flips, `nProbe` buckets in all
+      * (1 = the plain single-bucket probe). A vector near a hyperplane is
+      * the one whose true neighbours sit on the other side — flipping
+      * that bit recovers them without paying for more tables. Recall vs
+      * probes is measured in ExtSpec. */
+    final case class Lsh(nPlanes: Int, nProbe: Int = 1) extends Cells("bucket") {
+      protected def assign(vec: Column): Column = lshBucket(vec, nPlanes)
+      private[ext] def cellsOf(qv: Array[Double]): Seq[Long] =
+        probeSet(qv, nPlanes, nProbe)
+    }
+
+    /** IVF: the `nProbe` cells whose centroids lie nearest the query (L2,
+      * index tie-break) — [[graft.ext.Ivf.trainCentroids]]' quantizer,
+      * whose corpus-side assignment is [[graft.ext.Ivf.assign]]. */
+    final case class Ivf(centroids: Array[Array[Double]], nProbe: Int = 2)
+        extends Cells("cluster") {
+      protected def assign(vec: Column): Column = NearestCentroid(vec, centroids)
+      private[ext] def cellsOf(qv: Array[Double]): Seq[Long] =
+        graft.ext.Ivf.nearestClusters(qv, centroids, nProbe).map(_.toLong)
     }
   }
 
-  /** Score a (corpus ⋈ queries) frame: one dot per row pair. */
-  private def scoreAgainst(joined: DataFrame, excludeSelf: Boolean,
-      idCol: String, vecCol: String): DataFrame =
-    (if (excludeSelf) joined.filter(col(idCol) =!= col("query_id")) else joined)
+  /** The (id, vector) rows of `ids` in `corpus` — one collect, the single
+    * lookup every id-keyed search goes through. Missing ids are absent
+    * from the result; a null vector fails here with [[toVec]]'s message. */
+  def vectors(corpus: DataFrame, ids: Seq[Long], idCol: String = "vec_id",
+      vecCol: String = "embedding"): Seq[(Long, Array[Double])] =
+    corpus.filter(col(idCol).isin(ids: _*))
+      .select(col(idCol), col(vecCol)).collect()
+      .toSeq.map(r => (r.getLong(0), toVec(r, 1)))
+
+  /** Top-k neighbours of one query vector — the serving entry point: the
+    * vector comes from OUTSIDE the corpus (embedded on the fly), so no
+    * lookup runs. The plan is one scan of the `probe`'s candidate rows, the
+    * vector and its norm riding as plan literals, cut by a
+    * TakeOrderedAndProject — no shuffle of the corpus at any size.
+    * Ordering is by the 6dp-rounded cosine with an id tie-break, the
+    * convention every oracle equality depends on. `excludeId` drops one
+    * corpus id (how [[topKById]] excludes the query's own row). */
+  def topK(corpus: DataFrame, qv: Array[Double], k: Int,
+      probe: Probe = Probe.All, excludeId: Option[Long] = None,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val rows = probe.rowsFor(corpus, Seq(qv), vecCol)
+    excludeId.fold(rows)(q => rows.filter(col(idCol) =!= q))
+      .select(col(idCol), round(cosinePre(col(vecCol),
+        array(qv.map(lit).toSeq: _*), lit(norm2Vec(qv))), 6).as("cosine_sim"))
+      .orderBy(desc("cosine_sim"), col(idCol))
+      .limit(k)
+  }
+
+  /** Top-k neighbours for a BATCH of (label, vector) queries in ONE corpus
+    * pass.
+    *
+    * m single-query plans would mean m corpus scans. Here the queries
+    * broadcast — one row per (query, probed cell), norms precomputed by
+    * [[norm2Vec]] — and join the probe's candidate rows on the cell column
+    * (a cross join for [[Probe.All]]); every pair scores one dot in the
+    * scan stage, and the per-query top-k reduces through
+    * [[graft.functions.TopKAgg]], a bounded Aggregator whose map-side
+    * partial aggregation sends at most k·partitions rows per query through
+    * the shuffle instead of the n·m scored rows a `row_number()` window
+    * would move. Its comparator (score DESC, id ASC) is a total order, so
+    * results are identical on any partitioning and equal [[topK]] per
+    * query (test-pinned). `excludeSelf` drops corpus rows whose id equals
+    * the query's label — pass `vectors(corpus, ids)` with it set for
+    * corpus-member queries; external labels leave it false. */
+  def topKBatch(corpus: DataFrame, queries: Seq[(Long, Array[Double])], k: Int,
+      probe: Probe = Probe.All, excludeSelf: Boolean = false,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val rows = probe.rowsFor(corpus, queries.map(_._2), vecCol)
+    val joined = probe match {
+      case Probe.All => rows.crossJoin(broadcast(queries
+        .map { case (q, v) => (q, v, norm2Vec(v)) }.toDF("query_id", "qv", "n2q")))
+      case p: Probe.Cells => rows.join(broadcast(queries
+        .flatMap { case (q, v) => p.cellsOf(v).map(c => (q, c, v, norm2Vec(v))) }
+        .toDF("query_id", p.cellCol, "qv", "n2q")), Seq(p.cellCol))
+    }
+    val scored = (if (excludeSelf) joined.filter(col(idCol) =!= col("query_id")) else joined)
       .select(col("query_id"), col(idCol).as("id"),
         round(cosinePre(col(vecCol), col("qv"), col("n2q")), 6).as("score"))
-
-  /** (query_id, id, score) rows → k best per query via the bounded
-    * Aggregator, flattened back to a DataFrame with deterministic order.
-    * Shared by the batched brute-force/ANN paths here and [[Ivf]]'s batched
-    * probe — one reduction, three candidate generators. */
-  private[ext] def topKPerQuery(scored: DataFrame, k: Int, idCol: String): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
     scored.as[(Long, Long, Double)]
       .groupByKey(_._1)
       .mapValues { case (_, id, s) => graft.functions.Scored(id, s) }
@@ -343,6 +248,16 @@ object Similarity {
       .toDF("query_id", idCol, "cosine_sim")
       .orderBy(col("query_id"), desc("cosine_sim"), col(idCol))
   }
+
+  /** Top-k neighbours of the corpus row `id`: one [[vectors]] lookup, then
+    * [[topK]] with the row itself excluded (bit-identical — test-pinned).
+    * A missing id degrades to an empty (idCol, cosine_sim) result. */
+  def topKById(corpus: DataFrame, id: Long, k: Int, probe: Probe = Probe.All,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    vectors(corpus, Seq(id), idCol, vecCol).headOption match {
+      case Some((_, qv)) => topK(corpus, qv, k, probe, Some(id), idCol, vecCol)
+      case None => corpus.select(col(idCol), lit(0.0d).as("cosine_sim")).limit(0)
+    }
 
   /** All near-duplicate pairs above a cosine threshold (embedding-space
     * near-dup dedup). Exact form is the O(n²) self-join — acceptable for

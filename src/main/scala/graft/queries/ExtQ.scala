@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Scope
 import graft.ext._
+import graft.ext.Similarity.Probe
 import graft.ops._
 import Q._
 
@@ -183,7 +184,7 @@ object ExtQ {
     // Brute-force cosine top-k vs vec_id 0 — DuckDB list_cosine_similarity
     // over DOUBLE[] matches our zip_with/aggregate formula exactly.
     "q31_embedding_cosine_topk" -> QueryDef(
-      (s, dir) => Similarity.bruteForceTopK(t(s, dir, "embeddings"), queryId = 0L, k = 10),
+      (s, dir) => Similarity.topKById(t(s, dir, "embeddings"), id = 0L, k = 10),
       Some("""
         WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
         SELECT vec_id,
@@ -195,7 +196,8 @@ object ExtQ {
 
     // LSH-bucketed ANN variant (recall measured against q31 in tests).
     "q32_ann_lsh_topk" -> QueryDef(
-      (s, dir) => Similarity.annTopK(t(s, dir, "embeddings"), queryId = 0L, k = 10, nPlanes = 2),
+      (s, dir) => Similarity.topKById(t(s, dir, "embeddings"), id = 0L, k = 10,
+        Probe.Lsh(nPlanes = 2)),
       None),
 
     // Multimodal payload features: binary column + digest + magic bytes.
@@ -490,7 +492,7 @@ object ExtQ {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val cents = Ivf.trainCentroids(emb, k = 8, iters = 3)
-        Ivf.ivfTopK(emb, cents, queryId = 0L, k = 10, nProbe = 3)
+        Similarity.topKById(emb, id = 0L, k = 10, Probe.Ivf(cents, nProbe = 3))
       },
       None),
 
@@ -501,8 +503,11 @@ object ExtQ {
     // form in DuckDB, so a hash-match proves the partial-agg reduction
     // returns exactly the window's rows, ties and all.
     "q47_embedding_topk_batch" -> QueryDef(
-      (s, dir) => Similarity.bruteForceTopKBatch(
-        t(s, dir, "embeddings"), queryIds = (0L until 8L), k = 10),
+      (s, dir) => {
+        val emb = t(s, dir, "embeddings")
+        Similarity.topKBatch(emb, Similarity.vectors(emb, 0L until 8L), k = 10,
+          excludeSelf = true)
+      },
       Some("""
         WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                    FROM embeddings WHERE vec_id IN (0,1,2,3,4,5,6,7)),
@@ -520,16 +525,19 @@ object ExtQ {
     // bucket's corpus rows before the bounded top-k reduction (engine
     // buckets => rows-only; recall vs q47 is asserted in ExtSpec).
     "q48_ann_topk_batch" -> QueryDef(
-      (s, dir) => Similarity.annTopKBatch(
-        t(s, dir, "embeddings"), queryIds = (0L until 8L), k = 10, nPlanes = 2),
+      (s, dir) => {
+        val emb = t(s, dir, "embeddings")
+        Similarity.topKBatch(emb, Similarity.vectors(emb, 0L until 8L), k = 10,
+          Probe.Lsh(nPlanes = 2), excludeSelf = true)
+      },
       None),
 
     // MULTI-PROBE ANN: probe the query's bucket plus its lowest-margin
     // bit-flip neighbours — recall recovery without more tables (engine
     // buckets => rows-only; recall monotonicity asserted in ExtSpec).
     "q49_ann_multiprobe_topk" -> QueryDef(
-      (s, dir) => Similarity.annTopKMultiProbe(
-        t(s, dir, "embeddings"), queryId = 0L, k = 10, nPlanes = 4, nProbe = 4),
+      (s, dir) => Similarity.topKById(t(s, dir, "embeddings"), id = 0L, k = 10,
+        Probe.Lsh(nPlanes = 4, nProbe = 4)),
       None),
 
     // BATCHED IVF: one k-means training amortized over 8 queries, one probe
@@ -537,13 +545,14 @@ object ExtQ {
     // (q47/q48 shape). q43 pays its ~training cost PER query vector; this
     // is the production form — train once (persistable via
     // Ivf.saveCentroids), probe many. Engine-specific training => rows-only;
-    // per-query equality with ivfTopK, recall vs the exact q47 batch, and
+    // per-query equality with topK, recall vs the exact q47 batch, and
     // partition pruning on a clustered corpus are asserted in ExtSpec.
     "q51_ivf_topk_batch" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val cents = Ivf.trainCentroids(emb, k = 8, iters = 3)
-        Ivf.ivfTopKBatch(emb, cents, queryIds = (0L until 8L), k = 10, nProbe = 3)
+        Similarity.topKBatch(emb, Similarity.vectors(emb, 0L until 8L), k = 10,
+          Probe.Ivf(cents, nProbe = 3), excludeSelf = true)
       },
       None),
 
@@ -1373,16 +1382,14 @@ object ExtQ {
             Similarity.lshBucket(col("embedding"), nPlanes = 4)),
           "ann.q73_corpus", partitionBy = Seq("bucket"))
         val corpus = cat.load("ann.q73_corpus")
-        val qRows = corpus.filter(col("vec_id") === 0L)
-          .select(col("embedding")).take(1)
-        require(qRows.nonEmpty,
-          "q73: persisted corpus has no vec_id 0 — corrupt/partial artifact; " +
-            "delete the ann root and rerun")
-        val qv = qRows(0).getSeq[Float](0).map(_.toDouble).toArray
-        val probes = Similarity.probeSet(qv, nPlanes = 4, nProbe = 4)
-        cat.save(probes.toDF("bucket"), "ann.q73_probes")
-        Similarity.annTopKPersistedVec(corpus, qv, k = 10,
-          probes = probes, excludeId = Some(0L))
+        val qv = Similarity.vectors(corpus, Seq(0L)).headOption.map(_._2)
+          .getOrElse(sys.error(
+            "q73: persisted corpus has no vec_id 0 — corrupt/partial artifact; " +
+              "delete the ann root and rerun"))
+        cat.save(Similarity.probeSet(qv, nPlanes = 4, nProbe = 4).toDF("bucket"),
+          "ann.q73_probes")
+        Similarity.topK(corpus, qv, k = 10, Probe.Lsh(nPlanes = 4, nProbe = 4),
+          excludeId = Some(0L))
       },
       Some(s"""
         WITH corpus AS (
@@ -1397,8 +1404,9 @@ object ExtQ {
         ORDER BY cosine_sim DESC, c.vec_id
         LIMIT 10""")),
 
-    // Batched search over a stored-bucket corpus: the 8 query rows (vector
-    // AND stored bucket) broadcast and join the bucket column — the
+    // Batched search over a stored-bucket corpus: the 8 query vectors
+    // broadcast with their driver-derived buckets (bit-identical to the
+    // stored ones) and join the stored bucket column, no re-hash — the
     // bounded TopKAgg reduction cross-checked against the oracle's
     // row_number() window in the bucketed shape (the q47 proof pattern
     // applied to q48's rows-only gap).
@@ -1408,8 +1416,9 @@ object ExtQ {
         cat.save(t(s, dir, "embeddings").withColumn("bucket",
             Similarity.lshBucket(col("embedding"), nPlanes = 2)),
           "ann.q74_corpus")
-        Similarity.annTopKBatchPersisted(cat.load("ann.q74_corpus"),
-          queryIds = (0L until 8L), k = 10)
+        val corpus = cat.load("ann.q74_corpus")
+        Similarity.topKBatch(corpus, Similarity.vectors(corpus, 0L until 8L),
+          k = 10, Probe.Lsh(nPlanes = 2), excludeSelf = true)
       },
       Some(s"""
         WITH corpus AS (
@@ -1808,9 +1817,8 @@ object ExtQ {
             partitionBy = Seq("cluster"))
           Ivf.appendAssign(cat, "ann.q87_corpus", "ann.q87_centroids", odds)
         }
-        Ivf.ivfTopKPartitioned(cat.load("ann.q87_corpus"),
-          Ivf.loadCentroids(cat, "ann.q87_centroids"),
-          queryId = 0L, k = 10, nProbe = 3)
+        Similarity.topKById(cat.load("ann.q87_corpus"), id = 0L, k = 10,
+          Probe.Ivf(Ivf.loadCentroids(cat, "ann.q87_centroids"), nProbe = 3))
       },
       Some(ivfSearchOracleFor("q87")))
   ) ++ Map(
@@ -2364,9 +2372,8 @@ object ExtQ {
   }
 
   private def serveIvf(cat: graft.core.Catalog): DataFrame =
-    Ivf.ivfTopKPartitioned(cat.load("ann.q68_corpus"),
-      Ivf.loadCentroids(cat, "ann.q68_centroids"),
-      queryId = 0L, k = 10, nProbe = 3)
+    Similarity.topKById(cat.load("ann.q68_corpus"), id = 0L, k = 10,
+      Probe.Ivf(Ivf.loadCentroids(cat, "ann.q68_centroids"), nProbe = 3))
 
   // def, not val: `defs` above initializes first (NOTES round-7)
   private def ivfSearchOracle = ivfSearchOracleFor("q68")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext._
+import graft.ext.Similarity.Probe
 
 class ExtSpec extends SparkSpec {
   import spark.implicits._
@@ -394,7 +395,7 @@ class ExtSpec extends SparkSpec {
       .select(Similarity.dot($"embedding", $"embedding")).head().getDouble(0)
     val expected = 0.9f.toDouble * 0.9f.toDouble + 0.1f.toDouble * 0.1f.toDouble
     assert(d == expected) // floats widen to double exactly, sum is sequential
-    val top = Similarity.bruteForceTopK(emb, 0L, 2).collect()
+    val top = Similarity.topKById(emb, 0L, 2).collect()
     assert(top.map(_.getLong(0)).toSeq == Seq(1L, 2L))
     assert(top.head.getDouble(1) > 0.99)
   }
@@ -686,8 +687,9 @@ class ExtSpec extends SparkSpec {
   test("Similarity: ANN buckets are deterministic and recall is measurable") {
     val emb = (0L until 50L).map(i =>
       (i, Array.tabulate(8)(j => math.sin(i * 7.0 + j).toFloat))).toDF("vec_id", "embedding")
-    val exact = Similarity.bruteForceTopK(emb, 0L, 5).collect().map(_.getLong(0)).toSet
-    val ann = Similarity.annTopK(emb, 0L, 5, nPlanes = 2).collect().map(_.getLong(0)).toSet
+    val exact = Similarity.topKById(emb, 0L, 5).collect().map(_.getLong(0)).toSet
+    val ann = Similarity.topKById(emb, 0L, 5, Probe.Lsh(nPlanes = 2))
+      .collect().map(_.getLong(0)).toSet
     assert(ann.nonEmpty)
     val recall = exact.intersect(ann).size.toDouble / exact.size
     assert(recall >= 0.2) // probe-1 LSH trades recall for scan reduction
@@ -713,9 +715,9 @@ class ExtSpec extends SparkSpec {
     assert((20L until 40L).map(assigned).toSet.size == 1)
     assert(assigned(0L) != assigned(39L))
     // probing ONE cell already recovers the exact top-k (query in cluster A)
-    val exact = Similarity.bruteForceTopK(emb, 3L, 5)
+    val exact = Similarity.topKById(emb, 3L, 5)
       .collect().map(_.getLong(0)).toSeq
-    val ivf = Ivf.ivfTopK(emb, cents, 3L, 5, nProbe = 1)
+    val ivf = Similarity.topKById(emb, 3L, 5, Probe.Ivf(cents, nProbe = 1))
       .collect().map(_.getLong(0)).toSeq
     assert(ivf == exact)
     // and the probed scan touched only the query's cell
@@ -757,11 +759,11 @@ class ExtSpec extends SparkSpec {
     val emb = Seq(
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)),
       (3L, Array(0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val top = Similarity.bruteForceTopKVec(emb, Array(1.0, 0.0), k = 3).collect()
+    val top = Similarity.topK(emb, Array(1.0, 0.0), k = 3).collect()
     assert(top.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(top(2).isNullAt(1)) // the zero vector's score is NULL
     // and a zero QUERY vector degrades to all-NULL scores, no abort
-    val zq = Similarity.bruteForceTopKVec(emb, Array(0.0, 0.0), k = 3).collect()
+    val zq = Similarity.topK(emb, Array(0.0, 0.0), k = 3).collect()
     assert(zq.length == 3 && zq.forall(_.isNullAt(1)))
   }
 
@@ -772,7 +774,7 @@ class ExtSpec extends SparkSpec {
     val emb = Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
     val cents = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0))
     val e = intercept[IllegalArgumentException](
-      Ivf.ivfTopKVec(emb, cents, Array(1.0, 0.0), k = 1))
+      Similarity.topK(emb, Array(1.0, 0.0), k = 1, Probe.Ivf(cents)))
     assert(e.getMessage.contains("dim mismatch"))
   }
 
@@ -781,19 +783,20 @@ class ExtSpec extends SparkSpec {
     val emb = (0L until 80L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val qids = Seq(0L, 1L, 2L)
-    val batch = Similarity.bruteForceTopKBatch(emb, qids, k = 5)
+    val qvs = Similarity.vectors(emb, qids)
+    val batch = Similarity.topKBatch(emb, qvs, k = 5, excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     // the single-query TakeOrdered form is the reference semantics
     val perQuery = qids.flatMap(q =>
-      Similarity.bruteForceTopK(emb, q, 5).collect()
+      Similarity.topKById(emb, q, 5).collect()
         .map(r => (q, r.getLong(0), r.getDouble(1))))
     assert(batch == perQuery)
     // the bounded-heap partial aggregation must not depend on row layout
-    val again = Similarity.bruteForceTopKBatch(emb.repartition(13), qids, 5)
+    val again = Similarity.topKBatch(emb.repartition(13), qvs, 5, excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(again == batch)
     // ANN batch trades recall for bucket pruning, measurably
-    val ann = Similarity.annTopKBatch(emb, qids, 5, nPlanes = 2)
+    val ann = Similarity.topKBatch(emb, qvs, 5, Probe.Lsh(nPlanes = 2), excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ann.nonEmpty)
     val recall = ann.intersect(batch.map(t => (t._1, t._2)).toSet).size.toDouble / batch.size
@@ -815,19 +818,20 @@ class ExtSpec extends SparkSpec {
       assert(driverB == expBuckets(r.getLong(0)), s"bucket mismatch @${r.getLong(0)}")
     }
     // more probes => recall monotonically approaches the exact answer
-    val exact = Similarity.bruteForceTopK(emb, 0L, 10).collect().map(_.getLong(0)).toSet
+    val exact = Similarity.topKById(emb, 0L, 10).collect().map(_.getLong(0)).toSet
     def recall(nProbe: Int): Double = {
-      val got = Similarity.annTopKMultiProbe(emb, 0L, 10, nPlanes = 5, nProbe = nProbe)
+      val got = Similarity.topKById(emb, 0L, 10, Probe.Lsh(nPlanes = 5, nProbe = nProbe))
         .collect().map(_.getLong(0)).toSet
       exact.intersect(got).size.toDouble / exact.size
     }
     val r1 = recall(1); val r3 = recall(3); val r6 = recall(6)
     assert(r1 <= r3 + 1e-9 && r3 <= r6 + 1e-9, s"recall not monotone: $r1 $r3 $r6")
     assert(r6 > r1, s"probing more buckets bought nothing: $r1 -> $r6")
-    // nProbe = 1 is exactly the single-probe annTopK
-    val single = Similarity.annTopK(emb, 0L, 10, nPlanes = 5)
+    // nProbe = 1 scores exactly the query's own scan-side bucket
+    val single = Similarity.topKById(
+      emb.filter(Similarity.lshBucket($"embedding", 5) === expBuckets(0L)), 0L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val mp1 = Similarity.annTopKMultiProbe(emb, 0L, 10, nPlanes = 5, nProbe = 1)
+    val mp1 = Similarity.topKById(emb, 0L, 10, Probe.Lsh(nPlanes = 5, nProbe = 1))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(single == mp1)
   }
@@ -838,7 +842,7 @@ class ExtSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val qv = emb.filter($"vec_id" === 0L).head().getSeq[Float](1).map(_.toDouble).toArray
 
-    // bucket-PARTITIONED corpus: search equals the inline multi-probe form
+    // bucket-PARTITIONED corpus: search equals the inline-hashed corpus
     // bit-for-bit, and the probe IN-filter prunes to exactly nProbe cells
     val root = java.nio.file.Files.createTempDirectory("graft-annp").toString
     val catalog = new graft.core.Catalog(spark, root)
@@ -847,10 +851,10 @@ class ExtSpec extends SparkSpec {
     val corpus = catalog.load("vectors.bucketed")
     val probes = Similarity.probeSet(qv, nPlanes = 3, nProbe = 2)
     assert(probes.size == 2 && probes.distinct.size == 2)
-    val persisted = Similarity.annTopKPersistedVec(corpus, qv, k = 10,
-      probes = probes, excludeId = Some(0L))
-    val inline = Similarity.annTopKMultiProbeVec(emb, qv, k = 10,
-      nPlanes = 3, nProbe = 2, excludeId = Some(0L))
+    val persisted = Similarity.topK(corpus, qv, k = 10,
+      Probe.Lsh(nPlanes = 3, nProbe = 2), excludeId = Some(0L))
+    val inline = Similarity.topK(emb, qv, k = 10,
+      Probe.Lsh(nPlanes = 3, nProbe = 2), excludeId = Some(0L))
     assert(persisted.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       inline.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     val scans = persisted.queryExecution.sparkPlan.collect {
@@ -862,13 +866,15 @@ class ExtSpec extends SparkSpec {
       s"scan read ${scans.map(_.selectedPartitions.partitionCount)} partitions, want nProbe=2")
 
     // stored-column corpus: the batched join on the persisted bucket equals
-    // the inline re-hash form (same TopKAgg reduction, same ordering)
+    // the inline re-hash of a corpus without it (same TopKAgg reduction,
+    // same ordering)
     catalog.save(emb.withColumn("bucket", Similarity.lshBucket($"embedding", 2)),
       "vectors.stored")
-    val batchP = Similarity.annTopKBatchPersisted(
-      catalog.load("vectors.stored"), queryIds = 0L until 8L, k = 10)
-    val batchI = Similarity.annTopKBatch(emb, queryIds = 0L until 8L, k = 10,
-      nPlanes = 2)
+    val stored = catalog.load("vectors.stored")
+    val batchP = Similarity.topKBatch(stored, Similarity.vectors(stored, 0L until 8L),
+      k = 10, Probe.Lsh(nPlanes = 2), excludeSelf = true)
+    val batchI = Similarity.topKBatch(emb, Similarity.vectors(emb, 0L until 8L),
+      k = 10, Probe.Lsh(nPlanes = 2), excludeSelf = true)
     assert(batchP.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
       batchI.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
   }
@@ -878,7 +884,7 @@ class ExtSpec extends SparkSpec {
     val cents = threeClusterCents
 
     // a missing queryId degrades to an empty sibling-shaped result, no throw
-    val missing = Ivf.ivfTopK(emb, cents, queryId = 9999L, k = 5)
+    val missing = Similarity.topKById(emb, 9999L, k = 5, Probe.Ivf(cents))
     assert(missing.columns.toSeq == Seq("vec_id", "cosine_sim"))
     assert(missing.count() == 0)
 
@@ -888,8 +894,8 @@ class ExtSpec extends SparkSpec {
     val catalog = new graft.core.Catalog(spark, root)
     catalog.save(Ivf.assign(emb, cents), "vectors.clustered", partitionBy = Seq("cluster"))
     val clustered = catalog.load("vectors.clustered")
-    val pruned = Ivf.ivfTopKPartitioned(clustered, cents, queryId = 3L, k = 5, nProbe = 2)
-    val full = Ivf.ivfTopK(emb, cents, queryId = 3L, k = 5, nProbe = 2)
+    val pruned = Similarity.topKById(clustered, 3L, k = 5, Probe.Ivf(cents, nProbe = 2))
+    val full = Similarity.topKById(emb, 3L, k = 5, Probe.Ivf(cents, nProbe = 2))
     assert(pruned.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       full.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     val scans = pruned.queryExecution.sparkPlan.collect {
@@ -899,12 +905,12 @@ class ExtSpec extends SparkSpec {
     assert(scans.nonEmpty, "no partition-filtered scan in the pruned probe plan")
     assert(scans.exists(_.selectedPartitions.partitionCount == 2),
       s"scan read ${scans.map(_.selectedPartitions.partitionCount)} partitions, want nProbe=2")
-    assert(Ivf.ivfTopKPartitioned(clustered, cents, 9999L, 5).count() == 0)
+    assert(Similarity.topKById(clustered, 9999L, 5, Probe.Ivf(cents)).count() == 0)
 
     // an unclustered corpus is rejected with a clear message, not a
     // confusing unresolved-column analysis error
     val e = intercept[IllegalArgumentException] {
-      Ivf.ivfTopKPartitioned(emb, cents, 3L, 5)
+      Ivf.ivfTopKPartitionedVec(emb, cents, Similarity.vectors(emb, Seq(3L)).head._2, 5)
     }
     assert(e.getMessage.contains("cluster"))
   }
@@ -935,11 +941,11 @@ class ExtSpec extends SparkSpec {
     // bit-identically
     def res(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val maintained = res(Ivf.ivfTopKPartitioned(corpus,
-      Ivf.loadCentroids(cat, "ann.ap_centroids"), queryId = 2L, k = 5, nProbe = 1))
+    val maintained = res(Similarity.topKById(corpus, 2L, k = 5,
+      Probe.Ivf(Ivf.loadCentroids(cat, "ann.ap_centroids"), nProbe = 1)))
     val retrainCents = Ivf.trainCentroids(threeClusterEmb, k = 3, iters = 4)
-    val retrained = res(Ivf.ivfTopK(threeClusterEmb, retrainCents,
-      queryId = 2L, k = 5, nProbe = 1))
+    val retrained = res(Similarity.topKById(threeClusterEmb, 2L, k = 5,
+      Probe.Ivf(retrainCents, nProbe = 1)))
     assert(maintained == retrained,
       s"append-maintained search diverged from retrain: $maintained vs $retrained")
     assert(maintained.nonEmpty)
@@ -1114,31 +1120,31 @@ class ExtSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-    // single-query forms: the id form delegates to the vec form, and the
-    // vec form with the id's exclusion returns bit-identical rows
-    assert(rows(Similarity.bruteForceTopKVec(emb, qv, 5, excludeId = Some(qid))) ==
-      rows(Similarity.bruteForceTopK(emb, qid, 5)))
-    assert(rows(Similarity.annTopKVec(emb, qv, 5, nPlanes = 4, excludeId = Some(qid))) ==
-      rows(Similarity.annTopK(emb, qid, 5, nPlanes = 4)))
-    assert(rows(Similarity.annTopKMultiProbeVec(emb, qv, 5, 4, 3, Some(qid))) ==
-      rows(Similarity.annTopKMultiProbe(emb, qid, 5, 4, 3)))
-    assert(rows(Ivf.ivfTopKVec(emb, cents, qv, 5, 2, Some(qid))) ==
-      rows(Ivf.ivfTopK(emb, cents, qid, 5, 2)))
+    // every probe kind: the id form delegates to the vector form, and the
+    // vector form with the id's exclusion returns bit-identical rows
+    val probes = Seq(Probe.All, Probe.Lsh(nPlanes = 4), Probe.Lsh(nPlanes = 4, nProbe = 3),
+      Probe.Ivf(cents, nProbe = 2))
+    probes.foreach { p =>
+      assert(rows(Similarity.topK(emb, qv, 5, p, excludeId = Some(qid))) ==
+        rows(Similarity.topKById(emb, qid, 5, p)), s"id form diverged under $p")
+    }
     // a truly external vector keeps its corpus twin: no exclusion → the
     // twin surfaces at cosine 1.0
-    assert(rows(Similarity.bruteForceTopKVec(emb, qv, 1)).head == ((qid, 1.0)))
+    assert(rows(Similarity.topK(emb, qv, 1)).head == ((qid, 1.0)))
 
-    // batch forms
+    // batch form: per query, exactly the single-query rows, scores and all
     val qids = Seq(0L, 21L)
     val qvs = qids.map(q => q -> vecOf(q))
     def rows3(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(rows3(Ivf.ivfTopKBatchVec(emb, cents, qvs, 5, 1, excludeSelf = true)) ==
-      rows3(Ivf.ivfTopKBatch(emb, cents, qids, 5, 1)))
-    assert(rows3(Similarity.bruteForceTopKBatchVec(emb, qvs, 5, excludeSelf = true)) ==
-      rows3(Similarity.bruteForceTopKBatch(emb, qids, 5)))
-    assert(rows3(Similarity.annTopKBatchVec(emb, qvs, 5, 4, excludeSelf = true)) ==
-      rows3(Similarity.annTopKBatch(emb, qids, 5, 4)))
+    probes.foreach { p =>
+      val single = qvs.flatMap { case (q, v) =>
+        rows(Similarity.topK(emb, v, 5, p, excludeId = Some(q)))
+          .map { case (id, sc) => (q, id, sc) }
+      }
+      assert(rows3(Similarity.topKBatch(emb, qvs, 5, p, excludeSelf = true)) == single,
+        s"batch form diverged under $p")
+    }
 
     // the 100 TB serving shape: cluster-partitioned corpus + external
     // vector. The WHOLE plan holds exactly ONE file scan, pruned to the
@@ -1150,7 +1156,7 @@ class ExtSpec extends SparkSpec {
     val served = Ivf.ivfTopKPartitionedVec(clustered, cents, qv, 5, nProbe = 2,
       excludeId = Some(qid))
     assert(rows(served) ==
-      rows(Ivf.ivfTopKPartitioned(clustered, cents, qid, 5, nProbe = 2)))
+      rows(Similarity.topKById(clustered, qid, 5, Probe.Ivf(cents, nProbe = 2))))
     val allScans = served.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -1168,21 +1174,23 @@ class ExtSpec extends SparkSpec {
     // the batch reduction returns exactly the per-query results, scores and all
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val batch = rows(Ivf.ivfTopKBatch(emb, cents, qids, k = 5, nProbe = 1))
+    val batch = rows(Similarity.topKBatch(emb, Similarity.vectors(emb, qids), k = 5,
+      Probe.Ivf(cents, nProbe = 1), excludeSelf = true))
     val perQuery = qids.flatMap(q =>
-      Ivf.ivfTopK(emb, cents, q, 5, nProbe = 1).collect()
+      Similarity.topKById(emb, q, 5, Probe.Ivf(cents, nProbe = 1)).collect()
         .map(r => (q, r.getLong(0), r.getDouble(1))))
     assert(batch == perQuery)
 
     // recall vs the exact batched baseline (q47 form): tight clusters and a
     // same-cluster probe recover the exact answer in full
-    val exactB = Similarity.bruteForceTopKBatch(emb, qids, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exactB = Similarity.topKBatch(emb, Similarity.vectors(emb, qids), 5,
+      excludeSelf = true).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val gotB = batch.map(t => (t._1, t._2)).toSet
     assert(exactB.intersect(gotB).size.toDouble / exactB.size >= 0.99)
 
     // all-missing query ids degrade to an empty result, no throw
-    assert(Ivf.ivfTopKBatch(emb, cents, Seq(9999L), 5).count() == 0)
+    assert(Similarity.topKBatch(emb, Similarity.vectors(emb, Seq(9999L)), 5,
+      Probe.Ivf(cents), excludeSelf = true).count() == 0)
 
     // centroids round-trip the Catalog bit-identically (doubles in parquet)
     val root = java.nio.file.Files.createTempDirectory("graft-ivf-batch").toString
@@ -1191,12 +1199,14 @@ class ExtSpec extends SparkSpec {
     val loaded = Ivf.loadCentroids(catalog, "models.centroids")
     assert(loaded.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
 
-    // batched probe over the cluster-partitioned corpus with RELOADED
-    // centroids: same rows, and the scan prunes to the union of probed
-    // cells (2 of 3 partition directories for these two queries)
+    // batched probe over the cluster-partitioned corpus (stored column)
+    // with RELOADED centroids: the same rows as the corpus without the
+    // column, and the scan prunes to the union of probed cells (2 of 3
+    // partition directories for these two queries)
     catalog.save(Ivf.assign(emb, cents), "vectors.clustered", partitionBy = Seq("cluster"))
     val clustered = catalog.load("vectors.clustered")
-    val prunedBatch = Ivf.ivfTopKBatch(clustered, loaded, qids, 5, nProbe = 1)
+    val prunedBatch = Similarity.topKBatch(clustered, Similarity.vectors(clustered, qids),
+      5, Probe.Ivf(loaded, nProbe = 1), excludeSelf = true)
     assert(rows(prunedBatch) == batch)
     val scans = prunedBatch.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec

@@ -25,7 +25,8 @@ import graft.ext.{Ivf, Pq, Similarity}
   *      PQ / IVF-PQ (`pqTopKRerankVec`'s rerank metric; on clustered
   *      corpora norms vary by cluster, so scoring truth in the index's
   *      metric keeps recall measuring the INDEX, not a metric mismatch);
-  *   3. measures recall@k for IVF (`ivfTopKBatchVec`), PQ with exact
+  *   3. measures recall@k for IVF (`Similarity.topKBatch` with
+  *      `Probe.Ivf`), PQ with exact
   *      rerank (`pqTopKRerankVec`), and IVF-PQ (`ivfPqTopKVec`) at the
   *      production default shortlist, across probe budgets.
   *
@@ -119,7 +120,7 @@ object AnnRecallProbe {
       }.sum / truth.size
 
     // ---- cosine ground truth + IVF (cosine is ivf's rerank metric)
-    val cosTruth = topSet(Similarity.bruteForceTopKBatchVec(emb, queries, k,
+    val cosTruth = topSet(Similarity.topKBatch(emb, queries, k,
       excludeSelf = true), "query_id", "vec_id")
     val centroids = Ivf.trainCentroids(emb, k = 256, iters = 5)
     val assigned = Ivf.assign(emb, centroids)
@@ -127,8 +128,9 @@ object AnnRecallProbe {
     assigned.count()
     Seq(1, 4, 8, 16).foreach { nProbe =>
       timedRecall("ivf", nProbe, s""""cells":256,"nprobe":$nProbe,""") {
-        meanRecall(topSet(Ivf.ivfTopKBatchVec(assigned, centroids, queries, k,
-          nProbe, excludeSelf = true), "query_id", "vec_id"), cosTruth)
+        meanRecall(topSet(Similarity.topKBatch(assigned, queries, k,
+          Similarity.Probe.Ivf(centroids, nProbe), excludeSelf = true),
+          "query_id", "vec_id"), cosTruth)
       }
     }
 

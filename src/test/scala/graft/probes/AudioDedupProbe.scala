@@ -28,8 +28,11 @@ import graft.ext.Multimodal
   *    magnitudes).
   *
   * `sbt 'Test/runMain graft.probes.AudioDedupProbe [--size N]
-  * [--shiftSweep 8,32,...|--jitterSweep 0.001,...]
-  * [--family envelope|spectral] [--threshold 0.9] [--samples 2048]'`
+  * (--shiftSweep 8,32,...|--jitterSweep 0.001,...|--trimSweep 0,2048,4096
+  * --segments 4 --segmentSamples 2048|--throughput)
+  * [--family envelope|spectral] [--threshold 0.9] [--samples 2048]
+  * [--codec pcm16|ulaw|alaw|flac]'` — exactly one mode in parentheses is
+  * required; `--codec` applies to `--jitterSweep`/`--throughput` only
   * — one JSON line per cell: planted detection, total pairs, planted
   * cosine percentiles (locating the twins against the threshold), wall
   * seconds.
@@ -152,10 +155,11 @@ object AudioDedupProbe {
         case "--segmentSamples" if i + 1 < args.length =>
           segmentSamples = args(i + 1).toInt; i += 2
         case other => sys.error(s"unknown arg '$other'; usage: AudioDedupProbe " +
-          "[--size N] [--shiftSweep 8,32,...|--jitterSweep 0.001,...|" +
-          "--trimSweep 0,2048,4096 --segments 4 --segmentSamples 2048] " +
-          "[--family envelope|spectral] [--threshold 0.9] [--samples 2048] " +
-          "[--throughput] [--codec pcm16|ulaw|alaw|flac]")
+          "[--size N] (--shiftSweep 8,32,...|--jitterSweep 0.001,...|" +
+          "--trimSweep 0,2048,4096 --segments 4 --segmentSamples 2048|" +
+          "--throughput) [--family envelope|spectral] [--threshold 0.9] " +
+          "[--samples 2048] [--codec pcm16|ulaw|alaw|flac] — exactly one " +
+          "mode in parentheses")
       }
     }
     require(family == "envelope" || family == "spectral",

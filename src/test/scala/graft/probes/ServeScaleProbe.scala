@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
-import graft.ext.{Ivf, Pq}
+import graft.ext.{Ivf, Pq, Similarity}
 
 /** Cold-vs-warm ANN serving at artifact sizes that OUTGROW the sf0.1
   * corpus (r9's ServeProbe measured cold/warm 0.9-1.1× there and correctly
@@ -147,9 +147,8 @@ object ServeScaleProbe {
       }
 
       def serveIvf(): DataFrame =
-        Ivf.ivfTopKPartitioned(cat.load("ann.scale_ivf"),
-          Ivf.loadCentroids(cat, "ann.scale_centroids"),
-          queryId = 1L, k = 10, nProbe = nProbe)
+        Similarity.topKById(cat.load("ann.scale_ivf"), id = 1L, k = 10,
+          Similarity.Probe.Ivf(Ivf.loadCentroids(cat, "ann.scale_centroids"), nProbe))
       def servePq(): DataFrame = {
         val enc = cat.load("ann.scale_pq")
         val qv = enc.filter(col("vec_id") === 1L).select(col("embedding"))

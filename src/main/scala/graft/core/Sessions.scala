@@ -14,6 +14,24 @@ import org.apache.spark.sql.SparkSession
   *    (SURVEY §7.4); pinning UTC keeps date extraction parity.
   */
 object Sessions {
+  /** Entries in Spark's generated-class cache (`CodeGenerator`'s Guava LRU,
+    * default 100, in 4 segments that each evict on their own). Distinct
+    * classes one loop compiles, counted as JFR `jdk.ClassDefine` events of
+    * `GeneratedClass` with nothing evicted: a perfbench `monitor` pass 313,
+    * `graft.Verify`'s 98 queries at sf0.01 983, `graft.Bench`'s 96 queries
+    * × 3 passes at sf0.1 1,014 in all. At 100 entries every repeated loop
+    * evicted each class before its next use and compiled it again (Bench
+    * compiled 4,934). This holds the largest loop with 2x slack. */
+  val CodegenCacheEntries: Int = 2048
+
+  /** Settings one JVM shares across its sessions: `CodeGenerator`'s cache is
+    * sized by the first session that generates code, and Hadoop caches one
+    * `file:` FileSystem per JVM. Every engine session and the spec session
+    * apply this one map. */
+  val jvmWide: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName)
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -28,6 +46,7 @@ object Sessions {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.driver.host", "localhost")
+      .config(jvmWide)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

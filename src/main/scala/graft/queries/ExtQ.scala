@@ -1121,11 +1121,11 @@ object ExtQ {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val cb = Pq.trainCodebooks(emb, m = 8, k = 64, iters = 3)
-        val qRows = emb.filter(col("vec_id") === 0L).take(1)
+        val qRows = Similarity.vectors(emb, Seq(0L))
         require(qRows.nonEmpty,
           "q67: embeddings corpus has no vec_id 0 (the registry's query-row " +
             "convention) — not an opaque head() crash")
-        val query = qRows(0).getSeq[Float](1).map(_.toDouble).toArray
+        val query = qRows.head._2
         Pq.pqTopKRerankVec(
           Pq.encode(emb.filter(col("vec_id") =!= 0L), cb),
           query, cb, topK = 10, shortlist = 10)
@@ -1851,12 +1851,11 @@ object ExtQ {
           Pq.appendEncode(cat, "ann.q90_corpus", "ann.q90_codebooks", odds)
         }
         val enc = cat.load("ann.q90_corpus")
-        val qRows = enc.filter(col("vec_id") === 0L)
-          .select(col("embedding")).take(1)
+        val qRows = Similarity.vectors(enc, Seq(0L))
         require(qRows.nonEmpty,
           "q90: ann.q90_corpus has no vec_id 0 — corrupt/partial artifact; " +
             "delete the ann root and rerun")
-        val qv = qRows(0).getSeq[Float](0).map(_.toDouble).toArray
+        val qv = qRows.head._2
         Pq.pqTopKVec(enc.filter(col("vec_id") =!= 0L), qv,
           Pq.loadCodebooks(cat, "ann.q90_codebooks"), topK = 10)
       },
@@ -1898,12 +1897,11 @@ object ExtQ {
             "ann.q92_codebooks", odds)
         }
         val corpus = cat.load("ann.q92_corpus")
-        val qRows = corpus.filter(col("vec_id") === 0L)
-          .select(col("embedding")).take(1)
+        val qRows = Similarity.vectors(corpus, Seq(0L))
         require(qRows.nonEmpty,
           "q92: ann.q92_corpus has no vec_id 0 — corrupt/partial artifact; " +
             "delete the ann root and rerun")
-        val qv = qRows(0).getSeq[Float](0).map(_.toDouble).toArray
+        val qv = qRows.head._2
         Pq.ivfPqTopKVec(corpus.filter(col("vec_id") =!= 0L),
           Ivf.loadCentroids(cat, "ann.q92_centroids"),
           Pq.loadCodebooks(cat, "ann.q92_codebooks"),
@@ -2414,12 +2412,11 @@ object ExtQ {
 
   private def servePq(cat: graft.core.Catalog): DataFrame = {
     val enc = cat.load("ann.q69_corpus")
-    val qRows = enc.filter(col("vec_id") === 0L)
-      .select(col("embedding")).take(1)
+    val qRows = Similarity.vectors(enc, Seq(0L))
     require(qRows.nonEmpty,
       "servePq: ann.q69_corpus has no vec_id 0 — corrupt/partial artifact; " +
         "delete the ann root and rerun the witness")
-    val qv = qRows(0).getSeq[Float](0).map(_.toDouble).toArray
+    val qv = qRows.head._2
     Pq.pqTopKVec(enc.filter(col("vec_id") =!= 0L), qv,
       Pq.loadCodebooks(cat, "ann.q69_codebooks"), topK = 10)
   }
@@ -2469,12 +2466,11 @@ object ExtQ {
 
   private def serveIvfPq(cat: graft.core.Catalog): DataFrame = {
     val corpus = cat.load("ann.q70_corpus")
-    val qRows = corpus.filter(col("vec_id") === 0L)
-      .select(col("embedding")).take(1)
+    val qRows = Similarity.vectors(corpus, Seq(0L))
     require(qRows.nonEmpty,
       "serveIvfPq: ann.q70_corpus has no vec_id 0 — corrupt/partial artifact; " +
         "delete the ann root and rerun the witness")
-    val qv = qRows(0).getSeq[Float](0).map(_.toDouble).toArray
+    val qv = qRows.head._2
     Pq.ivfPqTopKVec(corpus.filter(col("vec_id") =!= 0L),
       Ivf.loadCentroids(cat, "ann.q70_centroids"),
       Pq.loadCodebooks(cat, "ann.q70_codebooks"),

@@ -1,11 +1,12 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.alerts.{AlertManager, InMemorySink, LogSink}
+import graft.alerts.{AlertManager, AlertSink, InMemorySink, LogSink}
 import graft.core.FixedClock
 import graft.detectors._
-import graft.pipeline.MonitoringRunner
+import graft.pipeline.{MonitoringResult, MonitoringRunner}
 import graft.queries.Q
 
 /** Runnable end-to-end demo: the full 8-detector monitoring suite over the
@@ -19,7 +20,16 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.core.Sessions.local(8)
+    val mem = new InMemorySink("slack")
+    val result = run(spark, sfDir, Seq(new LogSink, mem, new InMemorySink("email")))
+    println(result.report)
+    println(s"\nalerts dispatched to slack: ${mem.received.size}")
+    mem.received.foreach { case (_, rendered) => println(rendered) }
+    spark.stop()
+  }
 
+  /** One monitoring run over the tables in `sfDir`, alerts to `sinks`. */
+  def run(spark: SparkSession, sfDir: String, sinks: Seq[AlertSink]): MonitoringResult = {
     // FIXTURES.md mapping: orders carries real category/region dims so the
     // richer orders-side projection stays local; the events-side views are
     // the shared graft.core.EventViews mapping the streaming loop also uses
@@ -35,11 +45,7 @@ object Demo {
     val ordersClock = FixedClock.at("2001-08-01T18:00:00Z")
     val eventsClock = FixedClock.at("2024-01-30T23:59:00Z")
 
-    val mem = new InMemorySink("slack")
-    val alerts = new AlertManager(eventsClock, Seq(new LogSink, mem,
-      new InMemorySink("email")))
-
-    val result = new MonitoringRunner(alerts).run(
+    new MonitoringRunner(new AlertManager(eventsClock, sinks)).run(
       feeds = () => new FeedDetector(feeds, eventsClock)
         .checkFeedStatus(Seq("click", "error", "purchase", "signup", "view",
           "telemetry", "heartbeat")),
@@ -56,10 +62,5 @@ object Demo {
         .checkReconciliation(revenue, revenue, ordersClock.today.minusDays(1)),
       sla = () => new SlaDetector(feeds, eventsClock).predictSlaBreach(100000L, 4.0),
       quality = () => new QualityDetector(revenue, ordersClock).checkQualityDegradation())
-
-    println(result.report)
-    println(s"\nalerts dispatched to slack: ${mem.received.size}")
-    mem.received.foreach { case (_, rendered) => println(rendered) }
-    spark.stop()
   }
 }

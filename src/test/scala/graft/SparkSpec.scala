@@ -16,6 +16,7 @@ object TestSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.driver.host", "localhost")
+      .config(graft.core.Sessions.jvmWide)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
